@@ -9,25 +9,31 @@ block. The context manager unpersists on every exit path, so a failed
 collect or mid-loop job can never leak an |E|-sized cache into the block
 manager for the rest of the session.
 
-Trade-offs callers accept (document at the call site):
+Iterative operators (the graph fixpoints) run their rounds through
+``iterate``, which owns the per-round persist/checkpoint cadence and the
+release of every round cache.
+
+Trade-offs callers accept:
 
 - The builder becomes EAGER: the job runs at call time, so plan-only
   tooling (``scripts/explain_audit.py``) sees a Scan-ExistingRDD stub
   instead of the real plan for these queries.
 - ``localCheckpoint`` blocks are non-reliable executor storage with
-  truncated lineage: on a real cluster, swap for a reliable checkpoint
-  dir (``spark.sparkContext.setCheckpointDir`` + ``checkpoint()``) —
-  the same caveat extensions/dedup.py documents for its CC loop.
+  truncated lineage: losing an executor loses the block and the lineage
+  to rebuild it. Every eager checkpoint in this engine (``iterate`` and
+  the builders' one-shot materializations) assumes the local or
+  single-host deployment; on a cluster, use a reliable checkpoint dir
+  (``spark.sparkContext.setCheckpointDir`` + ``checkpoint()``) instead.
 - Checkpoint blocks are reclaimed by the ContextCleaner when the
   returned frame is garbage-collected, not by ``unpersist()``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 
 
 @contextmanager
@@ -46,8 +52,61 @@ def persisted(*frames: DataFrame) -> Iterator[tuple[DataFrame, ...]]:
             c.unpersist()
 
 
+def iterate(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    rounds: int,
+    *,
+    checkpoint_every: int = 1,
+    until: Column | None = None,
+    persist: bool = True,
+) -> tuple[DataFrame, int]:
+    """Run ``state = step(state)`` for up to ``rounds`` rounds and return
+    ``(final state, rounds run)``.
+
+    Round ``i``'s state is eagerly ``localCheckpoint``-ed when
+    ``(i + 1) % checkpoint_every == 0`` or on the last round, so the plan
+    a round builds never holds more than ``checkpoint_every`` unrolled
+    steps. Between checkpoints the state is ``persist()``-ed instead: a
+    step that reads its predecessor several times is then served from
+    cache, and the uncheckpointed rounds fuse into the next checkpoint's
+    job. Every such round cache is released on every exit path; the
+    returned state is checkpointed (or is ``state`` itself when
+    ``rounds`` is 0), so it never reads a released cache.
+    ``persist=False`` leaves the rounds between checkpoints lazy, for a
+    step that reads its predecessor only once: there a cache saves no
+    work and costs a job, because AQE materializes every cache in a job
+    of its own.
+
+    ``until`` is an aggregate over a round's state (e.g. the count of
+    rows that changed). It is attached with ``observe()`` to every
+    checkpointed round, so its value arrives with the checkpoint job
+    rather than from a probe job of its own, and the loop stops after
+    the first checkpointed round where it reads 0."""
+    round_caches: list[DataFrame] = []
+    try:
+        for i in range(rounds):
+            state = step(state)
+            if (i + 1) % checkpoint_every and i < rounds - 1:
+                if persist:
+                    state = state.persist()
+                    round_caches.append(state)
+                continue
+            probe = None
+            if until is not None:
+                probe = Observation()
+                state = state.observe(probe, until.alias("until"))
+            state = state.localCheckpoint(eager=True)
+            if probe is not None and probe.get["until"] == 0:
+                return state, i + 1
+        return state, rounds
+    finally:
+        for c in round_caches:
+            c.unpersist()
+
+
 # ---------------------------------------------------------------------------
-# Tracked session caches (round-5, ADVICE item on IVF/PQ persist leaks).
+# Tracked session caches.
 #
 # Some builders persist multi-consumer subtrees (IVF centroids, PQ
 # codebooks, dedup shingle blocks) that MUST outlive the builder call:

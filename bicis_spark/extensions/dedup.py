@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from bicis_spark.caching import tracked_persist
+from bicis_spark.caching import iterate, tracked_persist
 from bicis_spark.extensions.similarity import quantize
 
 
@@ -443,22 +443,6 @@ def simhash_from_hashes(hashed: Column, bits: int = 48) -> Column:
     return acc
 
 
-def simhash(text: Column, bits: int = 48, hash_mode: str = "xxhash64") -> Column:
-    """SimHash signature from token hashes: bit i of the signature is the
-    sign of Σ_tokens (±1 by the token-hash's bit i). Array-side, no UDF.
-
-    bits ≤ 63 (bit 63 would overflow the signed long literal); in 'poly'
-    mode bits ≤ 62 (two 31-bit polynomial hashes concatenated).
-
-    NOTE: this single-Column form inlines the token-hash array into every
-    per-bit aggregate (re-derived ``bits`` times by the interpreted HOF
-    evaluator) — DataFrame-level callers should project ``token_hashes``
-    first and fold with ``simhash_from_hashes`` (simhash_pairs does)."""
-    if hash_mode == "poly" and bits > 62:
-        raise ValueError("poly mode supplies 62 hash bits")
-    return simhash_from_hashes(token_hashes(text, hash_mode), bits)
-
-
 def simhash_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -558,11 +542,12 @@ def connected_components_min_label(
     when the plain neighbor rule is at fixpoint — which forces labels
     constant per component and equal to the component minimum.
 
-    Each round is two distributed joins + an aggregate;
-    ``localCheckpoint`` truncates lineage so plans stay flat. Near-dup
-    graphs are overwhelmingly tiny cliques (diameter 1-2), so rounds ≈ 2-3
-    either way. At cluster scale swap localCheckpoint for a reliable
-    checkpoint dir.
+    Each round is one edge join + an aggregate + two dimension-sized
+    label self-joins, run through ``bicis_spark.caching.iterate`` with a
+    checkpoint per round; the count of labels a round changed rides that
+    checkpoint job, and the first round that changes nothing ends the
+    loop. Near-dup graphs are overwhelmingly tiny cliques (diameter 1-2),
+    so rounds ≈ 2-3 either way.
     """
     # symmetrize in ONE scan: a self-union's two branches would each
     # re-execute the upstream pair plan (FastSS blocking / LSH banding —
@@ -579,16 +564,12 @@ def connected_components_min_label(
             )
         ).alias("_e")
     ).select("_e.src", "_e.dst")
-    # checkpoint the edge set FIRST: nodes/labels derive from it, so doing
-    # labels first would execute the (possibly expensive) upstream pair
-    # plan twice — measured 2x the FastSS blocking cost on
-    # golden_record_customers before this ordering
+    # checkpoint the edge set before deriving the nodes from it, so the
+    # upstream pair plan runs once rather than once per consumer
     sym = sym.localCheckpoint(eager=True)
     nodes = sym.select(F.col("src").alias("v")).distinct()
     labels = nodes.withColumn("lbl", F.col("v")).localCheckpoint(eager=True)
 
-    converged = False
-    rounds_run = 0
     # checkpointed label frames carry no stats, so Catalyst cannot elect a
     # broadcast join on its own — callers whose vertex set is dimension-
     # sized (doc corpus, customer dim) pass broadcast_labels=True and each
@@ -596,8 +577,9 @@ def connected_components_min_label(
     # unshuffled (the label_propagation precedent); leave False when
     # vertices are fact-sized
     _b = F.broadcast if broadcast_labels else (lambda df: df)
-    for _round in range(max_iter):
-        rounds_run = _round + 1
+
+    def step(state: DataFrame) -> DataFrame:
+        labels = state.select("v", "lbl")
         nbr_min = (
             sym.join(_b(labels), sym["dst"] == labels["v"])
             .groupBy("src")
@@ -613,10 +595,9 @@ def connected_components_min_label(
         # pointer doubling, applied TWICE per round: follow a label hop
         # (l(l(v))) and take the min. lbl always names a node in v's
         # component, so its own label is a valid (and often much smaller)
-        # label for v. Two jumps collapse chains ~4x per round — on
-        # high-diameter graphs (e.g. digit-chain name linkage) the cost
-        # of one extra dimension-sized self-join buys a whole round of
-        # edge-join + checkpoint + probe fixed overhead.
+        # label for v. Two jumps collapse chains ~4x per round, so one
+        # extra dimension-sized self-join saves whole rounds on
+        # high-diameter graphs.
         hop = labels.select(
             F.col("v").alias("_hv"), F.col("lbl").alias("_hlbl")
         )
@@ -631,33 +612,29 @@ def connected_components_min_label(
                     ).alias("lbl"),
                 )
             )
-        # carry the old label through the checkpoint so convergence is a
-        # filter probe on the materialized frame — no extra join+count
-        # job per round (was: a second action joining new vs old)
-        new_labels = stepped.localCheckpoint(eager=True)
-        changed_any = not new_labels.where(
-            F.col("lbl") != F.col("_old")
-        ).isEmpty()
-        labels = new_labels.select("v", "lbl")
-        if not changed_any:
-            converged = True
-            break
-    if not converged:
+        # the previous label rides along as _old, so "did anything
+        # change" is an aggregate over the checkpointed round itself
+        return stepped
+
+    labels, rounds_run = iterate(
+        labels,
+        step,
+        max_iter,
+        until=F.count_if(F.col("lbl") != F.col("_old")),
+    )
+    if rounds_run == max_iter:
         # Unconverged labels would silently split clusters: surface it.
         # max_iter=30 with pointer doubling covers diameter ~2^30; hitting
         # this means a pathological graph or a bug, never normal data.
+        # (A fixpoint first detected on exactly the last round warns too.)
         import warnings
 
         warnings.warn(
-            f"connected_components_min_label: no fixpoint after {max_iter} "
-            "rounds — labels may split components; raise max_iter",
+            f"connected_components_min_label: no fixpoint detected within "
+            f"{max_iter} rounds — labels may split components; raise max_iter",
             RuntimeWarning,
             stacklevel=2,
         )
-    # Observability: rounds-to-fixpoint for the last invocation (read by
-    # scale probes / SCALE.md measurements; driver-side scalar, no plan cost).
-    connected_components_min_label.last_rounds = rounds_run
-    connected_components_min_label.last_converged = converged
     return labels.select(
         F.col("v").alias("doc_id"), F.col("lbl").alias("cluster_id")
     )

@@ -56,10 +56,10 @@ DEFAULT_DIMS = 64
 #: per-task work / §4.1 prefer codegen'd built-ins). For KNOWN small
 #: widths the same exact-int64 sum unrolls into `a[0]*b[0] + ...`, which
 #: whole-stage codegen compiles (A/B on the 8.2M-eval shape: 1.6-4×
-#: faster; values bit-identical — same operands, same exact integer adds,
-#: same NULL propagation on a too-short array). 64-dim unrolls were
-#: measured SLOWER (the module-level note above), so only genuinely small
-#: widths (the 4-dim PQ subspaces) take this path.
+#: faster; values bit-identical on full-width operands — same operands,
+#: same exact integer adds; see _sub_l2_sql for short arrays). 64-dim
+#: unrolls were measured SLOWER (the module-level note above), so only
+#: genuinely small widths (the 4-dim PQ subspaces) take this path.
 UNROLL_MAX_DIMS = 8
 
 
@@ -640,8 +640,14 @@ def ann_topk_lsh(
 def _sub_l2_sql(a: str, b: str, dims: int | None = None) -> str:
     """Exact int64 squared L2 between two sub-vectors (SQL fragment).
     ``dims`` unrolls known-small widths into codegen'd arithmetic (see
-    UNROLL_MAX_DIMS) — identical exact-int64 value, identical NULL
-    propagation; the HOF form remains the any-width fallback."""
+    UNROLL_MAX_DIMS); the HOF form remains the any-width fallback. Both
+    forms give the identical exact-int64 value when both operands hold
+    exactly ``dims`` elements, and only then: on a shorter array the
+    HOF form returns NULL (zip_with pads with NULLs), while the unrolled
+    form raises under ANSI mode and returns NULL without it. A NULL
+    distance sorts first and would silently win the min-L2 code
+    assignment, so PQ callers guarantee the width at the entry point
+    (``pq_subvectors`` checks every vector's length)."""
     if dims is not None and 1 <= dims <= UNROLL_MAX_DIMS:
         return (
             "CAST("
@@ -657,15 +663,6 @@ def _sub_l2_sql(a: str, b: str, dims: int | None = None) -> str:
     )
 
 
-def _sub_l2(a: Column, b: Column) -> Column:
-    """Exact int64 squared L2 between two sub-vectors."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
 def pq_subvectors(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -673,14 +670,24 @@ def pq_subvectors(
     n_subspaces: int = 8,
     sub_dims: int = 8,
 ) -> DataFrame:
-    """Explode quantized vectors into (id, sub, sv) sub-vector rows."""
+    """Explode quantized vectors into (id, sub, sv) sub-vector rows.
+
+    Every vector must hold exactly ``n_subspaces * sub_dims`` elements:
+    the projection fails the job on any other length, because a short
+    sub-vector makes its L2 distance NULL (see ``_sub_l2_sql``) and a
+    long one would be silently truncated."""
+    dims = n_subspaces * sub_dims
     parts = "array(" + ", ".join(
         f"struct({m} AS sub, slice({qv_col}, {m * sub_dims + 1}, {sub_dims}) AS sv)"
         for m in range(n_subspaces)
     ) + ")"
-    return df.selectExpr(id_col, f"explode({parts}) AS _p").selectExpr(
-        id_col, "_p.sub AS sub", "_p.sv AS sv"
+    check = (
+        f"assert_true(size({qv_col}) = {dims}, 'pq_subvectors: every vector "
+        f"must have n_subspaces * sub_dims = {dims} elements')"
     )
+    return df.selectExpr(
+        id_col, f"explode(coalesce({check}, {parts})) AS _p"
+    ).selectExpr(id_col, "_p.sub AS sub", "_p.sv AS sv")
 
 
 def pq_train_codebooks(

@@ -21,8 +21,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from bicis_spark.operators.profiles import rents_returns_profile
-
 
 def hour_profile_pivot(
     profile: DataFrame,
@@ -93,23 +91,4 @@ def circular_lag_features(
         events.where(F.col(station_col).isNotNull() & F.col(ts_col).isNotNull())
         .join(F.broadcast(maps), events[station_col] == maps["station"], "left")
         .selectExpr(*exprs)
-    )
-
-
-def hour_features_for_trips(
-    trips: DataFrame,
-    training: DataFrame | None = None,
-    mode: str = "rent",
-    window_size: int = 24,
-) -> DataFrame:
-    """End-to-end HourFeaturesBuilder: profile from training trips, lag
-    features for every trip (``hour_feature_builder.py`` as one plan)."""
-    profile = rents_returns_profile(training if training is not None else trips, "hour")
-    return circular_lag_features(
-        trips,
-        profile,
-        station_col=f"{mode}_station",
-        ts_col=f"{mode}_date",
-        id_col="id",
-        window_size=window_size,
     )

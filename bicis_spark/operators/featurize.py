@@ -50,16 +50,6 @@ def _sign_from_hex(h: Column) -> Column:
     return F.when(digit % 2 == 0, F.lit(1)).otherwise(F.lit(-1)).cast("long")
 
 
-def _hash_slot(feature: str, value: Column, n_buckets: int) -> Column:
-    """Slot index in [0, n_buckets) of md5('<feature>:<value>')."""
-    return _slot_from_hex(_feature_hex(feature, value), n_buckets)
-
-
-def _hash_sign(feature: str, value: Column) -> Column:
-    """Sign of md5('<feature>:<value>') (see _sign_from_hex)."""
-    return _sign_from_hex(_feature_hex(feature, value))
-
-
 def hashed_features(
     df: DataFrame,
     id_col: str,

@@ -1,37 +1,36 @@
-"""PageRank on DataFrames with fixed-point integer arithmetic.
+"""Iterative and structural graph operators over edge DataFrames.
 
-Together with connected components (extensions/dedup.py, min-label +
-pointer doubling) this gives the engine an iterative-graph surface: each
-iteration is the Pregel step expressed relationally — join ranks to
-edges, integer-divide by out-degree, hash-aggregate inflow per dst, apply
-damping. No RDDs, no graph library: two shuffles per iteration (rank join
-on src, inflow agg on dst), both on stable keys AQE can handle.
+Contract shared by every operator here:
 
-All arithmetic is scaled integers (rank × 1e6, damping as a rational
-85/100 with floor division), so results are bitwise deterministic under
-any partitioning / execution order — float summation order never enters —
-and the declared oracle unrolls the identical recurrence in SQL.
-
-At 100 TB scale: ranks and degrees are |V|-sized, edges |E|-sized; every
-stage is a key-partitioned join/agg with map-side partial aggregation on
-the inflow sum. Iteration count is fixed (power iteration converges
-geometrically; 5-20 rounds is the practical envelope). Plan lineage is
-truncated every CHECKPOINT_EVERY rounds exactly as the connected-components
-loop does (localCheckpoint), so a 20-round run never builds a 40-join tree.
+- Graphs are plain DataFrames of integer vertex ids: ``edges`` (src, dst)
+  or undirected pair rows. Directed operators take both directions of an
+  undirected graph explicitly. No RDDs, no graph library: each round is
+  the Pregel step expressed relationally (joins and aggregates keyed on
+  vertex ids, which AQE can plan).
+- Arithmetic is exact integers (ranks scaled by 1e6 with floor division,
+  counts, hop and path costs), so every result is bitwise deterministic
+  under any partitioning, and each registry query's SQL oracle unrolls
+  the identical recurrence.
+- Iterative operators (``pagerank_fixed_point``, ``pagerank_bipartite``,
+  ``label_propagation``, ``bfs_hops``, ``kcore_peel``,
+  ``bellman_ford_rounds``) are EAGER: they run their rounds through
+  ``bicis_spark.caching.iterate`` at call time, which bounds plan depth
+  by checkpointing and releases every round cache before returning.
+  Fixed-round operators run exactly their round count; ``bfs_hops``
+  stops early when its frontier drains.
+- Loop-invariant inputs (edge tables, degree-joined edges) are persisted
+  for the duration of the loop and released on return; the returned
+  frame reads only checkpointed state.
 """
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bicis_spark.caching import persisted
-
-
-#: Truncate plan lineage every this many power iterations. Each round adds
-#: two joins + an agg to the logical plan; past a handful of rounds analysis
-#: time grows superlinearly and the optimizer re-derives the whole chain.
-CHECKPOINT_EVERY = 4
+from bicis_spark.caching import iterate, persisted
 
 
 def pagerank_fixed_point(
@@ -40,7 +39,6 @@ def pagerank_fixed_point(
     scale: int = 1_000_000,
     damping_num: int = 85,
     damping_den: int = 100,
-    checkpoint_every: int = CHECKPOINT_EVERY,
 ) -> DataFrame:
     """(node, rank_fp) after ``n_iter`` power iterations of
 
@@ -57,23 +55,11 @@ def pagerank_fixed_point(
         .union(edges.select(F.col("dst").alias("v")))
         .distinct()
     )
-    # verts and ew (edges ⋈ outdegree) are loop-INVARIANT but appear in
-    # every iteration's plan: without a persist the caller's edge
-    # derivation (often a distinct over fact-table scans) re-executes
-    # n_iter times inside the one final job. Cache both — the standard
-    # iterative-graph discipline (GraphX caches its edge RDD for the same
-    # reason). persisted() spans the whole loop, so a failure in any
-    # mid-loop or final job releases the caches; the eager checkpoint on
-    # return makes this builder EAGER (trade-offs documented in
-    # bicis_spark/caching.py: plan-only tooling sees a checkpoint stub
-    # for this query; at real cluster scale swap localCheckpoint for a
-    # reliable checkpoint dir, same caveat as the CC loop).
-    # DEPENDENCY-FIRST registration (r11): persist() compiles the cached
-    # plan against the cache state AT REGISTRATION, so registering the
-    # shared edge build first lets verts'/ew's cached plans scan
-    # InMemoryRelation(edges) instead of each re-computing the caller's
-    # (typically expensive) edge derivation — measured 2.9→1.7s on the
-    # 2.4M-row co-purchase preamble (label_propagation A/B).
+    # verts and ew (edges ⋈ outdegree) are read by every round. Persist
+    # the shared edge build FIRST: persist() compiles a cached plan
+    # against the caches registered before it, so verts and ew then scan
+    # the edges cache instead of each re-running the caller's edge
+    # derivation.
     with persisted(edges, verts, edges.join(deg, on="src")) as (
         _e,
         verts,
@@ -81,7 +67,7 @@ def pagerank_fixed_point(
     ):
         return _power_iterations(
             verts, ew, n_iter, scale, damping_num, damping_den,
-            checkpoint_every, broadcast_ranks=False,
+            broadcast_ranks=False,
         )
 
 
@@ -92,13 +78,11 @@ def _power_iterations(
     scale: int,
     damping_num: int,
     damping_den: int,
-    checkpoint_every: int,
     broadcast_ranks: bool,
 ) -> DataFrame:
-    """The shared power-iteration loop over persisted (verts, ew). Runs
-    INSIDE the caller's persisted() block and returns an eagerly
-    checkpointed result (the returned frame must not reference the caches
-    lazily — bicis_spark/caching.py).
+    """The shared power-iteration loop over persisted (verts, ew), run
+    inside the caller's persisted() block; the result reads only the
+    loop's checkpointed ranks.
 
     ``broadcast_ranks`` turns the per-iteration rank⋈edges join into a
     broadcast (map-side) join: correct whenever the rank table is
@@ -107,48 +91,41 @@ def _power_iterations(
     fact-sized — the shuffle join is the scale-safe default.
     """
     base = scale * (damping_den - damping_num) // damping_den
-    ranks = verts.select("v", F.lit(scale).cast("long").alias("rank_fp"))
-    for i in range(n_iter):
-        # lineage truncation (same discipline as
-        # connected_components_min_label): materialize the |V|-sized
-        # rank frame every few rounds so the plan tree stays shallow
-        # for long loops. eager=True keeps determinism — ranks are
-        # exact integers, so re-materialization can't drift. Only
-        # worth it when ≥3 rounds remain: a checkpoint just before
-        # the end pays materialization without saving any plan depth.
-        if (
-            i > 0
-            and checkpoint_every > 0
-            and i % checkpoint_every == 0
-            and n_iter - i >= 3
-        ):
-            ranks = ranks.localCheckpoint(eager=True)
+
+    def step(ranks: DataFrame) -> DataFrame:
         r = ranks.withColumnRenamed("v", "src")
         inflow = (
             ew.join(F.broadcast(r) if broadcast_ranks else r, on="src")
             .groupBy("dst")
             .agg(F.sum(F.expr("rank_fp div outdeg")).alias("_inflow"))
         )
-        ranks = (
-            verts.join(
-                inflow.withColumnRenamed("dst", "v"), on="v", how="left"
-            )
-            .select(
-                "v",
-                (
-                    F.lit(base)
-                    + F.expr(
-                        f"({damping_num} * coalesce(_inflow, 0L)) "
-                        f"div {damping_den}"
-                    )
+        return verts.join(
+            inflow.withColumnRenamed("dst", "v"), on="v", how="left"
+        ).select(
+            "v",
+            (
+                F.lit(base)
+                + F.expr(
+                    f"({damping_num} * coalesce(_inflow, 0L)) "
+                    f"div {damping_den}"
                 )
-                .cast("long")
-                .alias("rank_fp"),
             )
+            .cast("long")
+            .alias("rank_fp"),
         )
-    return ranks.select(F.col("v").alias("node"), "rank_fp").localCheckpoint(
-        eager=True
+
+    # each round adds two joins and an aggregate to the plan; a
+    # checkpoint every 4 rounds keeps analysis time flat for long runs.
+    # A round reads its predecessor once, so the rounds in between stay
+    # lazy: a cache there would only add its materialization job.
+    ranks, _ = iterate(
+        verts.select("v", F.lit(scale).cast("long").alias("rank_fp")),
+        step,
+        n_iter,
+        checkpoint_every=4,
+        persist=False,
     )
+    return ranks.select(F.col("v").alias("node"), "rank_fp")
 
 
 def pagerank_bipartite(
@@ -157,7 +134,6 @@ def pagerank_bipartite(
     scale: int = 1_000_000,
     damping_num: int = 85,
     damping_den: int = 100,
-    checkpoint_every: int = CHECKPOINT_EVERY,
     broadcast_state: bool = True,
 ) -> DataFrame:
     """PageRank specialized to a BIPARTITE graph given as distinct
@@ -193,13 +169,12 @@ def pagerank_bipartite(
             )
         )
     )
-    # dependency-first: pairs is the shared subtree of verts AND ew —
-    # register it first so their cached plans read the pairs cache (see
-    # pagerank_fixed_point)
+    # pairs is the shared subtree of verts AND ew: persist it first so
+    # their cached plans read the pairs cache (see pagerank_fixed_point)
     with persisted(pairs, verts, ew) as (_p, verts, ew):
         return _power_iterations(
             verts, ew, n_iter, scale, damping_num, damping_den,
-            checkpoint_every, broadcast_ranks=broadcast_state,
+            broadcast_ranks=broadcast_state,
         )
 
 
@@ -240,24 +215,21 @@ def _orient_by_degree(
     rv] with rv = rank(v). Forward degree under this orientation is
     O(√m) for EVERY vertex (a hub's wedges are generated only from its
     few higher-degree neighbors), so wedge volume is O(m^1.5) regardless
-    of skew — the r6 verdict's scale fix for the id-ordered wedge join,
-    whose forward degree on a power-law graph stays Θ(deg(hub)).
-    Exact, not approximate: the triangle SET is orientation-invariant,
-    so downstream results (and their oracles) are unchanged.
+    of skew, where an id-ordered orientation leaves a power-law hub's
+    forward degree at Θ(deg(hub)). Exact, not approximate: the triangle
+    SET is orientation-invariant, so downstream results (and their
+    oracles) are unchanged.
 
     Cost: two vertex-keyed joins to attach endpoint degrees. The degree
     table is |V|-sized: ``broadcast_degrees=True`` makes both attaches
     map-side — correct ONLY when the vertex universe is
     dimension-bounded at the call site (e.g. parts), the same contract
-    as ``kcore_peel``'s ``broadcast_keep``; False leaves shuffle joins
-    (AQE-planned). ``"auto"`` (r8) is the scale-SAFE middle: COUNT the
-    degree table at runtime and broadcast only under
+    as ``label_propagation``'s ``broadcast_labels``; False leaves
+    shuffle joins (AQE-planned). ``"auto"`` is the scale-safe middle:
+    COUNT the degree table at runtime and broadcast only under
     ``AUTO_BROADCAST_MAX_VERTICES`` — the count is one cheap job against
-    the (caller-persisted) degree aggregate, and the decision is bounded
-    by measurement instead of a call-site promise (the r7 advice flagged
-    the forced-broadcast variant as inconsistent with kcore's
-    scale-safe default; this closes that gap without paying the full
-    1.5s shuffle price on dimension-small graphs — A/B in SCALE.md r8).
+    the (caller-persisted) degree aggregate, and the decision rests on
+    measurement instead of a call-site promise.
 
     The packing bounds are RUNTIME-CHECKED in the plan itself (not just
     documented): an ``assert_true`` filter over the |V|-sized degree
@@ -278,7 +250,7 @@ def _orient_by_degree(
     if isinstance(broadcast_degrees, str):
         # reject typos ("Auto", "AUTO", ...) loudly: any non-"auto" string
         # would otherwise be truthy and silently force the unconditional
-        # broadcast the count gate exists to prevent (r8 advice)
+        # broadcast the count gate exists to prevent
         if broadcast_degrees != "auto":
             raise ValueError(
                 "broadcast_degrees must be True, False, or 'auto'; got "
@@ -349,38 +321,14 @@ def _edge_triangle_commons(eo: DataFrame) -> DataFrame:
     )
 
 
-def _oriented_triangles(eo: DataFrame) -> DataFrame:
-    """All triangles of a degree-oriented edge set, once each, as
-    [x, y, z] (x the lowest-rank corner): wedges u→v₁, u→v₂ with
-    rank(v₁) < rank(v₂), closed by the oriented edge v₁→v₂."""
-    return (
-        eo.alias("e1")
-        .join(
-            eo.alias("e2"),
-            (F.col("e1.u") == F.col("e2.u"))
-            & (F.col("e1.rv") < F.col("e2.rv")),
-        )
-        .select(
-            F.col("e1.u").alias("x"),
-            F.col("e1.v").alias("y"),
-            F.col("e2.v").alias("z"),
-        )
-        .join(
-            eo.alias("e3"),
-            (F.col("y") == F.col("e3.u")) & (F.col("z") == F.col("e3.v")),
-        )
-        .select("x", "y", "z")
-    )
-
-
 def triangle_count(
     edges: DataFrame, src: str, dst: str, broadcast_degrees: bool | str = False
 ) -> DataFrame:
     """Global triangle census of an undirected graph: 1 row
     [n_vertices, n_edges, n_triangles].
 
-    Compact-forward with DEGREE-ordered orientation (r7; was id-ordered
-    through r6): normalize every edge to (a < b), dedupe, orient each
+    Compact-forward with DEGREE-ordered orientation: normalize every
+    edge to (a < b), dedupe, orient each
     edge low-rank → high-rank by (degree, id), then count wedges closed
     by the oriented third edge. Each triangle is enumerated exactly once
     and wedge fan-out is bounded by the O(√m) forward degree at EVERY
@@ -427,7 +375,6 @@ def _triangle_census(ep: DataFrame, eo: DataFrame) -> DataFrame:
 def label_propagation(
     edges: DataFrame,
     n_iter: int = 2,
-    checkpoint_every: int = CHECKPOINT_EVERY,
     broadcast_labels: bool = False,
 ) -> DataFrame:
     """Synchronous label propagation (Raghavan et al. 2007) with a
@@ -441,9 +388,9 @@ def label_propagation(
     Per round: one join of the |V|-sized label frame to edges + one
     (node, label)-keyed count with map-side combine + one argmax
     aggregate — the Pregel step expressed relationally, same shuffle
-    shape and lineage discipline as the pagerank loop. Isolated nodes
-    (absent from ``edges``) are the caller's concern — every vertex here
-    has degree ≥ 1 by construction.
+    shape as the pagerank loop. Isolated nodes (absent from ``edges``)
+    are the caller's concern — every vertex here has degree ≥ 1 by
+    construction.
 
     ``broadcast_labels`` broadcasts the |V|-sized label frame into the
     per-round edge join (same dimension-sized-state reasoning as
@@ -454,50 +401,38 @@ def label_propagation(
         .union(edges.select(F.col("dst").alias("v")))
         .distinct()
     )
-    # dependency-first: edges before the verts derived from it (see
-    # pagerank_fixed_point)
-    round_caches: list[DataFrame] = []
-    try:
-        with persisted(edges, verts) as (edges, verts):
-            labels = verts.select("v", F.col("v").alias("lbl"))
-            for i in range(n_iter):
-                if i > 0 and checkpoint_every > 0 and i % checkpoint_every == 0:
-                    labels = labels.localCheckpoint(eager=True)
-                elif i > 0:
-                    # each round reads its predecessor TWICE (the cnt
-                    # join + the left-join base), so an unpersisted
-                    # mid-round frame duplicates the whole prior round's
-                    # subtree in the next plan (profiled at sf0.1: the
-                    # 25 MB count exchange ran 2x per round) — the same
-                    # lazy-persist double-step bellman_ford_rounds
-                    # documents
-                    labels = labels.persist()
-                    round_caches.append(labels)
-                lbl_src = labels.withColumnRenamed("v", "src")
-                if broadcast_labels:
-                    lbl_src = F.broadcast(lbl_src)
-                cnt = (
-                    edges.join(lbl_src, on="src")
-                    .groupBy(F.col("dst").alias("v"), "lbl")
-                    .agg(F.count(F.lit(1)).alias("_c"))
-                )
-                pick = cnt.groupBy("v").agg(
-                    F.max_by(
-                        F.col("lbl"), F.struct(F.col("_c"), -F.col("lbl"))
-                    ).alias("_new")
-                )
-                labels = (
-                    labels.join(pick, on="v", how="left")
-                    .select(
-                        "v", F.coalesce(F.col("_new"), F.col("lbl")).alias("lbl")
-                    )
-                )
-            return labels.select(
-                F.col("v").alias("node"), F.col("lbl").cast("long").alias("label")
-            ).localCheckpoint(eager=True)
-    finally:
-        for c in round_caches:
-            c.unpersist()
+
+    def step(labels: DataFrame) -> DataFrame:
+        lbl_src = labels.withColumnRenamed("v", "src")
+        if broadcast_labels:
+            lbl_src = F.broadcast(lbl_src)
+        cnt = (
+            edges.join(lbl_src, on="src")
+            .groupBy(F.col("dst").alias("v"), "lbl")
+            .agg(F.count(F.lit(1)).alias("_c"))
+        )
+        pick = cnt.groupBy("v").agg(
+            F.max_by(
+                F.col("lbl"), F.struct(F.col("_c"), -F.col("lbl"))
+            ).alias("_new")
+        )
+        return labels.join(pick, on="v", how="left").select(
+            "v", F.coalesce(F.col("_new"), F.col("lbl")).alias("lbl")
+        )
+
+    # edges before the verts derived from it (see pagerank_fixed_point).
+    # A round reads its predecessor twice (the count join and the
+    # left-join base), which the persist between checkpoints serves.
+    with persisted(edges, verts) as (edges, verts):
+        labels, _ = iterate(
+            verts.select("v", F.col("v").alias("lbl")),
+            step,
+            n_iter,
+            checkpoint_every=4,
+        )
+    return labels.select(
+        F.col("v").alias("node"), F.col("lbl").cast("long").alias("label")
+    )
 
 
 def bfs_hops(
@@ -515,59 +450,44 @@ def bfs_hops(
     propagation touch every vertex every round), each BFS round joins
     ONLY the current frontier against the edge table and anti-joins the
     visited set, so per-round work is proportional to the frontier's
-    out-edges — the Flink/Pregel delta-iteration shape, which is the only
-    formulation that survives 100 TB graphs whose BFS trees go quiet
-    after a few hops. The edge table is the loop invariant (persist it at
-    the call site when the input is an expensive subquery); frontier and
-    visited are eagerly localCheckpoint-ed per round, so the plan tree
-    stays flat and nothing recomputes across rounds. Early exit when the
-    frontier drains (isEmpty — a bounded driver scalar, same discipline
-    as the CC loop's convergence probe).
+    out-edges — the Flink/Pregel delta-iteration shape. The edge table is
+    the loop invariant (persist it at the call site when the input is an
+    expensive subquery). Each round's frontier is checkpointed; the
+    visited set is the lazy union of those checkpoints, so no round
+    re-copies earlier rounds' rows. The loop stops early when a frontier
+    comes out empty; its row count rides the checkpoint job.
 
     Integer-only state (vertex ids + hop counters) ⇒ bitwise
     deterministic; the declared oracle replays the identical min-hop
     semantics as a depth-bounded recursive CTE.
     """
-    import functools
-
     first = (
         seeds.select(F.col(seeds.columns[0]).cast("long").alias("node"))
         .distinct()
         .select("node", F.lit(0).cast("long").alias("hops"))
         .localCheckpoint(eager=True)
     )
-    # Per-round hop frames, each an eagerly checkpointed delta; `visited`
-    # is their LAZY union (every leaf a cached-RDD scan). Round 12 (r11
-    # verdict #4, guide §1.5/§2.6 — fewer actions per round): the old
-    # form re-checkpointed `visited.union(nxt)` every round, paying one
-    # extra materialization job per round AND re-copying the whole
-    # visited set's blocks each time (O(V · rounds) copies). The
-    # anti-join probe reads the same rows either way — a union of k
-    # cached scans instead of one re-copied cache — and the returned
-    # union is exactly the same row multiset the incremental unions
-    # produced. The per-round frontier and the emptiness probe (one
-    # bounded driver scalar over the just-materialized delta) are
-    # unchanged.
-    frames = [first]
-    frontier = first.select("node")
     e = edges.select(
         F.col(edges.columns[0]).cast("long").alias("src"),
         F.col(edges.columns[1]).cast("long").alias("dst"),
     )
-    for d in range(1, max_hops + 1):
-        visited = functools.reduce(DataFrame.unionByName, frames)
-        nxt = (
+    frontiers: list[DataFrame] = []
+
+    def step(frontier: DataFrame) -> DataFrame:
+        # round d (1-based) receives frontier d-1, so after the append
+        # len(frontiers) is this round's hop count
+        frontiers.append(frontier)
+        visited = functools.reduce(DataFrame.unionByName, frontiers)
+        return (
             frontier.join(e, frontier["node"] == e["src"])
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited, on="node", how="left_anti")
-            .localCheckpoint(eager=True)
+            .select("node", F.lit(len(frontiers)).cast("long").alias("hops"))
         )
-        if nxt.isEmpty():
-            break
-        frames.append(nxt.select("node", F.lit(d).cast("long").alias("hops")))
-        frontier = nxt.select("node")
-    return functools.reduce(DataFrame.unionByName, frames)
+
+    last, _ = iterate(first, step, max_hops, until=F.count(F.lit(1)))
+    return functools.reduce(DataFrame.unionByName, frontiers + [last])
 
 
 def local_clustering_coefficient(
@@ -578,9 +498,8 @@ def local_clustering_coefficient(
     score under every triangle census (how clique-like is each part's
     co-purchase neighborhood). Triangles enumerate once each via the
     DEGREE-oriented wedge join shared with ``triangle_count``
-    (``_orient_by_degree`` — r7: wedge volume O(m^1.5) at any skew, the
-    r6 verdict's hot-vertex fix; the triangle set, and hence every
-    output value, is orientation-invariant, so the oracle is unchanged);
+    (``_orient_by_degree``: wedge volume O(m^1.5) at any skew; the
+    triangle set, and hence every output value, is orientation-invariant);
     each closed triangle then credits its three corners through ONE
     explode + hash aggregate (the per-vertex shuffle carries (vertex,
     partial count), never triangle tuples). Degrees are one aggregate
@@ -592,11 +511,10 @@ def local_clustering_coefficient(
     # lazy tracked persists, not an eager checkpoint: degrees is read 3×
     # (two rank-attach sides + the output join) but an eager materialize
     # here would serialize a full pair-build job BEFORE the triangle job
-    # instead of fusing with it (measured +4s at sf0.1, round 7). The
-    # "auto" gate's count() DOES serialize that way — but it pays for
-    # itself by making both rank attaches map-side on dimension-small
-    # graphs (A/B in SCALE.md round 8), and the persisted degree cache
-    # it warms serves the three later reads.
+    # instead of fusing with it (measured +4s at sf0.1). The "auto"
+    # gate's count() DOES serialize that way — but it pays for itself by
+    # making both rank attaches map-side on dimension-small graphs, and
+    # the persisted degree cache it warms serves the three later reads.
     with persisted(e, _edge_degrees(e)) as (ep, degrees):
         eo = _orient_by_degree(ep, degrees, broadcast_degrees)
         return _lcc_from_oriented(degrees, eo)
@@ -655,24 +573,12 @@ def _lcc_from_oriented(degrees: DataFrame, eo: DataFrame) -> DataFrame:
         return out.localCheckpoint(eager=True)
 
 
-#: Edge-count gate for ``kcore_peel(degree_mode="auto")``: below it the
-#: full per-round degree recompute wins (measured at sf0.1, SCALE.md r8 —
-#: the delta's extra peel-sized joins cost more than the small aggregate
-#: they avoid); above it the semi-naive delta wins, because the recompute
-#: aggregates the FULL surviving edge set every round (data-sized) while
-#: the delta's work is sized by the round's peel. 50M edges ≈ the point
-#: where one full-degree exchange stops fitting a single executor wave.
-KCORE_DELTA_MIN_EDGES = 50_000_000
-
-
 def kcore_peel(
     edges: DataFrame,
     src: str,
     dst: str,
     k: int = 3,
     rounds: int = 4,
-    broadcast_keep: bool = False,
-    degree_mode: str = "auto",
 ) -> DataFrame:
     """Fixed-round k-core peeling of an undirected graph: ``rounds``
     synchronous iterations of "drop every vertex with degree < k, then
@@ -684,169 +590,47 @@ def kcore_peel(
     call-site constant, so the oracle unrolls the identical rounds as
     chained CTEs and the result is hash-replayable; a converged graph
     peels as a no-op, so when the graph stabilizes earlier the fixed
-    and converged results coincide (the engine still executes all
-    rounds — determinism over cleverness; at true 100 TB scale you'd
-    add a driver-side emptiness check between rounds, which cannot
-    change the result, only skip no-op jobs).
+    and converged results coincide.
 
-    Scale: each round is one degree aggregate + two semi-joins keyed on
-    the vertex id — the same delta-iteration shape as ``bfs_hops``; the
-    edge set only shrinks (under ``broadcast_keep`` the probes are
-    map-side, so a round is ONE exchange). A round reads its predecessor
-    THREE times (degree aggregate + both semi-join probes), so bare lazy
-    lineage re-executes the whole prefix 3^rounds times (measured: the
-    unchecked first cut ran 44s at sf0.001). The fix is a lazy persist
-    per round — cache-served re-reads with no blocking job — plus an
-    eager localCheckpoint every SECOND round to truncate lineage (r7
-    double-step; the r6 every-round eager checkpoint paid a full
-    materialization job per round).
+    Each round is one degree aggregate + two semi-joins keyed on the
+    vertex id, and the edge set only shrinks. A round reads its
+    predecessor three times (degree aggregate + both semi-join probes),
+    so the state between checkpoints must be cached: without it lazy
+    lineage re-executes the whole prefix 3^rounds times. A checkpoint
+    every second round bounds plan depth, and the persisted round in
+    between fuses into the next checkpoint's job.
 
-    ``broadcast_keep=True`` broadcasts the surviving-vertex set into
-    both semi-joins, removing the two per-round edge shuffles — correct
-    ONLY when the vertex universe is dimension-bounded at the call site
-    (e.g. parts), the same contract as ``label_propagation``'s
-    ``broadcast_labels``; leave False for graphs whose vertex set scales
-    with the data.
-
-    ``degree_mode`` (round 9, the r8 verdict's runtime-gate ask) selects
-    how each round's degrees are produced:
-
-    * ``"recompute"`` — full degree aggregate over the surviving edge
-      set every round (one data-sized exchange per round; wins at bench
-      SF, where the aggregate is tiny and the delta's extra joins are
-      pure overhead — the r8 A/B result).
-    * ``"delta"`` — semi-naive maintenance: keep the exact degree table
-      across rounds and SUBTRACT the contributions of edges incident to
-      the round's peeled vertices (two peel-sized semi-joins + a
-      peel-sized aggregate; wins at cluster scale, where the peel is a
-      sliver of the data the recompute would re-aggregate).
-    * ``"auto"`` — COUNT the normalized edge set once (it is eagerly
-      checkpointed anyway, the count is cache-served) and pick recompute
-      under ``KCORE_DELTA_MIN_EDGES`` — measurement-bounded, the exact
-      pattern of ``_orient_by_degree(broadcast_degrees="auto")``. The
-      gate stays open (recompute) at every local bench SF.
-
-    Both modes maintain the IDENTICAL degree table by induction (exact
-    integer counts; regression-guarded in tests), so the mode is a plan
-    choice, not a semantics change."""
-    if degree_mode not in ("auto", "recompute", "delta"):
-        raise ValueError(
-            f"degree_mode must be 'auto', 'recompute', or 'delta'; "
-            f"got {degree_mode!r}"
-        )
-    # auto mode: LAZY checkpoint + count — the gate's count() is then the
-    # job that materializes the checkpoint, so the gate costs zero extra
-    # jobs vs the ungated eager form (r9 verdict #4: the eager-checkpoint
-    # + separate-count pair paid one cache-served but still-scheduled job
-    # per call)
-    cur = _normalize_edges(edges, src, dst).localCheckpoint(
-        eager=(degree_mode != "auto")
-    )
-    if degree_mode == "auto":
-        degree_mode = (
-            "delta" if cur.count() > KCORE_DELTA_MIN_EDGES else "recompute"
-        )
-    # LAZY persist per round, eager checkpoint only every OTHER round (r7,
-    # the LPA double-step trick per the r6 verdict): a round reads its
-    # predecessor three times (degree aggregate + both probes), which the
-    # persist serves from cache WITHOUT the blocking materialization job
-    # an eager checkpoint pays — the round's work fuses into the next
-    # round's degree job, halving the per-round job floor. The every-2nd
-    # checkpoint still truncates lineage so plan analysis stays O(1) per
-    # round. Results are exact integers either way — materialization
-    # cadence cannot drift them. r8 re-audit: both a cadence-4 and an
-    # all-lazy variant were A/B'd head-to-head at sf0.1 (identical
-    # results) and LOST to this double-step (median 6.7 / 6.5 vs 5.9s) —
-    # deeper uncheckpointed plans pay more in AQE replanning than they
-    # save in materialization; measured marginal cost: ~0.3s for a lazy
-    # round, ~1.1-1.5s for a checkpointed one (SCALE.md round-8).
+    Vertices exist only through their edges, so ``k`` must be ≥ 1: a
+    0-core would have to list isolated vertices the edge set cannot
+    represent."""
     if k < 1:
-        # the delta table tracks 0-degree survivors the recompute's
-        # edge-side aggregate never sees; k >= 1 keeps the modes identical
         raise ValueError("kcore_peel requires k >= 1")
-    round_caches: list[DataFrame] = []
-    try:
-        degrees = None  # delta mode: the maintained exact degree table
-        for r in range(rounds):
-            if degree_mode == "recompute" or degrees is None:
-                degrees = (
-                    cur.select(
-                        F.explode(F.array(F.col("a"), F.col("b"))).alias("v")
-                    )
-                    .groupBy("v")
-                    .agg(F.count(F.lit(1)).cast("long").alias("d"))
-                )
-                if degree_mode == "delta":
-                    # round 0 seeds the maintained table; it is read three
-                    # times per round (keep/peel splits + the subtract)
-                    degrees = degrees.persist()
-                    round_caches.append(degrees)
-            keep = degrees.where(F.col("d") >= k).select("v")
-            if degree_mode == "delta":
-                # semi-naive subtract: degree loss of each SURVIVOR =
-                # its edges whose other endpoint was peeled this round
-                # (peel-sized joins — edges with both ends peeled
-                # attribute onto peeled vertices and drop out in the
-                # keep join below)
-                rm = degrees.where(F.col("d") < k)
-                dec = (
-                    cur.join(
-                        rm.select(F.col("v").alias("b")), "b", "left_semi"
-                    )
-                    .select(F.col("a").alias("v"))
-                    .unionAll(
-                        cur.join(
-                            rm.select(F.col("v").alias("a")), "a", "left_semi"
-                        ).select(F.col("b").alias("v"))
-                    )
-                    .groupBy("v")
-                    .agg(F.count(F.lit(1)).cast("long").alias("_dec"))
-                )
-                degrees = (
-                    degrees.where(F.col("d") >= k)
-                    .join(dec, "v", "left")
-                    .select(
-                        "v",
-                        (
-                            F.col("d")
-                            - F.coalesce(F.col("_dec"), F.lit(0).cast("long"))
-                        ).alias("d"),
-                    )
-                    .persist()
-                )
-                round_caches.append(degrees)
-            ka = keep.select(F.col("v").alias("a"))
-            kb = keep.select(F.col("v").alias("b"))
-            if broadcast_keep:
-                ka, kb = F.broadcast(ka), F.broadcast(kb)
-            cur = cur.join(ka, "a", "left_semi").join(kb, "b", "left_semi")
-            if r % 2 == 1:
-                cur = cur.localCheckpoint(eager=True)
-            else:
-                cur = cur.persist()
-                round_caches.append(cur)
-        if degree_mode == "delta" and degrees is not None:
-            # the maintained table IS the final edge set's exact degrees
-            # (kept vertices only) — no data-sized final aggregate
-            # (degrees is None when rounds == 0: no peel ran, so fall
-            # through to the recompute aggregate over the intact edges)
-            out = degrees.where(F.col("d") >= k).select(
-                F.col("v").alias("vertex"),
-                F.col("d").alias("residual_degree"),
-            )
-        else:
-            final_deg = (
-                cur.select(F.col("a").alias("vertex"))
-                .unionAll(cur.select(F.col("b").alias("vertex")))
-                .groupBy("vertex")
-                .agg(F.count(F.lit(1)).cast("long").alias("residual_degree"))
-            )
-            out = final_deg.where(F.col("residual_degree") >= k)
-        # materialize before releasing the round caches the plan reads
-        return out.localCheckpoint(eager=True)
-    finally:
-        for c in round_caches:
-            c.unpersist()
+
+    def step(cur: DataFrame) -> DataFrame:
+        keep = (
+            cur.select(F.explode(F.array(F.col("a"), F.col("b"))).alias("v"))
+            .groupBy("v")
+            .agg(F.count(F.lit(1)).cast("long").alias("d"))
+            .where(F.col("d") >= k)
+            .select("v")
+        )
+        return cur.join(
+            keep.select(F.col("v").alias("a")), "a", "left_semi"
+        ).join(keep.select(F.col("v").alias("b")), "b", "left_semi")
+
+    cur, _ = iterate(
+        _normalize_edges(edges, src, dst).localCheckpoint(eager=True),
+        step,
+        rounds,
+        checkpoint_every=2,
+    )
+    return (
+        cur.select(F.col("a").alias("vertex"))
+        .unionAll(cur.select(F.col("b").alias("vertex")))
+        .groupBy("vertex")
+        .agg(F.count(F.lit(1)).cast("long").alias("residual_degree"))
+        .where(F.col("residual_degree") >= k)
+    )
 
 
 def bellman_ford_rounds(
@@ -870,60 +654,39 @@ def bellman_ford_rounds(
     Integer weights in, integer distances out — bitwise deterministic
     under any partitioning. Each round is one hash join (frontierless
     full relaxation — for graphs whose updates go quiet, switch to the
-    delta form of ``bfs_hops``) + one min aggregate. The running dist
-    table is eagerly checkpointed every SECOND round with a lazy persist
-    in between (r7, the LPA double-step per the r6 verdict): dist is
-    read TWICE per round (the relaxation join + the union), so the
-    in-between state must still be cached — the persist serves both
-    reads without the blocking materialization job an eager checkpoint
-    pays, and the every-2nd checkpoint truncates lineage (an unpersisted
-    first cut of this change re-executed each skipped round's shuffle
-    2× per subsequent read and timed out at sf0.1 — the kcore 44s lesson
-    in miniature). The edge table is the loop INVARIANT
-    and is persisted for the duration of the loop — without it the
-    caller's edge derivation (typically an expensive pair build)
-    re-executes once per round (measured: 13.2s → ~5s at sf0.1, the
-    same lesson as pagerank's persisted ew)."""
+    delta form of ``bfs_hops``) + one min aggregate. The dist table is
+    read twice per round (the relaxation join and the union), so the
+    round between checkpoints is persisted; a checkpoint every second
+    round bounds plan depth. The edge table is the loop invariant and is
+    persisted for the duration of the loop, so the caller's edge
+    derivation runs once, not once per round."""
     e = edges.select(
         F.col(src).cast("long").alias("u"),
         F.col(dst).cast("long").alias("v"),
         F.col(weight).cast("long").alias("w"),
     )
+
+    def step(dist: DataFrame) -> DataFrame:
+        # rename the dist side before joining: on persisted rounds dist
+        # shares lineage with e, so attribute-based references
+        # (dist["v"] == e["u"]) would be ambiguous
+        relaxed = (
+            dist.select(F.col("v").alias("_dv"), F.col("d").alias("_dd"))
+            .join(e, F.col("_dv") == F.col("u"))
+            .select(F.col("v"), (F.col("_dd") + F.col("w")).alias("d"))
+        )
+        return (
+            dist.unionByName(relaxed)
+            .groupBy("v")
+            .agg(F.min("d").cast("long").alias("d"))
+        )
+
     dist = (
         seeds.select(F.col(seeds.columns[0]).cast("long").alias("v"))
         .distinct()
         .select("v", F.lit(0).cast("long").alias("d"))
         .localCheckpoint(eager=True)
     )
-    round_caches: list[DataFrame] = []
-    try:
-        with persisted(e) as (e,):
-            for r in range(rounds):
-                # rename the dist side before joining: on un-checkpointed
-                # rounds dist shares lineage with e and attribute-based
-                # references (dist["v"] == e["u"]) are ambiguous
-                relaxed = (
-                    dist.select(
-                        F.col("v").alias("_dv"), F.col("d").alias("_dd")
-                    )
-                    .join(e, F.col("_dv") == F.col("u"))
-                    .select(
-                        F.col("v"), (F.col("_dd") + F.col("w")).alias("d")
-                    )
-                )
-                dist = (
-                    dist.unionByName(relaxed)
-                    .groupBy("v")
-                    .agg(F.min("d").cast("long").alias("d"))
-                )
-                if r % 2 == 1 or r == rounds - 1:
-                    dist = dist.localCheckpoint(eager=True)
-                else:
-                    dist = dist.persist()
-                    round_caches.append(dist)
-        return dist.select(
-            F.col("v").alias("vertex"), F.col("d").alias("dist")
-        )
-    finally:
-        for c in round_caches:
-            c.unpersist()
+    with persisted(e) as (e,):
+        dist, _ = iterate(dist, step, rounds, checkpoint_every=2)
+    return dist.select(F.col("v").alias("vertex"), F.col("d").alias("dist"))

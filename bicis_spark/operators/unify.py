@@ -23,7 +23,6 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
 
 from bicis_spark.functions.parsing import (
     parse_duration_seconds,
@@ -99,12 +98,6 @@ YEAR_DIALECTS: dict[int, Dialect] = {
 }
 
 CANONICAL_COLUMNS = ("rent_date", "rent_station", "return_date", "return_station")
-
-
-def dialect_schema(dialect: Dialect) -> StructType:
-    """All-string read schema for a dialect's raw CSV (values are coerced
-    after projection — explicit, no inference scan)."""
-    return StructType([StructField(c, StringType(), True) for c in dialect.mapping])
 
 
 def normalize_dialect(raw: DataFrame, dialect: Dialect) -> DataFrame:

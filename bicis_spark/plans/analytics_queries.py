@@ -5751,14 +5751,7 @@ def kcore_parts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bicis_spark.operators.graph import kcore_peel
 
     pairs = _copurchase_pairs(spark, sf_dir)
-    # broadcast_keep=False since r7: under AQE the keep-side converts to
-    # a runtime broadcast INSIDE the fused 2-round job, while an explicit
-    # broadcast pays a driver-side build job per round (A/B at sf0.1:
-    # 6.47s explicit vs 6.09s AQE) — and the shuffle form is the
-    # scale-safe default for data-scaled graphs anyway
-    return kcore_peel(
-        pairs, "src", "dst", k=80, rounds=4, broadcast_keep=False
-    )
+    return kcore_peel(pairs, "src", "dst", k=80, rounds=4)
 
 
 # ---------------------------------------------------------------------------

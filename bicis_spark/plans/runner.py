@@ -18,7 +18,6 @@ never read partial outputs.
 from __future__ import annotations
 
 import importlib
-import json
 import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
@@ -233,11 +232,3 @@ def validate_disjoint_outputs(
                     f"{seen[col]!r} and {name!r}"
                 )
             seen[col] = name
-
-
-def write_json_report(path: str, payload: dict) -> None:
-    """S8 JSON sink for small metadata/metrics dicts (split.py:74-85,
-    evaluate_model.py:40-41)."""
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    with open(path, "w") as f:
-        json.dump(payload, f, indent=2, default=str)

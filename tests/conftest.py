@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 import sys
+from contextlib import contextmanager
 
 import duckdb
 import pytest
@@ -40,3 +41,32 @@ def duck():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def new_job_ids(spark):
+    """``with new_job_ids() as jobs:`` — after the block, ``jobs`` holds
+    the ids of the Spark jobs (outside any job group) started inside it.
+
+    Compares id SETS, not counts: the status tracker retains only the
+    last ``spark.ui.retainedJobs`` (1000) job ids, so deep into a
+    full-suite session old ids are evicted while the block runs and a
+    before/after count delta undercounts. Eviction only drops old ids,
+    so the set difference still isolates exactly the new jobs. The
+    listener bus is drained first, so every job the block ran is
+    registered with the tracker."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def job_ids() -> set[int]:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(tracker.getJobIdsForGroup(None) or [])
+
+    @contextmanager
+    def capture():
+        before = job_ids()
+        jobs: set[int] = set()
+        yield jobs
+        jobs.update(job_ids() - before)
+
+    return capture

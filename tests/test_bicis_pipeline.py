@@ -148,24 +148,3 @@ def test_pipeline_target_window_is_bucketed(spark, sf_dir):
 
     src = inspect.getsource(bicis_pipeline)
     assert "next_window_count_bucketed(" in src
-
-
-def test_pagerank_deep_iteration_checkpointing(spark):
-    """n_iter=10 pagerank with lineage truncation: must complete with a
-    shallow final plan (the localCheckpoint discipline) and keep the exact
-    fixed-point values of the unrolled recurrence."""
-    from bicis_spark.operators.graph import pagerank_fixed_point
-
-    edges = spark.createDataFrame(
-        [(a, b) for a in range(6) for b in range(6) if (a + 1) % 6 == b or (a * 2) % 6 == b if a != b],
-        "src long, dst long",
-    ).distinct()
-    deep = pagerank_fixed_point(edges, n_iter=10, checkpoint_every=4)
-    flat = pagerank_fixed_point(edges, n_iter=10, checkpoint_every=0)
-    got = {r["node"]: r["rank_fp"] for r in deep.collect()}
-    want = {r["node"]: r["rank_fp"] for r in flat.collect()}
-    assert got == want
-    # truncated lineage: the optimized plan must not contain 10 unrolled
-    # join rounds (checkpoint resets to a LogicalRDD scan)
-    plan = deep._jdf.queryExecution().optimizedPlan().toString()
-    assert "LogicalRDD" in plan or "Scan ExistingRDD" in plan, plan[:2000]

@@ -623,3 +623,31 @@ def test_edit_distance_pairs_blocking_complete(spark):
     assert got == want
     assert (1, 2, 1) in got and (6, 7, 0) in got and (9, 10, 1) in got
     assert not any(p[:2] == (3, 4) for p in got)  # kitte↔kittens: dist 2
+
+
+def test_pq_rejects_vectors_of_the_wrong_width(spark):
+    """PQ needs every vector to hold exactly n_subspaces * sub_dims
+    elements. A short last sub-vector would give a NULL L2 distance that
+    sorts first and silently wins code assignment; a long vector would
+    be truncated. Both fail the job with the width in the message."""
+    from bicis_spark.extensions.similarity import ann_topk_pq, pq_subvectors
+
+    qv = spark.createDataFrame(
+        [(1, [1, 2, 3, 4, 5, 6, 7, 8]), (2, [1, 2, 3, 4, 5, 6])],
+        "vec_id long, qv array<int>",
+    )
+    ok = pq_subvectors(qv.where("vec_id = 1"), n_subspaces=2, sub_dims=4)
+    assert sorted((r["sub"], r["sv"]) for r in ok.collect()) == [
+        (0, [1, 2, 3, 4]), (1, [5, 6, 7, 8])
+    ]
+    for n_subspaces, sub_dims in ((2, 4), (2, 3)):
+        with pytest.raises(Exception, match="n_subspaces \\* sub_dims"):
+            pq_subvectors(qv, n_subspaces=n_subspaces, sub_dims=sub_dims).collect()
+
+    rows = [(i, [float((i * 7 + d * 13) % 19 - 9) for d in range(8)]) for i in range(40)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    with pytest.raises(Exception, match="n_subspaces \\* sub_dims = 12"):
+        ann_topk_pq(
+            df, df.where("vec_id % 20 = 0"), k=3, n_subspaces=3, sub_dims=4,
+            seed_mod=4, train_iters=1,
+        ).collect()

@@ -15,8 +15,7 @@
   n < 512.
 * GIF deferred-clear LZW (advice): the decode table freezes at 4096
   entries.
-* kcore_peel(rounds=0, degree_mode='delta') (advice): no AttributeError;
-  equals recompute mode.
+* kcore_peel(rounds=0): peels nothing and returns the full degrees.
 """
 
 from __future__ import annotations
@@ -267,15 +266,20 @@ def test_gif_lzw_decodes_deferred_clear_streams():
     assert got == pixels
 
 
-def test_kcore_rounds_zero_delta_mode(spark):
+def test_kcore_rounds_zero(spark):
+    """rounds=0 peels nothing: every vertex of degree >= k in the
+    normalized (deduped, loop-free) edge set, with its full degree."""
+    from collections import Counter
+
     from bicis_spark.operators.graph import kcore_peel
 
-    edges = spark.createDataFrame(
-        [(i, (i * 3 + 1) % 40) for i in range(120)], "src long, dst long"
-    )
-    rec = kcore_peel(edges, "src", "dst", k=2, rounds=0, degree_mode="recompute")
-    dlt = kcore_peel(edges, "src", "dst", k=2, rounds=0, degree_mode="delta")
-    assert sorted(map(tuple, rec.collect())) == sorted(map(tuple, dlt.collect()))
+    rows = [(i, (i * 3 + 1) % 40) for i in range(120)]
+    edges = spark.createDataFrame(rows, "src long, dst long")
+    got = kcore_peel(edges, "src", "dst", k=2, rounds=0)
+    norm = {(min(a, b), max(a, b)) for a, b in rows if a != b}
+    deg = Counter(v for e in norm for v in e)
+    want = sorted((v, d) for v, d in deg.items() if d >= 2)
+    assert sorted(map(tuple, got.collect())) == want
 
 
 # ---------------------------------------------------------------------------

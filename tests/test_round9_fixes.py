@@ -183,11 +183,23 @@ def test_ivfpq_with_full_probes_equals_flat_pq(spark, sf_dir):
     assert all(sorted(v) == list(range(1, len(v) + 1)) for v in by_q.values())
 
 
-def test_kcore_degree_modes_agree(spark):
-    """The r9 semi-naive delta peel is a PLAN choice: 'recompute',
-    'delta', and 'auto' must produce identical rows on graphs that
+def _kcore_reference(edge_rows, k, rounds):
+    """Fixed-round peel in plain Python: normalized undirected edges,
+    each round drops every edge touching a vertex of degree < k."""
+    from collections import Counter
+
+    edges = {(min(a, b), max(a, b)) for a, b in edge_rows if a != b}
+    for _ in range(rounds):
+        deg = Counter(v for e in edges for v in e)
+        edges = {(a, b) for a, b in edges if deg[a] >= k and deg[b] >= k}
+    deg = Counter(v for e in edges for v in e)
+    return sorted((v, d) for v, d in deg.items() if d >= k)
+
+
+def test_kcore_peel_matches_reference_and_rejects_k0(spark):
+    """kcore_peel equals a plain-Python fixed-round peel on graphs that
     exercise multi-round cascades (a K4 with a tail that peels over two
-    rounds) and total collapse (a 6-cycle at k=3). Typo modes raise."""
+    rounds) and total collapse (a 6-cycle at k=3); k=0 raises."""
     from bicis_spark.operators.graph import kcore_peel
 
     k4_tail = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4),
@@ -195,22 +207,15 @@ def test_kcore_degree_modes_agree(spark):
     cyc = [(i, (i + 1) % 6) for i in range(6)]
     for edges_rows, k in ((k4_tail, 3), (cyc, 3), (k4_tail, 2)):
         edges = spark.createDataFrame(edges_rows, "src long, dst long")
-        results = []
-        for mode in ("recompute", "delta", "auto"):
-            rows = sorted(
-                tuple(r)
-                for r in kcore_peel(
-                    edges, "src", "dst", k=k, rounds=4, degree_mode=mode
-                ).collect()
-            )
-            results.append(rows)
-        assert results[0] == results[1] == results[2], (edges_rows, k)
+        got = sorted(
+            tuple(r)
+            for r in kcore_peel(edges, "src", "dst", k=k, rounds=4).collect()
+        )
+        assert got == _kcore_reference(edges_rows, k, 4), (edges_rows, k)
 
     edges = spark.createDataFrame(k4_tail, "src long, dst long")
-    with pytest.raises(ValueError, match="degree_mode"):
-        kcore_peel(edges, "src", "dst", k=3, degree_mode="Delta")
     with pytest.raises(ValueError, match="k >= 1"):
-        kcore_peel(edges, "src", "dst", k=0, degree_mode="delta")
+        kcore_peel(edges, "src", "dst", k=0)
 
 
 def test_orient_broadcast_degrees_rejects_typo_strings(spark):

@@ -133,7 +133,7 @@ def test_validate_disjoint_outputs(spark):
         validate_disjoint_outputs({"a": a, "c": c}, ["id"])
 
 
-def test_pipeline_observed_metrics_ride_the_write_job(spark, tmp_path):
+def test_pipeline_observed_metrics_ride_the_write_job(spark, tmp_path, new_job_ids):
     """Per-stage metrics come from DataFrame.observe attached to the
     materialization write — row counts plus caller aggregates, with no
     second scan (the job-count assertion: exactly one job per executed
@@ -152,15 +152,8 @@ def test_pipeline_observed_metrics_ride_the_write_job(spark, tmp_path):
     def filtered(s, base_df):
         return base_df.where(F.col("id") >= 5)
 
-    tracker = spark.sparkContext.statusTracker()
-    # Compare ID sets, not counts: the tracker retains only the last
-    # spark.ui.retainedJobs (1000) job ids, so deep into a full-suite
-    # session old ids are evicted WHILE the stage runs and a
-    # before/after count delta undercounts. Eviction only drops old
-    # ids, so the set difference still isolates exactly the new jobs.
-    jobs_before = set(tracker.getJobIdsForGroup(None) or [])
-    p.run(["filtered"])
-    new_jobs = set(tracker.getJobIdsForGroup(None) or []) - jobs_before
+    with new_job_ids() as new_jobs:
+        p.run(["filtered"])
 
     assert p.last_run_metrics["base"] == {"rows": 25}
     assert p.last_run_metrics["filtered"] == {"rows": 20, "n_even": 10}
