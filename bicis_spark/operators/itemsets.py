@@ -33,7 +33,9 @@ def frequent_itemsets(
     """[kind, item_a, item_b, item_c, support] for all 2- and 3-item
     sets appearing in ≥ ``min_support`` distinct baskets (item_c NULL
     for pairs). ``max_items_per_basket`` drops oversized baskets before
-    candidate generation (the mega-basket guard)."""
+    candidate generation (the mega-basket guard). It counts a basket's
+    distinct non-NULL items: ``collect_set`` drops NULL items, so they
+    neither count toward the cap nor appear in any itemset."""
     # Combination expansion over per-basket sorted item arrays — the
     # _copurchase_pairs shape — instead of basket self-joins (round 12,
     # guide §2.4 remove shuffles): the old form shuffled the distinct

@@ -9,10 +9,10 @@ write-once parquet materialization with existence-check memoization, and a
 thin YAML experiment config — without the scheduler daemon, process
 boundaries, or ``$name``-reference object graph.
 
-Scale notes: stages exchange parquet (columnar, splittable, statistics for
-pruning); a stage's ``partition_by`` feeds partition pruning downstream;
-memoization uses an atomic ``_SUCCESS``-style marker so concurrent runners
-never read partial outputs.
+Reads: ``run`` opens only the direct deps of the stages it executes and
+the requested targets. Outputs this instance wrote are read with the schema
+it wrote (no inference job); others infer it. An atomic ``_SUCCESS`` marker
+keeps concurrent runners from reading partial outputs.
 """
 
 from __future__ import annotations
@@ -23,6 +23,7 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 try:
     import yaml
@@ -43,7 +44,6 @@ class Stage:
     name: str
     fn: Callable[..., DataFrame]
     deps: list[str] = field(default_factory=list)
-    partition_by: list[str] | None = None
     metrics: dict[str, object] | None = None
 
 
@@ -52,7 +52,8 @@ class Pipeline:
 
     ``run`` topologically executes stages; each stage's output is
     materialized at ``{root}/{name}.parquet`` and skipped when already
-    present (the reference's L2 incremental materialization).
+    present (the reference's L2 incremental materialization). It returns
+    the targets (all stages if None) read back from that parquet.
     """
 
     def __init__(self, spark: SparkSession, root: str):
@@ -63,16 +64,16 @@ class Pipeline:
         #: {stage: {"rows": n, ...}} for executed stages,
         #: {stage: {"skipped": True}} for memoized ones.
         self.last_run_metrics: dict[str, dict] = {}
+        self._schemas: dict[str, StructType] = {}  # written schema by stage name
 
     def stage(
         self,
         name: str,
         deps: list[str] | None = None,
-        partition_by: list[str] | None = None,
         metrics: dict[str, object] | None = None,
     ):
         def deco(fn: Callable[..., DataFrame]):
-            self.stages[name] = Stage(name, fn, deps or [], partition_by, metrics)
+            self.stages[name] = Stage(name, fn, deps or [], metrics)
             return fn
 
         return deco
@@ -88,37 +89,36 @@ class Pipeline:
         from pyspark.sql import functions as F
 
         order = self._topo_order(targets)
+        execute = {n for n in order if force or not self._done(n)}
+        wanted = targets or order
+        needed = set(wanted).union(*(self.stages[n].deps for n in execute))
         results: dict[str, DataFrame] = {}
         self.last_run_metrics = {}
         for name in order:
             stage = self.stages[name]
-            path = self._path(name)
-            if force or not self._done(name):
-                inputs = [results[d] for d in stage.deps]
-                df = stage.fn(self.spark, *inputs)
+            if name in execute:
+                df = stage.fn(self.spark, *[results[d] for d in stage.deps])
                 # observed metrics ride the write job — no second scan
                 obs = Observation(f"stage:{name}")
                 aggs = {"rows": F.count(F.lit(1)).alias("rows")}
                 for mname, col in (stage.metrics or {}).items():
                     if mname in aggs:
-                        # 'rows' is the built-in row-count observation; a
-                        # user metric under the same key would silently
-                        # shadow it in last_run_metrics
+                        # a user 'rows' would shadow the built-in row count
                         raise ValueError(
                             f"stage {name!r}: metric name {mname!r} collides "
                             "with a reserved observation key"
                         )
                     aggs[mname] = col.alias(mname)
-                df = df.observe(obs, *aggs.values())
-                writer = df.write.mode("overwrite")
-                if stage.partition_by:
-                    writer = writer.partitionBy(*stage.partition_by)
-                writer.parquet(path)
+                df.observe(obs, *aggs.values()).write.mode("overwrite").parquet(self._path(name))
+                self._schemas[name] = df.schema
                 self.last_run_metrics[name] = dict(obs.get)
             else:
                 self.last_run_metrics[name] = {"skipped": True}
-            results[name] = self.spark.read.parquet(path)
-        return results
+            if name in needed:  # a known schema skips the inference job
+                schema = self._schemas.get(name)
+                reader = self.spark.read.schema(schema) if schema else self.spark.read
+                results[name] = reader.parquet(self._path(name))
+        return {n: results[n] for n in wanted}
 
     def _topo_order(self, targets: list[str] | None) -> list[str]:
         wanted = targets or list(self.stages)

@@ -801,6 +801,26 @@ def test_frequent_itemsets_exact_counts(spark):
     assert capped == []
 
 
+def test_frequent_itemsets_basket_cap_counts_non_null_items(spark):
+    """``max_items_per_basket`` counts distinct non-NULL items: a basket
+    at exactly the cap plus one NULL item is kept, and NULL never enters
+    an itemset."""
+    from bicis_spark.operators.itemsets import frequent_itemsets
+
+    rows = [
+        (1, "a"), (1, "b"), (1, None),   # 2 items + NULL, cap 2: kept
+        (2, "a"), (2, "b"),
+        (3, None), (3, "a"),
+    ]
+    df = spark.createDataFrame(rows, "bk long, it string")
+    got = frequent_itemsets(
+        df, "bk", "it", min_support=1, max_items_per_basket=2
+    ).collect()
+    # basket 1 counted (a NULL-counting cap would drop it: support 1);
+    # basket 3's NULL pairs with nothing
+    assert [tuple(r) for r in got] == [("pair", "a", "b", None, 2)]
+
+
 def test_seasonal_decompose_reconstruction_identity(spark):
     """trend + seasonal + residual must reconstruct x EXACTLY as the
     fixed expression order guarantees (x - trend - seasonal == residual

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import math
 
-from bicis_spark.plans.bicis_pipeline import run_full_pipeline
+from bicis_spark.plans.bicis_pipeline import build_pipeline, run_full_pipeline
 from bicis_spark.plans.runner import load_experiment
 
 
@@ -30,6 +30,28 @@ def test_full_pipeline(spark, sf_dir, tmp_path):
     fails = results["fails"].first()
     assert fails["input_count"] - fails["output_count"] == fails["number_of_errors"]
     assert fails["output_count"] == n_ds
+
+
+def test_stagewise_runs_cost_what_one_run_costs(spark, sf_dir, tmp_path, new_job_ids):
+    """Running the DAG one target at a time re-opens no ancestor beyond a
+    stage's direct deps and infers no schema it wrote, so it runs exactly
+    the jobs of one ``run()``; the schema carried from each write is the
+    one Spark infers from the parquet."""
+    stepwise = build_pipeline(spark, sf_dir, str(tmp_path / "stepwise"))
+    outs = {}
+    with new_job_ids() as step_jobs:
+        for name in stepwise.stages:
+            outs.update(stepwise.run([name]))
+    whole = build_pipeline(spark, sf_dir, str(tmp_path / "whole"))
+    with new_job_ids() as whole_jobs:
+        results = whole.run()
+
+    assert len(step_jobs) == len(whole_jobs)
+    assert set(outs) == set(results) == set(whole.stages)
+    for p, frames in ((stepwise, outs), (whole, results)):
+        for name, df in frames.items():
+            inferred = spark.read.parquet(p._path(name)).schema
+            assert df.schema.json() == inferred.json(), name
 
 
 def test_baseline_config_resolves():

@@ -137,7 +137,7 @@ def test_pipeline_observed_metrics_ride_the_write_job(spark, tmp_path, new_job_i
     """Per-stage metrics come from DataFrame.observe attached to the
     materialization write — row counts plus caller aggregates, with no
     second scan (the job-count assertion: exactly one job per executed
-    stage beyond the memoized read). Memoized stages report skipped."""
+    stage). Memoized stages report skipped."""
     p = Pipeline(spark, str(tmp_path))
 
     @p.stage("base")
@@ -157,13 +157,56 @@ def test_pipeline_observed_metrics_ride_the_write_job(spark, tmp_path, new_job_i
 
     assert p.last_run_metrics["base"] == {"rows": 25}
     assert p.last_run_metrics["filtered"] == {"rows": 20, "n_even": 10}
-    # two jobs per stage (the parquet write + the post-write read's
-    # file-listing/schema job) and ZERO metric jobs — a count()-based
-    # metrics pass would add one more job per stage (6 total)
-    assert len(new_jobs) == 4
+    # one write job per stage; no read-back job (the written schema is
+    # reused, so nothing is inferred) and no metric job — a count()-based
+    # metrics pass would add one more job per stage
+    assert len(new_jobs) == 2
 
     p.run(["filtered"])  # memoized rerun
     assert p.last_run_metrics == {
         "base": {"skipped": True},
         "filtered": {"skipped": True},
+    }
+
+
+def test_fresh_instance_reads_only_direct_deps(spark, tmp_path, new_job_ids):
+    """A fresh Pipeline on a memoized root opens only what the executing
+    stage consumes: c's input b (schema inferred — this instance did not
+    write it) and not a; c itself is read back with the schema it wrote."""
+    calls = {"a": 0, "b": 0, "c": 0}
+
+    def chain(p):
+        @p.stage("a")
+        def a(s):
+            calls["a"] += 1
+            return s.range(6).select(F.col("id"))
+
+        @p.stage("b", deps=["a"])
+        def b(s, a_df):
+            calls["b"] += 1
+            return a_df.select((F.col("id") * 10).alias("v"))
+
+        @p.stage("c", deps=["b"])
+        def c(s, b_df):
+            calls["c"] += 1
+            return b_df.where(F.col("v") >= 20).select((F.col("v") + 1).alias("w"))
+
+        return p
+
+    chain(Pipeline(spark, str(tmp_path))).run(["b"])
+    assert calls == {"a": 1, "b": 1, "c": 0}
+
+    fresh = chain(Pipeline(spark, str(tmp_path)))
+    with new_job_ids() as new_jobs:
+        out = fresh.run(["c"])
+    assert calls == {"a": 1, "b": 1, "c": 1}
+    # b's schema inference + c's write; a is never opened, c's read-back
+    # reuses the written schema
+    assert len(new_jobs) == 2
+    assert set(out) == {"c"}
+    assert sorted(r["w"] for r in out["c"].collect()) == [21, 31, 41, 51]
+    assert fresh.last_run_metrics == {
+        "a": {"skipped": True},
+        "b": {"skipped": True},
+        "c": {"rows": 4},
     }
