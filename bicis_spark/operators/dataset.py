@@ -10,8 +10,8 @@ error ids (``:87-110``).
 
 Spark-first: the id join is a DataFrame inner join (shuffle-hash/SMJ on a
 high-cardinality unique key — exactly what Catalyst is built for); null
-filtering is inner-join semantics; the fails report is an aggregate plus a
-left-anti join, not two extra full ``count()`` jobs over RDD lineage.
+filtering is inner-join semantics; the fails report is one aggregate plus
+a left-anti join, not two extra full ``count()`` jobs over RDD lineage.
 """
 
 from __future__ import annotations
@@ -52,17 +52,21 @@ def fails_report(
 ) -> tuple[DataFrame, DataFrame]:
     """L5 reconciliation: (1-row counts frame, error-ids frame).
 
-    counts: [input_count, output_count, number_of_errors];
+    counts: exactly one row [input_count, output_count, number_of_errors]
+    of non-NULL bigints (0, 0, 0 when both frames are empty), from ONE
+    aggregate over the union of the two row sets tagged by side;
     error ids: input ids absent from the output (left-anti join), limited —
     the reference's ``take(100)`` of null-feature ids (build_dataset.py:92-97).
     """
     in_ids = input_df.select(id_col)
     out_ids = output_df.select(id_col)
-    counts = (
-        in_ids.agg(F.count(F.lit(1)).alias("input_count"))
-        .join(F.broadcast(out_ids.agg(F.count(F.lit(1)).alias("output_count"))))
-        .withColumn("number_of_errors", F.col("input_count") - F.col("output_count"))
+    sides = in_ids.select(F.lit(True).alias("_in")).unionAll(
+        out_ids.select(F.lit(False).alias("_in"))
     )
+    counts = sides.agg(
+        F.count(F.when(F.col("_in"), 1)).alias("input_count"),
+        F.count(F.when(~F.col("_in"), 1)).alias("output_count"),
+    ).withColumn("number_of_errors", F.col("input_count") - F.col("output_count"))
     error_ids = in_ids.join(out_ids, on=id_col, how="left_anti").orderBy(id_col).limit(
         n_sample_ids
     )

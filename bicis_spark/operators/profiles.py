@@ -17,8 +17,8 @@ Spark-first design notes:
   reference hand-coded (SURVEY.md §4).
 - The first-level output already hash-partitions by a superset of the
   second-level key; AQE coalesces the small second shuffle.
-- The rents⋈returns join keys on low-cardinality (station, key); both sides
-  are post-aggregation (tiny), so AQE picks a broadcast join at any scale.
+- Rents and returns come from one scan of one event stream, tagged by a
+  per-row predicate; the inner join becomes a both-non-null filter.
 """
 
 from __future__ import annotations
@@ -29,66 +29,6 @@ from pyspark.sql import functions as F
 from bicis_spark.functions.timekeys import VALID_KEYS, period_start, time_key
 
 
-def event_counts_per_period(
-    df: DataFrame,
-    station_col: str,
-    ts_col: str,
-    key: str,
-    out_station: str = "station",
-) -> DataFrame:
-    """Level 1: events per (station, concrete period, key value).
-
-    Mirrors ``basic_features.py:41-44`` (groupBy station/group_by/key +
-    count) with the key derivation as column expressions.
-    """
-    if key not in VALID_KEYS:
-        raise ValueError(f"key must be one of {VALID_KEYS}")
-    ts = F.col(ts_col)
-    return (
-        df.where(F.col(station_col).isNotNull() & ts.isNotNull())
-        .groupBy(
-            F.col(station_col).alias(out_station),
-            period_start(ts, key).alias("period"),
-            time_key(ts, key).alias(key),
-        )
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
-def station_profile(
-    df: DataFrame,
-    station_col: str,
-    ts_col: str,
-    key: str,
-    value_name: str,
-) -> DataFrame:
-    """Two-level aggregate: average per-period count per (station, key).
-
-    ``basic_features.py:41-50`` — the mean is over observed periods only.
-    Output columns: station, <key>, <value_name>.
-    """
-    level1 = event_counts_per_period(df, station_col, ts_col, key)
-    return level1.groupBy("station", key).agg(F.avg("cnt").alias(value_name))
-
-
-def rents_returns_profile(
-    df: DataFrame,
-    key: str,
-    rent_station: str = "rent_station",
-    rent_ts: str = "rent_date",
-    return_station: str = "return_station",
-    return_ts: str = "return_date",
-) -> DataFrame:
-    """The full profile builder: rents profile ⋈ returns profile on
-    (station, key), inner (``basic_features.py:63-68``).
-
-    Output: [station, <key>, n_rents, n_returns].
-    """
-    n_rents = station_profile(df, rent_station, rent_ts, key, "n_rents")
-    n_returns = station_profile(df, return_station, return_ts, key, "n_returns")
-    return n_rents.join(n_returns, on=["station", key], how="inner")
-
-
 def event_profile_single_scan(
     events: DataFrame,
     station_col: str,
@@ -97,15 +37,22 @@ def event_profile_single_scan(
     is_rent: Column,
     is_return: Column,
 ) -> DataFrame:
-    """rents_returns_profile for a single event stream where rent/return is
-    a per-row predicate — ONE scan and one shuffle chain instead of two.
+    """Rents and returns profile per (station, key) from ONE scan of
+    ``events``: [station, <key>, n_rents, n_returns].
 
-    Identical semantics to joining the two separately-built profiles:
-    level 1 counts both kinds per (station, period, key); level 2 averages
-    each kind over the periods where that kind was observed (``avg`` skips
-    the nulls injected for unobserved periods); the final both-non-null
-    filter is the inner-join condition. Exact integer counts ⇒ identical
-    averages. At 100 TB this halves the fact-table scan and removes a join.
+    A row is a rent where ``is_rent`` is true and a return where
+    ``is_return`` is true (NULL counts as false); rows with a NULL station
+    or timestamp are dropped.
+
+    Contract: the result equals building the rents profile and the returns
+    profile separately (events per (station, period, key), averaged over
+    the periods where that kind occurs) and inner-joining them on
+    (station, key). Level 1 counts both kinds per (station, period, key);
+    level 2 averages each kind only over the periods where its count is
+    positive (``avg`` skips the NULLs put in for the others), which is the
+    separate profile's observed-period mean; the both-non-null filter is
+    the inner-join condition. Counts are exact integers, so the averages
+    are the same doubles either way.
     """
     if key not in VALID_KEYS:
         raise ValueError(f"key must be one of {VALID_KEYS}")

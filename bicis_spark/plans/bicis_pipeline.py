@@ -17,13 +17,8 @@ from pyspark.sql import functions as F
 
 from bicis_spark.operators.dataset import assemble_dataset, fails_report
 from bicis_spark.operators.features import circular_lag_features
-from bicis_spark.operators.model import (
-    assemble_features,
-    evaluate_mse,
-    fit_poisson,
-    predict,
-)
-from bicis_spark.operators.profiles import station_profile
+from bicis_spark.operators.model import assemble_features, fit_poisson, predict
+from bicis_spark.operators.profiles import event_profile_single_scan
 from bicis_spark.operators.split import SplitPeriods, split_bounds, with_split_label
 from bicis_spark.operators.targets import next_window_count_bucketed
 from bicis_spark.plans.runner import Pipeline
@@ -66,11 +61,11 @@ def build_pipeline(
     @p.stage("profile", deps=["split"])
     def profile(s: SparkSession, labeled: DataFrame) -> DataFrame:
         train = labeled.where(F.col("split") == "training")
-        rents = train.where(F.col("mode") == "rent")
-        returns = train.where(F.col("mode") == "return")
-        n_rents = station_profile(rents, "station", "ts", "hour", "n_rents")
-        n_returns = station_profile(returns, "station", "ts", "hour", "n_returns")
-        return n_rents.join(n_returns, ["station", "hour"], "inner")
+        return event_profile_single_scan(
+            train, "station", "ts", "hour",
+            is_rent=F.col("mode") == "rent",
+            is_return=F.col("mode") == "return",
+        )
 
     @p.stage("target", deps=["split"])
     def target(s: SparkSession, labeled: DataFrame) -> DataFrame:
@@ -97,14 +92,13 @@ def build_pipeline(
     @p.stage("predictions", deps=["dataset"])
     def predictions(s: SparkSession, ds: DataFrame) -> DataFrame:
         feature_cols = [c for c in ds.columns if c not in ("id", "target", "split")]
-        assembled = assemble_features(
-            ds, feature_cols=feature_cols
-        ).join(ds.select("id", "split"), "id")
+        # split rides through assembly and prediction: [id, label, prediction, split]
+        assembled = assemble_features(ds, feature_cols=feature_cols)
         # fit ONLY on training (interface.py:40-45 / M4); predict all splits
         model = fit_poisson(
             assembled.where(F.col("split") == "training"), link="log", max_iter=1
         )
-        return predict(model, assembled).join(ds.select("id", "split"), "id")
+        return predict(model, assembled)
 
     @p.stage("evaluation", deps=["predictions"])
     def evaluation(s: SparkSession, preds: DataFrame) -> DataFrame:

@@ -54,6 +54,23 @@ def test_stagewise_runs_cost_what_one_run_costs(spark, sf_dir, tmp_path, new_job
             assert df.schema.json() == inferred.json(), name
 
 
+def test_forecast_dag_job_budget(spark, sf_dir, tmp_path, new_job_ids):
+    """Jobs per stage when the DAG runs one target at a time: the profile
+    is one scan (no rents/returns join), the split label rides through
+    assembly and prediction (no re-joins around the GLM: two IRLS
+    aggregates plus the write), and the fails counts are one aggregate."""
+    p = build_pipeline(spark, sf_dir, str(tmp_path / "budget"))
+    jobs = {}
+    for name in p.stages:
+        with new_job_ids() as ids:
+            p.run([name])
+        jobs[name] = len(ids)
+    assert jobs["profile"] <= 3, jobs
+    assert jobs["predictions"] <= 3, jobs
+    assert jobs["fails"] <= 2, jobs
+    assert sum(jobs.values()) <= 24, jobs
+
+
 def test_baseline_config_resolves():
     exp = load_experiment("configs/baseline_features.yaml")
     assert exp["experiment_name"] == "baseline_features"

@@ -1046,3 +1046,67 @@ def test_hw_capped_equals_python_replay_of_prefix(spark):
         assert out[3]["hw_forecast"] == _hw_py(series[3])  # == boundary seeds
     finally:
         shutil.rmtree(d, ignore_errors=True)
+
+
+_STATIONS = ("A", "B", "C")
+_lag_profiles = st.dictionaries(
+    st.tuples(st.sampled_from(_STATIONS), st.integers(0, 23)),  # sparse hours
+    st.tuples(
+        st.one_of(st.none(), st.floats(0, 100, allow_nan=False)),
+        st.one_of(st.none(), st.floats(0, 100, allow_nan=False)),
+    ),
+    max_size=30,
+)
+_lag_events = st.lists(
+    st.tuples(
+        st.sampled_from(_STATIONS + ("UNKNOWN", None)),
+        st.one_of(st.none(), st.integers(0, 24 * 3 - 1)),  # hour ordinal
+    ),
+    min_size=1,
+    max_size=12,
+)
+
+
+@given(
+    profile=_lag_profiles,
+    events=_lag_events,
+    hour_type=st.sampled_from(["int", "bigint"]),
+    window_size=st.sampled_from([1, 24, 30]),
+)
+@SETTINGS
+def test_circular_lag_features_match_reference(
+    spark, profile, events, hour_type, window_size
+):
+    """W3: lag i of an event at hour h is the station's profile value at
+    hour (h - 1 - i) mod 24, or 0.0 when that hour, its value or the whole
+    station is absent; events with a NULL station or ts are dropped."""
+    from bicis_spark.operators.features import circular_lag_features
+
+    base = dt.datetime(2024, 1, 1)
+    prof = spark.createDataFrame(
+        [(s, h, r, v) for (s, h), (r, v) in profile.items()],
+        f"station string, hour {hour_type}, n_rents double, n_returns double",
+    )
+    ev = spark.createDataFrame(
+        [
+            (i, s, None if o is None else base + dt.timedelta(hours=o, minutes=7))
+            for i, (s, o) in enumerate(events)
+        ],
+        "id long, station string, ts timestamp",
+    )
+    out = circular_lag_features(ev, prof, "station", "ts", "id", window_size)
+    names = [f"{m}_{i}_hb" for m in ("n_rents", "n_returns") for i in range(window_size)]
+    assert out.columns == ["id", *names]
+    got = {r["id"]: [r[n] for n in names] for r in out.collect()}
+
+    want = {}
+    for i, (s, o) in enumerate(events):
+        if s is None or o is None:
+            continue
+        h = o % 24
+        want[i] = [
+            profile.get((s, (h - 1 - k) % 24), (None, None))[slot] or 0.0
+            for slot in (0, 1)
+            for k in range(window_size)
+        ]
+    assert got == want
