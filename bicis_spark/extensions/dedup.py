@@ -650,7 +650,6 @@ def embedding_neardup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.9,
-    dims: int | None = 64,
     probe_mod: int | None = None,
 ) -> DataFrame:
     """All-pairs cosine near-dup on quantized embeddings (exact integer dot
@@ -669,14 +668,14 @@ def embedding_neardup_pairs(
     from bicis_spark.extensions.similarity import cosine_from_norms, norm_col
 
     q = _partitioned(df, None).select(
-        F.col(id_col).alias("vid"), quantize(F.col(vec_col), dims).alias("qv")
-    ).withColumn("n", norm_col(F.col("qv"), dims))
+        F.col(id_col).alias("vid"), quantize(F.col(vec_col)).alias("qv")
+    ).withColumn("n", norm_col(F.col("qv")))
     a, b = q.alias("a"), q.alias("b")
     if probe_mod is not None:
         a = a.where(F.col("vid") % probe_mod == 0)
     pairs = a.join(b, F.col("a.vid") < F.col("b.vid"))
     sim = cosine_from_norms(
-        F.col("a.qv"), F.col("b.qv"), F.col("a.n"), F.col("b.n"), dims
+        F.col("a.qv"), F.col("b.qv"), F.col("a.n"), F.col("b.n")
     )
     return (
         pairs.select(
@@ -762,7 +761,7 @@ def embedding_neardup_pairs_lsh(
         )
     if regime == "kmeans":
         assigned = _kmeans_assigned(
-            df, id_col, vec_col, kmeans_mod, kmeans_iters, dims,
+            df, id_col, vec_col, kmeans_mod, kmeans_iters,
             kmeans_max_clusters,
         )
         ka = assigned.select(
@@ -778,7 +777,7 @@ def embedding_neardup_pairs_lsh(
             F.col("n").alias("n_b"),
         )
         ksim = cosine_from_norms(
-            F.col("qv_a"), F.col("qv_b"), F.col("n_a"), F.col("n_b"), dims
+            F.col("qv_a"), F.col("qv_b"), F.col("n_a"), F.col("n_b")
         )
         return (
             ka.join(
@@ -792,8 +791,8 @@ def embedding_neardup_pairs_lsh(
 
     q = _reusable(
         _partitioned(df, None)
-        .select(F.col(id_col).alias("vid"), quantize(F.col(vec_col), dims).alias("qv"))
-        .withColumn("n", norm_col(F.col("qv"), dims)),
+        .select(F.col(id_col).alias("vid"), quantize(F.col(vec_col)).alias("qv"))
+        .withColumn("n", norm_col(F.col("qv"))),
         None,
         "vid",
     )
@@ -828,7 +827,7 @@ def embedding_neardup_pairs_lsh(
         F.col("vid").alias("vec_b"), F.col("qv").alias("qv_b"), F.col("n").alias("n_b")
     )
     sim = cosine_from_norms(
-        F.col("qv_a"), F.col("qv_b"), F.col("n_a"), F.col("n_b"), dims
+        F.col("qv_a"), F.col("qv_b"), F.col("n_a"), F.col("n_b")
     )
     return (
         cand.join(qa, "vec_a")
@@ -908,8 +907,8 @@ def embedding_lsh_band_profile(
 
     q = _reusable(
         _partitioned(df, None)
-        .select(F.col(id_col).alias("vid"), quantize(F.col(vec_col), dims).alias("qv"))
-        .withColumn("n", norm_col(F.col("qv"), dims)),
+        .select(F.col(id_col).alias("vid"), quantize(F.col(vec_col)).alias("qv"))
+        .withColumn("n", norm_col(F.col("qv"))),
         None,
         "vid",
     )
@@ -947,7 +946,7 @@ def embedding_lsh_band_profile(
         F.col("vid").alias("vec_b"), F.col("qv").alias("qv_b"), F.col("n").alias("n_b")
     )
     sim = cosine_from_norms(
-        F.col("qv_a"), F.col("qv_b"), F.col("n_a"), F.col("n_b"), dims
+        F.col("qv_a"), F.col("qv_b"), F.col("n_a"), F.col("n_b")
     )
     return (
         cand.join(qa, "vec_a")
@@ -971,7 +970,6 @@ def _kmeans_assigned(
     vec_col: str,
     n_centroids_mod: int,
     train_iters: int,
-    dims: int | None,
     max_clusters: int | None,
 ) -> DataFrame:
     """Deterministic k-means clustering of a quantized embedding corpus:
@@ -992,7 +990,7 @@ def _kmeans_assigned(
 
     c = tracked_persist(
         _partitioned(df, None).select(
-            F.col(id_col).alias("vid"), quantize(F.col(vec_col), dims).alias("qv")
+            F.col(id_col).alias("vid"), quantize(F.col(vec_col)).alias("qv")
         )
     )
     seed_filter = F.col("vid") % n_centroids_mod == 1
@@ -1007,11 +1005,11 @@ def _kmeans_assigned(
     # ann_topk_ivf: c feeds every training iteration plus the assignment
     seeds = c.where(seed_filter).select(F.col("vid").alias("centroid_id"), "qv")
     cents = tracked_persist(
-        kmeans_refine_exact(c, seeds, train_iters, "vid", "qv", dims)
+        kmeans_refine_exact(c, seeds, train_iters, "vid", "qv")
     )
     return _reusable(
-        ivf_assign(c, cents, "vid", "qv", dims).withColumn(
-            "n", norm_col(F.col("qv"), dims)
+        ivf_assign(c, cents, "vid", "qv").withColumn(
+            "n", norm_col(F.col("qv"))
         ),
         None,
         "vid",
@@ -1025,7 +1023,6 @@ def semantic_dedup(
     threshold: float = 0.45,
     n_centroids_mod: int = 50,
     train_iters: int = 1,
-    dims: int | None = 64,
     max_clusters: int | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
@@ -1064,7 +1061,7 @@ def semantic_dedup(
     from bicis_spark.extensions.similarity import cosine_from_norms
 
     assigned = _kmeans_assigned(
-        df, id_col, vec_col, n_centroids_mod, train_iters, dims, max_clusters
+        df, id_col, vec_col, n_centroids_mod, train_iters, max_clusters
     )
     a = assigned.select(
         F.col("vid").alias("va"),
@@ -1079,7 +1076,7 @@ def semantic_dedup(
         F.col("n").alias("n_b"),
     )
     sim = cosine_from_norms(
-        F.col("qv_a"), F.col("qv_b"), F.col("n_a"), F.col("n_b"), dims
+        F.col("qv_a"), F.col("qv_b"), F.col("n_a"), F.col("n_b")
     )
     dups = (
         a.join(b, (F.col("ca") == F.col("cb")) & (F.col("va") < F.col("vb")))
@@ -1127,11 +1124,7 @@ def incremental_dedup(
     )
 
 
-def _grouped_assign(
-    members: DataFrame,
-    cents: DataFrame,
-    dims: int | None,
-) -> DataFrame:
+def _grouped_assign(members: DataFrame, cents: DataFrame) -> DataFrame:
     """Assign each (vid, qv, super_id) member to its max-cosine centroid
     WITHIN its super cluster (centroid table [super_id, sub_id, cqv],
     broadcast — it is (super × sub) rows, a constant). Deterministic
@@ -1139,11 +1132,11 @@ def _grouped_assign(
     combinable), mirroring similarity.ivf_assign."""
     from bicis_spark.extensions.similarity import cosine_from_norms, norm_col
 
-    m = members.withColumn("_mn", norm_col(F.col("qv"), dims))
+    m = members.withColumn("_mn", norm_col(F.col("qv")))
     c = cents.select(
         "super_id", "sub_id", F.col("cqv").alias("_cv")
-    ).withColumn("_cn", norm_col(F.col("_cv"), dims))
-    sim = cosine_from_norms(F.col("qv"), F.col("_cv"), F.col("_mn"), F.col("_cn"), dims)
+    ).withColumn("_cn", norm_col(F.col("_cv")))
+    sim = cosine_from_norms(F.col("qv"), F.col("_cv"), F.col("_mn"), F.col("_cn"))
     pairs = m.join(F.broadcast(c), "super_id").withColumn("_sim", sim)
     return (
         pairs.groupBy("vid")
@@ -1167,7 +1160,6 @@ def semantic_dedup_two_level(
     sub_mod: int = 25,
     max_sub_per_super: int = 5,
     train_iters: int = 1,
-    dims: int | None = 64,
 ) -> DataFrame:
     """The 100 TB SemDeDup shape promised by ``semantic_dedup``'s
     docstring, made real: a SUPER k-means routes the corpus into coarse
@@ -1194,16 +1186,16 @@ def semantic_dedup_two_level(
 
     c = tracked_persist(
         _partitioned(df, None).select(
-            F.col(id_col).alias("vid"), quantize(F.col(vec_col), dims).alias("qv")
+            F.col(id_col).alias("vid"), quantize(F.col(vec_col)).alias("qv")
         )
     )
     sfilter = F.col("vid") % super_mod == 1
     if max_super is not None:
         sfilter = sfilter & (F.col("vid") < super_mod * max_super)
     sseeds = c.where(sfilter).select(F.col("vid").alias("centroid_id"), "qv")
-    scents = kmeans_refine_exact(c, sseeds, train_iters, "vid", "qv", dims)
+    scents = kmeans_refine_exact(c, sseeds, train_iters, "vid", "qv")
     sup = tracked_persist(
-        ivf_assign(c, scents, "vid", "qv", dims).withColumnRenamed(
+        ivf_assign(c, scents, "vid", "qv").withColumnRenamed(
             "centroid_id", "super_id"
         )
     )
@@ -1218,7 +1210,7 @@ def semantic_dedup_two_level(
         .select("super_id", F.col("vid").alias("sub_id"), F.col("qv").alias("cqv"))
     )
     for _ in range(train_iters):
-        asg = _grouped_assign(sup, cents2, dims)
+        asg = _grouped_assign(sup, cents2)
         means = (
             asg.select("super_id", "sub_id", F.posexplode("qv"))
             .groupBy("super_id", "sub_id", "pos")
@@ -1243,8 +1235,8 @@ def semantic_dedup_two_level(
             F.coalesce(F.col("_new"), F.col("cqv")).alias("cqv"),
         )
 
-    asg = _grouped_assign(sup, cents2, dims).withColumn(
-        "n", norm_col(F.col("qv"), dims)
+    asg = _grouped_assign(sup, cents2).withColumn(
+        "n", norm_col(F.col("qv"))
     )
     a = asg.select(
         F.col("vid").alias("va"), F.col("super_id").alias("sa"),
@@ -1255,7 +1247,7 @@ def semantic_dedup_two_level(
         F.col("sub_id").alias("cb"), F.col("qv").alias("qv_b"), F.col("n").alias("n_b"),
     )
     sim = cosine_from_norms(
-        F.col("qv_a"), F.col("qv_b"), F.col("n_a"), F.col("n_b"), dims
+        F.col("qv_a"), F.col("qv_b"), F.col("n_a"), F.col("n_b")
     )
     dups = (
         a.join(

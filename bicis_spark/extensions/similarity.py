@@ -5,15 +5,13 @@ exact float→double widening), so dot products and norms are exact int64
 sums — order-independent, identical in Spark and the DuckDB oracle. With
 64-dim vectors the dot product is bounded by 64·(2·10⁵)² ≈ 2.6·10¹² ≪ 2⁶³.
 
-Scale design:
-- Brute-force top-k: corpus ⨯ broadcast(queries) — the O(Q·N) baseline;
-  each executor scans its corpus slice once, no corpus shuffle, top-k via
-  per-query window. Right answer for small Q.
-- LSH-bucketed: deterministic integer hyperplanes → sign-bit bucket;
-  candidates only within matching buckets (plus the query's bucket), then
-  exact re-rank. Sub-linear candidate sets; recall bounded by bucket
-  collision probability. The IVF analog (train centroids) would slot in the
-  same two-phase shape.
+One search pipeline: every ANN entry point is a composition of the
+stages in the "Search stages" section, each defined once — route
+(trained coarse centroids, probe router) → scan (exact cosine, LSH
+buckets, PQ lookup tables, int8 codes, sign bits) → tail (salted top-k,
+or a top-``rerank`` shortlist re-ranked by exact cosine). The corpus
+side is ``[nid, cv]``, the query side ``[query_id, qv, qn]``; |Q|-sized
+frames join through one broadcast gate.
 """
 
 from __future__ import annotations
@@ -30,36 +28,33 @@ QUANT_SCALE = 1_000_000
 # functions (zip_with + aggregate). An unrolled 64-term element_at
 # expression tree was tried and measured ~7-18x SLOWER (wide expression
 # trees blow past JIT method limits and run as interpreted bytecode, and
-# each element_at re-checks bounds); the `dims` parameters below are kept
-# for API stability but any value routes to the same HOF implementation.
+# each element_at re-checks bounds), so full-width math always takes the
+# HOF form; only the small widths below unroll.
 DEFAULT_DIMS = 64
 
 
-# -- SQL-fragment fast paths (round 11, optimization) ----------------------
+# -- SQL-fragment fast paths -----------------------------------------------
 # Building these expressions through the Python functions API costs 20-35ms
 # PER CALL in driver py4j round-trips (each higher-order lambda is several
 # JVM calls; measured: int_dot 33ms, the same tree via one F.expr parse
 # 0.55ms — 60×). The helpers below therefore accept either a Column (the
-# original lambda path, kept for callers holding computed Columns) or a
-# STRING, treated as a raw SQL fragment and routed through one F.expr
-# parse. Both paths produce the same Catalyst operations (same casts, same
-# fold order), so results are bit-for-bit unchanged — verified by the
-# full DuckDB oracle emulation.
+# lambda path, for callers holding computed Columns) or a STRING, treated
+# as a raw SQL fragment and routed through one F.expr parse. Both paths
+# produce the same Catalyst operations (same casts, same fold order), so
+# results are bit-for-bit identical.
 
 
 #: Width cap for unrolling fixed-width array math into plain arithmetic.
 #: Higher-order functions (aggregate/zip_with) are CodegenFallback —
 #: evaluated INTERPRETED, one tree walk + ArrayData allocation per call —
-#: which round 12 profiling caught as the dominant task cost of the PQ
-#: family: pq_encode evaluates sub-vector L2 N·M·K ≈ 8.2M times per build
-#: and its scan stage burned 21-29 s of CPU to write 0.8 MB (guide §1.2
-#: per-task work / §4.1 prefer codegen'd built-ins). For KNOWN small
-#: widths the same exact-int64 sum unrolls into `a[0]*b[0] + ...`, which
-#: whole-stage codegen compiles (A/B on the 8.2M-eval shape: 1.6-4×
-#: faster; values bit-identical on full-width operands — same operands,
-#: same exact integer adds; see _sub_l2_sql for short arrays). 64-dim
-#: unrolls were measured SLOWER (the module-level note above), so only
-#: genuinely small widths (the 4-dim PQ subspaces) take this path.
+#: the dominant task cost of the PQ family: pq_encode evaluates
+#: sub-vector L2 N·M·K times per build. For KNOWN small widths the same
+#: exact-int64 sum unrolls into `a[0]*b[0] + ...`, which whole-stage
+#: codegen compiles (1.6-4× faster on that shape; values bit-identical on
+#: full-width operands — same operands, same exact integer adds; see
+#: _sub_l2_sql for short arrays). 64-dim unrolls are SLOWER (the note
+#: above), so only genuinely small widths (the 4-dim PQ subspaces) take
+#: this path.
 UNROLL_MAX_DIMS = 8
 
 
@@ -100,7 +95,7 @@ def _cfn_sql(a: str, b: str, na: str, nb: str) -> str:
     return f"CAST({_dot_sql(a, b)} AS DOUBLE) / " + _nonzero_sql(f"({na}) * ({nb})")
 
 
-def quantize(vec: Column | str, dims: int | None = None) -> Column:
+def quantize(vec: Column | str) -> Column:
     """array<float> → array<long>: floor(double(x)·10⁶). floor (not round)
     sidesteps cross-engine tie-rounding differences. A str argument is a
     SQL fragment (fast builder path — see the fragment-helper note)."""
@@ -111,7 +106,7 @@ def quantize(vec: Column | str, dims: int | None = None) -> Column:
     )
 
 
-def int_dot(a: Column | str, b: Column | str, dims: int | None = None) -> Column:
+def int_dot(a: Column | str, b: Column | str) -> Column:
     if isinstance(a, str) and isinstance(b, str):
         return F.expr(_dot_sql(a, b))
     return F.aggregate(
@@ -121,16 +116,16 @@ def int_dot(a: Column | str, b: Column | str, dims: int | None = None) -> Column
     )
 
 
-def int_norm2(a: Column | str, dims: int | None = None) -> Column:
-    return int_dot(a, a, dims)
+def int_norm2(a: Column | str) -> Column:
+    return int_dot(a, a)
 
 
-def norm_col(a: Column | str, dims: int | None = None) -> Column:
+def norm_col(a: Column | str) -> Column:
     """√‖a‖ as double — precompute once per vector so pairwise cosine does
     one dot + one division instead of re-deriving both norms per pair."""
     if isinstance(a, str):
         return F.expr(_norm_sql(a))
-    return F.sqrt(int_norm2(a, dims).cast("double"))
+    return F.sqrt(int_norm2(a).cast("double"))
 
 
 def _nonzero(divisor: Column) -> Column:
@@ -143,7 +138,7 @@ def _nonzero(divisor: Column) -> Column:
     return F.when(divisor != F.lit(0.0), divisor)
 
 
-def cosine_sim(a: Column | str, b: Column | str, dims: int | None = None) -> Column:
+def cosine_sim(a: Column | str, b: Column | str) -> Column:
     """Exact-integer cosine: dot/(√‖a‖·√‖b‖) with all inputs exact int64 —
     the double math sees identical operands in any engine. NULL for
     zero-norm inputs (see _nonzero)."""
@@ -152,17 +147,11 @@ def cosine_sim(a: Column | str, b: Column | str, dims: int | None = None) -> Col
             f"CAST({_dot_sql(a, b)} AS DOUBLE) / "
             + _nonzero_sql(f"{_norm_sql(a)} * {_norm_sql(b)}")
         )
-    return int_dot(a, b, dims).cast("double") / _nonzero(
-        norm_col(a, dims) * norm_col(b, dims)
-    )
+    return int_dot(a, b).cast("double") / _nonzero(norm_col(a) * norm_col(b))
 
 
 def cosine_from_norms(
-    a: Column | str,
-    b: Column | str,
-    na: Column | str,
-    nb: Column | str,
-    dims: int | None = None,
+    a: Column | str, b: Column | str, na: Column | str, nb: Column | str
 ) -> Column:
     """Cosine with both norms precomputed (identical value to cosine_sim:
     same exact dot, same sqrt results, same multiply/divide order)."""
@@ -170,7 +159,7 @@ def cosine_from_norms(
         return F.expr(_cfn_sql(a, b, na, nb))
     to_col = lambda c: F.expr(c) if isinstance(c, str) else c  # noqa: E731
     a, b, na, nb = to_col(a), to_col(b), to_col(na), to_col(nb)
-    return int_dot(a, b, dims).cast("double") / _nonzero(na * nb)
+    return int_dot(a, b).cast("double") / _nonzero(na * nb)
 
 
 def _topk_per_query(
@@ -179,29 +168,26 @@ def _topk_per_query(
     k: int,
     rank_col: str | None = "rank",
     descending: bool = True,
+    keys: tuple[str, ...] = ("query_id",),
 ) -> DataFrame:
-    """Per-query top-k over an UNBOUNDED candidate frame via the salted
-    two-phase hash aggregation (``operators.topk.topk_by_group_agg`` —
-    round 11, r10 verdict #4): the ``row_number`` window form puts ALL of
-    one query's candidates through a single task's sort (|Q| tasks each
-    sorting up to N rows on the |Q|·N scan paths — brute force, PQ, SQ8
-    — and up to the probed fraction of N on IVF/IVF-PQ/LSH), while the
+    """Per-``keys`` top-k over an UNBOUNDED candidate frame via the salted
+    two-phase hash aggregation (``operators.topk.topk_by_group_agg``): a
+    ``row_number`` window would put ALL of one query's candidates through
+    a single task's sort (up to N rows on the |Q|·N scan paths), while the
     salted plan's map-side partial aggregation bounds every exchanged
     group at ``n_salts``·k structs per query regardless of candidate
-    count. Exact, not approximate: the sort key embeds the identical
-    (order DESC NULLS LAST, neighbor_id ASC) ordering the windows used,
-    so results are bit-for-bit unchanged and the row_number-based DuckDB
-    oracles still replay them.
+    count. Exact, not approximate: the sort key embeds the (order DESC
+    NULLS LAST, neighbor_id ASC) ordering a window would use, so the
+    row_number-based DuckDB oracles replay the results.
 
-    ``rank_col=None`` returns only (query_id, neighbor_id) — the
-    shortlist form feeding an exact re-rank (whose own final window runs
-    over ≤ |Q|·rerank rows and stays a window). ``descending=False``
-    ranks ascending (the Hamming-distance path)."""
+    ``rank_col=None`` returns only (``keys``, neighbor_id) — the
+    shortlist form feeding an exact re-rank. ``descending=False`` ranks
+    ascending (the Hamming-distance path)."""
     from bicis_spark.operators.topk import topk_by_group_agg
 
     out = topk_by_group_agg(
         scored,
-        ["query_id"],
+        list(keys),
         order_col,
         "neighbor_id",
         k,
@@ -209,13 +195,295 @@ def _topk_per_query(
         descending=descending,
     )
     if rank_col is None:
-        return out.select("query_id", "neighbor_id")
+        return out.select(*keys, "neighbor_id")
     return out.select(
-        "query_id",
+        *keys,
         "neighbor_id",
         order_col,
         F.col("rank_in_group").cast("long").alias(rank_col),
     )
+
+
+# ---------------------------------------------------------------------------
+# Search stages — every ANN entry point below is a composition of these
+# ---------------------------------------------------------------------------
+
+
+#: Query-side broadcast gate: the per-query broadcast payload in a probed
+#: search is ~1 KB (n_probe route rows + n_subspaces LUT rows), so 32k
+#: queries ≈ 32 MB — half the session's 64 MB autoBroadcast budget. Above
+#: this the |Q|-sized frames join as ordinary shuffle joins instead.
+ANN_BROADCAST_MAX_QUERIES = 32_768
+
+
+def _resolve_query_broadcast(queries: DataFrame, n_queries: int | None):
+    """(broadcast-or-identity wrapper) for |Q|-sized search-side frames.
+
+    ``n_queries`` is the caller's bound on the batch size when it knows
+    one (the declared rows pass their fixed 20-query cap — zero runtime
+    cost); ``None`` runs one LIMIT-bounded count probe (scans at most
+    gate+1 rows) and gates on the measured size — the runtime fallback
+    for unbounded online batches."""
+    if n_queries is None:
+        n_queries = queries.limit(ANN_BROADCAST_MAX_QUERIES + 1).count()
+    if n_queries > ANN_BROADCAST_MAX_QUERIES:
+        return lambda df: df
+    return F.broadcast
+
+
+def _corpus(corpus: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """Corpus side of every search: ``[nid, cv]``, the quantized vectors
+    spread over ``defaultParallelism`` partitions so each executor scans
+    its slice once. A caller that reads it more than once persists it
+    with ``tracked_persist``: its lazy result plan outlives the call, and
+    harness boundaries release the cache."""
+    n_parts = corpus.sparkSession.sparkContext.defaultParallelism
+    return corpus.repartition(n_parts).selectExpr(
+        f"{id_col} AS nid", f"{_quant_sql(vec_col)} AS cv"
+    )
+
+
+def _with_norm(df: DataFrame, vec: str = "cv", norm: str = "cn") -> DataFrame:
+    """``df`` plus the exact norm of its ``vec`` column, computed once per
+    row rather than once per scored pair."""
+    return df.selectExpr("*", f"{_norm_sql(vec)} AS {norm}")
+
+
+def _queries(queries: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """Query side of every search: ``[query_id, qv, qn]``. One frame feeds
+    the router, the scan and the re-rank, so the norm is defined once."""
+    q = queries.selectExpr(f"{id_col} AS query_id", f"{_quant_sql(vec_col)} AS qv")
+    return _with_norm(q, "qv", "qn")
+
+
+#: Self-matches never count as neighbors.
+_NOT_SELF = "nid != query_id"
+
+
+def _cosine(pairs: DataFrame) -> DataFrame:
+    """Exact cosine of (query, corpus) pairs carrying qv/qn and cv/cn:
+    ``[query_id, neighbor_id, cosine]``."""
+    return pairs.selectExpr(
+        "query_id",
+        "nid AS neighbor_id",
+        f"{_cfn_sql('qv', 'cv', 'qn', 'cn')} AS cosine",
+    )
+
+
+def _exact_scan(c: DataFrame, q: DataFrame, k: int) -> DataFrame:
+    """Exact top-k: the normed corpus ``[nid, cv, cn]`` × broadcast(q),
+    salted top-k per query → ``[query_id, neighbor_id, cosine, rank]``.
+    No corpus shuffle: each executor scans its corpus slice once."""
+    pairs = c.crossJoin(F.broadcast(q)).where(_NOT_SELF)
+    return _topk_per_query(_cosine(pairs), "cosine", k)
+
+
+def _seed_filter(mod: int, cap: int | None) -> Column:
+    """Deterministic training seeds ``nid % mod == 1``. ``cap`` keeps the
+    first ``cap`` of them, so the list or code count is a constant, not
+    N/mod (a mod-only rule grows the centroid broadcast with the corpus
+    and the training cost quadratically). The bound mod·(cap−1)+1 is
+    itself the cap-th seed: the boundary is live data, so ``<=`` and
+    ``<`` select different seed sets."""
+    f = F.col("nid") % mod == 1
+    if cap is not None:
+        f = f & (F.col("nid") <= mod * (cap - 1) + 1)
+    return f
+
+
+def _ivf_train(
+    c: DataFrame, seeds: Column, iters: int, train: DataFrame | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """Coarse quantizer over a persisted corpus ``[nid, cv]``: returns
+    (cents, assigned). ``cents`` ``[centroid_id, cv]`` are the ``seeds``
+    rows refined by ``iters`` exact Lloyd steps over ``train`` (default:
+    the whole corpus), persisted because the corpus assignment and the
+    probe router both broadcast them. ``assigned`` ``[nid, cv,
+    centroid_id]`` puts every corpus vector in exactly one list."""
+    start = c.where(seeds).select(F.col("nid").alias("centroid_id"), "cv")
+    cents = tracked_persist(
+        kmeans_refine_exact(c if train is None else train, start, iters, "nid", "cv")
+    )
+    return cents, ivf_assign(c, cents, "nid", "cv")
+
+
+def _probes(q: DataFrame, cents: DataFrame, n_probe: int) -> DataFrame:
+    """Probe router: each query's ``n_probe`` nearest lists by exact
+    centroid cosine (centroid-id tie-break), with the probe rank —
+    ``[query_id, qv, qn, centroid_id, _rn]``. A bounded |Q| × n_lists
+    window."""
+    pairs = q.crossJoin(
+        F.broadcast(
+            cents.selectExpr("centroid_id", "cv AS _cv", f"{_norm_sql('cv')} AS _cn")
+        )
+    ).selectExpr("*", f"{_cfn_sql('qv', '_cv', 'qn', '_cn')} AS _sim")
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("_sim").desc(), F.col("centroid_id")
+    )
+    return (
+        pairs.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") <= n_probe)
+        .select("query_id", "qv", "qn", "centroid_id", "_rn")
+    )
+
+
+def _pq_train(
+    c: DataFrame, seeds: Column, n_subspaces: int, sub_dims: int, iters: int
+) -> tuple[DataFrame, DataFrame]:
+    """Product quantizer over a persisted corpus ``[nid, cv]``: returns
+    (cb, codes) — the persisted codebooks ``[sub, cid, sv]`` trained from
+    the ``seeds`` rows, and the lazy encoding ``[nid, sub, code]``. The
+    sub-vectors are persisted: training and encoding both read them."""
+    subvecs = tracked_persist(pq_subvectors(c, "nid", "cv", n_subspaces, sub_dims))
+    start = pq_subvectors(
+        c.where(seeds), "nid", "cv", n_subspaces, sub_dims
+    ).select("sub", F.col("nid").alias("cid"), "sv")
+    cb = tracked_persist(pq_train_codebooks(subvecs, start, iters, "nid", sub_dims))
+    return cb, pq_encode(subvecs, cb, "nid", sub_dims)
+
+
+def _adc_scan(
+    codes: DataFrame,
+    cb: DataFrame,
+    q: DataFrame,
+    bq,
+    n_subspaces: int,
+    sub_dims: int,
+    probes: DataFrame | None = None,
+    with_rank: bool = False,
+) -> DataFrame:
+    """Asymmetric-distance (ADC) scan → ``[query_id, neighbor_id,
+    approx_cosine]``: each query's (sub, code) → partial-dot lookup table
+    against the codebooks, summed over the candidate's M codes —
+
+        approx_cos(q, x) = Σₘ ⟨qₘ, c[m, codeₘ(x)]⟩ / (‖q‖ · ‖x̂‖)
+
+    with x̂ the code reconstruction; all numerators exact int64. Flat
+    (``probes=None``): every corpus code row joins the LUT. Routed: only
+    the codes ``[nid, sub, code, centroid_id]`` of each query's probed
+    lists. ``with_rank`` adds ``_minrn``, the probe rank of the
+    candidate's list. Partial aggregation collapses to one row per
+    (query, neighbor) before any exchange."""
+    lut = pq_subvectors(q, "query_id", "qv", n_subspaces, sub_dims).join(
+        F.broadcast(cb.selectExpr("sub", "cid", "sv AS _cv")), "sub"
+    ).selectExpr(
+        "query_id",
+        "sub",
+        "cid AS code",
+        f"{_dot_sql('sv', '_cv', sub_dims)} AS _pdot",
+        f"{_norm2_sql('_cv', sub_dims)} AS _pn2",
+    )
+    aggs = [
+        F.expr("CAST(sum(_pdot) AS BIGINT)").alias("_adot"),
+        F.expr("CAST(sum(_pn2) AS BIGINT)").alias("_rn2"),
+    ]
+    rank = ["_rn"] if with_rank else []
+    if probes is None:
+        cand = codes.join(bq(lut), ["sub", "code"])
+    else:
+        route = probes.select("query_id", "centroid_id", *rank)
+        cand = codes.join(bq(route), "centroid_id").join(
+            bq(lut), ["query_id", "sub", "code"]
+        )
+    if with_rank:
+        # one list per nid ⇒ _rn is constant across the group
+        aggs.append(F.min("_rn").alias("_minrn"))
+    acc = cand.where(_NOT_SELF).groupBy("query_id", "nid").agg(*aggs)
+    return acc.join(bq(q.selectExpr("query_id", "qn AS _qn")), "query_id").selectExpr(
+        "query_id",
+        "nid AS neighbor_id",
+        *(["_minrn"] if with_rank else []),
+        "CAST(_adot AS DOUBLE) / "
+        + _nonzero_sql("_qn * sqrt(CAST(_rn2 AS DOUBLE))")
+        + " AS approx_cosine",
+    )
+
+
+def _sq8_scan(
+    c: DataFrame,
+    q: DataFrame,
+    dims: int,
+    bq=F.broadcast,
+    probes: DataFrame | None = None,
+    assign: DataFrame | None = None,
+) -> DataFrame:
+    """int8 scalar-quantized scan → ``[query_id, neighbor_id,
+    approx_cosine]``, the cosine of the int8 codes. The per-dimension
+    scales train on the corpus ``c`` ``[nid, cv]``; as a one-row frame
+    they attach by broadcast cross join, so encoding runs map-side. Flat:
+    every corpus code × broadcast(query codes). Routed (``probes`` and
+    the list ``assign`` ``[nid, centroid_id]``): the codes of
+    ``c ⋈ assign`` over each query's probed lists only."""
+    scales = F.broadcast(sq8_scales(c, "cv", dims))
+    keep = ["nid"] if assign is None else ["nid", "centroid_id"]
+    c8 = _with_norm(
+        (c if assign is None else c.join(assign, "nid"))
+        .crossJoin(scales)
+        .selectExpr(*keep, f"{_sq8_encode_sql('cv', 'sl')} AS c8"),
+        "c8",
+        "cn8",
+    )
+    q8 = _with_norm(
+        q.crossJoin(scales).selectExpr(
+            "query_id", f"{_sq8_encode_sql('qv', 'sl')} AS q8"
+        ),
+        "q8",
+        "qn8",
+    )
+    if probes is None:
+        cand = c8.crossJoin(F.broadcast(q8))
+    else:
+        route = probes.select("query_id", "centroid_id")
+        cand = c8.join(bq(route), "centroid_id").join(bq(q8), "query_id")
+    return cand.where(_NOT_SELF).selectExpr(
+        "query_id",
+        "nid AS neighbor_id",
+        f"{_cfn_sql('q8', 'c8', 'qn8', 'cn8')} AS approx_cosine",
+    )
+
+
+def _tail(
+    scored: DataFrame,
+    order_col: str,
+    k: int,
+    rerank: int | None,
+    c: DataFrame,
+    q: DataFrame,
+    bq=F.broadcast,
+    keys: tuple[str, ...] = ("query_id",),
+    descending: bool = True,
+) -> DataFrame:
+    """Search tail over scored candidates: the salted top-k of
+    ``order_col`` per ``keys`` → ``[*keys, neighbor_id, order_col,
+    rank]``; or, with ``rerank``, the top-``rerank`` shortlist re-scored
+    with EXACT cosine against the corpus ``c`` ``[nid, cv]`` and the
+    queries ``q`` (joined through the gate ``bq``) → ``[*keys,
+    neighbor_id, cosine, rank]``. The only full-width math is over
+    |Q|·rerank pairs, and the final rank is a bounded window."""
+    if rerank is None:
+        return _topk_per_query(scored, order_col, k, descending=descending, keys=keys)
+    shortlist = _topk_per_query(
+        scored, order_col, rerank, rank_col=None, descending=descending, keys=keys
+    )
+    vecs = c.selectExpr("nid AS neighbor_id", "cv AS _nv", f"{_norm_sql('cv')} AS _nn")
+    exact = (
+        shortlist.join(bq(q), "query_id")
+        .join(vecs, "neighbor_id")
+        .selectExpr(
+            *keys, "neighbor_id", f"{_cfn_sql('qv', '_nv', 'qn', '_nn')} AS cosine"
+        )
+    )
+    w = Window.partitionBy(*keys).orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
+    return (
+        exact.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select(*keys, "neighbor_id", "cosine", F.col("rank").cast("long").alias("rank"))
+    )
+
+
+# ---------------------------------------------------------------------------
+# Entry points
+# ---------------------------------------------------------------------------
 
 
 def ann_topk_bruteforce(
@@ -224,28 +492,15 @@ def ann_topk_bruteforce(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dims: int | None = DEFAULT_DIMS,
 ) -> DataFrame:
     """Exact top-k cosine neighbors: [query_id, neighbor_id, cosine, rank].
 
     Self-matches excluded; ties break on neighbor_id (deterministic).
-    Norms are computed once per vector (not per pair); ``dims`` unrolls the
-    array math into codegen (None falls back to generic array lambdas).
+    Norms are computed once per vector (not per pair); the O(Q·N)
+    baseline — corpus × broadcast(queries), no corpus shuffle.
     """
-    n_parts = corpus.sparkSession.sparkContext.defaultParallelism
-    c = corpus.repartition(n_parts).selectExpr(
-        f"{id_col} AS neighbor_id", f"{_quant_sql(vec_col)} AS cv"
-    ).selectExpr("*", f"{_norm_sql('cv')} AS cn")
-    q = queries.selectExpr(
-        f"{id_col} AS query_id", f"{_quant_sql(vec_col)} AS qv"
-    ).selectExpr("*", f"{_norm_sql('qv')} AS qn")
-    pairs = c.crossJoin(F.broadcast(q)).where("neighbor_id != query_id")
-    scored = pairs.selectExpr(
-        "query_id",
-        "neighbor_id",
-        f"{_cfn_sql('qv', 'cv', 'qn', 'cn')} AS cosine",
-    )
-    return _topk_per_query(scored, "cosine", k)
+    c = _with_norm(_corpus(corpus, id_col, vec_col))
+    return _exact_scan(c, _queries(queries, id_col, vec_col), k)
 
 
 # ---------------------------------------------------------------------------
@@ -320,7 +575,6 @@ def ivf_assign(
     centroids: DataFrame,
     id_col: str = "vec_id",
     qv_col: str = "qv",
-    dims: int | None = None,
 ) -> DataFrame:
     """Assign each vector to its nearest centroid (max cosine, deterministic
     centroid-id tie-break). ``centroids``: [centroid_id, qv] — broadcast.
@@ -359,7 +613,6 @@ def kmeans_refine_exact(
     n_iter: int = 1,
     id_col: str = "vec_id",
     qv_col: str = "qv",
-    dims: int | None = None,
 ) -> DataFrame:
     """Deterministic Lloyd refinement for spherical (cosine) k-means on
     quantized integer vectors — [centroid_id, qv].
@@ -379,7 +632,7 @@ def kmeans_refine_exact(
     """
     cents = seeds
     for _ in range(n_iter):
-        assigned = ivf_assign(vectors, cents, id_col, qv_col, dims)
+        assigned = ivf_assign(vectors, cents, id_col, qv_col)
         means = (
             assigned.selectExpr("centroid_id", f"posexplode({qv_col})")
             .groupBy("centroid_id", "pos")
@@ -434,7 +687,6 @@ def ann_topk_ivf(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     train_iters: int = 1,
-    dims: int | None = DEFAULT_DIMS,
     max_lists: int | None = None,
 ) -> DataFrame:
     """IVF ANN: partition the corpus into inverted lists by nearest
@@ -454,67 +706,12 @@ def ann_topk_ivf(
     and training cost quadratically. Real IVF keeps n_lists a constant
     (or √N, retrained offline); declared queries pin the cap.
     """
-    c = (
-        corpus.repartition(corpus.sparkSession.sparkContext.defaultParallelism)
-        .selectExpr(f"{id_col} AS neighbor_id", f"{_quant_sql(vec_col)} AS qv")
-        # consumed by every training iteration and the final assignment —
-        # persist so the corpus scan + quantize runs once; tracked: the
-        # returned plan is lazy, harness boundaries release (caching.py)
-    )
-    c = tracked_persist(c)
-    seed_filter = F.col("neighbor_id") % n_centroids_mod == 1
-    if max_lists is not None:
-        # cap id mod*(L-1)+1 is the L-th seed itself (not the first
-        # excluded id): the boundary is live data, so a <= vs < mutation
-        # changes the seed set — same set as `< mod*L` (r10 verdict #7)
-        seed_filter = seed_filter & (
-            F.col("neighbor_id") <= n_centroids_mod * (max_lists - 1) + 1
-        )
-    # derive seeds from the PERSISTED projection (same rows as filtering
-    # the raw corpus — c preserves the id — but served from cache instead
-    # of a second full scan + quantize)
-    seeds = c.where(seed_filter).select(
-        F.col("neighbor_id").alias("centroid_id"), "qv"
-    )
-    # persist: the trained centroids feed two broadcast consumers (corpus
-    # assignment + query probing); without a persist each broadcast re-runs
-    # the training shuffle
-    cents = tracked_persist(
-        kmeans_refine_exact(c, seeds, train_iters, "neighbor_id", "qv", dims)
-    )
-    c_assigned = (
-        ivf_assign(c, cents, "neighbor_id", "qv", dims)
-        .withColumnRenamed("qv", "cv")
-        .selectExpr("*", f"{_norm_sql('cv')} AS cn")
-    )
-
-    q = queries.selectExpr(
-        f"{id_col} AS query_id", f"{_quant_sql(vec_col)} AS qv"
-    ).selectExpr("*", f"{_norm_sql('qv')} AS qn")
-    # each query probes its n_probe nearest centroids
-    q_pairs = q.crossJoin(
-        F.broadcast(
-            cents.selectExpr(
-                "centroid_id", "qv AS _cv", f"{_norm_sql('qv')} AS _cn"
-            )
-        )
-    ).selectExpr("*", f"{_cfn_sql('qv', '_cv', 'qn', '_cn')} AS _sim")
-    wq = Window.partitionBy("query_id").orderBy(F.col("_sim").desc(), F.col("centroid_id"))
-    q_probes = (
-        q_pairs.withColumn("_rn", F.row_number().over(wq))
-        .where(F.col("_rn") <= n_probe)
-        .select("query_id", "qv", "qn", "centroid_id")
-    )
-
-    cand = c_assigned.join(F.broadcast(q_probes), "centroid_id").where(
-        "neighbor_id != query_id"
-    )
-    scored = cand.selectExpr(
-        "query_id",
-        "neighbor_id",
-        f"{_cfn_sql('qv', 'cv', 'qn', 'cn')} AS cosine",
-    )
-    return _topk_per_query(scored, "cosine", k)
+    c = tracked_persist(_corpus(corpus, id_col, vec_col))
+    cents, assigned = _ivf_train(c, _seed_filter(n_centroids_mod, max_lists), train_iters)
+    q = _queries(queries, id_col, vec_col)
+    route = _probes(q, cents, n_probe).select("query_id", "qv", "qn", "centroid_id")
+    pairs = _with_norm(assigned).join(F.broadcast(route), "centroid_id").where(_NOT_SELF)
+    return _topk_per_query(_cosine(pairs), "cosine", k)
 
 
 def ann_topk_lsh(
@@ -557,29 +754,18 @@ def ann_topk_lsh(
         raise ValueError("multi_probe radius > 2 not supported")
     if n_tables < 1:
         raise ValueError("n_tables must be >= 1")
-    c = corpus.repartition(
-        corpus.sparkSession.sparkContext.defaultParallelism
-    ).selectExpr(
-        f"{id_col} AS neighbor_id", f"{_quant_sql(vec_col)} AS cv"
-    )
-    q = queries.selectExpr(f"{id_col} AS query_id", f"{_quant_sql(vec_col)} AS qv")
-    # one (table, bucket) struct per table, from disjoint plane ranges
-    c = c.selectExpr(
-        "*",
-        "explode(array("
-        + ", ".join(
+
+    def tables(vec: str, name: str) -> str:
+        # one (table, bucket) struct per table, from disjoint plane ranges
+        return "explode(array(" + ", ".join(
             f"struct({t} AS tbl, "
-            f"{_lsh_bucket_sql('cv', n_planes, dims, t * n_planes)} AS bucket)"
+            f"{_lsh_bucket_sql(vec, n_planes, dims, t * n_planes)} AS {name})"
             for t in range(n_tables)
-        )
-        + ")) AS _tb",
-    ).selectExpr(
-        "neighbor_id",
-        "cv",
-        "_tb.tbl AS tbl",
-        "_tb.bucket AS bucket",
-        f"{_norm_sql('cv')} AS cn",
-    )
+        ) + ")) AS _tb"
+
+    c = _with_norm(_corpus(corpus, id_col, vec_col)).selectExpr(
+        "*", tables("cv", "bucket")
+    ).selectExpr("nid", "cv", "cn", "_tb.tbl AS tbl", "_tb.bucket AS bucket")
     flips = [0]  # own bucket
     if multi_probe >= 1:
         flips += [1 << j for j in range(n_planes)]
@@ -593,43 +779,22 @@ def ann_topk_lsh(
     # the cheap XOR probe flips — inlining the 64-dim bucket aggregate into
     # every probe element would codegen n_tables·|flips| copies of it
     q = (
-        q.selectExpr(
-            "*",
-            "explode(array("
-            + ", ".join(
-                f"struct({t} AS tbl, "
-                f"{_lsh_bucket_sql('qv', n_planes, dims, t * n_planes)} AS home)"
-                for t in range(n_tables)
-            )
-            + ")) AS _tb",
-        )
+        _queries(queries, id_col, vec_col)
+        .selectExpr("*", tables("qv", "home"))
         .selectExpr(
             "*",
             "explode(array("
             + ", ".join(f"(_tb.home ^ {m})" for m in flips)
             + ")) AS bucket",
         )
-        .selectExpr(
-            "query_id",
-            "qv",
-            "_tb.tbl AS tbl",
-            "bucket",
-            f"{_norm_sql('qv')} AS qn",
-        )
+        .selectExpr("query_id", "qv", "qn", "_tb.tbl AS tbl", "bucket")
     )
-    pairs = c.join(F.broadcast(q), ["tbl", "bucket"]).where(
-        "neighbor_id != query_id"
-    )
+    pairs = c.join(F.broadcast(q), ["tbl", "bucket"]).where(_NOT_SELF)
     if n_tables > 1:
         # a pair can match in several tables — dedup before the exact re-rank
         # so each candidate is scored once
-        pairs = pairs.select("query_id", "neighbor_id", "qv", "cv", "qn", "cn").distinct()
-    scored = pairs.selectExpr(
-        "query_id",
-        "neighbor_id",
-        f"{_cfn_sql('qv', 'cv', 'qn', 'cn')} AS cosine",
-    )
-    return _topk_per_query(scored, "cosine", k)
+        pairs = pairs.select("query_id", "nid", "qv", "cv", "qn", "cn").distinct()
+    return _topk_per_query(_cosine(pairs), "cosine", k)
 
 
 # ---------------------------------------------------------------------------
@@ -784,10 +949,8 @@ def ann_topk_pq(
     Nearest Neighbor Search"): the corpus is encoded once as M per-
     subspace codes; each query precomputes a (sub, code) → partial-dot
     lookup table against the codebooks, and the compressed-domain score
-    is the sum of M table hits — no full-width vector math per pair.
-
-    approx_cos(q, x) = Σₘ ⟨qₘ, c[m, codeₘ(x)]⟩ / (‖q‖ · ‖x̂‖) where x̂ is
-    the code reconstruction — all numerators exact int64.
+    is the sum of M table hits — no full-width vector math per pair
+    (``_adc_scan``).
 
     ``rerank=R`` adds the standard second stage: the compressed scan
     keeps each query's top-R candidates, which are re-scored with EXACT
@@ -799,103 +962,25 @@ def ann_topk_pq(
     0.32-0.46 compressed-only — the finer 16×4 split is the knob that
     matters on near-random vectors).
 
-    Scale: the LUT is Q·M·K tiny rows (broadcast); the scored join
-    probes it per corpus code row map-side, and partial aggregation
-    collapses to one row per (query, neighbor) before any exchange. The
-    win is bandwidth: candidate scans read M bytes of codes per vector,
-    not the raw embedding. Compose with the IVF router for sublinear
-    candidate counts (this operator scores ALL pairs, compressed).
+    ``max_codes`` caps the codebook size K at a CONSTANT (``_seed_filter``):
+    real PQ uses K=256 codes per subspace at any corpus size (one byte per
+    code), and training/encoding cost is N·K per subspace.
+
+    Scale: the LUT is Q·M·K tiny rows (broadcast while |Q| is under the
+    gate); the win is bandwidth: candidate scans read M bytes of codes
+    per vector, not the raw embedding. ``ann_topk_ivfpq`` composes the
+    same scan with the IVF router for sublinear candidate counts (this
+    operator scores ALL pairs, compressed).
     """
     bq = _resolve_query_broadcast(queries, n_queries)
-    c = (
-        corpus.repartition(corpus.sparkSession.sparkContext.defaultParallelism)
-        .selectExpr(f"{id_col} AS nid", f"{_quant_sql(vec_col)} AS qv")
-        # consumed by seeds, train, encode, and the re-rank stage — persist
-        # so the corpus scan + repartition exchange runs once, not 3-4x;
-        # tracked: lazy result plan, harness boundaries release (caching.py)
+    # consumed by seeds, training, encoding and the re-rank
+    c = tracked_persist(_corpus(corpus, id_col, vec_col))
+    cb, codes = _pq_train(
+        c, _seed_filter(seed_mod, max_codes), n_subspaces, sub_dims, train_iters
     )
-    c = tracked_persist(c)
-    subvecs = tracked_persist(pq_subvectors(c, "nid", "qv", n_subspaces, sub_dims))
-    # codebook size must be a CONSTANT, not a corpus fraction: real PQ uses
-    # K=256 codes per subspace at any corpus size (one byte per code), and
-    # training/encoding cost is N·K per subspace — a mod-only seed rule
-    # would make K scale with N and the encode join quadratic. max_codes
-    # caps the deterministic seed set to its first K ids.
-    seed_filter = F.col("nid") % seed_mod == 1
-    if max_codes is not None:
-        # live-boundary cap: mod*(K-1)+1 is itself the K-th seed (r10)
-        seed_filter = seed_filter & (
-            F.col("nid") <= seed_mod * (max_codes - 1) + 1
-        )
-    seeds = pq_subvectors(
-        c.where(seed_filter), "nid", "qv", n_subspaces, sub_dims
-    ).select("sub", F.col("nid").alias("cid"), "sv")
-    cb = tracked_persist(
-        pq_train_codebooks(subvecs, seeds, train_iters, "nid", sub_dims)
-    )
-
-    codes = pq_encode(subvecs, cb, "nid", sub_dims)
-
-    q = queries.selectExpr(f"{id_col} AS query_id", f"{_quant_sql(vec_col)} AS qv")
-    qsubs = pq_subvectors(q, "query_id", "qv", n_subspaces, sub_dims)
-    lut = qsubs.join(
-        F.broadcast(cb.selectExpr("sub", "cid", "sv AS _cv")), "sub"
-    ).selectExpr(
-        "query_id",
-        "sub",
-        "cid AS code",
-        f"{_dot_sql('sv', '_cv', sub_dims)} AS _pdot",
-        f"{_norm2_sql('_cv', sub_dims)} AS _pn2",
-    )
-    # one (query_id, qv, qn) frame shared by the score attach and the
-    # re-rank (round 12): the norm subtree is defined once
-    qn_full = q.selectExpr("*", f"{_norm_sql('qv')} AS qn")
-    qn = qn_full.selectExpr("query_id", "qn AS _qn")
-    acc = (
-        codes.join(bq(lut), ["sub", "code"])
-        .where("nid != query_id")
-        .groupBy("query_id", "nid")
-        .agg(
-            F.expr("CAST(sum(_pdot) AS BIGINT)").alias("_adot"),
-            F.expr("CAST(sum(_pn2) AS BIGINT)").alias("_rn2"),
-        )
-    )
-    scored = acc.join(bq(qn), "query_id").selectExpr(
-        "query_id",
-        "nid AS neighbor_id",
-        "CAST(_adot AS DOUBLE) / "
-        + _nonzero_sql("_qn * sqrt(CAST(_rn2 AS DOUBLE))")
-        + " AS approx_cosine",
-    )
-    if rerank is None:
-        return _topk_per_query(scored, "approx_cosine", k)
-    shortlist = _topk_per_query(scored, "approx_cosine", rerank, rank_col=None)
-    qv_full = c.selectExpr(
-        "nid AS neighbor_id", "qv AS _nv", f"{_norm_sql('qv')} AS _nn"
-    )
-    exact = (
-        shortlist.join(F.broadcast(qn_full), "query_id")
-        .join(qv_full, "neighbor_id")
-        .selectExpr(
-            "query_id",
-            "neighbor_id",
-            f"{_cfn_sql('qv', '_nv', 'qn', '_nn')} AS cosine",
-        )
-    )
-    # final rank over ≤ |Q|·rerank rows — bounded, a window is fine here
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cosine",
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    q = _queries(queries, id_col, vec_col)
+    scored = _adc_scan(codes, cb, q, bq, n_subspaces, sub_dims)
+    return _tail(scored, "approx_cosine", k, rerank, c, q, bq)
 
 
 def synth_clustered_embeddings(
@@ -904,8 +989,8 @@ def synth_clustered_embeddings(
     n_clusters: int = 32,
     dims: int = 64,
 ) -> DataFrame:
-    """Deterministic mixture-of-centroids embedding corpus (round 10,
-    r9 verdict #2): [id, embedding] where embedding[d] = base(cluster, d)
+    """Deterministic mixture-of-centroids embedding corpus: [id,
+    embedding] where embedding[d] = base(cluster, d)
     + noise(id, d), cluster = id % n_clusters, base ∈ [-3, 3] (Knuth-
     mixed like ``_hyperplane_coeff``), noise ∈ [-2, 2].
 
@@ -935,6 +1020,7 @@ def synth_clustered_embeddings(
 
 def _ivfpq_build(
     corpus: DataFrame,
+    *,
     n_centroids_mod: int,
     max_lists: int | None,
     ivf_train_iters: int,
@@ -945,101 +1031,55 @@ def _ivfpq_build(
     max_codes: int | None,
     id_col: str,
     vec_col: str,
-    dims: int | None,
     n_lists: int | None = None,
     persist_codes: bool = False,
     train_sample: int | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
     """Shared IVF-PQ index build: returns (c, cents, cb, codes) — the
-    persisted quantized corpus, trained coarse centroids, trained PQ
-    codebooks, and the encoded corpus joined with its list assignment.
+    persisted quantized corpus ``[nid, cv]``, trained coarse centroids,
+    trained PQ codebooks, and the encoded corpus joined with its list
+    assignment ``[nid, sub, code, centroid_id]``.
 
-    ``n_lists`` (round 10) switches the coarse seed rule from the
-    mod-with-cap form to the first-``n_lists`` ids — the hook that lets a
-    declared row size the list count as a deterministic function of the
-    corpus count (n_lists = ⌊√N⌋, the FAISS IVF sizing rule), replayable
-    in SQL as ``vec_id < (SELECT floor(sqrt(count(*))) FROM q)``.
+    ``n_lists`` switches the coarse seed rule from the mod-with-cap form
+    to the first-``n_lists`` ids — so a declared row can size the list
+    count as a deterministic function of the corpus count (n_lists =
+    ⌊√N⌋, the FAISS IVF sizing rule), replayable in SQL as
+    ``vec_id < (SELECT floor(sqrt(count(*))) FROM q)``.
 
-    ``train_sample`` (round 11, r10 verdict #3) bounds the COARSE-
-    QUANTIZER TRAINING set to the deterministic first-``train_sample``
-    ids (the seed-cap pattern): Lloyd refinement assigns only the sample
-    to the n_lists centroids, so the training term drops from
-    iters·N·n_lists to iters·sample·n_lists — at n_lists = ⌊√N⌋ and
-    sample ∝ √N that is O(N) instead of the N^1.5 build term SCALE.md
-    r10 named. The FULL corpus is still assigned exactly once (the
-    unavoidable one-pass N·n_lists encode). FAISS's own discipline
-    (ClusteringParameters.max_points_per_centroid defaults to 256× the
-    centroid count; the repo row uses 64×). SQL-replayable: the oracle
-    filters the training assignment's vector side by the same
-    predicate."""
-    c = (
-        corpus.repartition(corpus.sparkSession.sparkContext.defaultParallelism)
-        .selectExpr(f"{id_col} AS nid", f"{_quant_sql(vec_col)} AS qv")
-    )
-    # consumed by coarse seeds/training/assignment, PQ subvectors, and the
-    # re-rank — persist once (tracked; harness boundaries release)
-    c = tracked_persist(c)
+    ``train_sample`` bounds the COARSE-QUANTIZER TRAINING set to the
+    deterministic first-``train_sample`` ids: Lloyd refinement assigns
+    only the sample to the n_lists centroids, so the training term drops
+    from iters·N·n_lists to iters·sample·n_lists — at n_lists = ⌊√N⌋ and
+    sample ∝ √N that is O(N) instead of N^1.5. The FULL corpus is still
+    assigned exactly once (the unavoidable one-pass N·n_lists encode).
+    FAISS's own discipline (ClusteringParameters.max_points_per_centroid
+    defaults to 256× the centroid count; the repo row uses 64×).
+    SQL-replayable: the oracle filters the training assignment's vector
+    side by the same predicate.
 
-    # --- coarse quantizer (ann_topk_ivf's trainer, shared constants) ---
+    ``persist_codes`` materializes the encoding once for callers that
+    search the same index several times.
+
+    Codes are PQ over the RAW vectors (not residuals): residual encoding
+    needs per-list codebooks, with real recall cost at K constants this
+    small; the raw-vector form keeps ONE codebook set shared with
+    ``ann_topk_pq``, and the whole pipeline SQL-replayable bit-for-bit."""
+    c = tracked_persist(_corpus(corpus, id_col, vec_col))
     if n_lists is not None:
-        seed_filter = F.col("nid") < F.lit(int(n_lists))
+        seeds = F.col("nid") < F.lit(int(n_lists))
     else:
-        seed_filter = F.col("nid") % n_centroids_mod == 1
-        if max_lists is not None:
-            # live-boundary cap (see ann_topk_ivf)
-            seed_filter = seed_filter & (
-                F.col("nid") <= n_centroids_mod * (max_lists - 1) + 1
-            )
-    seeds = c.where(seed_filter).select(F.col("nid").alias("centroid_id"), "qv")
-    train_vecs = (
-        c if train_sample is None else c.where(F.col("nid") < F.lit(int(train_sample)))
+        seeds = _seed_filter(n_centroids_mod, max_lists)
+    train = None
+    if train_sample is not None:
+        train = c.where(F.col("nid") < F.lit(int(train_sample)))
+    cents, assigned = _ivf_train(c, seeds, ivf_train_iters, train)
+    cb, codes = _pq_train(
+        c, _seed_filter(seed_mod, max_codes), n_subspaces, sub_dims, pq_train_iters
     )
-    cents = tracked_persist(
-        kmeans_refine_exact(train_vecs, seeds, ivf_train_iters, "nid", "qv", dims)
-    )
-    assign = ivf_assign(c, cents, "nid", "qv", dims).select("nid", "centroid_id")
-
-    # --- product codes over the raw vectors (ann_topk_pq's trainer) ---
-    subvecs = tracked_persist(pq_subvectors(c, "nid", "qv", n_subspaces, sub_dims))
-    pq_seed = F.col("nid") % seed_mod == 1
-    if max_codes is not None:
-        # live-boundary cap (see ann_topk_pq)
-        pq_seed = pq_seed & (F.col("nid") <= seed_mod * (max_codes - 1) + 1)
-    pq_seeds = pq_subvectors(
-        c.where(pq_seed), "nid", "qv", n_subspaces, sub_dims
-    ).select("sub", F.col("nid").alias("cid"), "sv")
-    cb = tracked_persist(
-        pq_train_codebooks(subvecs, pq_seeds, pq_train_iters, "nid", sub_dims)
-    )
-    codes = pq_encode(subvecs, cb, "nid", sub_dims).join(assign, "nid")
+    codes = codes.join(assigned.select("nid", "centroid_id"), "nid")
     if persist_codes:
-        # the probe-curve row searches the SAME index at several probe
-        # settings — materialize the encode once instead of per setting
         codes = tracked_persist(codes)
     return c, cents, cb, codes
-
-
-#: Query-side broadcast gate (round 11, r10 verdict residual #3): the
-#: per-query broadcast payload in an IVF-PQ/IVF-SQ8 search is ~1 KB
-#: (n_probe route rows + n_subspaces LUT rows), so 32k queries ≈ 32 MB —
-#: half the session's 64 MB autoBroadcast budget. Above this the
-#: query-side frames join as ordinary shuffle joins instead.
-ANN_BROADCAST_MAX_QUERIES = 32_768
-
-
-def _resolve_query_broadcast(queries: DataFrame, n_queries: int | None):
-    """(broadcast-or-identity wrapper) for |Q|-sized search-side frames.
-
-    ``n_queries`` is the caller's bound on the batch size when it knows
-    one (the declared rows pass their fixed 20-query cap — zero runtime
-    cost); ``None`` runs one LIMIT-bounded count probe (scans at most
-    gate+1 rows) and gates on the measured size — the runtime fallback
-    for unbounded online batches."""
-    if n_queries is None:
-        n_queries = queries.limit(ANN_BROADCAST_MAX_QUERIES + 1).count()
-    if n_queries > ANN_BROADCAST_MAX_QUERIES:
-        return lambda df: df
-    return F.broadcast
 
 
 def _ivfpq_search(
@@ -1048,6 +1088,7 @@ def _ivfpq_search(
     cb: DataFrame,
     codes: DataFrame,
     queries: DataFrame,
+    *,
     k: int,
     n_probe: int,
     n_subspaces: int,
@@ -1055,96 +1096,18 @@ def _ivfpq_search(
     rerank: int | None,
     id_col: str,
     vec_col: str,
-    dims: int | None,
     n_queries: int | None = None,
 ) -> DataFrame:
-    """Shared IVF-PQ search stage over a built index: probe routing → ADC
-    compressed scan over probed lists → optional exact re-rank. The |Q|-
-    sized frames (probes, LUT, query norms) broadcast only while the
-    batch is under ``ANN_BROADCAST_MAX_QUERIES`` (declared rows pass
-    their fixed 20-query bound; unbounded batches are gated by a
-    LIMIT-bounded count and fall back to shuffle joins — r10 verdict
-    residual #3)."""
+    """IVF-PQ search over a built index (``_ivfpq_build``): probe routing
+    → ADC compressed scan over the probed lists only → optional exact
+    re-rank. The |Q|-sized frames (probes, LUT, query norms, re-rank
+    queries) broadcast only while the batch is under
+    ``ANN_BROADCAST_MAX_QUERIES``."""
     bq = _resolve_query_broadcast(queries, n_queries)
-    q = queries.selectExpr(f"{id_col} AS query_id", f"{_quant_sql(vec_col)} AS qv")
-    qn_full = q.selectExpr("*", f"{_norm_sql('qv')} AS qn")
-    q_pairs = qn_full.crossJoin(
-        F.broadcast(
-            cents.selectExpr(
-                "centroid_id", "qv AS _cv", f"{_norm_sql('qv')} AS _cn"
-            )
-        )
-    ).selectExpr("*", f"{_cfn_sql('qv', '_cv', 'qn', '_cn')} AS _sim")
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("_sim").desc(), F.col("centroid_id")
-    )
-    probes = (
-        q_pairs.withColumn("_rn", F.row_number().over(wq))
-        .where(F.col("_rn") <= n_probe)
-        .select("query_id", "centroid_id")
-    )
-    qsubs = pq_subvectors(q, "query_id", "qv", n_subspaces, sub_dims)
-    lut = qsubs.join(
-        F.broadcast(cb.selectExpr("sub", "cid", "sv AS _cv")), "sub"
-    ).selectExpr(
-        "query_id",
-        "sub",
-        "cid AS code",
-        f"{_dot_sql('sv', '_cv', sub_dims)} AS _pdot",
-        f"{_norm2_sql('_cv', sub_dims)} AS _pn2",
-    )
-    # reuse qn_full's norm (round 12): same value, one fewer norm subtree
-    qn = qn_full.selectExpr("query_id", "qn AS _qn")
-
-    # --- ADC over probed lists only ---
-    acc = (
-        codes.join(bq(probes), "centroid_id")
-        .join(bq(lut), ["query_id", "sub", "code"])
-        .where("nid != query_id")
-        .groupBy("query_id", "nid")
-        .agg(
-            F.expr("CAST(sum(_pdot) AS BIGINT)").alias("_adot"),
-            F.expr("CAST(sum(_pn2) AS BIGINT)").alias("_rn2"),
-        )
-    )
-    scored = acc.join(bq(qn), "query_id").selectExpr(
-        "query_id",
-        "nid AS neighbor_id",
-        "CAST(_adot AS DOUBLE) / "
-        + _nonzero_sql("_qn * sqrt(CAST(_rn2 AS DOUBLE))")
-        + " AS approx_cosine",
-    )
-    if rerank is None:
-        return _topk_per_query(scored, "approx_cosine", k)
-    shortlist = _topk_per_query(scored, "approx_cosine", rerank, rank_col=None)
-    qv_full = c.selectExpr(
-        "nid AS neighbor_id", "qv AS _nv", f"{_norm_sql('qv')} AS _nn"
-    )
-    exact = (
-        # qn_full instead of q: the re-rank needs the query norm anyway,
-        # and qn_full already carries it — drops a per-row norm recompute
-        shortlist.join(bq(qn_full), "query_id")
-        .join(qv_full, "neighbor_id")
-        .selectExpr(
-            "query_id",
-            "neighbor_id",
-            f"{_cfn_sql('qv', '_nv', 'qn', '_nn')} AS cosine",
-        )
-    )
-    # final rank over ≤ |Q|·rerank rows — bounded, a window is fine here
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cosine",
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    q = _queries(queries, id_col, vec_col)
+    probes = _probes(q, cents, n_probe)
+    scored = _adc_scan(codes, cb, q, bq, n_subspaces, sub_dims, probes=probes)
+    return _tail(scored, "approx_cosine", k, rerank, c, q, bq)
 
 
 def ann_topk_ivfpq(
@@ -1163,54 +1126,40 @@ def ann_topk_ivfpq(
     max_codes: int | None = 256,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dims: int | None = DEFAULT_DIMS,
     n_lists: int | None = None,
     train_sample: int | None = None,
     n_queries: int | None = None,
 ) -> DataFrame:
-    """IVF-PQ ANN — the composition ``ann_topk_pq``'s docstring promises
-    (Jégou et al. 2011 §V: coarse quantizer + product codes): a trained
-    IVF router sends each query to its ``n_probe`` nearest lists, and the
-    ADC compressed scan runs ONLY over the probed lists' codes, followed
-    by the standard exact re-rank of the top-``rerank`` shortlist.
+    """IVF-PQ ANN (Jégou et al. 2011 §V: coarse quantizer + product
+    codes): a trained IVF router sends each query to its ``n_probe``
+    nearest lists, and the ADC compressed scan runs ONLY over the probed
+    lists' codes, followed by the standard exact re-rank of the
+    top-``rerank`` shortlist.
 
-    Why it exists (round 9, SCALE.md): the flat ``ann_topk_pq`` scan
-    measured n^1.97 over sf1→sf3 — per-QUERY work is linear in codes, but
-    the benchmark's query rule (``vec_id % 100`` alone, pre-r10) scaled
-    |Q| with the corpus, so the |Q|·N product was quadratic. Round 10
-    fixed the declared batches at |Q| = 20 (``_ANN_Q_CAP``), and probing
-    cuts the scanned codes to the probed fraction (n_probe/n_lists at
-    balanced lists); the remaining scale levers are stated honestly: at
-    a CONSTANT ``max_lists`` the fraction is constant (a constant-factor
-    win, this row's declared operating point), and the production
+    Scale: per-query work in the flat ``ann_topk_pq`` scan is linear in
+    the corpus; probing cuts the scanned codes to the probed fraction
+    (n_probe/n_lists at balanced lists). At a CONSTANT ``max_lists`` the
+    fraction is constant (a constant-factor win); the production
     discipline is n_lists ∝ √N (training cost N·√N, ADC
-    |Q|·n_probe·N/√N — the FAISS IVF sizing rule, exercised by the
-    declared ``ann_topk_ivfpq_sqrt`` row via the ``n_lists`` hook).
-
-    Codes are PQ over the RAW vectors (not residuals): residual encoding
-    is the spec'd refinement but needs per-list codebooks with no extra
-    oracle difficulty yet real recall cost at K constants this small —
-    the raw-vector form keeps ONE codebook set shared with
-    ``ann_topk_pq`` and the whole pipeline (coarse training, routing, PQ
-    training, encode, LUT scan, re-rank) SQL-replayable bit-for-bit.
+    |Q|·n_probe·N/√N — the FAISS IVF sizing rule, via the ``n_lists``
+    hook).
 
     Shuffle shape: coarse centroids and PQ codebooks broadcast; the
-    candidate join is codes ⋈ broadcast(probes) ⋈ broadcast(LUT) —
-    map-side until the (query, neighbor) partial-sum exchange, which
-    carries only probed-candidate rows."""
+    candidate join is codes ⋈ probes ⋈ LUT (both broadcast under the
+    query gate) — map-side until the (query, neighbor) partial-sum
+    exchange, which carries only probed-candidate rows."""
     c, cents, cb, codes = _ivfpq_build(
         corpus,
-        n_centroids_mod,
-        max_lists,
-        ivf_train_iters,
-        n_subspaces,
-        sub_dims,
-        seed_mod,
-        pq_train_iters,
-        max_codes,
-        id_col,
-        vec_col,
-        dims,
+        n_centroids_mod=n_centroids_mod,
+        max_lists=max_lists,
+        ivf_train_iters=ivf_train_iters,
+        n_subspaces=n_subspaces,
+        sub_dims=sub_dims,
+        seed_mod=seed_mod,
+        pq_train_iters=pq_train_iters,
+        max_codes=max_codes,
+        id_col=id_col,
+        vec_col=vec_col,
         n_lists=n_lists,
         train_sample=train_sample,
     )
@@ -1220,14 +1169,13 @@ def ann_topk_ivfpq(
         cb,
         codes,
         queries,
-        k,
-        n_probe,
-        n_subspaces,
-        sub_dims,
-        rerank,
-        id_col,
-        vec_col,
-        dims,
+        k=k,
+        n_probe=n_probe,
+        n_subspaces=n_subspaces,
+        sub_dims=sub_dims,
+        rerank=rerank,
+        id_col=id_col,
+        vec_col=vec_col,
         n_queries=n_queries,
     )
 
@@ -1251,168 +1199,62 @@ def ann_ivfpq_probe_curve(
     max_codes: int | None = 256,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dims: int | None = DEFAULT_DIMS,
 ) -> DataFrame:
-    """Recall-vs-probe curve over ONE built IVF-PQ index (round 10, r9
-    verdict #2): [probe_lists, n_queries, avg_recall] — one row per probe
-    setting, measured against the exact brute-force top-k on the same
-    corpus. The index (coarse centroids, PQ codebooks, encoded corpus) is
-    built once and persisted; each setting re-runs only the search stage,
-    so the row costs index-build + Σ probe-scans, not |settings| full
-    builds. avg_recall = sum(n_hits) / (k · |Q|) — one double division of
-    exact integers, bit-replayable."""
+    """Recall-vs-probe curve over ONE built IVF-PQ index: [probe_lists,
+    n_queries, avg_recall] — one row per probe setting, measured against
+    the exact brute-force top-k on the same corpus. The index (coarse
+    centroids, PQ codebooks, encoded corpus) is built once and persisted.
+    avg_recall = sum(n_hits) / (k · |Q|) — one double division of exact
+    integers, bit-replayable.
+
+    One ADC scan serves the whole curve: every candidate lives in exactly
+    ONE inverted list, so its partial sums are identical at every probe
+    setting that reaches that list, and the settings differ only in WHICH
+    (query, list) pairs they admit. The scan runs at max(probe_settings)
+    carrying each candidate's probe rank, and each scored candidate fans
+    out to the settings whose cutoff admits it; the tail then ranks per
+    (setting, query). The exact reference scans the index's persisted
+    corpus, not the raw one."""
     if not probe_settings:
         raise ValueError("probe_settings must be non-empty")
     c, cents, cb, codes = _ivfpq_build(
         corpus,
-        n_centroids_mod,
-        max_lists,
-        ivf_train_iters,
-        n_subspaces,
-        sub_dims,
-        seed_mod,
-        pq_train_iters,
-        max_codes,
-        id_col,
-        vec_col,
-        dims,
+        n_centroids_mod=n_centroids_mod,
+        max_lists=max_lists,
+        ivf_train_iters=ivf_train_iters,
+        n_subspaces=n_subspaces,
+        sub_dims=sub_dims,
+        seed_mod=seed_mod,
+        pq_train_iters=pq_train_iters,
+        max_codes=max_codes,
+        id_col=id_col,
+        vec_col=vec_col,
         n_lists=n_lists,
         persist_codes=True,
         train_sample=train_sample,
     )
-    # --- one shared ADC scan for the WHOLE curve (round 11) ---
-    # Every candidate lives in exactly ONE inverted list, so its partial
-    # sums are identical at every probe setting that reaches that list;
-    # the per-setting searches differ only in WHICH (query, list) pairs
-    # they admit. Scan once at max(probe_settings) carrying each pair's
-    # probe rank, then fan each scored candidate out to the settings
-    # whose cutoff admits it (explode over the setting array) — the
-    # former 3 independent search DAGs (ADC join + aggregate each)
-    # collapse into one, the exact brute-force reference is scanned once
-    # instead of once per setting, and the per-setting sums are the SAME
-    # set of exact integers, so every value is bit-identical to the
-    # per-setting form the oracle replays.
     distinct_ps = sorted({int(p) for p in probe_settings})
-    max_p = distinct_ps[-1]
     parr = "array({})".format(",".join(str(p) for p in distinct_ps))
     bq = _resolve_query_broadcast(queries, n_queries)
-    q = queries.selectExpr(f"{id_col} AS query_id", f"{_quant_sql(vec_col)} AS qv")
-    qn_full = q.selectExpr("*", f"{_norm_sql('qv')} AS qn")
-    q_pairs = qn_full.crossJoin(
-        F.broadcast(
-            cents.selectExpr(
-                "centroid_id", "qv AS _cv", f"{_norm_sql('qv')} AS _cn"
-            )
-        )
-    ).selectExpr("*", f"{_cfn_sql('qv', '_cv', 'qn', '_cn')} AS _sim")
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("_sim").desc(), F.col("centroid_id")
-    )
-    probes = (
-        q_pairs.withColumn("_rn", F.row_number().over(wq))
-        .where(F.col("_rn") <= max_p)
-        .select("query_id", "centroid_id", "_rn")
-    )
-    qsubs = pq_subvectors(q, "query_id", "qv", n_subspaces, sub_dims)
-    lut = qsubs.join(
-        F.broadcast(cb.selectExpr("sub", "cid", "sv AS _cv")), "sub"
-    ).selectExpr(
-        "query_id",
-        "sub",
-        "cid AS code",
-        f"{_dot_sql('sv', '_cv', sub_dims)} AS _pdot",
-        f"{_norm2_sql('_cv', sub_dims)} AS _pn2",
-    )
-    # reuse qn_full's norm (round 12): same value, one fewer norm subtree
-    qn = qn_full.selectExpr("query_id", "qn AS _qn")
-    acc = (
-        codes.join(bq(probes), "centroid_id")
-        .join(bq(lut), ["query_id", "sub", "code"])
-        .where("nid != query_id")
-        .groupBy("query_id", "nid")
-        .agg(
-            F.expr("CAST(sum(_pdot) AS BIGINT)").alias("_adot"),
-            F.expr("CAST(sum(_pn2) AS BIGINT)").alias("_rn2"),
-            # one list per nid ⇒ _rn is constant across the group
-            F.min("_rn").alias("_minrn"),
-        )
-    )
-    scored = acc.join(bq(qn), "query_id").selectExpr(
-        "query_id",
-        "nid AS neighbor_id",
-        "_minrn",
-        "CAST(_adot AS DOUBLE) / "
-        + _nonzero_sql("_qn * sqrt(CAST(_rn2 AS DOUBLE))")
-        + " AS approx_cosine",
+    q = _queries(queries, id_col, vec_col)
+    probes = _probes(q, cents, distinct_ps[-1])
+    scored = _adc_scan(
+        codes, cb, q, bq, n_subspaces, sub_dims, probes=probes, with_rank=True
     )
     cand = scored.selectExpr(
         "*", f"explode(filter({parr}, p -> p >= _minrn)) AS _probe"
     )
-    from bicis_spark.operators.topk import topk_by_group_agg
-
-    if rerank is None:
-        approx_topk = topk_by_group_agg(
-            cand, ["_probe", "query_id"], "approx_cosine", "neighbor_id",
-            k, ["neighbor_id"], descending=True,
-        ).select("_probe", "query_id", "neighbor_id")
-    else:
-        short = topk_by_group_agg(
-            cand, ["_probe", "query_id"], "approx_cosine", "neighbor_id",
-            rerank, ["neighbor_id"], descending=True,
-        ).select("_probe", "query_id", "neighbor_id")
-        qv_full = c.selectExpr(
-            "nid AS neighbor_id", "qv AS _nv", f"{_norm_sql('qv')} AS _nn"
-        )
-        exact_sc = (
-            # qn_full: the query norm is already a column (round 12)
-            short.join(bq(qn_full), "query_id")
-            .join(qv_full, "neighbor_id")
-            .selectExpr(
-                "_probe",
-                "query_id",
-                "neighbor_id",
-                f"{_cfn_sql('qv', '_nv', 'qn', '_nn')} AS cosine",
-            )
-        )
-        w2 = Window.partitionBy("_probe", "query_id").orderBy(
-            F.col("cosine").desc(), F.col("neighbor_id")
-        )
-        approx_topk = (
-            exact_sc.withColumn("rank", F.row_number().over(w2))
-            .where(F.col("rank") <= k)
-            .select("_probe", "query_id", "neighbor_id")
-        )
-    base = queries.select(F.col(id_col).alias("query_id"))
-    # Brute-force reference over the PERSISTED quantized corpus (round 11,
-    # optimization session 2): ann_topk_bruteforce(corpus, ...) would
-    # re-scan and re-quantize the raw corpus a second time; ``c`` already
-    # holds exactly the (nid, qv) rows it would derive (same repartition,
-    # same quantize), so the reference scan is served from the index
-    # build's cache — one fewer full corpus scan + quantize per row at
-    # any scale. Values bit-identical (same expression trees, same salted
-    # top-k; oracle MATCH re-checked at sf0.01 and sf0.001).
-    cq = c.selectExpr(
-        "nid AS neighbor_id", "qv AS cv"
-    ).selectExpr("*", f"{_norm_sql('cv')} AS cn")
-    # reuse qn_full (round 12, r11 ADVICE #1): the reference's query side
-    # is exactly the (query_id, qv, qn) frame the probe routing built ~100
-    # lines up — re-deriving it as a second quantize+norm subtree only
-    # duplicated the definition
-    bf_scored = cq.crossJoin(F.broadcast(qn_full)).where(
-        "neighbor_id != query_id"
-    ).selectExpr(
-        "query_id",
-        "neighbor_id",
-        f"{_cfn_sql('qv', 'cv', 'qn', 'cn')} AS cosine",
-    )
-    exact = _topk_per_query(bf_scored, "cosine", k)
+    approx_topk = _tail(
+        cand, "approx_cosine", k, rerank, c, q, bq, keys=("_probe", "query_id")
+    ).select("_probe", "query_id", "neighbor_id")
+    exact = _exact_scan(_with_norm(c), q, k)
     inter = exact.select("query_id", "neighbor_id").join(
         approx_topk, ["query_id", "neighbor_id"]
     )
     hits = inter.groupBy("_probe", "query_id").agg(
         F.count(F.lit(1)).alias("_h")
     )
-    basex = base.selectExpr("query_id", f"explode({parr}) AS _probe")
+    basex = queries.selectExpr(f"{id_col} AS query_id", f"explode({parr}) AS _probe")
     rec = basex.join(hits, ["_probe", "query_id"], "left").select(
         "_probe",
         "query_id",
@@ -1425,9 +1267,8 @@ def ann_ivfpq_probe_curve(
             / (F.lit(float(k)) * F.count(F.lit(1)).cast("double"))
         ).alias("avg_recall"),
     )
-    # re-expand to the INPUT setting list (duplicate settings — possible
-    # at tiny SFs where n_lists//16 == n_lists//8 — must yield duplicate
-    # output rows exactly as the per-setting loop did)
+    # re-expand to the INPUT setting list: duplicate settings (possible at
+    # tiny SFs where n_lists//16 == n_lists//8) yield duplicate output rows
     wanted = queries.sparkSession.range(1).selectExpr(
         "explode(array({})) AS probe_lists".format(
             ",".join(str(int(p)) for p in probe_settings)
@@ -1505,7 +1346,7 @@ def ann_topk_sq8(
 ) -> DataFrame:
     """Scalar-quantized (int8) ANN — FAISS's ``ScalarQuantizer`` QT_8bit
     serving path: per-dimension symmetric scales trained on the corpus,
-    every vector compressed to 64 int8 codes (4× the raw-embedding
+    every vector compressed to ``dims`` int8 codes (4× the raw-embedding
     bandwidth win; 16× vs the quantized int64 working form), candidates
     scored with the int8 dot product, and the top-``rerank`` shortlist
     re-ranked with exact full-precision cosine.
@@ -1514,64 +1355,15 @@ def ann_topk_sq8(
     needs trained codebooks; SQ8 is the train-light middle ground real
     serving stacks deploy first. This row keeps the brute-force scan
     SHAPE (corpus × broadcast(fixed query batch), no corpus shuffle) —
-    compose with the IVF router for sublinear candidate counts.
+    ``ann_topk_ivfsq8`` composes it with the IVF router.
 
     Determinism: scales are one double division per dimension; codes are
     floor(x·s + 0.5) clamps; int8 dots are exact int64 sums — the whole
     pipeline replays bit-for-bit in the DuckDB oracle."""
-    n_parts = corpus.sparkSession.sparkContext.defaultParallelism
-    c = tracked_persist(
-        corpus.repartition(n_parts).selectExpr(
-            f"{id_col} AS nid", f"{_quant_sql(vec_col)} AS qv"
-        )
-    )
-    # one-row scales frame attached by broadcast cross join (scalar
-    # attach): encoding then runs map-side — no explode shuffle of codes
-    scales = sq8_scales(c, "qv", dims or 64)
-    c8 = c.crossJoin(F.broadcast(scales)).selectExpr(
-        "nid", f"{_sq8_encode_sql('qv', 'sl')} AS c8"
-    ).selectExpr("*", f"{_norm_sql('c8')} AS cn8")
-    q = queries.selectExpr(f"{id_col} AS query_id", f"{_quant_sql(vec_col)} AS qv")
-    q8 = q.crossJoin(F.broadcast(scales)).selectExpr(
-        "query_id", "qv", f"{_sq8_encode_sql('qv', 'sl')} AS q8"
-    ).selectExpr("*", f"{_norm_sql('q8')} AS qn8")
-    pairs = c8.crossJoin(
-        F.broadcast(q8.select("query_id", "q8", "qn8"))
-    ).where("nid != query_id")
-    scored = pairs.selectExpr(
-        "query_id",
-        "nid AS neighbor_id",
-        f"{_cfn_sql('q8', 'c8', 'qn8', 'cn8')} AS approx_cosine",
-    )
-    if rerank is None:
-        return _topk_per_query(scored, "approx_cosine", k)
-    shortlist = _topk_per_query(scored, "approx_cosine", rerank, rank_col=None)
-    qv_full = c.selectExpr(
-        "nid AS neighbor_id", "qv AS _nv", f"{_norm_sql('qv')} AS _nn"
-    )
-    exact = (
-        shortlist.join(F.broadcast(q.select("query_id", "qv")), "query_id")
-        .join(qv_full, "neighbor_id")
-        .selectExpr(
-            "query_id",
-            "neighbor_id",
-            f"{_cfn_sql('qv', '_nv', _norm_sql('qv'), '_nn')} AS cosine",
-        )
-    )
-    # final rank over ≤ |Q|·rerank rows — bounded, a window is fine here
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cosine",
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    c = tracked_persist(_corpus(corpus, id_col, vec_col))
+    q = _queries(queries, id_col, vec_col)
+    scored = _sq8_scan(c, q, dims or DEFAULT_DIMS)
+    return _tail(scored, "approx_cosine", k, rerank, c, q)
 
 
 def ann_topk_ivfsq8(
@@ -1588,14 +1380,12 @@ def ann_topk_ivfsq8(
     dims: int | None = DEFAULT_DIMS,
     n_queries: int | None = None,
 ) -> DataFrame:
-    """IVF-SQ8 ANN — the composition ``ann_topk_sq8``'s docstring
-    promises (FAISS's ``IVF<n>,SQ8`` index family, round 11): the trained
-    IVF coarse router (``ann_topk_ivf``'s trainer, shared constants)
-    sends each query to its ``n_probe`` nearest lists, candidates WITHIN
-    the probed lists are scored with the int8 scalar-quantized dot
-    product (4× the raw-embedding scan bandwidth), and the
-    top-``rerank`` shortlist is re-ranked with exact full-precision
-    cosine.
+    """IVF-SQ8 ANN — FAISS's ``IVF<n>,SQ8`` index family: the trained IVF
+    coarse router sends each query to its ``n_probe`` nearest lists,
+    candidates WITHIN the probed lists are scored with the int8
+    scalar-quantized dot product (4× the raw-embedding scan bandwidth),
+    and the top-``rerank`` shortlist is re-ranked with exact
+    full-precision cosine.
 
     Where it sits in the family: IVF-PQ compresses harder (M bytes per
     vector, trained codebooks) but pays ADC table lookups; IVF-SQ8 keeps
@@ -1603,106 +1393,28 @@ def ann_topk_ivfsq8(
     configuration serving stacks reach for before PQ. Per-query scanned
     vectors ≈ probed fraction of N; scan bytes ≈ N/4 of the raw scan.
 
-    Shuffle shape: centroids, per-dim scales (one row), probe routes and
-    query codes all broadcast; the candidate scan is map-side over the
-    probed lists' partitions; shortlist selection is the salted two-phase
-    top-k (no full-candidate sort in one task); the exact re-rank touches
-    ≤ |Q|·rerank rows. Determinism: same exact-int64/IEEE-double recipe
-    as ``ann_topk_sq8`` + ``ann_topk_ivf`` — the whole pipeline replays
-    bit-for-bit in the DuckDB oracle."""
+    Shuffle shape: centroids and per-dim scales (one row) broadcast;
+    probe routes and query codes broadcast under the query gate; the
+    candidate scan is map-side over the probed lists' partitions;
+    shortlist selection is the salted two-phase top-k; the exact re-rank
+    touches ≤ |Q|·rerank rows. Determinism: same exact-int64/IEEE-double
+    recipe as ``ann_topk_sq8`` + ``ann_topk_ivf`` — the whole pipeline
+    replays bit-for-bit in the DuckDB oracle."""
     bq = _resolve_query_broadcast(queries, n_queries)
-    n_parts = corpus.sparkSession.sparkContext.defaultParallelism
-    c = tracked_persist(
-        corpus.repartition(n_parts).selectExpr(
-            f"{id_col} AS nid", f"{_quant_sql(vec_col)} AS qv"
-        )
+    c = tracked_persist(_corpus(corpus, id_col, vec_col))
+    cents, assigned = _ivf_train(
+        c, _seed_filter(n_centroids_mod, max_lists), ivf_train_iters
     )
-    # --- coarse router: ann_topk_ivf's trainer (mod seeds, capped) ---
-    seed_filter = F.col("nid") % n_centroids_mod == 1
-    if max_lists is not None:
-        seed_filter = seed_filter & (
-            F.col("nid") <= n_centroids_mod * (max_lists - 1) + 1
-        )
-    seeds = c.where(seed_filter).select(F.col("nid").alias("centroid_id"), "qv")
-    cents = tracked_persist(
-        kmeans_refine_exact(c, seeds, ivf_train_iters, "nid", "qv", dims)
+    q = _queries(queries, id_col, vec_col)
+    scored = _sq8_scan(
+        c,
+        q,
+        dims or DEFAULT_DIMS,
+        bq,
+        probes=_probes(q, cents, n_probe),
+        assign=assigned.select("nid", "centroid_id"),
     )
-    assign = ivf_assign(c, cents, "nid", "qv", dims).select("nid", "centroid_id")
-
-    # --- SQ8 codes over the full corpus (scales: one-row broadcast) ---
-    scales = sq8_scales(c, "qv", dims or 64)
-    c8 = (
-        c.join(assign, "nid")
-        .crossJoin(F.broadcast(scales))
-        .selectExpr(
-            "nid", "centroid_id", f"{_sq8_encode_sql('qv', 'sl')} AS c8"
-        )
-        .selectExpr("*", f"{_norm_sql('c8')} AS cn8")
-    )
-    q = queries.selectExpr(f"{id_col} AS query_id", f"{_quant_sql(vec_col)} AS qv")
-    q8 = q.crossJoin(F.broadcast(scales)).selectExpr(
-        "query_id", f"{_sq8_encode_sql('qv', 'sl')} AS q8"
-    ).selectExpr("*", f"{_norm_sql('q8')} AS qn8")
-
-    # --- probe routing (bounded |Q| × n_lists window) ---
-    qn_full = q.selectExpr("*", f"{_norm_sql('qv')} AS qn")
-    q_pairs = qn_full.crossJoin(
-        F.broadcast(
-            cents.selectExpr(
-                "centroid_id", "qv AS _cv", f"{_norm_sql('qv')} AS _cn"
-            )
-        )
-    ).selectExpr("*", f"{_cfn_sql('qv', '_cv', 'qn', '_cn')} AS _sim")
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("_sim").desc(), F.col("centroid_id")
-    )
-    probes = (
-        q_pairs.withColumn("_rn", F.row_number().over(wq))
-        .where(F.col("_rn") <= n_probe)
-        .select("query_id", "centroid_id")
-    )
-
-    # --- int8 scan over probed lists only ---
-    cand = (
-        c8.join(bq(probes), "centroid_id")
-        .join(bq(q8), "query_id")
-        .where("nid != query_id")
-    )
-    scored = cand.selectExpr(
-        "query_id",
-        "nid AS neighbor_id",
-        f"{_cfn_sql('q8', 'c8', 'qn8', 'cn8')} AS approx_cosine",
-    )
-    if rerank is None:
-        return _topk_per_query(scored, "approx_cosine", k)
-    shortlist = _topk_per_query(scored, "approx_cosine", rerank, rank_col=None)
-    qv_full = c.selectExpr(
-        "nid AS neighbor_id", "qv AS _nv", f"{_norm_sql('qv')} AS _nn"
-    )
-    exact = (
-        # qn_full: the probe routing already derived the query norm
-        shortlist.join(F.broadcast(qn_full), "query_id")
-        .join(qv_full, "neighbor_id")
-        .selectExpr(
-            "query_id",
-            "neighbor_id",
-            f"{_cfn_sql('qv', '_nv', 'qn', '_nn')} AS cosine",
-        )
-    )
-    # final rank over ≤ |Q|·rerank rows — bounded, a window is fine here
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cosine",
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return _tail(scored, "approx_cosine", k, rerank, c, q, bq)
 
 
 def sign_signature_word(qv_col: str, start: int, width: int = 32) -> Column:
@@ -1734,11 +1446,10 @@ def ann_topk_hamming(
     rerank: int | None = 40,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dims: int | None = DEFAULT_DIMS,
 ) -> DataFrame:
-    """Binary sign-bit ANN — the FAISS ``IndexBinaryFlat`` serving shape
-    (round 11): every vector binarized to its per-dimension sign bits
-    (two 32-bit words), candidates ranked by HAMMING distance — one
+    """Binary sign-bit ANN — the FAISS ``IndexBinaryFlat`` serving shape:
+    every vector binarized to its per-dimension sign bits (two 32-bit
+    words), candidates ranked by HAMMING distance — one
     ``bit_count(xor)`` per word, the cheapest possible scan (16 bytes +
     two popcounts per candidate; SQ8 reads 64 bytes, PQ decodes ADC
     tables) — and the top-``rerank`` shortlist re-ranked with exact
@@ -1751,63 +1462,25 @@ def ann_topk_hamming(
     no single task sorts all N candidates), exact re-rank over
     ≤ |Q|·rerank rows. Determinism: signatures are exact integer sums;
     Hamming is an integer; ties break on neighbor_id."""
-    n_parts = corpus.sparkSession.sparkContext.defaultParallelism
     c = tracked_persist(
-        corpus.repartition(n_parts)
-        .selectExpr(f"{id_col} AS nid", f"{_quant_sql(vec_col)} AS qv")
-        .selectExpr(
+        _corpus(corpus, id_col, vec_col).selectExpr(
             "*",
-            f"{_sign_signature_sql('qv', 0)} AS lo",
-            f"{_sign_signature_sql('qv', 32)} AS hi",
+            f"{_sign_signature_sql('cv', 0)} AS lo",
+            f"{_sign_signature_sql('cv', 32)} AS hi",
         )
     )
-    q = (
-        queries.selectExpr(f"{id_col} AS query_id", f"{_quant_sql(vec_col)} AS qv")
-        .selectExpr(
-            "*",
-            f"{_sign_signature_sql('qv', 0)} AS qlo",
-            f"{_sign_signature_sql('qv', 32)} AS qhi",
-        )
+    q = _queries(queries, id_col, vec_col)
+    sig = q.selectExpr(
+        "query_id",
+        f"{_sign_signature_sql('qv', 0)} AS qlo",
+        f"{_sign_signature_sql('qv', 32)} AS qhi",
     )
-    pairs = c.crossJoin(
-        F.broadcast(q.select("query_id", "qlo", "qhi"))
-    ).where("nid != query_id")
-    scored = pairs.selectExpr(
+    scored = c.crossJoin(F.broadcast(sig)).where(_NOT_SELF).selectExpr(
         "query_id",
         "nid AS neighbor_id",
         "CAST(bit_count(lo ^ qlo) + bit_count(hi ^ qhi) AS BIGINT) AS hamming",
     )
-    if rerank is None:
-        return _topk_per_query(scored, "hamming", k, descending=False)
-    shortlist = _topk_per_query(
-        scored, "hamming", rerank, rank_col=None, descending=False
-    )
-    qv_full = c.selectExpr(
-        "nid AS neighbor_id", "qv AS _nv", f"{_norm_sql('qv')} AS _nn"
-    )
-    exact = (
-        shortlist.join(F.broadcast(q.select("query_id", "qv")), "query_id")
-        .join(qv_full, "neighbor_id")
-        .selectExpr(
-            "query_id",
-            "neighbor_id",
-            f"{_cfn_sql('qv', '_nv', _norm_sql('qv'), '_nn')} AS cosine",
-        )
-    )
-    # final rank over ≤ |Q|·rerank rows — bounded, a window is fine here
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cosine",
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return _tail(scored, "hamming", k, rerank, c, q, descending=False)
 
 
 def ann_filtered_prepost(
@@ -1818,13 +1491,10 @@ def ann_filtered_prepost(
     overfetch: int = 20,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dims: int | None = DEFAULT_DIMS,  # inert (r11 ADVICE #2): kept for the
-    # family-wide signature; all array math routes through the HOF/SQL
-    # fragments regardless of value (see the module-level DEFAULT_DIMS note)
 ) -> tuple[DataFrame, DataFrame]:
-    """The FILTERED-ANN strategy pair every vector store exposes
-    (round 11): returns (pre, post) top-k results under a metadata
-    ``predicate`` on the corpus.
+    """The FILTERED-ANN strategy pair every vector store exposes: returns
+    (pre, post) top-k results under a metadata ``predicate`` on the
+    corpus.
 
     - PRE-filter: restrict the corpus BEFORE the search — exact within
       the filtered set (the ground truth), but the index must support
@@ -1838,49 +1508,21 @@ def ann_filtered_prepost(
 
     ``predicate`` is a FACTORY ``column_name -> Column`` (e.g.
     ``lambda c: F.col(c) % 2 == 0``) so one definition filters both the
-    corpus (on ``id_col``) and the post-filter results (on
-    ``neighbor_id``). Both sides reuse the exact brute-force scan
-    (salted top-k); the post-filter re-rank is a bounded window over
-    ≤ |Q|·overfetch rows.
+    corpus (on its id column) and the post-filter results (on
+    ``neighbor_id``). The factory may reference ONLY the id column: the
+    quantized corpus and the bare results carry nothing else, so a
+    predicate closing over other corpus columns fails analysis.
 
-    The two scans share ONE persisted quantized corpus (round 11,
-    optimization session 2): two independent ``ann_topk_bruteforce``
-    calls each re-scanned and re-quantized the raw corpus; the predicate
-    reads only the id column, so filtering the quantized frame is the
-    same row set and the pre side is served from the full side's cache —
-    the corpus is read and quantized once per row at any scale. Same
-    expression trees and salted top-k ⇒ values bit-identical (oracle
-    MATCH re-checked at sf0.01 and sf0.001)."""
-    n_parts = corpus.sparkSession.sparkContext.defaultParallelism
-    c = tracked_persist(
-        corpus.repartition(n_parts)
-        .selectExpr(f"{id_col} AS neighbor_id", f"{_quant_sql(vec_col)} AS cv")
-        .selectExpr("*", f"{_norm_sql('cv')} AS cn")
-    )
-    q = queries.selectExpr(
-        f"{id_col} AS query_id", f"{_quant_sql(vec_col)} AS qv"
-    ).selectExpr("*", f"{_norm_sql('qv')} AS qn")
-
-    def _bf_topk(cdf: DataFrame, kk: int) -> DataFrame:
-        scored = cdf.crossJoin(F.broadcast(q)).where(
-            "neighbor_id != query_id"
-        ).selectExpr(
-            "query_id",
-            "neighbor_id",
-            f"{_cfn_sql('qv', 'cv', 'qn', 'cn')} AS cosine",
-        )
-        return _topk_per_query(scored, "cosine", kk)
-
-    # contract (r11 ADVICE #3): the factory may reference ONLY the id
-    # column — the quantized frame carries nothing else, so a predicate
-    # closing over other corpus columns fails analysis here by design
-    # (the post side below applies the same factory to bare results and
-    # has the identical restriction)
-    pre = _bf_topk(c.where(predicate("neighbor_id")), k)
-    full = _bf_topk(c, overfetch)
+    Both sides run the exact scan over ONE persisted quantized corpus,
+    so the corpus is read and quantized once; the post-filter re-rank is
+    a bounded window over ≤ |Q|·overfetch rows."""
+    c = tracked_persist(_with_norm(_corpus(corpus, id_col, vec_col)))
+    q = _queries(queries, id_col, vec_col)
+    pre = _exact_scan(c.where(predicate("nid")), q, k)
     w = Window.partitionBy("query_id").orderBy("rank")
     post = (
-        full.where(predicate("neighbor_id"))
+        _exact_scan(c, q, overfetch)
+        .where(predicate("neighbor_id"))
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") <= k)
         .select(
@@ -1900,7 +1542,6 @@ def mmr_diversified_topk(
     shortlist: int = 40,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dims: int | None = DEFAULT_DIMS,
 ) -> DataFrame:
     """Maximal-Marginal-Relevance diversified top-k (Carbonell & Goldstein
     1998; the "diversity" re-rank every retrieval/RAG serving stack hangs
@@ -1916,47 +1557,32 @@ def mmr_diversified_topk(
     yet); the 0.5/0.5 blend applies from step 2 on.
 
     Scale: the N-dependence lives entirely in the shortlist stage (the
-    salted-top-k brute-force scan here; swap in any ANN path — the MMR
-    stage only sees |Q|·shortlist rows). The greedy selection itself is a
-    grouped ``applyInPandas`` kernel over one query's ≤ ``shortlist``
-    candidates — the sanctioned escape hatch for a BOUNDED sequential
-    algorithm: k data-dependent argmax-then-update steps have no
-    shuffle-free declarative form, and the unrolled-DataFrame variant was
-    built and MEASURED first (k steps of anti-join + agg + argmax — 12-16s
-    of pure plan/AQE-stage overhead at every SF vs ~2s for the kernel,
-    SCALE.md round 11). One exchange (groupBy query_id), Arrow-batched,
-    per-group work O(shortlist²·dims) on ≤ 40 rows.
+    exact scan here; swap in any ANN path — the MMR stage only sees
+    |Q|·shortlist rows). The greedy selection itself is a grouped
+    ``applyInPandas`` kernel over one query's ≤ ``shortlist`` candidates
+    — the sanctioned escape hatch for a BOUNDED sequential algorithm: k
+    data-dependent argmax-then-update steps have no shuffle-free
+    declarative form, and an unrolled-DataFrame variant (k steps of
+    anti-join + agg + argmax) costs 12-16s of plan/AQE-stage overhead at
+    every SF vs ~2s for the kernel (SCALE.md). One exchange (groupBy
+    query_id), Arrow-batched, per-group work O(shortlist²·dims) on ≤ 40
+    rows.
 
     Determinism: the kernel does exact-integer dot products in Python
     (arbitrary precision), math.sqrt/multiply/divide on IEEE doubles in
-    the same operation order as the module's _COS recipe, and
+    the same operation order as ``_cfn_sql``, and
     0.5·a − 0.5·b — bit-replayable by the DuckDB oracle (which unrolls
     the same ``k`` greedy steps as CTEs)."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    n_parts = corpus.sparkSession.sparkContext.defaultParallelism
-    c = tracked_persist(
-        corpus.repartition(n_parts).selectExpr(
-            f"{id_col} AS nid", f"{_quant_sql(vec_col)} AS qv"
-        ).selectExpr("*", f"{_norm_sql('qv')} AS n")
-    )
-    q = queries.selectExpr(
-        f"{id_col} AS query_id", f"{_quant_sql(vec_col)} AS q_qv"
-    ).selectExpr("*", f"{_norm_sql('q_qv')} AS q_n")
-    pairs = c.crossJoin(F.broadcast(q)).where("nid != query_id")
-    scored = pairs.selectExpr(
-        "query_id",
-        "nid AS neighbor_id",
-        f"{_cfn_sql('q_qv', 'qv', 'q_n', 'n')} AS relevance",
-    )
-    # exact top-`shortlist` relevance candidates per query (salted top-k
-    # keeps the order column, so the |Q|·N scored frame is scanned once),
-    # re-joined with their vectors for the pairwise diversity penalty —
-    # |Q|·shortlist rows from here on, independent of N
+    c = tracked_persist(_with_norm(_corpus(corpus, id_col, vec_col)))
+    # the exact top-`shortlist` candidates per query, re-joined with their
+    # vectors for the pairwise diversity penalty — |Q|·shortlist rows
+    # from here on, independent of N
     cz = (
-        _topk_per_query(scored, "relevance", shortlist, rank_col="_slr")
-        .select("query_id", "neighbor_id", "relevance")
-        .join(c.select(F.col("nid").alias("neighbor_id"), "qv"), "neighbor_id")
+        _exact_scan(c, _queries(queries, id_col, vec_col), shortlist)
+        .selectExpr("query_id", "neighbor_id", "cosine AS relevance")
+        .join(c.selectExpr("nid AS neighbor_id", "cv AS qv"), "neighbor_id")
         .select("query_id", "neighbor_id", "relevance", "qv")
     )
 
@@ -2099,10 +1725,10 @@ def pca_power_iteration(
     # The d(d+1)/2 integer cells are BOUNDED MODEL STATE (O(d²),
     # independent of N — the BPE-merge / scalar-attach collect class):
     # the power iteration itself runs over them in exact Python ints.
-    # The first build ran the loop as 3·(join+agg+scalar+crossjoin)
-    # DataFrame stages over the 4096-row matrix and measured ~10s of
-    # pure stage overhead at EVERY SF (the MMR lesson, SCALE.md r11);
-    # this form is one covariance job + one 2080-row collect.
+    # Running the loop as 3·(join+agg+scalar+crossjoin) DataFrame stages
+    # over the 4096-row matrix costs ~10s of pure stage overhead at EVERY
+    # SF (as for MMR, SCALE.md); this form is one covariance job + one
+    # 2080-row collect.
     cov: dict[tuple[int, int], int] = {}
     for r in cells.collect():
         cov[(r["i"], r["j"])] = r["c"]

@@ -145,16 +145,19 @@ def _sqrt_build_search_split(spark, sf_dir: str) -> dict[str, float]:
     for _ in range(2):
         t0 = time.perf_counter()
         c, cents, cb, codes = _ivfpq_build(
-            emb, 50, None, 1, _PQ_SUBS, _PQ_DIMS, _PQ_MOD, _PQ_ITERS,
-            _PQ_K, "vec_id", "embedding", None,
-            n_lists=n_lists, persist_codes=True, train_sample=train_sample,
+            emb, n_centroids_mod=50, max_lists=None, ivf_train_iters=1,
+            n_subspaces=_PQ_SUBS, sub_dims=_PQ_DIMS, seed_mod=_PQ_MOD,
+            pq_train_iters=_PQ_ITERS, max_codes=_PQ_K, id_col="vec_id",
+            vec_col="embedding", n_lists=n_lists, persist_codes=True,
+            train_sample=train_sample,
         )
         codes.count()  # materialize the persisted index
         best_b = min(best_b, time.perf_counter() - t0)
         t0 = time.perf_counter()
         _ivfpq_search(
-            c, cents, cb, codes, queries, 5, n_probe, _PQ_SUBS, _PQ_DIMS,
-            _PQ_RERANK, "vec_id", "embedding", None,
+            c, cents, cb, codes, queries, k=5, n_probe=n_probe,
+            n_subspaces=_PQ_SUBS, sub_dims=_PQ_DIMS, rerank=_PQ_RERANK,
+            id_col="vec_id", vec_col="embedding",
         ).write.format("noop").mode("overwrite").save()
         best_s = min(best_s, time.perf_counter() - t0)
         release_tracked()

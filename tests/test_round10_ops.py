@@ -58,7 +58,9 @@ def test_seed_cap_boundary_is_live(spark):
         ),
     )
     c, cents, cb, codes = _ivfpq_build(
-        ids, 50, 40, 0, 2, 2, 4, 0, 256, "vec_id", "embedding", None
+        ids, n_centroids_mod=50, max_lists=40, ivf_train_iters=0,
+        n_subspaces=2, sub_dims=2, seed_mod=4, pq_train_iters=0,
+        max_codes=256, id_col="vec_id", vec_col="embedding",
     )
     seed_ids = sorted(r["centroid_id"] for r in cents.select("centroid_id").collect())
     assert seed_ids == list(range(1, 1952, 50))  # 40 seeds, 1951 included

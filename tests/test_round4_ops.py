@@ -83,7 +83,7 @@ def test_k_anonymity_flags_small_classes(spark):
 def test_semantic_dedup_survivor_structure(spark):
     from bicis_spark.extensions.dedup import semantic_dedup
 
-    # two tight pairs + two isolates in 4-dim space (dims=None -> generic)
+    # two tight pairs + two isolates in 4-dim space
     rows = [
         (1, [1.0, 0.0, 0.0, 0.0]),
         (2, [0.999, 0.001, 0.0, 0.0]),   # near-dup of 1
@@ -95,7 +95,7 @@ def test_semantic_dedup_survivor_structure(spark):
     out = {
         r["vec_id"]: r
         for r in semantic_dedup(
-            df, threshold=0.99, n_centroids_mod=2, train_iters=1, dims=None
+            df, threshold=0.99, n_centroids_mod=2, train_iters=1
         ).collect()
     }
     # every vector appears exactly once
@@ -131,14 +131,14 @@ def test_ivf_and_semdedup_seed_caps_bound_list_count(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
     capped = semantic_dedup(
-        df, n_centroids_mod=10, train_iters=1, dims=None, max_clusters=3
+        df, n_centroids_mod=10, train_iters=1, max_clusters=3
     )
     labels = {r["cluster_id"] for r in capped.select("cluster_id").distinct().collect()}
     assert len(labels) <= 3
     # the seeds are the FIRST qualifying ids (11, 21 < 10*3), not arbitrary
     assert labels <= {1, 11, 21}
     uncapped_labels = (
-        semantic_dedup(df, n_centroids_mod=10, train_iters=1, dims=None)
+        semantic_dedup(df, n_centroids_mod=10, train_iters=1)
         .select("cluster_id")
         .distinct()
         .count()
@@ -149,7 +149,7 @@ def test_ivf_and_semdedup_seed_caps_bound_list_count(spark):
     below = df.where(F.col("vec_id") < 30)  # all ids under the cap boundary
     q_below = below.where(F.col("vec_id") % 7 == 0)
     a = ann_topk_ivf(
-        below, q_below, k=3, n_centroids_mod=10, n_probe=2, train_iters=1, dims=None
+        below, q_below, k=3, n_centroids_mod=10, n_probe=2, train_iters=1
     ).collect()
     b = ann_topk_ivf(
         below,
@@ -158,14 +158,13 @@ def test_ivf_and_semdedup_seed_caps_bound_list_count(spark):
         n_centroids_mod=10,
         n_probe=2,
         train_iters=1,
-        dims=None,
         max_lists=3,
     ).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
     # and capped IVF still returns k results per query on the full corpus
     full = ann_topk_ivf(
         df, queries, k=3, n_centroids_mod=10, n_probe=2, train_iters=1,
-        dims=None, max_lists=3,
+        max_lists=3,
     )
     per_q = {r["query_id"]: r["n"] for r in
              full.groupBy("query_id").agg(F.count("*").alias("n")).collect()}
@@ -185,7 +184,7 @@ def test_pq_rerank_recovers_exact_topk(spark):
     queries = df.where(F.col("vec_id") % 20 == 0)
     exact = {
         (r["query_id"], r["rank"]): r["neighbor_id"]
-        for r in ann_topk_bruteforce(df, queries, k=3, dims=None).collect()
+        for r in ann_topk_bruteforce(df, queries, k=3).collect()
     }
     pq = {
         (r["query_id"], r["rank"]): r["neighbor_id"]
