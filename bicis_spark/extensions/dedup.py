@@ -22,11 +22,23 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from bicis_spark.caching import iterate, tracked_persist
-from bicis_spark.extensions.similarity import quantize
+from bicis_spark.extensions.similarity import (
+    _cfn_sql,
+    _corpus,
+    _ivf_train,
+    _kmeans,
+    _seed_filter,
+    _with_norm,
+    ivf_assign,
+    kmeans_refine_exact,
+    lsh_bucket,
+)
 
 
 def _partitioned(df: DataFrame, parallelism: int | None) -> DataFrame:
@@ -643,6 +655,92 @@ def connected_components_min_label(
 # ---------------------------------------------------------------------------
 # Embedding-cosine near-dup
 # ---------------------------------------------------------------------------
+#
+# Every embedding path is built from ``similarity``'s search stages: the
+# corpus ``[nid, cv]`` (``_corpus``) with its norm ``cn`` (``_with_norm``),
+# the seed rule (``_seed_filter``) and the exact k-means trainer. The pair
+# stages below add the self-join side: candidates are pairs
+# ``vec_a < vec_b``, verified by exact cosine.
+
+#: Exact cosine of a self-join pair whose sides carry ``cv``/``cn``.
+_PAIR_COSINE = f"{_cfn_sql('cv_a', 'cv_b', 'cn_a', 'cn_b')} AS cosine"
+
+
+def _side(v: DataFrame, s: str) -> DataFrame:
+    """One side of a self-join: every column ``c`` of ``v`` as ``c_{s}``,
+    with ``nid`` as ``vec_{s}``."""
+    return v.selectExpr(
+        *(f"{c} AS {'vec' if c == 'nid' else c}_{s}" for c in v.columns)
+    )
+
+
+def _block_pairs(
+    v: DataFrame,
+    block: tuple[str, ...],
+    out: tuple[str, ...] = ("vec_a", "vec_b", _PAIR_COSINE),
+) -> DataFrame:
+    """In-block self-join of ``v`` ``[nid, *block, ...]``: every pair
+    ``vec_a < vec_b`` that agrees on all ``block`` columns, projected to
+    ``out`` over each side's columns suffixed ``_a``/``_b`` (``_side``) —
+    by default ``[vec_a, vec_b, cosine]``. ``block=()`` is the full
+    quadratic pair set."""
+    conds = [F.col(f"{k}_a") == F.col(f"{k}_b") for k in block]
+    conds.append(F.col("vec_a") < F.col("vec_b"))
+    pairs = _side(v, "a").join(_side(v, "b"), reduce(lambda x, y: x & y, conds))
+    return pairs.selectExpr(*out)
+
+
+def _verify(cand: DataFrame, v: DataFrame) -> DataFrame:
+    """Exact cosine of candidate pairs ``[..., vec_a, vec_b]`` against the
+    normed corpus ``v`` ``[nid, cv, cn]`` → ``[*cand, cosine]``."""
+    return (
+        cand.join(_side(v, "a"), "vec_a")
+        .join(_side(v, "b"), "vec_b")
+        .selectExpr(*cand.columns, _PAIR_COSINE)
+    )
+
+
+def _dup_flags(v: DataFrame, block: tuple[str, ...], threshold: float) -> DataFrame:
+    """``v`` ``[nid, cv, cn, *block, ...]`` plus ``dup_of``: the smallest
+    lower-id vector of the same block at cosine ≥ ``threshold``, NULL when
+    there is none."""
+    dups = (
+        _block_pairs(v, block)
+        .where(F.col("cosine") >= threshold)
+        .groupBy(F.col("vec_b").alias("nid"))
+        .agg(F.min("vec_a").alias("dup_of"))
+    )
+    return v.join(dups, "nid", "left")
+
+
+def _normed(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """The persisted normed corpus ``[nid, cv, cn]``, hash-partitioned on
+    ``nid`` for the candidate joins that read it twice."""
+    return _reusable(_with_norm(_corpus(df, id_col, vec_col)), None, "nid")
+
+
+def _band_candidates(
+    v: DataFrame, n_bands: int, band_planes: int, dims: int
+) -> DataFrame:
+    """Banded sign-LSH candidates ``[band, vec_a, vec_b]``: band ``t`` keys
+    each vector by ``band_planes`` sign bits from its own plane range, and
+    a pair is a candidate of every band whose key it shares. Within one
+    band each vector holds exactly one key, so a band's pairs are
+    distinct."""
+    band_arr = F.array(
+        *[
+            F.struct(
+                F.lit(t).alias("band"),
+                lsh_bucket("cv", band_planes, dims, plane_offset=t * band_planes)
+                .alias("bits"),
+            )
+            for t in range(n_bands)
+        ]
+    )
+    blocks = v.select("nid", F.explode(band_arr).alias("b")).select(
+        "nid", F.col("b.band").alias("band"), F.col("b.bits").alias("bits")
+    )
+    return _block_pairs(blocks, ("band", "bits"), ("band_a AS band", "vec_a", "vec_b"))
 
 
 def embedding_neardup_pairs(
@@ -665,26 +763,10 @@ def embedding_neardup_pairs(
     larger SFs. ``None`` keeps the full quadratic form (unit tests,
     recall contracts — never declare it over an unbounded corpus).
     """
-    from bicis_spark.extensions.similarity import cosine_from_norms, norm_col
-
-    q = _partitioned(df, None).select(
-        F.col(id_col).alias("vid"), quantize(F.col(vec_col)).alias("qv")
-    ).withColumn("n", norm_col(F.col("qv")))
-    a, b = q.alias("a"), q.alias("b")
+    pairs = _block_pairs(_with_norm(_corpus(df, id_col, vec_col)), ())
     if probe_mod is not None:
-        a = a.where(F.col("vid") % probe_mod == 0)
-    pairs = a.join(b, F.col("a.vid") < F.col("b.vid"))
-    sim = cosine_from_norms(
-        F.col("a.qv"), F.col("b.qv"), F.col("a.n"), F.col("b.n")
-    )
-    return (
-        pairs.select(
-            F.col("a.vid").alias("vec_a"),
-            F.col("b.vid").alias("vec_b"),
-            sim.alias("cosine"),
-        )
-        .where(F.col("cosine") >= threshold)
-    )
+        pairs = pairs.where(F.col("vec_a") % probe_mod == 0)
+    return pairs.where(F.col("cosine") >= threshold)
 
 
 LSH_PRUNING_MIN_THRESHOLD = 0.7
@@ -694,8 +776,8 @@ Sign-bit LSH quality exponent ρ = ln(1/p₁)/ln(1/p₂) with p(c) = 1 − acos(
 and near-orthogonal background p₂ = 1/2: at cosine 0.7, p₁ = 0.747 ⇒
 ρ = 0.42 ⇒ O(n^1.42) candidate work — the highest threshold band where
 banding still genuinely prunes with small table counts. Below it the
-exponent climbs toward the measured n^1.81 at τ = 0.45 (ρ = 0.625,
-SCALE.md round 8) and k-means blocking is strictly better."""
+exponent climbs toward n^1.81 measured at τ = 0.45 (ρ = 0.625, SCALE.md)
+and k-means blocking is strictly better."""
 
 
 def embedding_neardup_pairs_lsh(
@@ -712,43 +794,33 @@ def embedding_neardup_pairs_lsh(
     kmeans_max_clusters: int | None = 40,
 ) -> DataFrame:
     """Embedding near-dup pairs [vec_a, vec_b, cosine ≥ threshold] with a
-    RUNTIME REGIME GATE (round 9, closing the r8 perf-weak row) choosing
-    the blocking structure by operating point:
+    runtime regime gate choosing the blocking structure by operating
+    point:
 
     * ``"banded"`` — sign-bit LSH bands + exact verify (the MinHash-bands
-      construction on hyperplane signatures): ``n_bands`` independent
-      tables, each keyed by ``band_planes`` sign bits from a disjoint
-      plane range; a pair is a candidate iff it collides in ANY band.
-      Recall per band = p^r, across bands 1 − (1 − p^r)^T (measured on
-      sf0.01: single 4-plane table found 2 of 14 true pairs ≥ 0.45; 4
-      bands × 2 planes finds all 14). Candidate volume on a
-      near-orthogonal background is ~T·n²/2^(r+1) — genuinely
-      sub-quadratic only at HIGH thresholds where r can grow with
-      log₂ n at bounded T (cosine 0.9 → ρ = 0.22 → O(n^1.22)); at 0.45
-      the LSH-optimal bound is already Ω(n^1.62) (ρ = 0.625) and this
-      construction measured n^1.81 (SCALE.md round 8).
+      construction on hyperplane signatures, ``_band_candidates``):
+      ``n_bands`` independent tables, each keyed by ``band_planes`` sign
+      bits from a disjoint plane range; a pair is a candidate iff it
+      collides in ANY band. Recall per band = p^r, across bands
+      1 − (1 − p^r)^T. Candidate volume on a near-orthogonal background
+      is ~T·n²/2^(r+1) — sub-quadratic only at HIGH thresholds where r
+      can grow with log₂ n at bounded T (cosine 0.9 → ρ = 0.22 →
+      O(n^1.22)); at 0.45 the LSH-optimal bound is already Ω(n^1.62)
+      (ρ = 0.625).
     * ``"kmeans"`` — SemDeDup-style blocking (Abbas et al. 2023): the
       deterministic capped k-means of ``semantic_dedup`` buckets the
       corpus, candidates are within-cluster pairs only, then the same
-      exact-cosine verify. k independent O((n/k)²) blocks — measured
-      near-linear (2.4× time for 10× rows, SCALE.md round 8) and the
-      correct low-threshold plan at 100 TB.
+      exact-cosine verify. k independent O((n/k)²) blocks — the
+      low-threshold plan.
     * ``"auto"`` (default) — ``threshold ≥ LSH_PRUNING_MIN_THRESHOLD``
       (0.7) routes to banded (the regime where banding prunes), below it
-      to kmeans: the same measurement-bounded runtime-gate pattern as
-      ``_orient_by_degree(broadcast_degrees="auto")``.
+      to kmeans.
 
     Both regimes share output semantics — blocked candidate generation
     (each with its own false-negative set, stated per regime above) and
     EXACT integer-quantized cosine verification — so the gate is a plan
     choice, not a semantics change.
     """
-    from bicis_spark.extensions.similarity import (
-        cosine_from_norms,
-        lsh_bucket,
-        norm_col,
-    )
-
     if regime not in ("auto", "banded", "kmeans"):
         # reject typos loudly: a misspelled regime must not silently pick
         # a scale-inappropriate plan (same contract as broadcast_degrees)
@@ -761,96 +833,33 @@ def embedding_neardup_pairs_lsh(
         )
     if regime == "kmeans":
         assigned = _kmeans_assigned(
-            df, id_col, vec_col, kmeans_mod, kmeans_iters,
-            kmeans_max_clusters,
+            df, id_col, vec_col, kmeans_mod, kmeans_iters, kmeans_max_clusters
         )
-        ka = assigned.select(
-            F.col("vid").alias("vec_a"),
-            F.col("centroid_id").alias("_ca"),
-            F.col("qv").alias("qv_a"),
-            F.col("n").alias("n_a"),
-        )
-        kb = assigned.select(
-            F.col("vid").alias("vec_b"),
-            F.col("centroid_id").alias("_cb"),
-            F.col("qv").alias("qv_b"),
-            F.col("n").alias("n_b"),
-        )
-        ksim = cosine_from_norms(
-            F.col("qv_a"), F.col("qv_b"), F.col("n_a"), F.col("n_b")
-        )
-        return (
-            ka.join(
-                kb,
-                (F.col("_ca") == F.col("_cb"))
-                & (F.col("vec_a") < F.col("vec_b")),
-            )
-            .select("vec_a", "vec_b", ksim.alias("cosine"))
-            .where(F.col("cosine") >= threshold)
-        )
+        pairs = _block_pairs(assigned, ("centroid_id",))
+        return pairs.where(F.col("cosine") >= threshold)
 
-    q = _reusable(
-        _partitioned(df, None)
-        .select(F.col(id_col).alias("vid"), quantize(F.col(vec_col)).alias("qv"))
-        .withColumn("n", norm_col(F.col("qv"))),
-        None,
-        "vid",
-    )
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("band"),
-                lsh_bucket("qv", band_planes, dims, plane_offset=t * band_planes)
-                .alias("bits"),
-            )
-            for t in range(n_bands)
-        ]
-    )
-    blocks = q.select("vid", F.explode(band_arr).alias("b")).select(
-        "vid", F.col("b.band").alias("band"), F.col("b.bits").alias("bits")
-    )
-    a, b = blocks.alias("a"), blocks.alias("b")
+    v = _normed(df, id_col, vec_col)
     cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bits") == F.col("b.bits"))
-            & (F.col("a.vid") < F.col("b.vid")),
-        )
-        .select(F.col("a.vid").alias("vec_a"), F.col("b.vid").alias("vec_b"))
+        _band_candidates(v, n_bands, band_planes, dims)
+        .select("vec_a", "vec_b")
         .distinct()
     )
-    qa = q.select(
-        F.col("vid").alias("vec_a"), F.col("qv").alias("qv_a"), F.col("n").alias("n_a")
-    )
-    qb = q.select(
-        F.col("vid").alias("vec_b"), F.col("qv").alias("qv_b"), F.col("n").alias("n_b")
-    )
-    sim = cosine_from_norms(
-        F.col("qv_a"), F.col("qv_b"), F.col("n_a"), F.col("n_b")
-    )
-    return (
-        cand.join(qa, "vec_a")
-        .join(qb, "vec_b")
-        .select("vec_a", "vec_b", sim.alias("cosine"))
-        .where(F.col("cosine") >= threshold)
-    )
+    return _verify(cand, v).where(F.col("cosine") >= threshold)
 
 
 #: Clamp range for the auto r discipline: r = min(16, max(8, ⌊log₂ n⌋)).
-#: 8 is the fixed legacy operating point (equal at n < 512… i.e. ≤ sf0.01,
-#: the regression guarantee); 16 caps the per-band key space at 65536
-#: buckets — past that, T (band count) is the right knob, not r.
+#: 8 is the fixed operating point (equal at n < 512, i.e. ≤ sf0.01, so
+#: the fixed-r profile is unchanged there); 16 caps the per-band key space
+#: at 65536 buckets — past that, T (band count) is the right knob, not r.
 LSH_BAND_PLANES_MIN = 8
 LSH_BAND_PLANES_MAX = 16
 
 
 def lsh_band_planes_auto(n: int) -> int:
     """The r ≈ log₂ n planes-per-band discipline as a deterministic
-    function of the corpus count (round 10, r9 verdict #6): with
-    r = ⌊log₂ n⌋ sign bits per band, background collisions per band drop
-    to ~n²/2^(r+1) ≈ n/2 — candidate volume linear in n instead of the
-    fixed-r n²/512 tail the r9 probe measured as n^1.43.
+    function of the corpus count: with r = ⌊log₂ n⌋ sign bits per band,
+    background collisions per band drop to ~n²/2^(r+1) ≈ n/2 — candidate
+    volume linear in n instead of the fixed-r n²/512 tail.
     ``n.bit_length() - 1`` IS ⌊log₂ n⌋ exactly (no float log); the DuckDB
     oracle computes the identical clamp via floor(log2(count(*)))."""
     if n < 1:
@@ -885,19 +894,13 @@ def embedding_lsh_band_profile(
     with T sized to the recall target 1 − (1 − p^r)^T — both spelled out
     in LSH_PRUNING_MIN_THRESHOLD's note. The output is O(T) rows; the
     candidate join shape is the banded operator's (tiny (band, bits)
-    keys, id joins, no broadcast, no cartesian).
+    keys, id joins, no broadcast, no cartesian). Band-wise pairs are
+    already distinct, so no cross-band DISTINCT runs and the counts stay
+    attributable per table.
 
-    ``band_planes="auto"`` (round 10) implements the r ≈ log₂ n
-    discipline: one bounded count() action sizes r via
-    ``lsh_band_planes_auto`` — equal to the fixed r = 8 at n < 512, so
-    the legacy profile row is unchanged while the auto row's candidate
-    tail tracks the n^1.22 theory line instead of fixed-r n^1.43."""
-    from bicis_spark.extensions.similarity import (
-        cosine_from_norms,
-        lsh_bucket,
-        norm_col,
-    )
-
+    ``band_planes="auto"`` sizes r by ``lsh_band_planes_auto`` from one
+    count() action: equal to the fixed r = 8 at n < 512, and ⌊log₂ n⌋
+    (clamped to 16) above."""
     if band_planes == "auto":
         band_planes = lsh_band_planes_auto(df.count())
     elif not isinstance(band_planes, int):
@@ -905,56 +908,13 @@ def embedding_lsh_band_profile(
             f"band_planes must be an int or 'auto'; got {band_planes!r}"
         )
 
-    q = _reusable(
-        _partitioned(df, None)
-        .select(F.col(id_col).alias("vid"), quantize(F.col(vec_col)).alias("qv"))
-        .withColumn("n", norm_col(F.col("qv"))),
-        None,
-        "vid",
-    )
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("band"),
-                lsh_bucket("qv", band_planes, dims, plane_offset=t * band_planes)
-                .alias("bits"),
-            )
-            for t in range(n_bands)
-        ]
-    )
-    blocks = q.select("vid", F.explode(band_arr).alias("b")).select(
-        "vid", F.col("b.band").alias("band"), F.col("b.bits").alias("bits")
-    )
-    a, b = blocks.alias("a"), blocks.alias("b")
-    # within one band each vector holds exactly one key, so band-wise
-    # pairs are already distinct — no cross-band DISTINCT, counts stay
-    # attributable per table
-    cand = a.join(
-        b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.bits") == F.col("b.bits"))
-        & (F.col("a.vid") < F.col("b.vid")),
-    ).select(
-        F.col("a.band").alias("band"),
-        F.col("a.vid").alias("vec_a"),
-        F.col("b.vid").alias("vec_b"),
-    )
-    qa = q.select(
-        F.col("vid").alias("vec_a"), F.col("qv").alias("qv_a"), F.col("n").alias("n_a")
-    )
-    qb = q.select(
-        F.col("vid").alias("vec_b"), F.col("qv").alias("qv_b"), F.col("n").alias("n_b")
-    )
-    sim = cosine_from_norms(
-        F.col("qv_a"), F.col("qv_b"), F.col("n_a"), F.col("n_b")
-    )
+    v = _normed(df, id_col, vec_col)
     return (
-        cand.join(qa, "vec_a")
-        .join(qb, "vec_b")
+        _verify(_band_candidates(v, n_bands, band_planes, dims), v)
         .groupBy("band")
         .agg(
             F.count(F.lit(1)).alias("n_candidates"),
-            F.sum((sim >= threshold).cast("long")).alias("n_dups"),
+            F.sum((F.col("cosine") >= threshold).cast("long")).alias("n_dups"),
         )
     )
 
@@ -972,48 +932,16 @@ def _kmeans_assigned(
     train_iters: int,
     max_clusters: int | None,
 ) -> DataFrame:
-    """Deterministic k-means clustering of a quantized embedding corpus:
-    mod-rule seeds (capped at ``max_clusters``), ``train_iters`` exact
-    integer-mean refinements, max-cosine assignment. Returns the persisted
-    assignment [vid, centroid_id, qv, n] — the shared blocking structure
-    behind ``semantic_dedup`` and the low-threshold regime of
-    ``embedding_neardup_pairs_lsh``.
-
-    Scale: training + assignment are the IVF shapes (broadcast centroids,
-    map-side-combined updates); the output is corpus-sized, hash-persisted
-    on vid for the self-joins that follow."""
-    from bicis_spark.extensions.similarity import (
-        ivf_assign,
-        kmeans_refine_exact,
-        norm_col,
-    )
-
-    c = tracked_persist(
-        _partitioned(df, None).select(
-            F.col(id_col).alias("vid"), quantize(F.col(vec_col)).alias("qv")
-        )
-    )
-    seed_filter = F.col("vid") % n_centroids_mod == 1
-    if max_clusters is not None:
-        # live-boundary cap: mod*(L-1)+1 is the L-th seed itself, so a
-        # <= / < mutant changes the seed set — same set as < mod*L (r10)
-        seed_filter = seed_filter & (
-            F.col("vid") <= n_centroids_mod * (max_clusters - 1) + 1
-        )
-    # seeds from the PERSISTED projection, not a second raw-corpus scan
-    # (same rows — c preserves the id — served from cache); matches
-    # ann_topk_ivf: c feeds every training iteration plus the assignment
-    seeds = c.where(seed_filter).select(F.col("vid").alias("centroid_id"), "qv")
-    cents = tracked_persist(
-        kmeans_refine_exact(c, seeds, train_iters, "vid", "qv")
-    )
-    return _reusable(
-        ivf_assign(c, cents, "vid", "qv").withColumn(
-            "n", norm_col(F.col("qv"))
-        ),
-        None,
-        "vid",
-    )
+    """Deterministic k-means clustering of a quantized embedding corpus
+    (``similarity._ivf_train``: capped mod-rule seeds, ``train_iters``
+    exact integer-mean refinements, max-cosine assignment). Returns the
+    persisted assignment [nid, cv, centroid_id, cn] — the shared blocking
+    structure behind ``semantic_dedup`` and the low-threshold regime of
+    ``embedding_neardup_pairs_lsh``, hash-persisted on nid for the
+    self-joins that follow."""
+    c = tracked_persist(_corpus(df, id_col, vec_col))
+    _, assigned = _ivf_train(c, _seed_filter(n_centroids_mod, max_clusters), train_iters)
+    return _reusable(_with_norm(assigned), None, "nid")
 
 
 def semantic_dedup(
@@ -1053,39 +981,14 @@ def semantic_dedup(
     mod-only rule, k = N/mod keeps blocks flat but the centroid broadcast
     grows with N and training cost N·k grows quadratically. A capped k
     trades bigger blocks (n/L per cluster) for bounded training — at
-    100 TB the production shape is a two-level router (√k super-clusters
-    trained on a sample, then per-super-cluster sub-k-means), which this
-    operator composes with by passing each super-cluster's members back
-    through ``semantic_dedup``.
+    100 TB the production shape is the two-level router
+    (``semantic_dedup_two_level``).
     """
-    from bicis_spark.extensions.similarity import cosine_from_norms
-
     assigned = _kmeans_assigned(
         df, id_col, vec_col, n_centroids_mod, train_iters, max_clusters
     )
-    a = assigned.select(
-        F.col("vid").alias("va"),
-        F.col("centroid_id").alias("ca"),
-        F.col("qv").alias("qv_a"),
-        F.col("n").alias("n_a"),
-    )
-    b = assigned.select(
-        F.col("vid").alias("vb"),
-        F.col("centroid_id").alias("cb"),
-        F.col("qv").alias("qv_b"),
-        F.col("n").alias("n_b"),
-    )
-    sim = cosine_from_norms(
-        F.col("qv_a"), F.col("qv_b"), F.col("n_a"), F.col("n_b")
-    )
-    dups = (
-        a.join(b, (F.col("ca") == F.col("cb")) & (F.col("va") < F.col("vb")))
-        .where(sim >= threshold)
-        .groupBy(F.col("vb").alias("vid"))
-        .agg(F.min("va").alias("dup_of"))
-    )
-    return assigned.join(dups, "vid", "left").select(
-        F.col("vid").alias(id_col),
+    return _dup_flags(assigned, ("centroid_id",), threshold).select(
+        F.col("nid").alias(id_col),
         F.col("centroid_id").alias("cluster_id"),
         F.col("dup_of").isNotNull().alias("is_semantic_dup"),
         "dup_of",
@@ -1124,32 +1027,6 @@ def incremental_dedup(
     )
 
 
-def _grouped_assign(members: DataFrame, cents: DataFrame) -> DataFrame:
-    """Assign each (vid, qv, super_id) member to its max-cosine centroid
-    WITHIN its super cluster (centroid table [super_id, sub_id, cqv],
-    broadcast — it is (super × sub) rows, a constant). Deterministic
-    sub_id tie-break, argmax via max_by hash-aggregate (map-side
-    combinable), mirroring similarity.ivf_assign."""
-    from bicis_spark.extensions.similarity import cosine_from_norms, norm_col
-
-    m = members.withColumn("_mn", norm_col(F.col("qv")))
-    c = cents.select(
-        "super_id", "sub_id", F.col("cqv").alias("_cv")
-    ).withColumn("_cn", norm_col(F.col("_cv")))
-    sim = cosine_from_norms(F.col("qv"), F.col("_cv"), F.col("_mn"), F.col("_cn"))
-    pairs = m.join(F.broadcast(c), "super_id").withColumn("_sim", sim)
-    return (
-        pairs.groupBy("vid")
-        .agg(
-            F.max_by(
-                F.struct("super_id", "sub_id", "qv"),
-                F.struct(F.col("_sim"), -F.col("sub_id")),
-            ).alias("_best")
-        )
-        .select("vid", "_best.super_id", "_best.sub_id", "_best.qv")
-    )
-
-
 def semantic_dedup_two_level(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -1172,98 +1049,31 @@ def semantic_dedup_two_level(
 
     Everything stays in the engine's deterministic k-means algebra
     (mod-seeds, max-cosine assignment with min-id tie-break,
-    floor-of-mean integer updates), so the full two-level pipeline —
-    training included — is replayed bit-for-bit by the SQL oracle.
+    floor-of-mean integer updates): the sub level is the same trainer
+    with ``by=("super_id",)``, so a vector competes only for the
+    centroids of its own super. The full two-level pipeline — training
+    included — is replayed bit-for-bit by the SQL oracle.
 
     Output: [id, super_id, sub_id, is_semantic_dup, dup_of]."""
-    from bicis_spark.extensions.similarity import (
-        cosine_from_norms,
-        ivf_assign,
-        kmeans_refine_exact,
-        norm_col,
-        quantize,
-    )
-
-    c = tracked_persist(
-        _partitioned(df, None).select(
-            F.col(id_col).alias("vid"), quantize(F.col(vec_col)).alias("qv")
-        )
-    )
-    sfilter = F.col("vid") % super_mod == 1
-    if max_super is not None:
-        sfilter = sfilter & (F.col("vid") < super_mod * max_super)
-    sseeds = c.where(sfilter).select(F.col("vid").alias("centroid_id"), "qv")
-    scents = kmeans_refine_exact(c, sseeds, train_iters, "vid", "qv")
+    c = tracked_persist(_corpus(df, id_col, vec_col))
+    scents = _kmeans(c, _seed_filter(super_mod, max_super), train_iters)
     sup = tracked_persist(
-        ivf_assign(c, scents, "vid", "qv").withColumnRenamed(
-            "centroid_id", "super_id"
-        )
+        ivf_assign(c, scents, "nid", "cv").withColumnRenamed("centroid_id", "super_id")
     )
-
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("super_id").orderBy("vid")
-    cents2 = (
-        sup.where(F.col("vid") % sub_mod == 1)
+    w = Window.partitionBy("super_id").orderBy("nid")
+    sub_seeds = (
+        sup.where(_seed_filter(sub_mod, None))
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") <= max_sub_per_super)
-        .select("super_id", F.col("vid").alias("sub_id"), F.col("qv").alias("cqv"))
+        .select("super_id", F.col("nid").alias("centroid_id"), "cv")
     )
-    for _ in range(train_iters):
-        asg = _grouped_assign(sup, cents2)
-        means = (
-            asg.select("super_id", "sub_id", F.posexplode("qv"))
-            .groupBy("super_id", "sub_id", "pos")
-            .agg(
-                F.floor(
-                    F.sum("col").cast("double") / F.count(F.lit(1)).cast("double")
-                )
-                .cast("long")
-                .alias("m")
-            )
-            .groupBy("super_id", "sub_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda x: x["m"],
-                ).alias("_new")
-            )
-        )
-        cents2 = cents2.join(means, ["super_id", "sub_id"], "left").select(
-            "super_id",
-            "sub_id",
-            F.coalesce(F.col("_new"), F.col("cqv")).alias("cqv"),
-        )
-
-    asg = _grouped_assign(sup, cents2).withColumn(
-        "n", norm_col(F.col("qv"))
-    )
-    a = asg.select(
-        F.col("vid").alias("va"), F.col("super_id").alias("sa"),
-        F.col("sub_id").alias("ca"), F.col("qv").alias("qv_a"), F.col("n").alias("n_a"),
-    )
-    b = asg.select(
-        F.col("vid").alias("vb"), F.col("super_id").alias("sb"),
-        F.col("sub_id").alias("cb"), F.col("qv").alias("qv_b"), F.col("n").alias("n_b"),
-    )
-    sim = cosine_from_norms(
-        F.col("qv_a"), F.col("qv_b"), F.col("n_a"), F.col("n_b")
-    )
-    dups = (
-        a.join(
-            b,
-            (F.col("sa") == F.col("sb"))
-            & (F.col("ca") == F.col("cb"))
-            & (F.col("va") < F.col("vb")),
-        )
-        .where(sim >= threshold)
-        .groupBy(F.col("vb").alias("vid"))
-        .agg(F.min("va").alias("dup_of"))
-    )
-    return asg.join(dups, "vid", "left").select(
-        F.col("vid").alias(id_col),
+    by = ("super_id",)
+    cents = kmeans_refine_exact(sup, sub_seeds, train_iters, "nid", "cv", by)
+    asg = _with_norm(ivf_assign(sup, cents, "nid", "cv", by))
+    return _dup_flags(asg, ("super_id", "centroid_id"), threshold).select(
+        F.col("nid").alias(id_col),
         "super_id",
-        "sub_id",
+        F.col("centroid_id").alias("sub_id"),
         F.col("dup_of").isNotNull().alias("is_semantic_dup"),
         "dup_of",
     )
@@ -1310,8 +1120,6 @@ def prefix_filtered_jaccard_pairs(
 
     Output: [id_a, id_b, inter, uni, jaccard] for all pairs with
     J ≥ τ (id_a < id_b), jaccard as one exact int/int division."""
-    from pyspark.sql import Window
-
     base0 = df.where(
         F.col(text_col).isNotNull() & (F.length(text_col) > 0)
     ).select(F.col(id_col).alias("_id"), F.col(text_col).alias("_txt"))

@@ -16,7 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from bicis_spark.extensions.dedup import MINHASH_P, poly_hash, poly_hash2
+from bicis_spark.extensions.dedup import poly_hash, poly_hash2
+from bicis_spark.extensions.similarity import _corpus, _kmeans, _seed_filter, ivf_assign
 
 
 def hash_sample_col(text: Column, buckets: int = 1000) -> Column:
@@ -175,30 +176,15 @@ def cluster_balanced_sample(
     window; the exact-rank form is declared because its balance is
     exact and the window cost is the same class as the engine's other
     top-k-per-group operators."""
-    from pyspark.sql import Window
-
-    from bicis_spark.extensions.dedup import _partitioned
-    from bicis_spark.extensions.similarity import (
-        ivf_assign,
-        kmeans_refine_exact,
-        quantize,
-    )
-
-    c = _partitioned(df, None).select(
-        F.col(id_col).alias("vid"), quantize(F.col(vec_col)).alias("qv")
-    )
-    seed_filter = F.col("vid") % n_centroids_mod == 1
-    if max_clusters is not None:
-        seed_filter = seed_filter & (F.col("vid") < n_centroids_mod * max_clusters)
-    seeds = c.where(seed_filter).select(F.col("vid").alias("centroid_id"), "qv")
-    cents = kmeans_refine_exact(c, seeds, train_iters, "vid", "qv")
-    assigned = ivf_assign(c, cents, "vid", "qv").select("vid", "centroid_id")
+    c = _corpus(df, id_col, vec_col)
+    cents = _kmeans(c, _seed_filter(n_centroids_mod, max_clusters), train_iters)
+    assigned = ivf_assign(c, cents, "nid", "cv").select("nid", "centroid_id")
     w = Window.partitionBy("centroid_id").orderBy(
-        F.md5(F.col("vid").cast("string")), F.col("vid")
+        F.md5(F.col("nid").cast("string")), F.col("nid")
     )
     sized = Window.partitionBy("centroid_id")
     return assigned.select(
-        F.col("vid").alias(id_col),
+        F.col("nid").alias(id_col),
         F.col("centroid_id").alias("cluster_id"),
         F.count(F.lit(1)).over(sized).cast("long").alias("cluster_size"),
         F.row_number().over(w).cast("long").alias("sample_rank"),

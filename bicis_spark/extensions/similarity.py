@@ -284,26 +284,42 @@ def _seed_filter(mod: int, cap: int | None) -> Column:
     N/mod (a mod-only rule grows the centroid broadcast with the corpus
     and the training cost quadratically). The bound mod·(cap−1)+1 is
     itself the cap-th seed: the boundary is live data, so ``<=`` and
-    ``<`` select different seed sets."""
+    ``<`` select different seed sets.
+
+    ``mod < 2`` or ``cap < 1`` admits no seed at all, and a trainer with
+    no centroids assigns no row, so both raise instead of returning an
+    empty result."""
+    if mod < 2:
+        raise ValueError(f"seed mod must be >= 2; got {mod}")
+    if cap is not None and cap < 1:
+        raise ValueError(f"seed cap must be >= 1; got {cap}")
     f = F.col("nid") % mod == 1
     if cap is not None:
         f = f & (F.col("nid") <= mod * (cap - 1) + 1)
     return f
 
 
+def _kmeans(
+    c: DataFrame, seeds: Column, iters: int, train: DataFrame | None = None
+) -> DataFrame:
+    """Lazy centroids ``[centroid_id, cv]`` of a corpus ``[nid, cv]``: the
+    ``seeds`` rows refined by ``iters`` exact Lloyd steps over ``train``
+    (default: the whole corpus). A caller that reads them twice persists
+    them (``_ivf_train``); a single read stays lazy, because a persist
+    there only adds the job that fills the cache."""
+    start = c.where(seeds).select(F.col("nid").alias("centroid_id"), "cv")
+    return kmeans_refine_exact(c if train is None else train, start, iters, "nid", "cv")
+
+
 def _ivf_train(
     c: DataFrame, seeds: Column, iters: int, train: DataFrame | None = None
 ) -> tuple[DataFrame, DataFrame]:
     """Coarse quantizer over a persisted corpus ``[nid, cv]``: returns
-    (cents, assigned). ``cents`` ``[centroid_id, cv]`` are the ``seeds``
-    rows refined by ``iters`` exact Lloyd steps over ``train`` (default:
-    the whole corpus), persisted because the corpus assignment and the
-    probe router both broadcast them. ``assigned`` ``[nid, cv,
-    centroid_id]`` puts every corpus vector in exactly one list."""
-    start = c.where(seeds).select(F.col("nid").alias("centroid_id"), "cv")
-    cents = tracked_persist(
-        kmeans_refine_exact(c if train is None else train, start, iters, "nid", "cv")
-    )
+    (cents, assigned). ``cents`` are ``_kmeans``'s centroids, persisted
+    because the corpus assignment and the probe router both broadcast
+    them. ``assigned`` ``[nid, cv, centroid_id]`` puts every corpus
+    vector in exactly one list."""
+    cents = tracked_persist(_kmeans(c, seeds, iters, train))
     return cents, ivf_assign(c, cents, "nid", "cv")
 
 
@@ -575,15 +591,21 @@ def ivf_assign(
     centroids: DataFrame,
     id_col: str = "vec_id",
     qv_col: str = "qv",
+    by: tuple[str, ...] = (),
 ) -> DataFrame:
     """Assign each vector to its nearest centroid (max cosine, deterministic
-    centroid-id tie-break). ``centroids``: [centroid_id, qv] — broadcast.
-    Vector and centroid norms are computed once per row, not per pair."""
+    centroid-id tie-break). ``centroids``: [*by, centroid_id, qv] —
+    broadcast. With ``by``, a vector competes only for the centroids of
+    its own ``by`` group (an equi-join on ``by`` instead of the cross
+    join), and the output carries the ``by`` columns. Vector and
+    centroid norms are computed once per row, not per pair."""
     v = vectors.selectExpr("*", f"{_norm_sql(qv_col)} AS _vn")
-    cents = centroids.selectExpr(
-        "centroid_id", f"{qv_col} AS _cv", f"{_norm_sql(qv_col)} AS _cn"
+    cents = F.broadcast(
+        centroids.selectExpr(
+            *by, "centroid_id", f"{qv_col} AS _cv", f"{_norm_sql(qv_col)} AS _cn"
+        )
     )
-    pairs = v.crossJoin(F.broadcast(cents))
+    pairs = v.join(cents, list(by)) if by else v.crossJoin(cents)
     scored = pairs.selectExpr(
         "*", f"{_cfn_sql(qv_col, '_cv', '_vn', '_cn')} AS _sim"
     )
@@ -591,16 +613,17 @@ def ivf_assign(
     # gets map-side partial combine so the (vector x centroid) pair rows
     # never shuffle — only one row per vector does. Tie-break identical to
     # ORDER BY _sim DESC, centroid_id: maximize (_sim, -centroid_id).
+    best = ", ".join([f"{qv_col} AS _qv", "centroid_id", *by])
     return (
         scored.groupBy(id_col)
         .agg(
             F.expr(
-                f"max_by(struct({qv_col} AS _qv, centroid_id), "
-                f"struct(_sim, -centroid_id AS _nc))"
+                f"max_by(struct({best}), struct(_sim, -centroid_id AS _nc))"
             ).alias("_best")
         )
         .selectExpr(
             id_col,
+            *(f"_best.{b} AS {b}" for b in by),
             f"_best._qv AS {qv_col}",
             "_best.centroid_id AS centroid_id",
         )
@@ -613,36 +636,39 @@ def kmeans_refine_exact(
     n_iter: int = 1,
     id_col: str = "vec_id",
     qv_col: str = "qv",
+    by: tuple[str, ...] = (),
 ) -> DataFrame:
     """Deterministic Lloyd refinement for spherical (cosine) k-means on
-    quantized integer vectors — [centroid_id, qv].
+    quantized integer vectors — [*by, centroid_id, qv].
 
     Each iteration: assign every vector to its max-cosine centroid
-    (centroid-id tie-break), then recompute each centroid as the
-    element-wise integer mean ``floor(sum/count)`` of its members (empty
-    clusters keep their previous centroid). Everything stays exact int64 —
-    no RNG, no float accumulation order — so a SQL oracle replays training
-    bit-for-bit. The mean (not the raw sum) keeps centroid components at
-    vector magnitude, so downstream int64 dot products cannot overflow
-    regardless of cluster size.
+    (centroid-id tie-break; with ``by``, only among the centroids of its
+    own ``by`` group — ``ivf_assign``), then recompute each centroid as
+    the element-wise integer mean ``floor(sum/count)`` of its members
+    (empty clusters keep their previous centroid). Everything stays exact
+    int64 — no RNG, no float accumulation order — so a SQL oracle replays
+    training bit-for-bit. The mean (not the raw sum) keeps centroid
+    components at vector magnitude, so downstream int64 dot products
+    cannot overflow regardless of cluster size.
 
     Scale: assignment is a broadcast(centroids) map pass; the update is a
     posexplode to (centroid, dim) rows with map-side partial aggregation —
     64·N tiny rows through one shuffle per iteration.
     """
+    key = [*by, "centroid_id"]
     cents = seeds
     for _ in range(n_iter):
-        assigned = ivf_assign(vectors, cents, id_col, qv_col)
+        assigned = ivf_assign(vectors, cents, id_col, qv_col, by)
         means = (
-            assigned.selectExpr("centroid_id", f"posexplode({qv_col})")
-            .groupBy("centroid_id", "pos")
+            assigned.selectExpr(*key, f"posexplode({qv_col})")
+            .groupBy(*key, "pos")
             .agg(
                 F.expr(
                     "CAST(floor(CAST(sum(col) AS DOUBLE) / "
                     "CAST(count(1) AS DOUBLE)) AS BIGINT)"
                 ).alias("m")
             )
-            .groupBy("centroid_id")
+            .groupBy(*key)
             .agg(
                 F.expr(
                     "transform(array_sort(collect_list(struct(pos, m))), x -> x.m)"
@@ -650,8 +676,8 @@ def kmeans_refine_exact(
             )
         )
         cents = (
-            cents.join(means, "centroid_id", "left")
-            .selectExpr("centroid_id", f"coalesce(_new_qv, {qv_col}) AS {qv_col}")
+            cents.join(means, key, "left")
+            .selectExpr(*key, f"coalesce(_new_qv, {qv_col}) AS {qv_col}")
         )
     return cents
 

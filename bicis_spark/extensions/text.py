@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from bicis_spark.caching import persisted
+from bicis_spark.caching import persisted, tracked_persist
 from bicis_spark.sources.io import local_frame
 
 FP_MOD = 2_147_483_647  # 2^31 - 1; keeps acc*31 + char within int64
@@ -298,15 +298,11 @@ def hashed_doc_embedding(
     shuffle); integer components, exact norms.
 
     The token-hash array is materialized as its own projection (``_hs``)
-    before the per-dimension sums reference it (round 11, optimization
-    session 2): with the hash tree INLINED in the outer ``transform``
-    lambda, the interpreted HOF evaluator re-derives ``poly_hash`` per
-    dimension. Measured A/B at sf0.1 (values bit-identical, 5000 rows):
-    steady-state noop time is within noise (~1.8s both forms — the 64
-    per-dim aggregate passes dominate either way), but FIRST-execution
-    cost halves (7.3→3.9s / 6.2→2.1s pairs) — the split projection
-    compiles and evaluates a much smaller first-pass tree. Kept for the
-    cheaper cold path; per-dimension sums unchanged."""
+    before the per-dimension sums reference it: with the hash tree
+    INLINED in the outer ``transform`` lambda, the interpreted HOF
+    evaluator re-derives ``poly_hash`` per dimension. The split form
+    keeps the first execution's tree small (first-run cost about half at
+    sf0.1) with identical per-dimension sums."""
     from bicis_spark.extensions.dedup import poly_hash
 
     toks = F.split(F.col(text_col), " ")
@@ -339,46 +335,55 @@ def doc_retrieval_hashed(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """End-to-end text retrieval over hashed embeddings (round 11): embed
-    every document map-side (``hashed_doc_embedding``), take the
-    ``query_pred`` subset as the query batch, exact cosine top-``k`` per
-    query via the salted two-phase top-k — the full text → vector →
+    """End-to-end text retrieval over hashed embeddings: embed every
+    document map-side (``hashed_doc_embedding``), take the ``query_pred``
+    subset as the query batch, and run the exact ANN scan
+    (``similarity._exact_scan``: cosine top-``k`` per query via the salted
+    two-phase top-k, self-matches excluded) — the full text → vector →
     retrieve pipeline in one declared plan, each stage bit-replayable.
-    Output: [query_id, neighbor_id, cosine, rank]."""
-    from bicis_spark.caching import tracked_persist
-    from bicis_spark.extensions.similarity import (
-        _topk_per_query,
-        cosine_from_norms,
-        norm_col,
-    )
+    The normed embeddings are persisted: the corpus and the query side
+    both read them. Output: [query_id, neighbor_id, cosine, rank]."""
+    from bicis_spark.extensions.similarity import _exact_scan, _with_norm
 
     emb = tracked_persist(
-        hashed_doc_embedding(df, dims, text_col, id_col).withColumn(
-            "n", norm_col(F.col("v"))
-        )
+        _with_norm(hashed_doc_embedding(df, dims, text_col, id_col), "v", "n")
     )
-    q = emb.where(query_pred).select(
-        F.col(id_col).alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("n").alias("qn"),
+    q = emb.where(query_pred).selectExpr(
+        f"{id_col} AS query_id", "v AS qv", "n AS qn"
     )
-    c = emb.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("v").alias("cv"),
-        F.col("n").alias("cn"),
+    c = emb.selectExpr(f"{id_col} AS nid", "v AS cv", "n AS cn")
+    return _exact_scan(c, q, k)
+
+
+def _tf_index(
+    df: DataFrame,
+    df_min: int,
+    df_max: int,
+    text_col: str,
+    id_col: str,
+    persist: bool,
+) -> tuple[DataFrame, DataFrame]:
+    """The df-window-pruned sparse TF index and its squared norms:
+    (tfk ``[token, id, tf_d, ...]``, norms ``[id, ss]``). Tokens outside
+    [df_min, df_max] are pruned before any pair is formed — rare terms
+    (df < df_min) cannot produce a pair, and stop-like terms (df > df_max)
+    would each fan out df² pairs — so the inverted-index join is bounded
+    by df_max² pairs per token. Norms are over the PRUNED token space,
+    consistent on both sides, and exact int64 sums of tf². ``persist``
+    is the caller's choice: it caches the index (``tracked_persist``)
+    before the norms and the caller's scans read it."""
+    dt = term_doc_counts(df, text_col, id_col)
+    voc = dt.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
+    keep = voc.where(
+        (F.col("df") >= df_min) & (F.col("df") <= df_max)
+    ).select("token")
+    tfk = dt.join(F.broadcast(keep), "token")
+    if persist:
+        tfk = tracked_persist(tfk)
+    norms = tfk.groupBy(id_col).agg(
+        F.sum(F.col("tf_d") * F.col("tf_d")).cast("long").alias("ss")
     )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_from_norms(
-                F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")
-            ).alias("cosine"),
-        )
-    )
-    return _topk_per_query(scored, "cosine", k)
+    return tfk, norms
 
 
 def doc_sparse_cosine_query_topk(
@@ -398,18 +403,9 @@ def doc_sparse_cosine_query_topk(
     broadcast, so the candidate join is map-side over the corpus
     posting lists; selection is the salted two-phase top-k. Output:
     [query_id, neighbor_id, cosine, rank]."""
-    from bicis_spark.caching import tracked_persist
     from bicis_spark.extensions.similarity import _topk_per_query
 
-    dt = term_doc_counts(df, text_col, id_col)
-    voc = dt.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-    keep = voc.where(
-        (F.col("df") >= df_min) & (F.col("df") <= df_max)
-    ).select("token")
-    tfk = tracked_persist(dt.join(F.broadcast(keep), "token"))
-    norms = tfk.groupBy(id_col).agg(
-        F.sum(F.col("tf_d") * F.col("tf_d")).cast("long").alias("ss")
-    )
+    tfk, norms = _tf_index(df, df_min, df_max, text_col, id_col, persist=True)
     qa = tfk.where(query_pred).select(
         F.col(id_col).alias("query_id"), "token", F.col("tf_d").alias("tf_a")
     )
@@ -453,8 +449,8 @@ def hybrid_retrieval_rrf(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Hybrid sparse+dense retrieval fused per query by reciprocal rank
-    (round 11) — the standard RAG serving pattern: a DENSE ranking
+    """Hybrid sparse+dense retrieval fused per query by reciprocal rank —
+    the standard RAG serving pattern: a DENSE ranking
     (feature-hashing embeddings, ``doc_retrieval_hashed``) and a SPARSE
     lexical ranking (df-pruned TF cosine,
     ``doc_sparse_cosine_query_topk``) each contribute their top-``k_cand``
@@ -530,26 +526,15 @@ def doc_cosine_topk(
     doc-to-doc twin of the embedding ANN paths (similarity over CONTENT
     rather than a trained vector).
 
-    Plan shape (scales to 100 TB): tokens outside the document-frequency
-    window [df_min, df_max] are pruned BEFORE any pair is formed — rare
-    terms (df < df_min) cannot produce a pair, and stop-like terms
-    (df > df_max) would each fan out df^2 pairs, so the cap bounds the
-    inverted-index join to df_max^2 pairs per token. Dot products and
-    squared norms are exact int64 sums of tf products (order-independent),
-    so the final cosine = dot / (sqrt(ss_a)*sqrt(ss_b)) is a deterministic
-    IEEE expression over exact integers and replays bitwise in the oracle.
-    Norms are over the PRUNED token space (consistent on both sides).
-    Shuffles: (doc,token) agg, token-keyed pair join, per-doc top-k window.
+    Plan shape (scales to 100 TB): the df-window-pruned TF index
+    (``_tf_index``) bounds the inverted-index join to df_max² pairs per
+    token. Dot products and squared norms are exact int64 sums of tf
+    products (order-independent), so the final cosine
+    = dot / (sqrt(ss_a)*sqrt(ss_b)) is a deterministic IEEE expression
+    over exact integers and replays bitwise in the oracle. Shuffles:
+    (doc,token) agg, token-keyed pair join, per-doc top-k window.
     """
-    dt = term_doc_counts(df, text_col, id_col)
-    voc = dt.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-    keep = voc.where(
-        (F.col("df") >= df_min) & (F.col("df") <= df_max)
-    ).select("token")
-    tfk = dt.join(F.broadcast(keep), "token")
-    norms = tfk.groupBy(id_col).agg(
-        F.sum(F.col("tf_d") * F.col("tf_d")).cast("long").alias("ss")
-    )
+    tfk, norms = _tf_index(df, df_min, df_max, text_col, id_col, persist=False)
     a = tfk.select(
         F.col(id_col).alias("id_a"), "token", F.col("tf_d").alias("tf_a")
     )
@@ -930,7 +915,6 @@ def bm25_scores(
     through DECIMAL(38,0)."""
     import math
 
-    from bicis_spark.caching import tracked_persist
 
     # The tokenize pass feeds THREE actions per build (the corpus-stats
     # scalar, the per-term df collect, and the final scored job), so an

@@ -1,7 +1,9 @@
 """The ANN search pipeline in ``extensions/similarity.py``: every entry
-point is a composition of shared stages, so these tests pin what a
-composition must keep — the Spark jobs each declared row runs, and the
-query-side broadcast gate on every |Q|-sized join."""
+point — and every dedup, sampling and text-retrieval path built on the
+same stages — is a composition of shared stages, so these tests pin what
+a composition must keep: the Spark jobs each declared row runs, the
+seed rule's entry check, and the query-side broadcast gate on every
+|Q|-sized join."""
 
 from __future__ import annotations
 
@@ -12,11 +14,13 @@ from bicis_spark.plans import queries as registry
 
 ALL = registry.queries()
 
-#: Spark jobs of one declared row per ANN entry point at sf0.001 in the
-#: test session (4 cores, 4 shuffle partitions), first call with no
-#: tracked caches — index build included. Upper bounds, not targets:
-#: the two IVF-PQ rows run one job more in about one call of ten, at
-#: the same commit, so their budgets are the larger count.
+#: Spark jobs of one declared row per ANN entry point, and per row built
+#: on the same search stages (dedup, sampling, text retrieval), at
+#: sf0.001 in the test session (4 cores, 4 shuffle partitions), first
+#: call with no tracked caches — index build included. Upper bounds, not
+#: targets: some rows run fewer jobs in some calls at the same commit
+#: (the IVF-PQ rows one more in about one call of ten), so each budget
+#: is the larger count.
 ANN_JOB_BUDGET = {
     "ann_topk_bruteforce": 5,
     "ann_topk_ivf": 66,
@@ -30,6 +34,16 @@ ANN_JOB_BUDGET = {
     "ann_mmr_diversified": 8,
     "ann_topk_hamming": 9,
     "ann_filtered_prepost_recall": 11,
+    "semantic_dedup_flags": 21,
+    "semantic_dedup_two_level_flags": 55,
+    "cluster_balanced_sample": 12,
+    "dedup_embedding_cosine": 4,
+    "dedup_embedding_cosine_lsh": 18,
+    "dedup_embedding_lsh_band_profile": 11,
+    "dedup_embedding_lsh_band_auto": 13,
+    "doc_retrieval_hashed": 7,
+    "hybrid_retrieval_doc_rrf": 27,
+    "hard_negative_candidates": 66,
 }
 
 
@@ -45,6 +59,38 @@ def test_ann_row_job_budget(name, spark, sf_dir, new_job_ids):
     finally:
         release_tracked()
     assert len(ids) <= ANN_JOB_BUDGET[name], (name, len(ids))
+
+
+@pytest.mark.parametrize(
+    "entry",
+    ["cluster_balanced_sample", "semantic_dedup", "ann_topk_ivf"],
+)
+def test_degenerate_seed_parameters_raise(entry, spark):
+    """A seed rule that admits no seed (mod < 2, or a cap below 1) would
+    train no centroid and assign no row — an empty result from a
+    non-empty corpus. Every trained entry point rejects it up front."""
+    from bicis_spark.extensions.dedup import semantic_dedup
+    from bicis_spark.extensions.sampling import cluster_balanced_sample
+    from bicis_spark.extensions.similarity import ann_topk_ivf
+
+    corpus = spark.range(1, 33).selectExpr(
+        "id AS vec_id",
+        "transform(sequence(1, 8), i -> CAST(pmod(id * i, 13) AS DOUBLE)) AS embedding",
+    )
+    build = {
+        "cluster_balanced_sample": lambda: cluster_balanced_sample(
+            corpus, n_centroids_mod=1
+        ),
+        "semantic_dedup": lambda: semantic_dedup(corpus, max_clusters=0),
+        "ann_topk_ivf": lambda: ann_topk_ivf(
+            corpus, corpus.where("vec_id % 8 = 0"), max_lists=0
+        ),
+    }[entry]
+    try:
+        with pytest.raises(ValueError, match="seed"):
+            build()
+    finally:
+        release_tracked()
 
 
 def test_sq8_repeat_reuses_the_built_index(spark, sf_dir, new_job_ids):

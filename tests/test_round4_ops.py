@@ -10,6 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from bicis_spark.caching import release_tracked
+
 
 def test_span_dedup_conservation_and_first_wins(spark):
     from bicis_spark.extensions.curation import span_dedup
@@ -116,12 +118,15 @@ def test_semantic_dedup_survivor_structure(spark):
 
 def test_ivf_and_semdedup_seed_caps_bound_list_count(spark):
     """Scale contract for the constant-list-count caps (the PQ max_codes
-    discipline applied to IVF/SemDeDup): with ids far past mod·L, the
-    capped run must use exactly the first L qualifying seeds — distinct
-    cluster labels never exceed L — while the uncapped mod-only rule keeps
-    minting one list per mod ids. Also pins cap-is-no-op: below the
-    boundary, capped and uncapped outputs are identical."""
-    from bicis_spark.extensions.dedup import semantic_dedup
+    discipline applied to IVF/SemDeDup/sampling): with ids far past
+    mod·L, every capped trainer uses exactly the first L qualifying seeds
+    — the cluster labels ARE {1, 11, 21}, so a cap that drops the
+    boundary seed 21 (``<`` for ``<=``) or admits 31 fails — while the
+    uncapped mod-only rule keeps minting one list per mod ids. Also pins
+    cap-is-no-op: below the boundary, capped and uncapped outputs are
+    identical."""
+    from bicis_spark.extensions.dedup import semantic_dedup, semantic_dedup_two_level
+    from bicis_spark.extensions.sampling import cluster_balanced_sample
     from bicis_spark.extensions.similarity import ann_topk_ivf
 
     rows = [
@@ -130,13 +135,28 @@ def test_ivf_and_semdedup_seed_caps_bound_list_count(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    capped = semantic_dedup(
-        df, n_centroids_mod=10, train_iters=1, max_clusters=3
-    )
-    labels = {r["cluster_id"] for r in capped.select("cluster_id").distinct().collect()}
-    assert len(labels) <= 3
-    # the seeds are the FIRST qualifying ids (11, 21 < 10*3), not arbitrary
-    assert labels <= {1, 11, 21}
+    def labels(out, col):
+        return {r[0] for r in out.select(col).distinct().collect()}
+
+    capped = {
+        "semantic_dedup": labels(
+            semantic_dedup(df, n_centroids_mod=10, train_iters=1, max_clusters=3),
+            "cluster_id",
+        ),
+        "cluster_balanced_sample": labels(
+            cluster_balanced_sample(
+                df, n_centroids_mod=10, train_iters=1, max_clusters=3
+            ),
+            "cluster_id",
+        ),
+        "semantic_dedup_two_level": labels(
+            semantic_dedup_two_level(df, super_mod=10, max_super=3, train_iters=1),
+            "super_id",
+        ),
+    }
+    release_tracked()
+    # the seeds are the FIRST qualifying ids, boundary seed 21 included
+    assert capped == {name: {1, 11, 21} for name in capped}
     uncapped_labels = (
         semantic_dedup(df, n_centroids_mod=10, train_iters=1)
         .select("cluster_id")
