@@ -4,8 +4,11 @@ Runs the headline declared queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}.
 
-Each query is timed end-to-end (plan + execute + collect-count via a cheap
-``count()`` action over the final plan) after a warm-up of the session.
+Each row is timed by ``bicis_spark.measure`` (builder + noop-sink write,
+min of 2 runs per pass, min across passes) after a warm-up of the
+session. The detail file ``BENCH_FULL_sf{sf}_c{cpus}.json`` holds every
+row's seconds and its layered record (build/exec split, jobs, stages,
+task CPU, GC, shuffle and spill bytes).
 """
 
 from __future__ import annotations
@@ -17,283 +20,163 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from bicis_spark.measure import measure  # noqa: E402
 from bicis_spark.plans import queries as registry  # noqa: E402
-from bicis_spark.caching import release_tracked  # noqa: E402
 from bicis_spark.session import get_spark  # noqa: E402
+from bicis_spark.sources.io import read_table  # noqa: E402
 
-# Headline set: one per operator family.
-HEADLINE = [
-    "hour_profile",            # two-level agg + join (flagship)
-    "next_window_target",      # range-frame window (W1 centerpiece)
-    "circular_lag_features",   # pivot + broadcast map join (W3/J4)
-    "ml_dataset",              # full feature/target assembly (J2)
-    "pricing_summary",         # TPC-H Q1 shape, decimal aggs
-    "revenue_per_brand",       # fact x broadcast dim join
-    "topk_orders_per_customer",  # window top-k
-    "hourly_event_counts",     # tumbling buckets (A6)
-    "dedup_ngram_jaccard",     # shingle blocking + exact verify
-    "dedup_minhash_lsh_fast",  # LSH scale path (xxhash64)
-    "ann_topk_lsh",            # similarity search scale path (bucketed)
-    "ann_topk_ivf",            # trained-IVF inverted lists (scale path)
-    "dedup_embedding_cosine_lsh",  # LSH-blocked near-dup (scale path)
-    "text_quality",            # text analysis column exprs
-    "doc_fingerprints",        # rolling-hash fingerprint
-    "sessionization",          # lag + running-sum window
-    "asof_latest_order",       # JVM-native as-of join (join + max_by)
-    "range_join_recent_orders",  # bucketized range equi-join
-    "curation_pipeline",       # composed quality->dedup->lang pipeline
-    "ols_fit_stats",           # exact-sum closed-form OLS (model math)
-    "benchmark_decontamination",  # broadcast n-gram semi-join (corpus unshuffled)
-    "sequence_packing",        # per-shard concat-and-chunk packing window
-    "tfidf_top_terms",         # explode agg + broadcast vocab join
-    # round-3 additions
-    "funnel_view_click_purchase",  # ordered funnel (chained user-key joins)
-    "interval_overlap_error_purchase",  # bucketed interval-overlap join
-    "vocab_encode_documents",  # broadcast-map token encoding (corpus unshuffled)
-    "pagerank_part_supplier",  # iterative fixed-point graph (3 rounds)
-    "snapshot_diff_orders",    # full-outer version reconciliation
-    "scd2_customer_status",    # SCD2 dimension build (shared-exchange windows)
-    "char_entropy_quality",    # entropy via broadcast libm log table
-    # round-3b additions
-    "q3_shipping_priority",    # TPC-H Q3 shape (pushed filters + TakeOrdered)
-    "q5_local_supplier_volume",  # 6-table join, nation-correlation
-    "q10_returned_items",      # TPC-H Q10 shape
-    "topk_agg_orders_per_customer",  # salted hash-agg top-k (window-free)
-    "prorated_daily_revenue",  # sequence+explode exact proration
-    "asof_nearest_order",      # banded nearest as-of (join + max_by)
-    "group_sample_events",     # RNG-free per-group sampling
-    # round-4 additions
-    "ann_topk_pq",             # PQ-ADC compressed scoring + exact re-rank
-    "semantic_dedup_flags",    # SemDeDup cluster-then-dedup
-    "span_dedup_rebuild",      # C4 duplicated-span removal + rebuild
-    "unigram_surprisal_quality",  # corpus-LM perplexity-proxy filter
-    "q18_large_orders",        # HAVING-gated semi-join (TPC-H battery II)
-    "q7_volume_shipping",      # nation-dim double-role join
-    "q9_product_type_profit",  # join fan + two-measure profit agg
-    "q13_customer_distribution",  # outer-join count-of-counts
-    "dsir_importance_resample",  # map-only DSIR selection vs broadcast histograms
-    "dedup_incremental_batch",  # anti-join vs 16-byte fingerprint index
-    "pit_status_at_ship",      # point-in-time SCD2 dimension lookup
-    # round-4 continuation additions
-    "quality_classifier_flags",  # map-side hashed-feature linear scorer
-    "holt_winters_forecast_user_value",  # seasonal list-state fold (m=24)
-    # round-5 additions
-    "multimodal_bmp_wav_decode",  # real BMP/WAV byte codecs over mapInPandas
-    "cluster_balanced_sample",    # k-means topic rebalancing sample
-    "ngram_novelty_scores",       # gram-keyed min-owner novelty audit
-    "label_propagation_communities",  # 2-round synchronous LPA
-    "kaplan_meier_user_lifetimes",  # survival curve (bounded fold)
-    "incremental_agg_maintenance",  # delta-merge materialized aggregate
-    "cusum_hourly_drift",         # integer CUSUM drift monitor
-    "bm25_query_scores",          # BM25 retrieval scoring
-    "frequent_itemsets_parts",    # exact Apriori pairs+triples
-    "seasonal_decompose_hourly",  # additive decomposition
-    "domain_cap_sample",          # per-domain cap via skew-bounded top-k
-    "rrf_fusion_topk",            # reciprocal-rank fusion of two rankers
-    "kmv_distinct_contract",      # bottom-k distinct sketch, bitwise-gated
-    "dedup_prefix_filter_jaccard",  # exact Jaccard join, prefix-filtered
-    "mutual_information_features",  # qlog-table MI feature ranking
-    "benford_digit_audit",        # first-digit distribution screen
-    "naive_bayes_confusion",      # integer-exact NB train/predict/eval
-    "phrase_search_positional",   # consecutive-position phrase match
-    "weighted_quantiles_price",   # two-pass bucketed exact weighted quantiles
-    "brand_weighted_median_price",  # grouped exact weighted median
-    "bfs_part_supplier_hops",     # frontier BFS (delta iteration)
-    "dedup_edit_distance_names",  # FastSS deletion-neighborhood edit<=1 join
-    "interval_union_coverage_users",  # merged-interval union coverage sweep
-    "table_checksum_orders_monthly",  # order-invariant HASH_AGG digest
-    "mode_impute_event_types",    # per-key categorical mode imputation
-    # round-6 additions
-    "glm_poisson_irls_contract",  # hash-gated one-IRLS-step Poisson fit
-    "holt_winters_forecast_capped",  # skew-bounded HW fold (prefix cap)
-    "embedding_int8_quantize",    # per-dim int8 scalar quantization
-    "zorder_layout_orders",       # Morton-interleave layout zone maps
-    "skipgram_pairs",             # word2vec +-2-window pair generation
-    "cuped_adjusted_ab",          # variance-reduced experiment readout
-    "bom_subtree_rollup",         # closed-form hierarchy subtree agg
-    "embedding_covariance_ints",  # integer-exact PCA covariance pass
-    "incremental_join_view",      # delta-decomposed join-view maintenance
-    "golden_record_customers",    # linkage -> clusters -> survivorship
-    "zipf_fit_tokens",            # log-log token distribution diagnostic
-    "chisq_independence_cells",   # per-cell Pearson chi-square screen
-    "user_activity_streaks",      # gaps-and-islands longest streaks
-    "acf_hourly_counts",          # Box-Jenkins lag screen, join-based
-    "corpus_kl_divergence",       # per-source drift screen, grid-free KL
-    "changepoint_hourly_split",   # binary-segmentation SSE cost curve
-    "clustering_coefficient_parts",  # per-vertex triangle density
-    "kcore_parts",                # fixed-round degeneracy peel
-    "interp_purchase_rate_at_errors",  # linear-interpolation join
-    "ccf_view_purchase",          # lead-lag cross-correlation screen
-    "ols_isotonic_calibration",   # PAVA-equivalent monotone calibrator
-    "forecast_mase_baselines",    # scale-free forecast-eval contract
-    "haar_energy_hourly",         # multi-resolution variance location
-    "join_size_by_key_stats",     # CBO sizing identity, join-free plan
-    "ecdf_dkw_bands_totalprice",  # distribution-free CDF bands
-    "mann_whitney_ab_spend",      # histogram-rank nonparametric A/B test
-    "event_type_runs",            # value-change run-length encoding
-    "sorted_neighborhood_pairs",  # sliding-window linkage blocking
-    "shortest_path_copurchase",   # fixed-round weighted Bellman-Ford
-    "cohort_ltv_curve",           # cumulative monetization by cohort age
-    "ucb1_event_type_arms",       # optimism-under-uncertainty allocation
-    # round-8 additions
-    "multimodal_jpeg_decode",     # real baseline-JPEG decode (Huffman+IDCT)
-    "multimodal_mpeg1_audio_decode",  # real MPEG-1 Layer I bitstream decode
-    # round-9 additions
-    "multimodal_mp3_decode",      # real MPEG-1 Layer III decode (bit reservoir)
-    "dedup_embedding_lsh_band_profile",  # high-tau banded LSH pruning profile
-    "ann_topk_ivfpq",             # probed-list ADC composition (IVF router + PQ)
-    "multimodal_video_decode",    # real AVI/MJPEG demux + per-frame JPEG decode
-    "multimodal_video_frame_sample",  # real frame sampling (decode kept frames only)
-    "exact_substring_spans",      # Lee-et-al unaligned maximal duplicate spans
-    "multimodal_png_decode",      # wire-format-real PNG (zlib DEFLATE + defilter)
-    "multimodal_gif_decode",      # wire-format-real animated GIF (LZW from stream)
-    # round-10 additions
-    "ann_topk_ivfpq_sqrt",
-    "ann_ivfpq_probe_curve",
-    "dedup_embedding_lsh_band_auto",
-    "ann_topk_sq8",
-    # round-11 additions
-    "ann_topk_ivfsq8",
-    "ann_mmr_diversified",
-    "ann_topk_hamming",
-    "ann_filtered_prepost_recall",
-    "doc_retrieval_hashed",
-    "hybrid_retrieval_doc_rrf",
-    "embedding_pca_top_eigvec",
-]
-# Non-headline baselines (quadratic by design; measured but kept out of the
-# headline so the total reflects the plans you'd run at scale):
-# ann_topk_bruteforce, dedup_embedding_cosine.
+# Headline rows in run order, each with the round it joined the bench.
+# ``rN_overlap_total`` sums the rows with round <= N: exactly the rows a
+# round-N bench ran, so totals stay comparable across rounds. Rows that
+# are quadratic by design (ann_topk_bruteforce, dedup_embedding_cosine)
+# stay out, so the total reflects plans one would run at scale.
+HEADLINE: dict[str, int] = {
+    "hour_profile": 1,                # two-level agg + join (flagship)
+    "next_window_target": 1,          # range-frame window (W1 centerpiece)
+    "circular_lag_features": 1,       # pivot + broadcast map join (W3/J4)
+    "ml_dataset": 1,                  # full feature/target assembly (J2)
+    "pricing_summary": 1,             # TPC-H Q1 shape, decimal aggs
+    "revenue_per_brand": 1,           # fact x broadcast dim join
+    "topk_orders_per_customer": 1,    # window top-k
+    "hourly_event_counts": 1,         # tumbling buckets (A6)
+    "dedup_ngram_jaccard": 1,         # shingle blocking + exact verify
+    "dedup_minhash_lsh_fast": 1,      # LSH scale path (xxhash64)
+    "ann_topk_lsh": 2,                # similarity search scale path (bucketed)
+    "ann_topk_ivf": 2,                # trained-IVF inverted lists (scale path)
+    "dedup_embedding_cosine_lsh": 2,  # LSH-blocked near-dup (scale path)
+    "text_quality": 1,                # text analysis column exprs
+    "doc_fingerprints": 1,            # rolling-hash fingerprint
+    "sessionization": 1,              # lag + running-sum window
+    "asof_latest_order": 1,           # JVM-native as-of join (join + max_by)
+    "range_join_recent_orders": 1,    # bucketized range equi-join
+    "curation_pipeline": 1,           # composed quality->dedup->lang pipeline
+    "ols_fit_stats": 2,               # exact-sum closed-form OLS (model math)
+    "benchmark_decontamination": 2,   # broadcast n-gram semi-join (corpus unshuffled)
+    "sequence_packing": 2,            # per-shard concat-and-chunk packing window
+    "tfidf_top_terms": 2,             # explode agg + broadcast vocab join
+    "funnel_view_click_purchase": 3,  # ordered funnel (chained user-key joins)
+    "interval_overlap_error_purchase": 3,  # bucketed interval-overlap join
+    "vocab_encode_documents": 3,      # broadcast-map token encoding (corpus unshuffled)
+    "pagerank_part_supplier": 3,      # iterative fixed-point graph (3 rounds)
+    "snapshot_diff_orders": 3,        # full-outer version reconciliation
+    "scd2_customer_status": 3,        # SCD2 dimension build (shared-exchange windows)
+    "char_entropy_quality": 3,        # entropy via broadcast libm log table
+    "q3_shipping_priority": 3,        # TPC-H Q3 shape (pushed filters + TakeOrdered)
+    "q5_local_supplier_volume": 3,    # 6-table join, nation-correlation
+    "q10_returned_items": 3,          # TPC-H Q10 shape
+    "topk_agg_orders_per_customer": 3,  # salted hash-agg top-k (window-free)
+    "prorated_daily_revenue": 3,      # sequence+explode exact proration
+    "asof_nearest_order": 3,          # banded nearest as-of (join + max_by)
+    "group_sample_events": 3,         # RNG-free per-group sampling
+    "ann_topk_pq": 4,                 # PQ-ADC compressed scoring + exact re-rank
+    "semantic_dedup_flags": 4,        # SemDeDup cluster-then-dedup
+    "span_dedup_rebuild": 4,          # C4 duplicated-span removal + rebuild
+    "unigram_surprisal_quality": 4,   # corpus-LM perplexity-proxy filter
+    "q18_large_orders": 4,            # HAVING-gated semi-join (TPC-H battery II)
+    "q7_volume_shipping": 4,          # nation-dim double-role join
+    "q9_product_type_profit": 4,      # join fan + two-measure profit agg
+    "q13_customer_distribution": 4,   # outer-join count-of-counts
+    "dsir_importance_resample": 4,    # map-only DSIR selection vs broadcast histograms
+    "dedup_incremental_batch": 4,     # anti-join vs 16-byte fingerprint index
+    "pit_status_at_ship": 4,          # point-in-time SCD2 dimension lookup
+    "quality_classifier_flags": 4,    # map-side hashed-feature linear scorer
+    "holt_winters_forecast_user_value": 4,  # seasonal list-state fold (m=24)
+    "multimodal_bmp_wav_decode": 5,   # real BMP/WAV byte codecs over mapInPandas
+    "cluster_balanced_sample": 5,     # k-means topic rebalancing sample
+    "ngram_novelty_scores": 5,        # gram-keyed min-owner novelty audit
+    "label_propagation_communities": 5,  # 2-round synchronous LPA
+    "kaplan_meier_user_lifetimes": 5,  # survival curve (bounded fold)
+    "incremental_agg_maintenance": 5,  # delta-merge materialized aggregate
+    "cusum_hourly_drift": 5,          # integer CUSUM drift monitor
+    "bm25_query_scores": 5,           # BM25 retrieval scoring
+    "frequent_itemsets_parts": 5,     # exact Apriori pairs+triples
+    "seasonal_decompose_hourly": 5,   # additive decomposition
+    "domain_cap_sample": 5,           # per-domain cap via skew-bounded top-k
+    "rrf_fusion_topk": 5,             # reciprocal-rank fusion of two rankers
+    "kmv_distinct_contract": 5,       # bottom-k distinct sketch, bitwise-gated
+    "dedup_prefix_filter_jaccard": 5,  # exact Jaccard join, prefix-filtered
+    "mutual_information_features": 5,  # qlog-table MI feature ranking
+    "benford_digit_audit": 5,         # first-digit distribution screen
+    "naive_bayes_confusion": 5,       # integer-exact NB train/predict/eval
+    "phrase_search_positional": 5,    # consecutive-position phrase match
+    "weighted_quantiles_price": 5,    # two-pass bucketed exact weighted quantiles
+    "brand_weighted_median_price": 5,  # grouped exact weighted median
+    "bfs_part_supplier_hops": 5,      # frontier BFS (delta iteration)
+    "dedup_edit_distance_names": 5,   # FastSS deletion-neighborhood edit<=1 join
+    "interval_union_coverage_users": 5,  # merged-interval union coverage sweep
+    "table_checksum_orders_monthly": 5,  # order-invariant HASH_AGG digest
+    "mode_impute_event_types": 5,     # per-key categorical mode imputation
+    "glm_poisson_irls_contract": 6,   # hash-gated one-IRLS-step Poisson fit
+    "holt_winters_forecast_capped": 6,  # skew-bounded HW fold (prefix cap)
+    "embedding_int8_quantize": 6,     # per-dim int8 scalar quantization
+    "zorder_layout_orders": 6,        # Morton-interleave layout zone maps
+    "skipgram_pairs": 6,              # word2vec +-2-window pair generation
+    "cuped_adjusted_ab": 6,           # variance-reduced experiment readout
+    "bom_subtree_rollup": 6,          # closed-form hierarchy subtree agg
+    "embedding_covariance_ints": 6,   # integer-exact PCA covariance pass
+    "incremental_join_view": 6,       # delta-decomposed join-view maintenance
+    "golden_record_customers": 6,     # linkage -> clusters -> survivorship
+    "zipf_fit_tokens": 6,             # log-log token distribution diagnostic
+    "chisq_independence_cells": 6,    # per-cell Pearson chi-square screen
+    "user_activity_streaks": 6,       # gaps-and-islands longest streaks
+    "acf_hourly_counts": 6,           # Box-Jenkins lag screen, join-based
+    "corpus_kl_divergence": 6,        # per-source drift screen, grid-free KL
+    "changepoint_hourly_split": 6,    # binary-segmentation SSE cost curve
+    "clustering_coefficient_parts": 6,  # per-vertex triangle density
+    "kcore_parts": 6,                 # fixed-round degeneracy peel
+    "interp_purchase_rate_at_errors": 6,  # linear-interpolation join
+    "ccf_view_purchase": 6,           # lead-lag cross-correlation screen
+    "ols_isotonic_calibration": 6,    # PAVA-equivalent monotone calibrator
+    "forecast_mase_baselines": 6,     # scale-free forecast-eval contract
+    "haar_energy_hourly": 6,          # multi-resolution variance location
+    "join_size_by_key_stats": 6,      # CBO sizing identity, join-free plan
+    "ecdf_dkw_bands_totalprice": 6,   # distribution-free CDF bands
+    "mann_whitney_ab_spend": 6,       # histogram-rank nonparametric A/B test
+    "event_type_runs": 6,             # value-change run-length encoding
+    "sorted_neighborhood_pairs": 6,   # sliding-window linkage blocking
+    "shortest_path_copurchase": 6,    # fixed-round weighted Bellman-Ford
+    "cohort_ltv_curve": 6,            # cumulative monetization by cohort age
+    "ucb1_event_type_arms": 6,        # optimism-under-uncertainty allocation
+    "multimodal_jpeg_decode": 8,      # real baseline-JPEG decode (Huffman+IDCT)
+    "multimodal_mpeg1_audio_decode": 8,  # real MPEG-1 Layer I bitstream decode
+    "multimodal_mp3_decode": 9,       # real MPEG-1 Layer III decode (bit reservoir)
+    "dedup_embedding_lsh_band_profile": 9,  # high-tau banded LSH pruning profile
+    "ann_topk_ivfpq": 9,              # probed-list ADC composition (IVF router + PQ)
+    "multimodal_video_decode": 9,     # real AVI/MJPEG demux + per-frame JPEG decode
+    "multimodal_video_frame_sample": 9,  # real frame sampling (decode kept frames only)
+    "exact_substring_spans": 9,       # Lee-et-al unaligned maximal duplicate spans
+    "multimodal_png_decode": 9,       # wire-format-real PNG (zlib DEFLATE + defilter)
+    "multimodal_gif_decode": 9,       # wire-format-real animated GIF (LZW from stream)
+    "ann_topk_ivfpq_sqrt": 10,        # n_lists = √N IVF-PQ (clustered corpus)
+    "ann_ivfpq_probe_curve": 10,      # recall-vs-probe curve, shared index
+    "dedup_embedding_lsh_band_auto": 10,  # r = ⌊log₂ n⌋ banded profile
+    "ann_topk_sq8": 10,               # int8 scalar-quantized scan + re-rank
+    "ann_topk_ivfsq8": 11,            # IVF router + int8 scan (IVF40,SQ8)
+    "ann_mmr_diversified": 11,        # greedy MMR re-rank over top-40
+    "ann_topk_hamming": 11,           # binary sign bits + bit_count(xor) scan
+    "ann_filtered_prepost_recall": 11,  # filtered-ANN strategy contract
+    "doc_retrieval_hashed": 11,       # text -> hashed vector -> top-k pipeline
+    "hybrid_retrieval_doc_rrf": 11,   # sparse+dense RRF-fused retrieval
+    "embedding_pca_top_eigvec": 11,   # integer power-iteration PCA
+}
 
-# The round each headline query first appeared in. Single source of truth
-# for the cross-round overlap subtotals (r5 verdict item #2: the old
-# hand-maintained rN_set literals drifted — late-r5 additions leaked into
-# the r2/r3/r4 subtotals, corrupting the like-for-like comparison). The
-# "rN_overlap_total" printed below is the sum over queries with
-# ROUND_OF[q] <= N, i.e. exactly the rows a round-N bench would have run.
-ROUND_OF: dict[str, int] = {}
-_R1 = [
-    "hour_profile", "next_window_target", "circular_lag_features",
-    "ml_dataset", "pricing_summary", "revenue_per_brand",
-    "topk_orders_per_customer", "hourly_event_counts",
-    "dedup_ngram_jaccard", "dedup_minhash_lsh_fast", "text_quality",
-    "doc_fingerprints", "sessionization", "asof_latest_order",
-    "range_join_recent_orders", "curation_pipeline",
-]
-_R2 = [
-    "ann_topk_lsh", "ann_topk_ivf", "dedup_embedding_cosine_lsh",
-    "ols_fit_stats", "benchmark_decontamination", "sequence_packing",
-    "tfidf_top_terms",
-]
-_R3 = [
-    "funnel_view_click_purchase", "interval_overlap_error_purchase",
-    "vocab_encode_documents", "pagerank_part_supplier",
-    "snapshot_diff_orders", "scd2_customer_status", "char_entropy_quality",
-    "q3_shipping_priority", "q5_local_supplier_volume", "q10_returned_items",
-    "topk_agg_orders_per_customer", "prorated_daily_revenue",
-    "asof_nearest_order", "group_sample_events",
-]
-_R4 = [
-    "ann_topk_pq", "semantic_dedup_flags", "span_dedup_rebuild",
-    "unigram_surprisal_quality", "q18_large_orders", "q7_volume_shipping",
-    "q9_product_type_profit", "q13_customer_distribution",
-    "dsir_importance_resample", "dedup_incremental_batch",
-    "pit_status_at_ship", "quality_classifier_flags",
-    "holt_winters_forecast_user_value",
-]
-_R5 = [
-    "multimodal_bmp_wav_decode", "cluster_balanced_sample",
-    "ngram_novelty_scores", "label_propagation_communities",
-    "kaplan_meier_user_lifetimes", "incremental_agg_maintenance",
-    "cusum_hourly_drift", "bm25_query_scores", "frequent_itemsets_parts",
-    "seasonal_decompose_hourly", "domain_cap_sample", "rrf_fusion_topk",
-    "kmv_distinct_contract", "dedup_prefix_filter_jaccard",
-    "mutual_information_features", "benford_digit_audit",
-    "naive_bayes_confusion", "phrase_search_positional",
-    "weighted_quantiles_price", "brand_weighted_median_price",
-    "bfs_part_supplier_hops", "dedup_edit_distance_names",
-    "interval_union_coverage_users", "table_checksum_orders_monthly",
-    "mode_impute_event_types",
-]
-_R6 = [
-    "glm_poisson_irls_contract",
-    "holt_winters_forecast_capped",
-    "embedding_int8_quantize",
-    "zorder_layout_orders",
-    "skipgram_pairs",
-    "cuped_adjusted_ab",
-    "bom_subtree_rollup",
-    "embedding_covariance_ints",
-    "incremental_join_view",
-    "golden_record_customers",
-    "zipf_fit_tokens",
-    "chisq_independence_cells",
-    "user_activity_streaks",
-    "acf_hourly_counts",
-    "corpus_kl_divergence",
-    "changepoint_hourly_split",
-    "clustering_coefficient_parts",
-    "kcore_parts",
-    "interp_purchase_rate_at_errors",
-    "ccf_view_purchase",
-    "ols_isotonic_calibration",
-    "forecast_mase_baselines",
-    "haar_energy_hourly",
-    "join_size_by_key_stats",
-    "ecdf_dkw_bands_totalprice",
-    "mann_whitney_ab_spend",
-    "event_type_runs",
-    "sorted_neighborhood_pairs",
-    "shortest_path_copurchase",
-    "cohort_ltv_curve",
-    "ucb1_event_type_arms",
-]
-_R8 = [
-    "multimodal_jpeg_decode",
-    "multimodal_mpeg1_audio_decode",
-]
-_R9 = [
-    "multimodal_mp3_decode",
-    "dedup_embedding_lsh_band_profile",
-    "ann_topk_ivfpq",
-    "multimodal_video_decode",
-    "multimodal_video_frame_sample",
-    "exact_substring_spans",
-    "multimodal_png_decode",
-    "multimodal_gif_decode",
-]
-_R10 = [
-    "ann_topk_ivfpq_sqrt",          # n_lists = √N IVF-PQ (clustered corpus)
-    "ann_ivfpq_probe_curve",        # recall-vs-probe curve, shared index
-    "dedup_embedding_lsh_band_auto",  # r = ⌊log₂ n⌋ banded profile
-    "ann_topk_sq8",                 # int8 scalar-quantized scan + re-rank
-]
-_R11 = [
-    "ann_topk_ivfsq8",              # IVF router + int8 scan (IVF40,SQ8)
-    "ann_mmr_diversified",          # greedy MMR re-rank over top-40
-    "ann_topk_hamming",             # binary sign bits + bit_count(xor) scan
-    "ann_filtered_prepost_recall",  # filtered-ANN strategy contract
-    "doc_retrieval_hashed",         # text -> hashed vector -> top-k pipeline
-    "hybrid_retrieval_doc_rrf",     # sparse+dense RRF-fused retrieval
-    "embedding_pca_top_eigvec",     # integer power-iteration PCA
-]
-for _round, _names in ((1, _R1), (2, _R2), (3, _R3), (4, _R4), (5, _R5),
-                       (6, _R6), (8, _R8), (9, _R9), (10, _R10), (11, _R11)):
-    for _n in _names:
-        ROUND_OF[_n] = _round
-_unmapped = [q for q in HEADLINE if q not in ROUND_OF]
-assert not _unmapped, f"HEADLINE queries missing from ROUND_OF: {_unmapped}"
+# Rows whose first execution in a session swings several-fold on janino
+# compile of their large generated expressions (2.1 -> 15.6 s measured,
+# SCALE.md): both timed runs can land inside that window, so they get one
+# untimed run first and the recorded minimum is the plan's warm cost.
+VOLATILE_WARMUP = {
+    "dedup_prefix_filter_jaccard",
+    "ann_topk_pq",
+    "pagerank_part_supplier",
+}
 
 
 def _host_calibration() -> float:
-    """Fixed CPU microbenchmark (min-of-3 sha256 over 32 MiB): a host-
-    speed probe recorded in the detail artifact so degraded-host windows
-    are DETECTABLE in the committed numbers (r9 verdict #2: a 5-10×
-    host-level swing contaminated BENCH_FULL_latest.json and seeded false
-    cross-round regressions; the same code measured 127→225s). Quiet
-    value on the reference box: ~0.05-0.1s; a 2×+ calibration means the
-    run's absolute values are inflated and overlap subtotals must be
-    compared against a quiet re-record."""
+    """Host-speed probe: the min of 3 sha256 passes over 32 MiB (about
+    0.05-0.1 s on a quiet reference box). The detail file records it
+    before and after the run; a value 2x or more above a quiet run means
+    the host was contended and the run's seconds are inflated, so its
+    totals must not be compared with a quiet run's."""
     import hashlib
 
     blob = b"\x5a" * (32 << 20)
@@ -306,18 +189,13 @@ def _host_calibration() -> float:
 
 
 def _quiet_gate(max_tries: int = 10, threshold: float | None = None) -> float:
-    """Optional load gate (SPARK_GRAFT_QUIET_GATE=1): retry the
-    calibration up to ``max_tries`` times with 30s sleeps until it drops
-    under ``threshold`` (env SPARK_GRAFT_QUIET_THRESHOLD, default 2× the
-    min of the EARLIER samples — a self-relative bar that needs no
-    per-host constant). Returns the final calibration.
-
-    Round 11 (r10 ADVICE #1): the gated sample is compared against the
-    min of strictly-earlier samples — the old form compared the first
-    sample against 2× itself, which is always true, making the gate a
-    no-op without SPARK_GRAFT_QUIET_THRESHOLD. Now a baseline sample is
-    taken first; a contended current sample (> 2× the quietest seen
-    before it) sleeps and retries."""
+    """Optional load gate (SPARK_GRAFT_QUIET_GATE=1): take one baseline
+    calibration, then retry the calibration up to ``max_tries`` times with
+    30 s sleeps until it is at most ``threshold`` (env
+    SPARK_GRAFT_QUIET_THRESHOLD; by default 2x the quietest EARLIER
+    sample, a bar relative to this host that needs no per-host constant).
+    A sample is never compared with itself. Returns the final
+    calibration."""
     thr_env = os.environ.get("SPARK_GRAFT_QUIET_THRESHOLD")
     best_earlier = _host_calibration()  # baseline: never gated
     cal = _host_calibration()
@@ -344,6 +222,7 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark(app_name="bicis_spark_bench")
     spark.sparkContext.setLogLevel("ERROR")
+    cpus = spark.sparkContext.defaultParallelism
 
     all_queries = registry.queries()
     names = [n for n in HEADLINE if n in all_queries]
@@ -351,64 +230,14 @@ def main() -> None:
     # warm-up: JVM + parquet footers
     all_queries[names[0]](spark, sf_dir).count()
 
-    # min of 2 runs per query: run 1 pays one-time costs (codegen compile,
-    # persist materialization); run 2 is the steady-state the engine would
-    # show on a long-lived cluster. Both runs execute the full plan.
-    #
-    # Rows with MEASURED session-warmup volatility (SCALE.md r8: the
-    # first-in-session execution of their large generated expressions
-    # swings 2.1→15.6s / 2.1→5.1s on janino compile, and the min-of-2 pair
-    # can land entirely inside that warmup window) get one UNTIMED
-    # pre-warm execution so the recorded min is the plan's warm cost and
-    # cross-round diffs stop manufacturing false regressions (r8 verdict
-    # task #6).
-    # pagerank_part_supplier joined the set in r9: its two-round upward
-    # "drift" decomposed to warmup-position sensitivity (15.6s first-in-
-    # session vs 4.6s warm min, SCALE.md r9) — the recorded value depended
-    # on what ran before it.
-    VOLATILE_WARMUP = {
-        "dedup_prefix_filter_jaccard",
-        "ann_topk_pq",
-        "pagerank_part_supplier",
-    }
-    # Driver-facing per-row value = min across TWO temporally-separated
-    # full passes (round 11, r10 verdict #2), each pass itself a
-    # per-query min-of-2 (run 1 pays codegen/persist; run 2 is the
-    # steady state). One pass's back-to-back runs share a load window,
-    # so a transient contention spike inflates both and survives the
-    # within-pass min — BENCH_r10's driver-recorded total sat 25% above
-    # the committed canonical min-of-3 on pure jitter (verified row by
-    # row in the r10 verdict). Pass 2 re-times every row minutes later;
-    # the cross-pass min is the same discipline the canonical committed
-    # artifact uses. SPARK_GRAFT_BENCH_PASSES overrides (1 restores the
-    # single-pass form for quick local iteration).
+    # A row's value is its minimum across passes (bicis_spark.measure);
+    # the driver runs 2. SPARK_GRAFT_BENCH_PASSES=1 is the quick local form.
     n_passes = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "2")))
-    pass_totals: list[float] = []
-    timings: dict[str, float] = {}
-    for pass_no in range(n_passes):
-        pass_best: dict[str, float] = {}
-        for name in names:
-            if pass_no == 0 and name in VOLATILE_WARMUP:
-                all_queries[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                df = all_queries[name](spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-            pass_best[name] = best
-            timings[name] = round(min(timings.get(name, best), best), 4)
-            # Release builder persists between queries: some builders cache
-            # multi-consumer subtrees (dedup shingles, IVF centroids) with no
-            # release path of their own, and 48 queries of accumulation in one
-            # session contaminates later timings (the round-3 overlap
-            # regression suspect). Within a query, run 2 still reuses run 1's
-            # caches — that steady-state reuse is the thing being measured.
-            release_tracked()
-            spark.catalog.clearCache()
-        pass_totals.append(round(sum(pass_best.values()), 4))
+    rows, pass_totals = measure(
+        spark, {n: all_queries[n] for n in names}, sf_dir,
+        passes=n_passes, prewarm=VOLATILE_WARMUP,
+    )
+    timings = {n: r["sec"] for n, r in rows.items()}
 
     # Accuracy contracts for the approximate ANN scale paths: mean recall@5
     # vs exact brute force at this SF, recorded per round alongside the
@@ -428,47 +257,33 @@ def main() -> None:
             )
             recall[rname + "@5"] = round(float(row["r"]), 4)
 
-    # Streaming surface micro-bench (r4 verdict item #7): each stateful/
-    # windowed streaming query is a full availableNow drain of the staged
-    # events source — report drain seconds and input rows/sec so the
-    # streaming operators carry a recorded throughput point per round.
-    # min-of-2 like the batch rows: run 1 pays source staging + checkpoint
-    # creation; run 2 is the steady drain.
-    n_events = None
-    streaming: dict[str, dict[str, float]] = {}
-    for name in sorted(n for n in all_queries if n.startswith("streaming_")):
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            df = all_queries[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        if n_events is None:
-            from bicis_spark.sources.io import read_table as _rt
-
-            n_events = _rt(spark, sf_dir, "events").count()
-        streaming[name] = {
-            "sec": round(best, 4),
-            "input_rows_per_sec": round(n_events / best, 1),
-        }
-        release_tracked()
-        spark.catalog.clearCache()
+    # Streaming rows: each is a full availableNow drain of the staged
+    # events source, timed like a batch row in one pass (run 1 pays source
+    # staging and checkpoint creation), reported as seconds and input
+    # rows per second.
+    drains, _ = measure(
+        spark,
+        {n: all_queries[n] for n in sorted(all_queries) if n.startswith("streaming_")},
+        sf_dir, passes=1,
+    )
+    n_events = read_table(spark, sf_dir, "events").count()
+    streaming = {
+        n: {"sec": r["sec"], "input_rows_per_sec": round(n_events / r["sec"], 1)}
+        for n, r in drains.items()
+    }
 
     total = round(sum(timings.values()), 4)
-    # Like-for-like cross-round subtotals from the single ROUND_OF map:
-    # rN_overlap_total sums exactly the queries a round-N headline ran.
     overlaps = {
         f"r{N}_overlap_total": round(
-            sum(t for q, t in timings.items() if ROUND_OF[q] <= N), 4
+            sum(t for q, t in timings.items() if HEADLINE[q] <= N), 4
         )
-        for N in range(1, max(ROUND_OF.values()) + 1)
+        for N in range(1, max(HEADLINE.values()) + 1)
     }
     streaming_total = round(sum(v["sec"] for v in streaming.values()), 4)
 
-    # Full per-query + streaming detail goes to a file (the r5 bench line
-    # with 73 queries inline outgrew the driver's stdout-tail capture and
-    # voided the bench gate — BENCH_r05 "parsed": null). The stdout line
-    # below stays compact and stable-size as the headline grows.
+    # Per-row detail goes to a file; the stdout line stays compact and of
+    # stable size as the headline grows, since the driver captures only a
+    # bounded stdout tail.
     try:
         load_now = round(os.getloadavg()[0], 2)
     except OSError:
@@ -482,19 +297,21 @@ def main() -> None:
         "host_calibration_pre_sec": cal_pre,
         "host_calibration_post_sec": _host_calibration(),
         "host_loadavg_1m_at_end": load_now,
+        "cpus": cpus,
         "queries": timings,
+        "rows": rows,
         **overlaps,
         "ann_mean_recall": recall,
         "streaming": streaming,
         "streaming_total_sec": streaming_total,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
-    # SPARK_GRAFT_DETAIL_FILE overrides the detail-file path so test runs
-    # (tests/test_bench_contract.py) never clobber the committed round
-    # artifact — the r6 judge observed a plain `pytest tests/` replace the
-    # sf0.1 BENCH_FULL_latest.json with an sf0.001 run mid-audit.
+    # The detail file is named by scale and core count, so a run never
+    # overwrites the detail of another (sf, cpus) setting.
+    # SPARK_GRAFT_DETAIL_FILE overrides the path (tests write to a temp dir
+    # and leave the committed detail files alone).
     full_path = os.environ.get("SPARK_GRAFT_DETAIL_FILE") or os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL_latest.json"
+        os.path.dirname(os.path.abspath(__file__)), f"BENCH_FULL_sf{sf}_c{cpus}.json"
     )
     with open(full_path, "w") as f:
         json.dump(full, f, indent=1, sort_keys=True)

@@ -12,94 +12,40 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bicis_spark.measure import measure  # noqa: E402
 from bicis_spark.plans import queries as registry  # noqa: E402
 from bicis_spark.session import get_spark  # noqa: E402
 
-PROBES = [
-    "hour_profile",          # agg+join on events
-    "pricing_summary",       # scan-agg on lineitem (largest table)
-    "next_window_target",    # bucketed window
-    "dedup_minhash_lsh_fast",  # LSH self-join on documents
-    "ann_topk_lsh",          # bucketed ANN on embeddings
-    "sequence_packing",      # per-shard window on documents
-    # round-6 additions
-    "embedding_covariance_ints",  # broadcast-dim pair agg on embeddings
-    "skipgram_pairs",        # array-native pair gen on documents
-    "zorder_layout_orders",  # map-side z-value + one agg on orders
-    "incremental_join_view",  # 4-term delta join decomposition
-    # round-7 additions: the re-planned rows
-    "ols_isotonic_calibration",   # one-pass cents histogram + bounded frames
-    "kcore_parts",                # cascading k=80 peel, combination pair build
-    "clustering_coefficient_parts",  # degree-oriented wedge join
-    # round-8 additions (r7 verdict task #6): remaining top-10 bench rows
-    # + the rest of the dedup/ANN family, probed one SF up (sf0.3/sf1 via
-    # scripts/gen_testdata.py into testdata_local/)
-    "golden_record_customers",    # FastSS linkage -> CC -> survivorship
-    "shortest_path_copurchase",   # Bellman-Ford fixed rounds
-    "pagerank_part_supplier",     # fixed-point iteration
-    "corpus_kl_divergence",       # closed-form absent-mass decomposition
-    "frequent_itemsets_parts",    # k=2/3 itemset self-joins
-    "dedup_exact",                # fingerprint shuffle
-    "dedup_simhash",              # 64-bit banded hamming blocks
-    "dedup_embedding_cosine_lsh",  # sign-bit banded blocking + exact verify
-    "semantic_dedup_two_level_flags",  # super->sub k-means shards
-    "ann_topk_ivf",               # IVF lists, n_probe=6
-    "ann_topk_pq",                # PQ/ADC + exact re-rank
-    # round-9 additions: the regime-gated low-tau pairs row (now kmeans
-    # blocking), the high-tau banded pruning profile, and the probed-list
-    # ADC composition
-    "dedup_embedding_lsh_band_profile",
-    "ann_topk_ivfpq",
-    "exact_substring_spans",
-    "multimodal_video_decode",
-    # round-10 additions: the fixed-size-|Q| re-declared rows re-probed
-    # (exponents were 1.97 for pq under the growing-|Q| rule), plus the
-    # √N-list IVF-PQ on the clustered corpus and the auto-r banded profile
-    "ann_topk_bruteforce",
-    "ann_topk_ivfpq_sqrt",
-    "dedup_embedding_lsh_band_auto",
-    # round-11 additions: the int8 scalar-quantized scan (landed after
-    # the r10 probe ran — r10 verdict #5) — expected ~1.0 (fixed-|Q|
-    # linear scan); the IVF-SQ8 composition; the MMR diversified re-rank
-    # (N-dependence only in its shortlist stage)
-    "ann_topk_sq8",
-    "ann_topk_ivfsq8",
-    "ann_mmr_diversified",
-    "ann_topk_hamming",
-    "doc_retrieval_hashed",
-    "hybrid_retrieval_doc_rrf",
-    "embedding_pca_top_eigvec",
-]
-
-TABLE_OF = {
-    "hour_profile": "events",
-    "pricing_summary": "lineitem",
-    "next_window_target": "events",
-    "dedup_minhash_lsh_fast": "documents",
-    "ann_topk_lsh": "embeddings",
-    "sequence_packing": "documents",
-    "embedding_covariance_ints": "embeddings",
-    "skipgram_pairs": "documents",
-    "zorder_layout_orders": "orders",
-    "incremental_join_view": "lineitem",
-    "ols_isotonic_calibration": "lineitem",
-    "kcore_parts": "lineitem",
-    "clustering_coefficient_parts": "lineitem",
-    "golden_record_customers": "customer",
-    "shortest_path_copurchase": "lineitem",
-    "pagerank_part_supplier": "lineitem",
-    "corpus_kl_divergence": "documents",
-    "frequent_itemsets_parts": "lineitem",
-    "dedup_exact": "documents",
-    "dedup_simhash": "documents",
-    "dedup_embedding_cosine_lsh": "embeddings",
-    "semantic_dedup_two_level_flags": "embeddings",
-    "ann_topk_ivf": "embeddings",
-    "ann_topk_pq": "embeddings",
+#: Probe rows in run order, each with the table whose row count is its
+#: input size.
+PROBES = {
+    "hour_profile": "events",                 # agg+join on events
+    "pricing_summary": "lineitem",            # scan-agg on lineitem (largest table)
+    "next_window_target": "events",           # bucketed window
+    "dedup_minhash_lsh_fast": "documents",    # LSH self-join on documents
+    "ann_topk_lsh": "embeddings",             # bucketed ANN on embeddings
+    "sequence_packing": "documents",          # per-shard window on documents
+    "embedding_covariance_ints": "embeddings",  # broadcast-dim pair agg on embeddings
+    "skipgram_pairs": "documents",            # array-native pair gen on documents
+    "zorder_layout_orders": "orders",         # map-side z-value + one agg on orders
+    "incremental_join_view": "lineitem",      # 4-term delta join decomposition
+    "ols_isotonic_calibration": "lineitem",   # one-pass cents histogram + bounded frames
+    "kcore_parts": "lineitem",                # cascading k=80 peel, combination pair build
+    "clustering_coefficient_parts": "lineitem",  # degree-oriented wedge join
+    "golden_record_customers": "customer",    # FastSS linkage -> CC -> survivorship
+    "shortest_path_copurchase": "lineitem",   # Bellman-Ford fixed rounds
+    "pagerank_part_supplier": "lineitem",     # fixed-point iteration
+    "corpus_kl_divergence": "documents",      # closed-form absent-mass decomposition
+    "frequent_itemsets_parts": "lineitem",    # k=2/3 itemset self-joins
+    "dedup_exact": "documents",               # fingerprint shuffle
+    "dedup_simhash": "documents",             # 64-bit banded hamming blocks
+    "dedup_embedding_cosine_lsh": "embeddings",  # sign-bit banded blocking + exact verify
+    "semantic_dedup_two_level_flags": "embeddings",  # super->sub k-means shards
+    "ann_topk_ivf": "embeddings",             # IVF lists, n_probe=6
+    "ann_topk_pq": "embeddings",              # PQ/ADC + exact re-rank
     "dedup_embedding_lsh_band_profile": "embeddings",
     "ann_topk_ivfpq": "embeddings",
     "exact_substring_spans": "documents",
@@ -118,15 +64,19 @@ TABLE_OF = {
 
 
 def _sqrt_build_search_split(spark, sf_dir: str) -> dict[str, float]:
-    """Build-vs-search cost split for the √N IVF-PQ row (round 11, r10
-    verdict #3's done-criterion): time (a) the index build alone — coarse
-    training on the bounded sample + the one-pass full assignment + PQ
-    encode, materialized via a count — and (b) the search stage over the
-    pre-built persisted index. The declared row times (a)+(b) fused; this
-    split shows which term carries the sf1→sf3 growth."""
-    from bicis_spark.caching import release_tracked
+    """Build-vs-search split for the √N IVF-PQ row: the builder below
+    builds the index (coarse training on the bounded sample, the one-pass
+    full assignment, PQ encode) and materializes it, then returns the
+    search over the persisted index. The record's ``build_s`` is the
+    index build and its ``exec_s`` the search; the declared row runs both
+    fused. The search is given the fixed query count, as the declared row
+    is, so no search job runs on the build side; only the (job-free)
+    construction of the search plan does. Build and search come from the
+    same run, the faster of the two passes; one run per pass, so each
+    timed build starts without caches."""
     from bicis_spark.extensions.similarity import _ivfpq_build, _ivfpq_search
     from bicis_spark.plans.extension_queries import (
+        _ANN_Q_N,
         _PQ_DIMS,
         _PQ_ITERS,
         _PQ_K,
@@ -141,9 +91,8 @@ def _sqrt_build_search_split(spark, sf_dir: str) -> dict[str, float]:
     emb = _clustered_corpus(spark, sf_dir)
     queries = _ann_queries(emb)
     n_lists, n_probe, train_sample = _sqrt_sizing(emb)
-    best_b, best_s = float("inf"), float("inf")
-    for _ in range(2):
-        t0 = time.perf_counter()
+
+    def build_then_search(spark, sf_dir):
         c, cents, cb, codes = _ivfpq_build(
             emb, n_centroids_mod=50, max_lists=None, ivf_train_iters=1,
             n_subspaces=_PQ_SUBS, sub_dims=_PQ_DIMS, seed_mod=_PQ_MOD,
@@ -152,22 +101,20 @@ def _sqrt_build_search_split(spark, sf_dir: str) -> dict[str, float]:
             train_sample=train_sample,
         )
         codes.count()  # materialize the persisted index
-        best_b = min(best_b, time.perf_counter() - t0)
-        t0 = time.perf_counter()
-        _ivfpq_search(
+        return _ivfpq_search(
             c, cents, cb, codes, queries, k=5, n_probe=n_probe,
             n_subspaces=_PQ_SUBS, sub_dims=_PQ_DIMS, rerank=_PQ_RERANK,
-            id_col="vec_id", vec_col="embedding",
-        ).write.format("noop").mode("overwrite").save()
-        best_s = min(best_s, time.perf_counter() - t0)
-        release_tracked()
-        spark.catalog.clearCache()
-    return {"build_sec": round(best_b, 4), "search_sec": round(best_s, 4)}
+            id_col="vec_id", vec_col="embedding", n_queries=_ANN_Q_N,
+        )
+
+    records, _ = measure(spark, {"split": build_then_search}, sf_dir, runs=1)
+    return {"build_sec": records["split"]["build_s"],
+            "search_sec": records["split"]["exec_s"]}
 
 
 def main() -> None:
     root = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata"
-    probes = PROBES
+    probes = list(PROBES)
     if len(sys.argv) > 2:  # optional comma-separated probe subset
         wanted = set(sys.argv[2].split(","))
         probes = [p for p in PROBES if p in wanted]
@@ -184,7 +131,7 @@ def main() -> None:
     rows_per_sf: dict[str, dict[str, int]] = {}
     for sf in sfs:
         rows_per_sf[sf] = {}
-        for t in set(TABLE_OF.values()):
+        for t in set(PROBES.values()):
             rows_per_sf[sf][t] = duckdb.sql(
                 f"SELECT count(*) FROM '{os.path.join(root, sf, t)}.parquet'"
             ).fetchone()[0]
@@ -194,18 +141,12 @@ def main() -> None:
         out[name] = {}
         for sf in sfs:
             sf_dir = os.path.join(root, sf)
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                qs[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                best = min(best, time.perf_counter() - t0)
-            n = rows_per_sf[sf][TABLE_OF[name]]
+            sec = measure(spark, {name: qs[name]}, sf_dir, passes=1)[0][name]["sec"]
+            n = rows_per_sf[sf][PROBES[name]]
             out[name][sf] = {
-                "sec": round(best, 4),
+                "sec": sec,
                 "input_rows": n,
-                "rows_per_sec": round(n / best),
+                "rows_per_sec": round(n / sec),
             }
             if name == "ann_topk_ivfpq_sqrt":
                 out[name][sf].update(_sqrt_build_search_split(spark, sf_dir))

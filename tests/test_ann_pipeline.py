@@ -47,6 +47,11 @@ ANN_JOB_BUDGET = {
 }
 
 
+#: Rows whose result at sf0.001 must not be empty: an empty result lets
+#: the oracle check compare two empty sets and miss a wrong threshold.
+NON_EMPTY = {"dedup_embedding_cosine"}
+
+
 @pytest.mark.parametrize("name", sorted(ANN_JOB_BUDGET))
 def test_ann_row_job_budget(name, spark, sf_dir, new_job_ids):
     """A declared ANN row runs no more Spark jobs than its budget. Oracle
@@ -55,10 +60,11 @@ def test_ann_row_job_budget(name, spark, sf_dir, new_job_ids):
     release_tracked()
     try:
         with new_job_ids() as ids:
-            ALL[name](spark, sf_dir).collect()
+            rows = ALL[name](spark, sf_dir).collect()
     finally:
         release_tracked()
     assert len(ids) <= ANN_JOB_BUDGET[name], (name, len(ids))
+    assert rows or name not in NON_EMPTY, name
 
 
 @pytest.mark.parametrize(

@@ -1,11 +1,12 @@
 """bench.py driver contract: prints exactly one COMPACT JSON line with the
-required keys (r5 verdict item #1 — the inline 73-query map outgrew the
-driver's stdout-tail capture and voided the bench gate, so per-query detail
-now lives in BENCH_FULL_latest.json and the stdout line stays stable-size),
+required keys (an inline per-query map once outgrew the driver's
+stdout-tail capture and voided the bench gate, so per-row detail lives in
+a BENCH_FULL_*.json detail file and the stdout line stays stable-size),
 honoring the env overrides."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import subprocess
@@ -17,6 +18,13 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # caused by a ~5 KB line. Keep a hard margin under the observed ~3 KB
 # capture window so the gate can never silently void again.
 _MAX_LINE_BYTES = 1500
+
+
+def _detail_signatures() -> dict[str, tuple[float, int]]:
+    return {
+        p: (os.path.getmtime(p), os.path.getsize(p))
+        for p in glob.glob(os.path.join(_REPO, "BENCH_FULL_*.json"))
+    }
 
 
 def test_bench_json_contract(tmp_path):
@@ -43,6 +51,7 @@ def test_bench_json_contract(tmp_path):
         if os.path.exists(repo_artifact)
         else None
     )
+    details_before = _detail_signatures()
     proc = subprocess.run(
         [sys.executable, "bench.py"],
         capture_output=True,
@@ -84,3 +93,8 @@ def test_bench_json_contract(tmp_path):
         else None
     )
     assert artifact_sig_after == artifact_sig_before
+    # ... and so must every other detail file in the repo: none written,
+    # none changed (the default name is BENCH_FULL_sf{sf}_c{cpus}.json)
+    assert _detail_signatures() == details_before
+    assert full["cpus"] == 4
+    assert full["rows"].keys() == full["queries"].keys()

@@ -72,6 +72,9 @@ def test_embedding_neardup_and_topk(spark):
     ).collect()}
     assert (0, 1) in pairs and pairs[(0, 1)] > 0.99
     assert (0, 2) not in pairs
+    # a pair whose cosine equals the threshold is a near-dup (>=, not >)
+    at_tau = embedding_neardup_pairs(df, threshold=pairs[(0, 1)]).collect()
+    assert (0, 1) in {(r["vec_a"], r["vec_b"]) for r in at_tau}
 
     topk = ann_topk_bruteforce(df, df.where(F.col("vec_id") == 0), k=2)
     rows = sorted(topk.collect(), key=lambda r: r["rank"])
