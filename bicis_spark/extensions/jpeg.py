@@ -390,6 +390,8 @@ def decode_jpeg(payload: bytes) -> dict:
             comps = []
             for i in range(nc):
                 cid, hv, tq = struct.unpack_from(">BBB", body, 6 + 3 * i)
+                if not (1 <= hv >> 4 <= 4 and 1 <= hv & 0xF <= 4):  # T.81 B.2.2
+                    raise ValueError(f"sampling factors {hv >> 4}x{hv & 0xF} not in 1..4")
                 comps.append({"id": cid, "h": hv >> 4, "v": hv & 0xF, "tq": tq})
         elif marker in (0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
             raise ValueError("non-baseline JPEG (progressive/arithmetic)")
@@ -409,6 +411,13 @@ def decode_jpeg(payload: bytes) -> dict:
         raise ValueError("missing SOF/SOS")
 
     by_id = {c["id"]: c for c in comps}
+    # a scan may only name frame components, and tables defined before it
+    for cs, td, ta in scan:
+        if cs not in by_id:
+            raise ValueError(f"scan component {cs} not in frame")
+        tables = (by_id[cs]["tq"] in qtabs, (0, td) in htabs, (1, ta) in htabs)
+        if not all(tables):
+            raise ValueError(f"scan component {cs} names an undefined table")
     scomps = [
         {**by_id[cs], "td": td, "ta": ta} for cs, td, ta in scan
     ]
@@ -417,16 +426,12 @@ def decode_jpeg(payload: bytes) -> dict:
     mcus_x = (width + 8 * hmax - 1) // (8 * hmax)
     mcus_y = (height + 8 * vmax - 1) // (8 * vmax)
 
-    # first-scan-component sample plane (luma), MCU-padded then cropped
-    plane_w = mcus_x * 8 * scomps[0]["h"]
-    plane_h = mcus_y * 8 * scomps[0]["v"]
-    plane = np.zeros((plane_h, plane_w), dtype=np.int64)
-
     reader = _BitReader(payload, pos)
     dc_pred = {c["id"]: 0 for c in scomps}
     n_blocks = 0
     dc_dequant_sum = 0
     coef_abs_sum = 0
+    pixel_sum = 0
     rst = 0
     for m in range(mcus_x * mcus_y):
         if restart_interval and m and m % restart_interval == 0:
@@ -440,6 +445,8 @@ def decode_jpeg(payload: bytes) -> dict:
             act = htabs[(1, c["ta"])]
             for bi in range(c["h"] * c["v"]):
                 size = _decode_huffman(reader, dct)
+                if size > 15:  # DC difference categories stop at 15 (T.81 F.1.2.1)
+                    raise ValueError(f"DC magnitude category {size} > 15")
                 diff = _extend(reader.read_bits(size), size)
                 dc_pred[c["id"]] += diff
                 zz = [0] * 64
@@ -464,13 +471,14 @@ def decode_jpeg(payload: bytes) -> dict:
                 n_blocks += 1
                 dc_dequant_sum += int(coef[0, 0])
                 coef_abs_sum += int(np.abs(coef).sum())
-                if si == 0:  # place first component's samples
+                if si == 0:  # first component's samples inside the image
                     bv, bh = divmod(bi, c["h"])
                     y0 = (my * c["v"] + bv) * 8
                     x0 = (mx * c["h"] + bh) * 8
-                    plane[y0 : y0 + 8, x0 : x0 + 8] = _idct_block(coef)
+                    if y0 < height and x0 < width:
+                        block = _idct_block(coef)[: height - y0, : width - x0]
+                        pixel_sum += int(block.sum())
 
-    pixel_sum = int(plane[:height, :width].sum())
     return {
         "width": width,
         "height": height,

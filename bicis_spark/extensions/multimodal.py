@@ -1,25 +1,23 @@
 """Multimodal columns: image/audio/video as opaque binary + typed metadata.
 
-The container has no codec libraries, so the decoders are pure Python —
-and REAL for BMP (24bpp struct layout), WAV (RIFF PCM16), baseline
-JPEG (extensions/jpeg.py: marker walk, canonical Huffman, zigzag +
-dequant, fixed-point IDCT), MPEG-1 Layer I audio
-(extensions/mpeg_audio.py: frame walk, bit allocation, scalefactors,
-integer requantization lattice), and MPEG-1 Layer III / "MP3"
-(extensions/mpeg_layer3.py, round 9: side info, bit reservoir,
-scfsi scalefactors, region/table-dispatched Huffman pairs with linbits
-escapes, budget-terminated count1 quadruples, x^(4/3) fixed-point
-requantization — entropy codebooks canonical over spec shapes with the
-ISO-data drop-in seam documented there), PNG (extensions/png.py,
-round 9: WIRE-FORMAT real — CRC-verified chunk walk, stdlib-zlib
-DEFLATE, all five scanline defilters), and MJPEG AVI video
-(extensions/avi.py: verified-idx1 demux + per-frame JPEG decode), each
-hash-gated by a SQL oracle that replays the expected features
-arithmetically. The
-Spark-side plumbing is shared: binary columns, explicit schemas,
-Arrow-batched ``mapInPandas`` with bounded batch sizes, and metadata
-pushdown-friendly layout (metadata columns separate from payload so
-filters/projections never touch bytes).
+The container has no codec libraries, so every decoder is pure Python and
+parses the real byte layout: BMP (24bpp struct layout) and WAV (RIFF PCM16)
+here, baseline JPEG (extensions/jpeg.py), MPEG-1 Layer I audio
+(extensions/mpeg_audio.py), MPEG-1 Layer III / "MP3"
+(extensions/mpeg_layer3.py, with its entropy-codebook seam documented
+there), PNG (extensions/png.py), animated GIF (extensions/gif.py) and MJPEG
+AVI video (extensions/avi.py). Each format is hash-gated by a SQL oracle
+that replays the expected features arithmetically from doc_id, so a MATCH
+proves the decoder inverts the encoder's byte layout.
+
+The Spark side is two stages shared by every format: ``_synthesize`` builds
+a binary media table from document ids, and ``_decode`` maps one
+``bytes -> dict`` decoder over the payload column into an explicit schema.
+Both are Arrow-batched ``mapInPandas``; metadata columns stay separate from
+the payload so filters and projections never touch bytes. An undecodable
+payload becomes a NULL-feature row, or raises when ``strict``: a bad object
+must not abort a 100 TB scan, so the decoders check the header fields that
+size a loop or an allocation and reject bad ones with ``ValueError``.
 
 At 100 TB: payloads live in parquet binary columns (or object-store URIs for
 >>1 MB assets); ``mapInPandas`` keeps the decode pipeline streaming —
@@ -28,7 +26,9 @@ one Arrow batch in flight per task, never a full-partition materialization.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import struct
+import zlib
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -60,6 +60,78 @@ BINARY_TABLE_SCHEMA = StructType(
     ]
 )
 
+# What a decoder raises for a payload it cannot parse: ``_decode`` turns
+# these into NULL-feature rows unless strict. Any other exception is a
+# decoder bug, and it aborts the job.
+_DECODE_ERRORS = (ValueError, struct.error, IndexError, zlib.error)
+
+
+def _synthesize(
+    docs: DataFrame, id_col: str, synth: Callable[[int], tuple[str, bytes]]
+) -> DataFrame:
+    """Binary media table with one ``synth(doc_id) -> (media_type,
+    payload)`` row per document. Distributed synthesis; at scale this
+    stage is replaced by the arriving binary column.
+
+    The ids are repartitioned to full parallelism first. The codec work
+    behind this table is CPU-bound Python and the documents scan is
+    typically ONE parquet split at test SFs; without the exchange the
+    whole encode+decode chain runs on a single core (measured on the
+    sf0.1 MPEG-1 row: 2.7s single-threaded; spread across 32 cores it is
+    job-overhead bound). The partition count is pinned EXPLICITLY: AQE
+    coalesces a ~40 KB id shuffle to one partition (its advisory size is
+    byte-based) and cannot see the CPU-bound Python behind it."""
+    ids = docs.select(F.col(id_col).cast("long").alias("doc_id")).repartition(
+        docs.sparkSession.sparkContext.defaultParallelism, F.col("doc_id")
+    )
+
+    def synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = []
+            for doc_id in pdf["doc_id"]:
+                d = int(doc_id)
+                media_type, content = synth(d)
+                out.append((d, media_type, content, len(content)))
+            yield pd.DataFrame(out, columns=BINARY_TABLE_SCHEMA.fieldNames())
+
+    return ids.mapInPandas(synth_batches, BINARY_TABLE_SCHEMA)
+
+
+def _decode(
+    binary_df: DataFrame,
+    schema: StructType,
+    decode: Callable[[bytes], dict],
+    strict: bool,
+) -> DataFrame:
+    """Map ``decode(payload) -> dict`` over the payload column into
+    ``schema``. ``doc_id``, and ``media_type`` where the schema has it,
+    pass through; the other columns come from the decoder's dict (keys
+    outside the schema are dropped) and are cast to nullable Int64, which
+    carries NULLs through Arrow. A NULL or undecodable payload gives a
+    NULL-feature row that stays visible downstream, or raises when
+    ``strict``."""
+    cols = schema.fieldNames()
+    keys = [c for c in ("doc_id", "media_type") if c in cols]
+
+    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = []
+            for content, *vals in zip(pdf["content"], *(pdf[k] for k in keys)):
+                row = dict(zip(keys, vals))
+                try:
+                    if content is None:
+                        raise ValueError("NULL payload")
+                    row.update(decode(bytes(content)))
+                except _DECODE_ERRORS:
+                    if strict:
+                        raise
+                out.append(row)
+            yield pd.DataFrame(out, columns=cols).astype(
+                {c: "Int64" for c in cols if c != "media_type"}
+            )
+
+    return binary_df.mapInPandas(decode_batches, schema)
+
 
 def to_binary_table(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Wrap a text corpus as a binary-payload media table (the test-data
@@ -73,51 +145,33 @@ def to_binary_table(docs: DataFrame, id_col: str = "doc_id", text_col: str = "te
     )
 
 
+def _byte_features(payload: bytes) -> dict:
+    return {
+        "n_bytes": len(payload),
+        "first_byte": payload[0] if payload else -1,
+        "byte_sum_16": sum(payload[:16]),
+    }
+
+
+def _no_codec(payload: bytes) -> dict:
+    raise ValueError(
+        "strict decode reached the generic byte-features stage: "
+        "no registered codec claimed this payload class — route "
+        "BMP/WAV/JPEG/MPEG-1 Layer I/III payloads through "
+        "decode_codec_features (extensions/jpeg.py, "
+        "extensions/mpeg_audio.py, extensions/mpeg_layer3.py)"
+    )
+
+
 def decode_media(binary_df: DataFrame, strict: bool = False) -> DataFrame:
-    """The GENERIC decode/feature-extract stage: ``mapInPandas`` over Arrow
-    batches, format-agnostic byte features (payload length, first byte,
-    sum of the first 16 bytes) — the stage for payloads with NO
-    registered decoder. Every synthesized format here has a real one —
-    BMP/WAV/JPEG/MPEG-1 Layer I and Layer III go through
-    ``decode_codec_features`` / ``decode_jpeg_features`` /
-    ``decode_mpeg1_features`` / ``decode_mp3_features`` — so
-    ``strict=True`` on this generic stage raises ValueError (the payload
-    reached the byte-features fallback instead of a codec)."""
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if strict:
-                raise ValueError(
-                    "strict decode reached the generic byte-features stage: "
-                    "no registered codec claimed this payload class — route "
-                    "BMP/WAV/JPEG/MPEG-1 Layer I/III payloads through "
-                    "decode_codec_features (extensions/jpeg.py, "
-                    "extensions/mpeg_audio.py, extensions/mpeg_layer3.py)"
-                )
-            payloads = pdf["content"]
-            # NULL payloads (e.g. encode of a NULL text) surface as NULL
-            # features rather than crashing the Arrow batch — undecodable
-            # rows must stay visible downstream, not abort the job. The
-            # nullable Int64 dtype carries the NULLs through Arrow.
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_type": pdf["media_type"],
-                    "n_bytes": payloads.map(
-                        lambda b: None if b is None else len(b)
-                    ).astype("Int64"),
-                    "first_byte": payloads.map(
-                        lambda b: None
-                        if b is None
-                        else (int(b[0]) if len(b) else -1)
-                    ).astype("Int64"),
-                    "byte_sum_16": payloads.map(
-                        lambda b: None if b is None else int(sum(b[:16]))
-                    ).astype("Int64"),
-                }
-            )
-
-    return binary_df.mapInPandas(decode_batches, DECODED_SCHEMA)
+    """The GENERIC decode stage for payloads with NO registered decoder:
+    format-agnostic byte features (payload length, first byte (-1 when
+    empty), sum of the first 16 bytes). Every synthesized format here has
+    a real decoder, so ``strict=True`` raises ValueError on the first
+    payload that reaches this byte-features fallback instead of a codec."""
+    return _decode(
+        binary_df, DECODED_SCHEMA, _no_codec if strict else _byte_features, strict
+    )
 
 
 def frame_sample(binary_df: DataFrame, every_n_bytes: int = 64) -> DataFrame:
@@ -153,46 +207,20 @@ def frame_sample(binary_df: DataFrame, every_n_bytes: int = 64) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Real pure-Python codecs (BMP/WAV round-5; baseline JPEG round-8).
+# BMP / WAV codecs and the magic-dispatched codec stage.
 #
-# The container has no PIL/libav, but BMP (BITMAPINFOHEADER, 24bpp) and WAV
-# (RIFF PCM16) are plain struct layouts a few dozen lines of stdlib parse,
-# and baseline JPEG (extensions/jpeg.py) is a marker walk + canonical
-# Huffman + zigzag/dequant + fixed-point IDCT implementable from the public
-# T.81 spec. The encode side synthesizes payloads deterministically from
-# (doc_id) so a SQL oracle can replay the expected features arithmetically —
-# the hash gate then proves the decoder truly inverts the byte layout
-# (BMP padding rows are poisoned 0xAA; JPEG coefficients ride variable-run
-# Huffman codes the oracle never sees, only their decoded consequences).
+# BMP (BITMAPINFOHEADER, 24bpp) and WAV (RIFF PCM16) are plain struct
+# layouts a few dozen lines of stdlib parse. The encode side synthesizes
+# payloads deterministically from doc_id so a SQL oracle can replay the
+# expected features arithmetically: the hash gate then proves the decoder
+# inverts the byte layout (BMP padding rows are poisoned 0xAA, so a decoder
+# that sums them is caught).
 #
 # At 100 TB the synthesize step disappears (payloads arrive in the binary
-# column); decode_codec_features is the production path: magic-dispatched,
-# Arrow-batched, one in-flight batch per task, undecodable rows surface as
-# NULL-feature rows instead of aborting the job.
+# column); decode_codec_features is the production path.
 # ---------------------------------------------------------------------------
 
-import struct
-import zlib
-
 _BMP_PAD = 0xAA  # poison value: decoders must SKIP padding, not sum it
-
-
-def _parallel_ids(docs: DataFrame, id_col: str) -> DataFrame:
-    """Long-cast id column repartitioned to full parallelism for synthesis.
-
-    The codec work behind this table is CPU-bound Python and the documents
-    scan is typically ONE parquet split at test SFs — without the exchange
-    the whole encode+decode chain runs on a single core (measured on the
-    sf0.1 MPEG-1 row: 2.7s single-threaded; spread across 32 cores it is
-    job-overhead bound). At 100 TB real payloads arrive pre-partitioned and
-    the synth stage is replaced by the binary column anyway. The partition
-    count is pinned EXPLICITLY: AQE coalesces a ~40 KB id shuffle to one
-    partition (its advisory size is byte-based) and cannot see the
-    CPU-bound Python behind it."""
-    spark = docs.sparkSession
-    return docs.select(F.col(id_col).cast("long").alias("doc_id")).repartition(
-        spark.sparkContext.defaultParallelism, F.col("doc_id")
-    )
 
 
 def synth_bmp(doc_id: int) -> bytes:
@@ -243,8 +271,13 @@ def decode_bmp(payload: bytes) -> dict:
     hdr_size, w, h, planes, bpp, comp = struct.unpack_from("<IiiHHI", payload, 14)
     if hdr_size < 40 or planes != 1 or bpp != 24 or comp != 0:
         raise ValueError("unsupported BMP variant")
+    if w <= 0 or h == 0:
+        raise ValueError(f"BMP dimensions {w}x{h} out of range")
     h_abs = abs(h)  # negative height = top-down; same pixel payload
     stride = (w * 3 + 3) // 4 * 4
+    # the header's height drives the row loop: bound it by the payload
+    if off + (h_abs - 1) * stride + w * 3 > len(payload):
+        raise ValueError("BMP pixel rows exceed the payload")
     pixel_sum = 0
     for row in range(h_abs):
         start = off + row * stride
@@ -275,6 +308,8 @@ def decode_wav(payload: bytes) -> dict:
             )
             if fmt_tag != 1 or bits != 16:
                 raise ValueError("unsupported WAV encoding")
+            if channels < 1 or rate < 1:
+                raise ValueError(f"WAV channels={channels} rate={rate} out of range")
         elif cid == b"data":
             if rate is None:
                 raise ValueError("data chunk before fmt")
@@ -307,122 +342,75 @@ CODEC_SCHEMA = StructType(
 
 
 def synth_media(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Build a real binary media table from the corpus: even doc_ids get a
-    BMP payload, odd get a WAV. mapInPandas keeps synthesis distributed —
-    at scale this stage is replaced by the arriving binary column."""
-    ids = _parallel_ids(docs, id_col)  # pinned exchange — see helper
+    """Real binary media table from the corpus: even doc_ids get a BMP
+    payload, odd get a WAV."""
+    return _synthesize(
+        docs,
+        id_col,
+        lambda d: ("image/bmp", synth_bmp(d))
+        if d % 2 == 0
+        else ("audio/wav", synth_wav(d)),
+    )
 
-    def synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                if d % 2 == 0:
-                    mt, content = "image/bmp", synth_bmp(d)
-                else:
-                    mt, content = "audio/wav", synth_wav(d)
-                out.append((d, mt, content, len(content)))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "media_type", "content", "n_bytes"]
-            )
 
-    return ids.mapInPandas(synth_batches, BINARY_TABLE_SCHEMA)
+def _codec_features(payload: bytes) -> dict:
+    """Dispatch on the payload's magic bytes (BMP / RIFF WAV / JPEG SOI /
+    PNG signature / MPEG audio sync, the header's layer bits telling Layer
+    I from Layer III) to the real codec; CODEC_SCHEMA keeps the image or
+    the audio columns of its result. MPEG audio maps onto the audio
+    columns: Layer I n_samples = coded subband samples and sample_abs_sum
+    = the integer requantization-lattice |c| sum; Layer III n_samples =
+    2·big_values + 4·count1 coded frequency lines and sample_abs_sum = the
+    Huffman-value |X| sum. Each branch imports only its own codec, since
+    these imports run on every row."""
+    if payload[:2] == b"BM":
+        return decode_bmp(payload)
+    if payload[:4] == b"RIFF":
+        return decode_wav(payload)
+    if payload[:2] == b"\xff\xd8":
+        from bicis_spark.extensions.jpeg import decode_jpeg
+
+        return decode_jpeg(payload)
+    if payload[:8] == b"\x89PNG\r\n\x1a\n":
+        from bicis_spark.extensions.png import decode_png
+
+        return decode_png(payload)
+    # length-safe: a 0- or 1-byte payload must fall through to "unknown
+    # magic", not raise IndexError
+    if len(payload) >= 4 and payload[0] == 0xFF and (payload[1] & 0xF0) == 0xF0:
+        if (payload[1] >> 1) & 0b11 == 0b01:  # layer bits: 11 = I, 01 = III
+            from bicis_spark.extensions.mpeg_layer3 import decode_layer3
+
+            d = decode_layer3(payload)
+            return {
+                "sample_rate": d["sample_rate"],
+                "n_samples": 2 * d["big_values_sum"] + 4 * d["count1_sum"],
+                "sample_abs_sum": d["huff_abs_sum"],
+            }
+        from bicis_spark.extensions.mpeg_audio import decode_layer1
+
+        d = decode_layer1(payload)
+        return {
+            "sample_rate": d["sample_rate"],
+            "n_samples": d["n_samples_coded"],
+            "sample_abs_sum": d["requant_abs_sum"],
+        }
+    raise ValueError("unknown magic")
 
 
 def decode_codec_features(binary_df: DataFrame, strict: bool = False) -> DataFrame:
-    """Production decode path: dispatch on payload magic bytes (BMP / RIFF
-    WAV / JPEG SOI / MPEG audio sync, with the header's layer bits
-    telling Layer I from Layer III), parse with the real pure-Python
-    codec, emit typed features (NULL for the fields of the other
-    modality). Unknown or undecodable payloads become NULL-feature rows
-    (or raise when strict) — a bad object must not abort a 100 TB scan.
-    All five synthesized formats decode for real as of round 9 (Layer
-    III was the last stub; see extensions/mpeg_layer3.py for its honest
-    codebook seam). MPEG audio rows map onto the audio feature columns:
-    Layer I — n_samples = coded subband samples, sample_abs_sum = the
-    integer requantization-lattice |c| sum; Layer III — n_samples =
-    2·big_values + 4·count1 coded frequency lines, sample_abs_sum =
-    the Huffman-value |X| sum."""
-    from bicis_spark.extensions.jpeg import decode_jpeg
-    from bicis_spark.extensions.mpeg_audio import decode_layer1
-    from bicis_spark.extensions.mpeg_layer3 import decode_layer3
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in CODEC_SCHEMA.fields]
-        for pdf in batches:
-            out = []
-            for doc_id, mt, content in zip(
-                pdf["doc_id"], pdf["media_type"], pdf["content"]
-            ):
-                row = {c: None for c in cols}
-                row["doc_id"] = int(doc_id)
-                row["media_type"] = mt
-                try:
-                    if content is None:
-                        raise ValueError("NULL payload")
-                    if content[:2] == b"BM":
-                        row.update(decode_bmp(bytes(content)))
-                        row.pop("n_pixels", None)
-                    elif content[:4] == b"RIFF":
-                        d = decode_wav(bytes(content))
-                        d.pop("duration_us", None)
-                        row.update(d)
-                    elif content[:2] == b"\xff\xd8":
-                        d = decode_jpeg(bytes(content))
-                        row["width"] = d["width"]
-                        row["height"] = d["height"]
-                        row["pixel_sum"] = d["pixel_sum"]
-                    elif content[:8] == b"\x89PNG\r\n\x1a\n":
-                        from bicis_spark.extensions.png import decode_png
-
-                        d = decode_png(bytes(content))
-                        row["width"] = d["width"]
-                        row["height"] = d["height"]
-                        row["pixel_sum"] = d["pixel_sum"]
-                    elif (
-                        # length-safe: a 0- or 1-byte payload must fall
-                        # through to "unknown magic", not IndexError past
-                        # the strict=False contract (r8 advice)
-                        len(content) >= 4
-                        and content[0] == 0xFF
-                        and (content[1] & 0xF0) == 0xF0
-                    ):
-                        # header layer bits: 11 = Layer I, 01 = Layer III
-                        layer = (content[1] >> 1) & 0b11
-                        if layer == 0b01:
-                            d = decode_layer3(bytes(content))
-                            row["sample_rate"] = d["sample_rate"]
-                            row["n_samples"] = (
-                                2 * d["big_values_sum"] + 4 * d["count1_sum"]
-                            )
-                            row["sample_abs_sum"] = d["huff_abs_sum"]
-                        else:
-                            d = decode_layer1(bytes(content))
-                            row["sample_rate"] = d["sample_rate"]
-                            row["n_samples"] = d["n_samples_coded"]
-                            row["sample_abs_sum"] = d["requant_abs_sum"]
-                    else:
-                        raise ValueError("unknown magic")
-                except (ValueError, struct.error, IndexError, zlib.error):
-                    # zlib.error: corrupt PNG IDAT must NULL out, not
-                    # abort the scan (same lenient contract as the rest)
-                    if strict:
-                        raise
-                out.append(row)
-            pdf_out = pd.DataFrame(out, columns=cols)
-            for c in cols:
-                if c != "media_type":
-                    pdf_out[c] = pdf_out[c].astype("Int64")
-            yield pdf_out
-
-    return binary_df.mapInPandas(decode_batches, CODEC_SCHEMA)
+    """Production decode path: parse each payload with the real pure-Python
+    codec its magic bytes name (see ``_codec_features``) and emit typed
+    features, NULL for the fields of the other modality. Unknown or
+    undecodable payloads become NULL-feature rows, or raise when strict."""
+    return _decode(binary_df, CODEC_SCHEMA, _codec_features, strict)
 
 
 # ---------------------------------------------------------------------------
-# JPEG feature surface (round-8): full-feature decode of the synthetic
-# baseline-JPEG corpus — see extensions/jpeg.py for the codec and the
-# determinism contract that lets the SQL oracle replay pixel sums through
-# the fixed-point IDCT.
+# JPEG feature surface: full-feature decode of the synthetic baseline-JPEG
+# corpus — see extensions/jpeg.py for the codec and the determinism
+# contract that lets the SQL oracle replay pixel sums through the
+# fixed-point IDCT.
 # ---------------------------------------------------------------------------
 
 JPEG_SCHEMA = StructType(
@@ -440,24 +428,10 @@ JPEG_SCHEMA = StructType(
 
 def synth_media_jpeg(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Binary media table of deterministic grayscale baseline JPEGs, one
-    per document (extensions/jpeg.py:synth_jpeg). Distributed synthesis;
-    at scale this stage is replaced by the arriving binary column."""
+    per document (extensions/jpeg.py:synth_jpeg)."""
     from bicis_spark.extensions.jpeg import synth_jpeg
 
-    ids = _parallel_ids(docs, id_col)  # pinned exchange — see helper
-
-    def synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                content = synth_jpeg(d)
-                out.append((d, "image/jpeg", content, len(content)))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "media_type", "content", "n_bytes"]
-            )
-
-    return ids.mapInPandas(synth_batches, BINARY_TABLE_SCHEMA)
+    return _synthesize(docs, id_col, lambda d: ("image/jpeg", synth_jpeg(d)))
 
 
 def decode_jpeg_features(binary_df: DataFrame, strict: bool = False) -> DataFrame:
@@ -469,33 +443,14 @@ def decode_jpeg_features(binary_df: DataFrame, strict: bool = False) -> DataFram
     rows unless strict."""
     from bicis_spark.extensions.jpeg import decode_jpeg
 
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in JPEG_SCHEMA.fields]
-        for pdf in batches:
-            out = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                row = {c: None for c in cols}
-                row["doc_id"] = int(doc_id)
-                try:
-                    if content is None:
-                        raise ValueError("NULL payload")
-                    row.update(decode_jpeg(bytes(content)))
-                except (ValueError, struct.error, IndexError):
-                    if strict:
-                        raise
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols).astype(
-                {c: "Int64" for c in cols}
-            )
-
-    return binary_df.mapInPandas(decode_batches, JPEG_SCHEMA)
+    return _decode(binary_df, JPEG_SCHEMA, decode_jpeg, strict)
 
 
 # ---------------------------------------------------------------------------
-# MPEG-1 Layer I audio surface (round-8): full-bitstream decode of the
-# synthetic Layer I corpus — see extensions/mpeg_audio.py for the codec
-# and the determinism contract (integer requantization lattice + pinned
-# 20-bit scalefactor table) that lets the SQL oracle replay every feature.
+# MPEG-1 Layer I audio surface: full-bitstream decode of the synthetic
+# Layer I corpus — see extensions/mpeg_audio.py for the codec and the
+# determinism contract (integer requantization lattice + pinned 20-bit
+# scalefactor table) that lets the SQL oracle replay every feature.
 # ---------------------------------------------------------------------------
 
 MPEG1_SCHEMA = StructType(
@@ -515,25 +470,10 @@ MPEG1_SCHEMA = StructType(
 
 def synth_media_mpeg1(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Binary media table of deterministic MPEG-1 Layer I streams, one per
-    document (extensions/mpeg_audio.py:synth_layer1). Distributed
-    synthesis; at scale this stage is replaced by the arriving binary
-    column."""
+    document (extensions/mpeg_audio.py:synth_layer1)."""
     from bicis_spark.extensions.mpeg_audio import synth_layer1
 
-    ids = _parallel_ids(docs, id_col)  # pinned exchange — see helper
-
-    def synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                content = synth_layer1(d)
-                out.append((d, "audio/mpeg", content, len(content)))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "media_type", "content", "n_bytes"]
-            )
-
-    return ids.mapInPandas(synth_batches, BINARY_TABLE_SCHEMA)
+    return _synthesize(docs, id_col, lambda d: ("audio/mpeg", synth_layer1(d)))
 
 
 def decode_mpeg1_features(binary_df: DataFrame, strict: bool = False) -> DataFrame:
@@ -544,32 +484,13 @@ def decode_mpeg1_features(binary_df: DataFrame, strict: bool = False) -> DataFra
     rows unless strict."""
     from bicis_spark.extensions.mpeg_audio import decode_layer1
 
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in MPEG1_SCHEMA.fields]
-        for pdf in batches:
-            out = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                row = {c: None for c in cols}
-                row["doc_id"] = int(doc_id)
-                try:
-                    if content is None:
-                        raise ValueError("NULL payload")
-                    row.update(decode_layer1(bytes(content)))
-                except (ValueError, struct.error, IndexError):
-                    if strict:
-                        raise
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols).astype(
-                {c: "Int64" for c in cols}
-            )
-
-    return binary_df.mapInPandas(decode_batches, MPEG1_SCHEMA)
+    return _decode(binary_df, MPEG1_SCHEMA, decode_layer1, strict)
 
 
 # ---------------------------------------------------------------------------
-# MPEG-1 Layer III ("MP3") feature surface (round-9): the last codec gap
-# closed — see extensions/mpeg_layer3.py for the codec, the bit-reservoir
-# mechanics, and the honest entropy-codebook seam.
+# MPEG-1 Layer III ("MP3") feature surface — see extensions/mpeg_layer3.py
+# for the codec, the bit-reservoir mechanics, and the entropy-codebook
+# seam.
 # ---------------------------------------------------------------------------
 
 MP3_SCHEMA = StructType(
@@ -598,24 +519,12 @@ def synth_media_mp3(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Binary media table of deterministic MPEG-1 Layer III streams, one
     per document (extensions/mpeg_layer3.py:synth_layer3) — multi-frame
     with a real bit reservoir (nonzero main_data_begin on follow-on
-    frames). Distributed synthesis; at scale this stage is replaced by
-    the arriving binary column."""
+    frames)."""
     from bicis_spark.extensions.mpeg_layer3 import synth_layer3
 
-    ids = _parallel_ids(docs, id_col)  # pinned exchange — see helper
-
-    def synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                content = synth_layer3(d)
-                out.append((d, "audio/mpeg; layer=3", content, len(content)))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "media_type", "content", "n_bytes"]
-            )
-
-    return ids.mapInPandas(synth_batches, BINARY_TABLE_SCHEMA)
+    return _synthesize(
+        docs, id_col, lambda d: ("audio/mpeg; layer=3", synth_layer3(d))
+    )
 
 
 def decode_mp3_features(binary_df: DataFrame, strict: bool = False) -> DataFrame:
@@ -628,32 +537,13 @@ def decode_mp3_features(binary_df: DataFrame, strict: bool = False) -> DataFrame
     rows unless strict."""
     from bicis_spark.extensions.mpeg_layer3 import decode_layer3
 
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in MP3_SCHEMA.fields]
-        for pdf in batches:
-            out = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                row = {c: None for c in cols}
-                row["doc_id"] = int(doc_id)
-                try:
-                    if content is None:
-                        raise ValueError("NULL payload")
-                    row.update(decode_layer3(bytes(content)))
-                except (ValueError, struct.error, IndexError):
-                    if strict:
-                        raise
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols).astype(
-                {c: "Int64" for c in cols}
-            )
-
-    return binary_df.mapInPandas(decode_batches, MP3_SCHEMA)
+    return _decode(binary_df, MP3_SCHEMA, decode_layer3, strict)
 
 
 # ---------------------------------------------------------------------------
-# Video surface (round-9): real RIFF/AVI MJPEG demux + per-frame JPEG
-# decode (extensions/avi.py) — upgrades frame_sample's byte-slicing
-# stand-in to an actual container walk composing the real JPEG codec.
+# Video surface: RIFF/AVI MJPEG demux + per-frame JPEG decode
+# (extensions/avi.py) — a container walk composing the real JPEG codec,
+# where frame_sample only slices bytes.
 # ---------------------------------------------------------------------------
 
 VIDEO_SCHEMA = StructType(
@@ -683,24 +573,10 @@ VIDEO_FRAME_SCHEMA = StructType(
 def synth_media_video(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Binary media table of deterministic MJPEG AVI videos, one per
     document (extensions/avi.py:synth_avi — 2 + id%4 JPEG frames, full
-    hdrl/strl headers, idx1 index). Distributed synthesis; at scale this
-    stage is replaced by the arriving binary column."""
+    hdrl/strl headers, idx1 index)."""
     from bicis_spark.extensions.avi import synth_avi
 
-    ids = _parallel_ids(docs, id_col)  # pinned exchange — see helper
-
-    def synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                content = synth_avi(d)
-                out.append((d, "video/x-msvideo", content, len(content)))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "media_type", "content", "n_bytes"]
-            )
-
-    return ids.mapInPandas(synth_batches, BINARY_TABLE_SCHEMA)
+    return _synthesize(docs, id_col, lambda d: ("video/x-msvideo", synth_avi(d)))
 
 
 def decode_video_features(binary_df: DataFrame, strict: bool = False) -> DataFrame:
@@ -710,26 +586,7 @@ def decode_video_features(binary_df: DataFrame, strict: bool = False) -> DataFra
     NULL-feature rows unless strict."""
     from bicis_spark.extensions.avi import decode_avi_features
 
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in VIDEO_SCHEMA.fields]
-        for pdf in batches:
-            out = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                row = {c: None for c in cols}
-                row["doc_id"] = int(doc_id)
-                try:
-                    if content is None:
-                        raise ValueError("NULL payload")
-                    row.update(decode_avi_features(bytes(content)))
-                except (ValueError, struct.error, IndexError):
-                    if strict:
-                        raise
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols).astype(
-                {c: "Int64" for c in cols}
-            )
-
-    return binary_df.mapInPandas(decode_batches, VIDEO_SCHEMA)
+    return _decode(binary_df, VIDEO_SCHEMA, decode_avi_features, strict)
 
 
 def video_frame_features(
@@ -762,7 +619,7 @@ def video_frame_features(
                                 "dc_dequant_sum": d["dc_dequant_sum"],
                             }
                         )
-                except (ValueError, struct.error, IndexError):
+                except _DECODE_ERRORS:
                     if strict:
                         raise
             yield pd.DataFrame(
@@ -774,8 +631,8 @@ def video_frame_features(
 
 
 # ---------------------------------------------------------------------------
-# PNG surface (round-9): wire-format-real PNG via stdlib zlib DEFLATE —
-# chunk/CRC walk, inflate, all five scanline defilters (extensions/png.py).
+# PNG surface: wire-format PNG via stdlib zlib DEFLATE — chunk/CRC walk,
+# inflate, all five scanline defilters (extensions/png.py).
 # ---------------------------------------------------------------------------
 
 PNG_SCHEMA = StructType(
@@ -794,24 +651,10 @@ PNG_SCHEMA = StructType(
 def synth_media_png(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Binary media table of deterministic PNGs, one per document
     (extensions/png.py:synth_png — grayscale/truecolor alternating, all
-    five scanline filters cycled). Distributed synthesis; at scale this
-    stage is replaced by the arriving binary column."""
+    five scanline filters cycled)."""
     from bicis_spark.extensions.png import synth_png
 
-    ids = _parallel_ids(docs, id_col)  # pinned exchange — see helper
-
-    def synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                content = synth_png(d)
-                out.append((d, "image/png", content, len(content)))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "media_type", "content", "n_bytes"]
-            )
-
-    return ids.mapInPandas(synth_batches, BINARY_TABLE_SCHEMA)
+    return _synthesize(docs, id_col, lambda d: ("image/png", synth_png(d)))
 
 
 def decode_png_features(binary_df: DataFrame, strict: bool = False) -> DataFrame:
@@ -820,37 +663,17 @@ def decode_png_features(binary_df: DataFrame, strict: bool = False) -> DataFrame
     defiltering (None/Sub/Up/Average/Paeth) — features are functions of
     the reconstructed pixels, never of the compressed bytes.
     Undecodable payloads → NULL-feature rows unless strict."""
-    import zlib as _zlib
-
     from bicis_spark.extensions.png import decode_png
 
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in PNG_SCHEMA.fields]
-        for pdf in batches:
-            out = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                row = {c: None for c in cols}
-                row["doc_id"] = int(doc_id)
-                try:
-                    if content is None:
-                        raise ValueError("NULL payload")
-                    row.update(decode_png(bytes(content)))
-                except (ValueError, struct.error, IndexError, _zlib.error):
-                    if strict:
-                        raise
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols).astype(
-                {c: "Int64" for c in cols}
-            )
-
-    return binary_df.mapInPandas(decode_batches, PNG_SCHEMA)
+    return _decode(binary_df, PNG_SCHEMA, decode_png, strict)
 
 
 # ---------------------------------------------------------------------------
-# GIF surface (round-9): wire-format-real GIF89a via from-the-stream LZW —
-# screen descriptor, global color table, graphic-control extensions,
-# variable-width code stream with KwKwK and clear resets (extensions/gif.py).
-# Animated GIFs are the second real animation container beside MJPEG AVI.
+# GIF surface: wire-format GIF89a via from-the-stream LZW — screen
+# descriptor, global color table, graphic-control extensions,
+# variable-width code stream with KwKwK and clear resets
+# (extensions/gif.py). Animated GIFs are the second animation container
+# beside MJPEG AVI.
 # ---------------------------------------------------------------------------
 
 GIF_SCHEMA = StructType(
@@ -869,24 +692,10 @@ GIF_SCHEMA = StructType(
 
 def synth_media_gif(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Binary media table of deterministic animated GIFs, one per
-    document (extensions/gif.py:synth_gif). Distributed synthesis; at
-    scale this stage is replaced by the arriving binary column."""
+    document (extensions/gif.py:synth_gif)."""
     from bicis_spark.extensions.gif import synth_gif
 
-    ids = _parallel_ids(docs, id_col)  # pinned exchange — see helper
-
-    def synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                content = synth_gif(d)
-                out.append((d, "image/gif", content, len(content)))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "media_type", "content", "n_bytes"]
-            )
-
-    return ids.mapInPandas(synth_batches, BINARY_TABLE_SCHEMA)
+    return _synthesize(docs, id_col, lambda d: ("image/gif", synth_gif(d)))
 
 
 def decode_gif_features(binary_df: DataFrame, strict: bool = False) -> DataFrame:
@@ -897,23 +706,4 @@ def decode_gif_features(binary_df: DataFrame, strict: bool = False) -> DataFrame
     Undecodable payloads → NULL-feature rows unless strict."""
     from bicis_spark.extensions.gif import decode_gif
 
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in GIF_SCHEMA.fields]
-        for pdf in batches:
-            out = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                row = {c: None for c in cols}
-                row["doc_id"] = int(doc_id)
-                try:
-                    if content is None:
-                        raise ValueError("NULL payload")
-                    row.update(decode_gif(bytes(content)))
-                except (ValueError, struct.error, IndexError):
-                    if strict:
-                        raise
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols).astype(
-                {c: "Int64" for c in cols}
-            )
-
-    return binary_df.mapInPandas(decode_batches, GIF_SCHEMA)
+    return _decode(binary_df, GIF_SCHEMA, decode_gif, strict)

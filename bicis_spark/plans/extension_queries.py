@@ -28,14 +28,23 @@ from bicis_spark.extensions.dedup import (
 from bicis_spark.caching import tracked_persist
 from bicis_spark.extensions.multimodal import (
     decode_codec_features,
+    decode_gif_features,
     decode_jpeg_features,
-    decode_mp3_features,
-    synth_media_jpeg,
-    synth_media_mp3,
     decode_media,
+    decode_mp3_features,
+    decode_mpeg1_features,
+    decode_png_features,
+    decode_video_features,
     frame_sample,
     synth_media,
+    synth_media_gif,
+    synth_media_jpeg,
+    synth_media_mp3,
+    synth_media_mpeg1,
+    synth_media_png,
+    synth_media_video,
     to_binary_table,
+    video_frame_features,
 )
 from bicis_spark.extensions.similarity import (
     ann_recall,
@@ -961,8 +970,9 @@ def doc_fingerprints_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_decode_features_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary wrap → mapInPandas decode stub. The oracle replays the fake
-    features byte-wise (corpus is ASCII so char codes == bytes)."""
+    """Binary wrap → the generic byte-features decode stage (no codec
+    claims a text payload). The oracle replays the features byte-wise
+    (the corpus is ASCII, so char codes == bytes)."""
     docs = read_table(spark, sf_dir, "documents", spread=True)
     return decode_media(to_binary_table(docs))
 
@@ -1004,7 +1014,7 @@ def multimodal_frame_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_bmp_wav_decode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL multimodal decode (round-5): synthesize genuine BMP (24bpp,
+    """REAL multimodal decode: synthesize genuine BMP (24bpp,
     0xAA-padded rows) and WAV (RIFF PCM16) payloads per doc, then parse them
     back with the pure-Python struct codecs in extensions/multimodal.py.
     The oracle replays the expected features arithmetically from doc_id, so
@@ -1062,10 +1072,9 @@ def multimodal_bmp_wav_decode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_jpeg_decode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL baseline-JPEG decode (round-8, the r7 verdict's #3 capability
-    item): synthesize a genuine grayscale baseline JPEG per document —
-    marker stream, canonical Huffman DC/AC coding with variable zero runs,
-    byte stuffing — then parse it back with the pure-Python decoder in
+    """REAL baseline-JPEG decode: synthesize a genuine grayscale baseline
+    JPEG per document — marker stream, canonical Huffman DC/AC coding with
+    variable zero runs, byte stuffing — then parse it back with the pure-Python decoder in
     extensions/jpeg.py and emit integer-exact features. The oracle never
     sees the byte stream: it replays the coefficient FORMULAS and pushes
     them through the same pinned fixed-point IDCT arithmetic
@@ -1116,7 +1125,7 @@ def multimodal_jpeg_decode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_png_decode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WIRE-FORMAT-REAL PNG decode (round-9): synthesize a genuine PNG
+    """WIRE-FORMAT-REAL PNG decode: synthesize a genuine PNG
     per document — signature, CRC32-framed chunks, DEFLATE via stdlib
     zlib, all five scanline filters cycled across rows, grayscale and
     truecolor alternating — then parse it back with extensions/png.py
@@ -1127,11 +1136,6 @@ def multimodal_png_decode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-interlaced 8-bit PNG decodes here. The oracle replays the pixel
     and filter formulas; the compressed bytes in between are what the
     hash MATCH proves the decoder inverts."""
-    from bicis_spark.extensions.multimodal import (
-        decode_png_features,
-        synth_media_png,
-    )
-
     docs = read_table(spark, sf_dir, "documents", spread=True)
     return decode_png_features(synth_media_png(docs), strict=True)
 
@@ -1178,7 +1182,7 @@ def multimodal_png_decode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_gif_decode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WIRE-FORMAT-REAL animated-GIF decode (round-9): synthesize a
+    """WIRE-FORMAT-REAL animated-GIF decode: synthesize a
     genuine GIF89a per document — screen descriptor, global color table,
     per-frame graphic-control extensions and variable-width LZW streams
     (clear resets, KwKwK, sub-block framing) — then parse it back with
@@ -1187,11 +1191,6 @@ def multimodal_gif_decode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream), so these payloads open in any viewer. The oracle replays the
     index and palette formulas; the hash MATCH proves the LZW round-trip
     and the color-table mapping."""
-    from bicis_spark.extensions.multimodal import (
-        decode_gif_features,
-        synth_media_gif,
-    )
-
     docs = read_table(spark, sf_dir, "documents", spread=True)
     return decode_gif_features(synth_media_gif(docs), strict=True)
 
@@ -1267,7 +1266,7 @@ def _video_frame_prefix() -> str:
     """,
 )
 def multimodal_video_decode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL video decode (round-9): synthesize a genuine MJPEG AVI per
+    """REAL video decode: synthesize a genuine MJPEG AVI per
     document — RIFF framing, avih/strh/strf headers, even-padded movi
     frame chunks, a VERIFIED idx1 index — then demux it and run the real
     baseline-JPEG decoder over every frame (extensions/avi.py composing
@@ -1277,11 +1276,6 @@ def multimodal_video_decode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the container walk, the index verification, AND the per-frame
     entropy decode. (jid ≡ doc_id mod 6 keeps frame dimensions constant
     per video — enforced against the stream header at decode.)"""
-    from bicis_spark.extensions.multimodal import (
-        decode_video_features,
-        synth_media_video,
-    )
-
     docs = read_table(spark, sf_dir, "documents", spread=True)
     return decode_video_features(synth_media_video(docs), strict=True)
 
@@ -1296,16 +1290,11 @@ def multimodal_video_decode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_video_frame_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL frame sampling (round-9, replacing the byte-slicing stand-in
-    as the video sampling story): demux the AVI, keep every 2nd frame,
-    decode ONLY the kept frames (skipped frames cost a chunk-walk skip,
-    never an entropy decode — the training-pipeline shape), one row per
-    sampled frame with its decoded features."""
-    from bicis_spark.extensions.multimodal import (
-        synth_media_video,
-        video_frame_features,
-    )
-
+    """REAL frame sampling (where ``multimodal_frame_sample`` only slices
+    bytes): demux the AVI, keep every 2nd frame, decode ONLY the kept
+    frames (skipped frames cost a chunk-walk skip, never an entropy
+    decode — the training-pipeline shape), one row per sampled frame with
+    its decoded features."""
     docs = read_table(spark, sf_dir, "documents", spread=True)
     return video_frame_features(synth_media_video(docs), every_n=2, strict=True)
 
@@ -1362,9 +1351,8 @@ def _sfq_literal() -> str:
     """,
 )
 def multimodal_mpeg1_audio_decode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL MPEG-1 Layer I audio decode (round-8, shrinking the
-    codec-bound-audio gap): synthesize a genuine Layer I stream per
-    document — sync/header walk, 4-bit-per-subband bit allocation, 6-bit
+    """REAL MPEG-1 Layer I audio decode: synthesize a genuine Layer I
+    stream per document — sync/header walk, 4-bit-per-subband bit allocation, 6-bit
     scalefactors, 12×nb-bit sample codes, zero-padded to the
     header-implied slot length — then parse it back with the pure-Python
     decoder in extensions/mpeg_audio.py. The oracle never sees the byte
@@ -1372,15 +1360,8 @@ def multimodal_mpeg1_audio_decode_q(spark: SparkSession, sf_dir: str) -> DataFra
     same integer requantization lattice (c = raw + 1 − 2^(nb−1)) and the
     pinned 20-bit scalefactor fixed-point tree, so a hash MATCH proves
     the decoder inverts the frame walk, the allocation-driven field
-    widths, AND the requantizer — not that two stubs agree. The remaining
-    audio stub is Layer III's entropy layer (spec-data Huffman tables);
-    see extensions/mpeg_audio.py's module docstring for why that boundary
-    is where the oracle story ends."""
-    from bicis_spark.extensions.multimodal import (
-        decode_mpeg1_features,
-        synth_media_mpeg1,
-    )
-
+    widths, AND the requantizer — not that two stubs agree. Layer III is
+    ``multimodal_mp3_decode``."""
     docs = read_table(spark, sf_dir, "documents", spread=True)
     return decode_mpeg1_features(synth_media_mpeg1(docs), strict=True)
 
@@ -1552,9 +1533,8 @@ def _mp3_oracle() -> str:
 
 @register("multimodal_mp3_decode", _mp3_oracle())
 def multimodal_mp3_decode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL MPEG-1 Layer III ("MP3") decode (round-9, the last codec
-    stub closed): synthesize a genuine multi-frame Layer III stream per
-    document — header walk, 17-byte side info, a real BIT RESERVOIR
+    """REAL MPEG-1 Layer III ("MP3") decode: synthesize a genuine
+    multi-frame Layer III stream per document — header walk, 17-byte side info, a real BIT RESERVOIR
     (granule data flowing through the concatenated slot areas with
     nonzero main_data_begin on follow-on frames), scfsi scalefactor
     sharing, region/table-dispatched Huffman pairs with linbits escapes
@@ -1564,9 +1544,10 @@ def multimodal_mp3_decode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     features through the POW43_Q/GAIN_Q fixed-point requantization
     lattice. The oracle never sees the byte stream: it replays the
     field FORMULAS, so a hash MATCH proves the decoder inverts the
-    reservoir walk and the entire granule bit layout. The honest
-    residual vs wire MP3 is the entropy-codebook DATA seam (canonical
-    codes over spec shapes; ISO B.7 drop-in documented in the module)."""
+    reservoir walk and the entire granule bit layout. The one difference
+    from wire MP3 is the entropy-codebook DATA: canonical codes over the
+    spec's code shapes, with the ISO B.7 table drop-in documented in the
+    module."""
     docs = read_table(spark, sf_dir, "documents", spread=True)
     return decode_mp3_features(synth_media_mp3(docs), strict=True)
 

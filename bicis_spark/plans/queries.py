@@ -60,7 +60,7 @@ _LOADED = False
 # by last driver check (scripts/next_window.py computes that queue,
 # registration order on ties). Every slot holds an oracle-backed row.
 DRIVER_WINDOW: tuple[str, ...] = (
-    # --- 1. rows whose plan or code was touched (33) ---
+    # --- 1. rows whose plan or code was touched (42) ---
     "ann_topk_pq",
     "ann_pq_recall",
     "ann_topk_ivfpq",
@@ -94,25 +94,25 @@ DRIVER_WINDOW: tuple[str, ...] = (
     "doc_retrieval_hashed",
     "hybrid_retrieval_doc_rrf",
     "doc_cosine_topk",
+    "multimodal_decode_features",
+    "multimodal_bmp_wav_decode",
+    "multimodal_jpeg_decode",
+    "multimodal_mpeg1_audio_decode",
+    "multimodal_mp3_decode",
+    "multimodal_video_decode",
+    "multimodal_video_frame_sample",
+    "multimodal_png_decode",
+    "multimodal_gif_decode",
     # --- 2. stale TPC-H queue (3) ---
     "q18_large_orders",
     "q19_disjunctive_revenue",
     "q22_dormant_customers",
-    # --- 3. next-stalest fills in mechanical queue order (14) ---
+    # --- 3. next-stalest fills in mechanical queue order (5) ---
     "ols_conformal_intervals",
     "ols_per_brand_models",
     "glm_poisson_irls_contract",
     "semantic_dedup_two_level_flags",
     "cluster_balanced_sample",
-    "packing_efficiency",
-    "incremental_agg_maintenance",
-    "ngram_novelty_scores",
-    "domain_cap_sample",
-    "phrase_search_positional",
-    "dedup_edit_distance_names",
-    "embedding_int8_quantize",
-    "skipgram_pairs",
-    "embedding_covariance_ints",
 )
 
 

@@ -414,6 +414,48 @@ def test_wav_decoder_walks_chunks():
     assert decode_wav(payload) == decode_wav(base)
 
 
+def _malformed_headers():
+    """(name, decoder, payload) triples: synthesized payloads with one
+    header field patched so that, unchecked, it drives a decoder into a
+    near-endless row loop (BMP height), a ZeroDivisionError (WAV channels
+    and rate, JPEG sampling factor), a KeyError (JPEG scan component) or
+    a 32 GiB plane allocation (JPEG frame size).
+    The BMP height is 10^6 rather than 2^31 so an unchecked decoder fails
+    the test in about a second instead of stalling it."""
+    import struct
+
+    from bicis_spark.extensions.jpeg import decode_jpeg, synth_jpeg
+    from bicis_spark.extensions.multimodal import (
+        decode_bmp,
+        decode_wav,
+        synth_bmp,
+        synth_wav,
+    )
+
+    def patch(payload, off, fmt, *values):
+        return payload[:off] + struct.pack(fmt, *values) + payload[off + struct.calcsize(fmt):]
+
+    jpeg = synth_jpeg(3)
+    sof, sos = jpeg.index(b"\xff\xc0"), jpeg.index(b"\xff\xda")
+    return [
+        ("bmp_height_1e6", decode_bmp, patch(synth_bmp(2), 22, "<i", 10**6)),
+        ("wav_zero_channels", decode_wav, patch(synth_wav(3), 22, "<H", 0)),
+        ("wav_zero_rate", decode_wav, patch(synth_wav(3), 24, "<I", 0)),
+        ("jpeg_scan_component_not_in_frame", decode_jpeg, patch(jpeg, sos + 5, "B", 0xEE)),
+        ("jpeg_zero_sampling_factor", decode_jpeg, patch(jpeg, sof + 11, "B", 0x01)),
+        ("jpeg_frame_exceeds_data", decode_jpeg, patch(jpeg, sof + 5, ">HH", 65535, 65535)),
+    ]
+
+
+@pytest.mark.parametrize(
+    "decoder,payload",
+    [pytest.param(decoder, payload, id=name) for name, decoder, payload in _malformed_headers()],
+)
+def test_malformed_header_raises_value_error(decoder, payload):
+    with pytest.raises(ValueError):
+        decoder(payload)
+
+
 def test_codec_features_lenient_vs_strict(spark):
     """Garbage payloads: lenient mode yields NULL-feature rows (a bad object
     must not abort a 100 TB scan); strict mode raises."""
@@ -421,18 +463,86 @@ def test_codec_features_lenient_vs_strict(spark):
 
     from bicis_spark.extensions.multimodal import decode_codec_features
 
+    schema = "doc_id long, media_type string, content binary, n_bytes long"
+    malformed = [
+        (10 + i, name, bytearray(payload), len(payload))
+        for i, (name, _, payload) in enumerate(_malformed_headers())
+    ]
     rows = [
         (1, "image/bmp", bytearray(b"not a bmp at all"), 16),
         (2, "audio/wav", None, 0),
-    ]
-    binary = spark.createDataFrame(
-        rows, "doc_id long, media_type string, content binary, n_bytes long"
-    )
+    ] + malformed
+    binary = spark.createDataFrame(rows, schema)
     feats = {r["doc_id"]: r for r in decode_codec_features(binary).collect()}
     assert feats[1]["width"] is None and feats[1]["sample_rate"] is None
     assert feats[2]["pixel_sum"] is None
+    for doc_id, *_ in malformed:
+        assert all(
+            v is None for k, v in feats[doc_id].asDict().items()
+            if k not in ("doc_id", "media_type")
+        ), feats[doc_id]
     with _pytest.raises(Exception, match="ValueError|unknown|NULL"):
         decode_codec_features(binary, strict=True).collect()
+    for row in malformed:
+        with _pytest.raises(Exception, match="ValueError"):
+            decode_codec_features(
+                spark.createDataFrame([row], schema), strict=True
+            ).collect()
+
+
+def test_decoders_reject_mutated_payloads_with_decode_errors():
+    """Seeded byte-mutation loop over all eight decoders: flip 1-3 bytes,
+    truncate, or splice 1-8 random bytes into synthesized payloads. A
+    decoder may accept a mutant or reject it, but only with one of the
+    error types the decode stage turns into a NULL-feature row; anything
+    else (KeyError, ZeroDivisionError, OverflowError) aborts a Spark job,
+    and a header field that sizes an unbounded loop stalls its task."""
+    import random
+
+    from bicis_spark.extensions.avi import decode_avi_features, synth_avi
+    from bicis_spark.extensions.gif import decode_gif, synth_gif
+    from bicis_spark.extensions.jpeg import decode_jpeg, synth_jpeg
+    from bicis_spark.extensions.mpeg_audio import decode_layer1, synth_layer1
+    from bicis_spark.extensions.mpeg_layer3 import decode_layer3, synth_layer3
+    from bicis_spark.extensions.multimodal import (
+        _DECODE_ERRORS,
+        decode_bmp,
+        decode_wav,
+        synth_bmp,
+        synth_wav,
+    )
+    from bicis_spark.extensions.png import decode_png, synth_png
+
+    def mutate(rng, payload):
+        p = bytearray(payload)
+        op = rng.randrange(3)
+        if op == 0:
+            for _ in range(rng.randint(1, 3)):
+                p[rng.randrange(len(p))] = rng.randrange(256)
+        elif op == 1:
+            del p[rng.randrange(len(p)):]
+        else:
+            i = rng.randrange(len(p) + 1)
+            p[i:i] = bytes(rng.randrange(256) for _ in range(rng.randint(1, 8)))
+        return bytes(p)
+
+    codecs = [
+        (synth_bmp, decode_bmp),
+        (synth_wav, decode_wav),
+        (synth_jpeg, decode_jpeg),
+        (synth_png, decode_png),
+        (synth_gif, decode_gif),
+        (synth_avi, decode_avi_features),
+        (synth_layer1, decode_layer1),
+        (synth_layer3, decode_layer3),
+    ]
+    for synth, decode in codecs:
+        rng = random.Random(7)
+        for doc_id in range(150):
+            try:
+                decode(mutate(rng, synth(doc_id)))
+            except _DECODE_ERRORS:
+                pass
 
 
 def test_bm25_ranks_rare_term_docs_first(spark):
