@@ -28,6 +28,7 @@ per-block IDCT is a pair of 8×8 int64 numpy matmuls, not a Python loop.
 
 from __future__ import annotations
 
+import functools
 import math
 import struct
 
@@ -92,7 +93,9 @@ _AC_SYMBOLS = [0x00, 0xF0] + [
 _AC_BITS = [0] * 7 + [162] + [0] * 8  # all at 8 bits (162/256 < 1)
 
 
-def _canonical_codes(bits: list[int], symbols: list[int]) -> dict[int, tuple[int, int]]:
+def _canonical_codes(
+    bits: bytes | list[int], symbols: bytes | list[int]
+) -> dict[int, tuple[int, int]]:
     """symbol → (code, length) via T.81 Annex C canonical assignment."""
     codes: dict[int, tuple[int, int]] = {}
     code = 0
@@ -320,9 +323,28 @@ def _idct_block(coef) -> "object":
     >> 26) + 128). Everything is int64-exact — no float enters."""
     import numpy as np
 
-    t = np.array(IDCT_T, dtype=np.int64)  # t[k][x]
+    t = _idct_matrix()  # t[k][x]
     p = t.T @ (coef @ t)  # p[y][x]
     return np.clip(((p + (1 << 25)) >> 26) + 128, 0, 255)
+
+
+@functools.cache
+def _idct_matrix():
+    """``IDCT_T`` as a read-only int64 array, built once per process."""
+    import numpy as np
+
+    t = np.array(IDCT_T, dtype=np.int64)
+    t.flags.writeable = False
+    return t
+
+
+@functools.lru_cache(maxsize=64)
+def _huffman_lookup(bits: bytes, values: bytes) -> dict[tuple[int, int], int]:
+    """(code, length) → symbol map of one DHT table. Cached on the table's
+    bytes: every frame of an MJPEG stream carries the same DHT segments.
+    Callers only read the map."""
+    codes = _canonical_codes(bits, values)
+    return {(code, length): sym for sym, (code, length) in codes.items()}
 
 
 def decode_jpeg(payload: bytes) -> dict:
@@ -377,13 +399,9 @@ def decode_jpeg(payload: bytes) -> dict:
             o = 0
             while o < len(body):
                 cls, tid = body[o] >> 4, body[o] & 0xF
-                bits = list(body[o + 1 : o + 17])
+                bits = bytes(body[o + 1 : o + 17])
                 n = sum(bits)
-                vals = list(body[o + 17 : o + 17 + n])
-                codes = _canonical_codes(bits, vals)
-                htabs[(cls, tid)] = {
-                    (code, length): sym for sym, (code, length) in codes.items()
-                }
+                htabs[(cls, tid)] = _huffman_lookup(bits, bytes(body[o + 17 : o + 17 + n]))
                 o += 17 + n
         elif marker == 0xC0 or marker == 0xC1:  # SOF0/1 baseline
             _prec, height, width, nc = struct.unpack_from(">BHHB", body, 0)

@@ -33,15 +33,14 @@ QUANT_SCALE = 1_000_000
 DEFAULT_DIMS = 64
 
 
-# -- SQL-fragment fast paths -----------------------------------------------
-# Building these expressions through the Python functions API costs 20-35ms
-# PER CALL in driver py4j round-trips (each higher-order lambda is several
-# JVM calls; measured: int_dot 33ms, the same tree via one F.expr parse
-# 0.55ms — 60×). The helpers below therefore accept either a Column (the
-# lambda path, for callers holding computed Columns) or a STRING, treated
-# as a raw SQL fragment and routed through one F.expr parse. Both paths
-# produce the same Catalyst operations (same casts, same fold order), so
-# results are bit-for-bit identical.
+# -- One form for the vector math ----------------------------------------
+# Every vector expression is a SQL fragment (the ``_*_sql`` builders below)
+# parsed JVM-side by one ``F.expr`` call. The same tree built through the
+# Python Column API costs 20-35ms PER CALL in driver py4j round-trips (each
+# higher-order lambda is several JVM calls; measured: the exact dot 33ms,
+# one F.expr parse of it 0.55ms — 60×). The public wrappers (``quantize``,
+# ``cosine_sim``, ``sq8_encode``) therefore take column names or SQL
+# fragments, never Columns.
 
 
 #: Width cap for unrolling fixed-width array math into plain arithmetic.
@@ -87,79 +86,32 @@ def _quant_sql(vec: str) -> str:
 
 
 def _nonzero_sql(divisor: str) -> str:
-    return f"(CASE WHEN ({divisor}) != 0.0D THEN ({divisor}) END)"
-
-
-def _cfn_sql(a: str, b: str, na: str, nb: str) -> str:
-    """cosine_from_norms as a SQL fragment (same tree as the Column path)."""
-    return f"CAST({_dot_sql(a, b)} AS DOUBLE) / " + _nonzero_sql(f"({na}) * ({nb})")
-
-
-def quantize(vec: Column | str) -> Column:
-    """array<float> → array<long>: floor(double(x)·10⁶). floor (not round)
-    sidesteps cross-engine tie-rounding differences. A str argument is a
-    SQL fragment (fast builder path — see the fragment-helper note)."""
-    if isinstance(vec, str):
-        return F.expr(_quant_sql(vec))
-    return F.transform(
-        vec, lambda x: F.floor(x.cast("double") * F.lit(QUANT_SCALE)).cast("long")
-    )
-
-
-def int_dot(a: Column | str, b: Column | str) -> Column:
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_dot_sql(a, b))
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
-def int_norm2(a: Column | str) -> Column:
-    return int_dot(a, a)
-
-
-def norm_col(a: Column | str) -> Column:
-    """√‖a‖ as double — precompute once per vector so pairwise cosine does
-    one dot + one division instead of re-deriving both norms per pair."""
-    if isinstance(a, str):
-        return F.expr(_norm_sql(a))
-    return F.sqrt(int_norm2(a).cast("double"))
-
-
-def _nonzero(divisor: Column) -> Column:
     """NULL out a zero divisor (nullif twin): cosine is undefined for a
     zero-norm vector — after quantization an all-near-zero embedding IS
     all zeros — and under ANSI mode a plain /0 aborts the whole job
     (with ANSI off it yields NaN, which Spark ranks ABOVE every real
     cosine). A NULL cosine instead drops out of >= thresholds and sorts
     last in the DESC rank windows on both engines."""
-    return F.when(divisor != F.lit(0.0), divisor)
+    return f"(CASE WHEN ({divisor}) != 0.0D THEN ({divisor}) END)"
 
 
-def cosine_sim(a: Column | str, b: Column | str) -> Column:
+def _cfn_sql(a: str, b: str, na: str, nb: str) -> str:
+    """Exact-integer cosine of ``a`` and ``b`` given their norms ``na`` and
+    ``nb``: dot/(na·nb), NULL for a zero norm (``_nonzero_sql``)."""
+    return f"CAST({_dot_sql(a, b)} AS DOUBLE) / " + _nonzero_sql(f"({na}) * ({nb})")
+
+
+def quantize(vec: str) -> Column:
+    """array<float> → array<long>: floor(double(x)·10⁶). floor (not round)
+    sidesteps cross-engine tie-rounding differences."""
+    return F.expr(_quant_sql(vec))
+
+
+def cosine_sim(a: str, b: str) -> Column:
     """Exact-integer cosine: dot/(√‖a‖·√‖b‖) with all inputs exact int64 —
     the double math sees identical operands in any engine. NULL for
-    zero-norm inputs (see _nonzero)."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(
-            f"CAST({_dot_sql(a, b)} AS DOUBLE) / "
-            + _nonzero_sql(f"{_norm_sql(a)} * {_norm_sql(b)}")
-        )
-    return int_dot(a, b).cast("double") / _nonzero(norm_col(a) * norm_col(b))
-
-
-def cosine_from_norms(
-    a: Column | str, b: Column | str, na: Column | str, nb: Column | str
-) -> Column:
-    """Cosine with both norms precomputed (identical value to cosine_sim:
-    same exact dot, same sqrt results, same multiply/divide order)."""
-    if all(isinstance(c, str) for c in (a, b, na, nb)):
-        return F.expr(_cfn_sql(a, b, na, nb))
-    to_col = lambda c: F.expr(c) if isinstance(c, str) else c  # noqa: E731
-    a, b, na, nb = to_col(a), to_col(b), to_col(na), to_col(nb)
-    return int_dot(a, b).cast("double") / _nonzero(na * nb)
+    zero-norm inputs (see _nonzero_sql)."""
+    return F.expr(_cfn_sql(a, b, _norm_sql(a), _norm_sql(b)))
 
 
 def _topk_per_query(
@@ -1332,28 +1284,16 @@ def sq8_scales(c: DataFrame, qv_col: str = "qv", dims: int = 64) -> DataFrame:
     )
 
 
-def sq8_encode(qv: Column | str, sl: Column | str) -> Column:
+def sq8_encode(qv: str, sl: str) -> Column:
     """int8 code vector: clamp(⌊qv_d · s_d + 0.5⌋, −127, 127) per
     dimension — ``floor(·+0.5)`` rather than round() because the engines'
     round() tie conventions differ while this float tree is
     IEEE-identical (the ``int8_quantize_stats`` recipe)."""
-    if isinstance(qv, str) and isinstance(sl, str):
-        return F.expr(_sq8_encode_sql(qv, sl))
-    return F.zip_with(
-        qv,
-        sl,
-        lambda x, s: F.greatest(
-            F.lit(-127).cast("long"),
-            F.least(
-                F.lit(127).cast("long"),
-                F.floor(x.cast("double") * s + F.lit(0.5)).cast("long"),
-            ),
-        ),
-    )
+    return F.expr(_sq8_encode_sql(qv, sl))
 
 
 def _sq8_encode_sql(qv: str, sl: str) -> str:
-    """``sq8_encode`` as a SQL fragment (fast builder path; same tree)."""
+    """``sq8_encode``'s fragment."""
     return (
         f"zip_with({qv}, {sl}, (x, s) -> "
         f"greatest(CAST(-127 AS BIGINT), least(CAST(127 AS BIGINT), "

@@ -114,10 +114,3 @@ def build_pipeline(
         return counts
 
     return p
-
-
-def run_full_pipeline(
-    spark: SparkSession, sf_dir: str, root: str, **kwargs
-) -> dict[str, DataFrame]:
-    """Materialize every stage; returns all stage DataFrames."""
-    return build_pipeline(spark, sf_dir, root, **kwargs).run()

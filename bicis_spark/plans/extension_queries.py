@@ -86,7 +86,7 @@ _DOT = (
     "list_sum(list_transform(range(64), i -> {a}.qv[i+1] * {b}.qv[i+1]))::DOUBLE"
 )
 _NORM = "sqrt(list_sum(list_transform(range(64), i -> {x}.qv[i+1] * {x}.qv[i+1]))::DOUBLE)"
-# nullif: zero-norm vectors get a NULL cosine (mirrors similarity._nonzero)
+# nullif: zero-norm vectors get a NULL cosine (mirrors similarity._nonzero_sql)
 _COS = f"{_DOT} / nullif({_NORM.format(x='{a}')} * {_NORM.format(x='{b}')}, 0)"
 
 

@@ -397,216 +397,6 @@ def write_sorted_parquet(
     out.write.mode(mode).parquet(path)
 
 
-def write_zorder_parquet(
-    df: DataFrame,
-    path: str,
-    zorder_cols: list[str],
-    n_partitions: int = 32,
-    bits: int = 10,
-    mode: str = "overwrite",
-) -> None:
-    """Z-order (Morton-curve) clustered parquet layout for MULTI-column
-    scan pruning — the 2+-dimensional generalization of
-    ``write_sorted_parquet``.
-
-    Range-clustering on one column makes that column's file min/max stats
-    tight but leaves every other column's stats spanning the full domain:
-    a filter on the second column skips nothing. Interleaving the bits of
-    quantile-bucketed column ranks into one Morton key and range-clustering
-    on THAT gives every participating column locality, so parquet footer
-    stats prune files for predicates on ANY of them.
-
-    Scale shape (no global sort, no driver data):
-    1. each z-column maps to a DOUBLE sort key (numerics cast, date/
-       timestamp via epoch — bucket layout only needs order, not exact
-       values, so the lossy cast is fine here and keeps the boundary
-       literals engine-parsable for every supported type);
-    2. one pass computes ~2^bits approx quantile boundaries per key
-       (mergeable sketch aggregate; boundaries — a few KB — are the only
-       driver-side data);
-    3. map-side: rank each value into its bucket with ``Bucketizer``
-       (JVM binary search over the broadcast splits — O(bits) per row,
-       not an O(2^bits) per-row fold over a literal array), then
-       interleave bucket bits into the Morton key;
-    4. ``repartitionByRange(_z)`` + ``sortWithinPartitions(_z)`` — the
-       same sampled range exchange as the 1-D writer.
-
-    Quantile bucketing (not min/max linear scaling) makes the curve
-    resistant to skew and outliers: each bucket holds ~equal row counts,
-    so the curve spends its resolution where the data is.
-    """
-    from pyspark.ml.feature import Bucketizer
-    from pyspark.sql.types import DateType, NumericType
-
-    if len(zorder_cols) < 2:
-        raise ValueError("z-order needs >= 2 columns (use write_sorted_parquet)")
-
-    def sort_key(c: str) -> F.Column:
-        dt = df.schema[c].dataType
-        if isinstance(dt, (DateType, TimestampType)):
-            return F.col(c).cast("timestamp").cast("double")
-        if isinstance(dt, NumericType):
-            return F.col(c).cast("double")
-        raise TypeError(
-            f"z-order column {c!r} has unorderable-for-bucketing type "
-            f"{dt.simpleString()}; supported: numeric, date, timestamp"
-        )
-
-    n_buckets = 1 << bits
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    keyed = df.select(
-        *df.columns, *[sort_key(c).alias(f"_zk_{c}") for c in zorder_cols]
-    )
-    qs = keyed.select(
-        *[
-            F.expr(
-                f"approx_percentile(_zk_{c}, array({', '.join(str(p) for p in probs)}), 10000)"
-            ).alias(c)
-            for c in zorder_cols
-        ]
-    ).first()
-    splits_array, in_cols, buck_cols = [], [], []
-    for c in zorder_cols:
-        bounds = sorted(
-            {float(v) for v in (qs[c] or []) if v is not None}
-        ) or [0.0]
-        splits_array.append([float("-inf"), *bounds, float("inf")])
-        in_cols.append(f"_zk_{c}")
-        buck_cols.append(f"_zbx_{c}")
-    bucketizer = Bucketizer(
-        splitsArray=splits_array,
-        inputCols=in_cols,
-        outputCols=buck_cols,
-        handleInvalid="keep",  # NULL/NaN -> the extra trailing bucket
-    )
-    ranked = bucketizer.transform(keyed)
-    rank_cols = []
-    for c, bc in zip(zorder_cols, buck_cols):
-        rc = f"_zb_{c}"
-        # clamp the handleInvalid overflow bucket into the bits range
-        ranked = ranked.withColumn(
-            rc, F.least(F.col(bc).cast("long"), F.lit(n_buckets - 1))
-        )
-        rank_cols.append(rc)
-    # Morton interleave: bit i of every column's bucket index, LSB-first
-    terms = []
-    n_dims = len(rank_cols)
-    for i in range(bits):
-        for d, rc in enumerate(rank_cols):
-            terms.append(
-                f"(((({rc}) >> {i}) & 1) << {i * n_dims + d})"
-            )
-    z = F.expr(" + ".join(terms)).alias("_z")
-    out = (
-        ranked.select(*df.columns, z)
-        .repartitionByRange(n_partitions, F.col("_z"))
-        .sortWithinPartitions("_z")
-        .drop("_z")
-    )
-    out.write.mode(mode).parquet(path)
-
-
-def read_evolving_parquet(
-    spark: SparkSession,
-    paths: list[str],
-    schemas: list[StructType],
-    target: StructType,
-) -> DataFrame:
-    """Read generations of a dataset whose schema evolved (columns added /
-    dropped over time) into one frame with the ``target`` schema.
-
-    Each generation is scanned with ITS OWN explicit schema (the S4
-    discipline — never ``mergeSchema``, which reads every footer on the
-    driver and trusts whatever it finds), then aligned by NAME with
-    missing columns as typed nulls. unionByName(allowMissingColumns)
-    keeps each scan's column pruning and filter pushdown intact —
-    alignment is a zero-cost projection, not a shuffle.
-    """
-    if len(paths) != len(schemas):
-        raise ValueError("one schema per path")
-    target_names = [f.name for f in target.fields]
-    aligned = []
-    for p, s in zip(paths, schemas):
-        df = spark.read.schema(s).parquet(p)
-        have = set(df.columns)
-        # present columns also cast to the TARGET type: a generation that
-        # stored e.g. IntegerType where target says LongType must not
-        # leak its narrower width through the union (integer widths are
-        # load-bearing for the deterministic oracle hashes — schemas.py)
-        cols = [
-            F.col(f.name).cast(f.dataType) if f.name in have
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in target.fields
-        ]
-        aligned.append(df.select(*cols))
-    out = aligned[0]
-    for df in aligned[1:]:
-        out = out.unionByName(df)
-    return out.select(*target_names)
-
-
-def read_orc(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
-    """Schema-explicit ORC scan — same S4 discipline as parquet; ORC kept
-    for interchange with Hive-era warehouses (predicate pushdown and
-    column pruning work the same way)."""
-    return spark.read.schema(schema).orc(path)
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite",
-              partition_by: list[str] | None = None) -> None:
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    out_path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    sort_cols: list[str] | None = None,
-    schema: StructType | None = None,
-) -> int:
-    """Small-file compaction: rewrite a parquet directory into
-    ~``target_file_bytes`` files, optionally re-clustering on
-    ``sort_cols``. Returns the output file count.
-
-    Streaming sinks and per-trigger writes accumulate thousands of tiny
-    files; at 100 TB the scan cost is then dominated by footer reads and
-    task scheduling, not bytes. File count is derived from the on-disk
-    byte size (driver-side listing — metadata only), then the rewrite is
-    one job: range-clustered when ``sort_cols`` is given (keeps/restores
-    the pruning layout), plain coalesce otherwise (no shuffle at all).
-    """
-    import glob
-    import os
-
-    total = sum(
-        os.path.getsize(f)
-        for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-    )
-    n_files = max(1, -(-total // target_file_bytes))  # ceil
-    # Schema-explicit read (S4 discipline): with an explicit schema the
-    # footer ts-unit probe picks the right decode path, so TIMESTAMP(NANOS)
-    # inputs compact correctly instead of failing the schema-inferring read.
-    if schema is not None:
-        ensure_session_confs(spark)
-        df = _read_with_schema(spark, path, schema)
-    else:
-        df = spark.read.parquet(path)
-    if sort_cols:
-        out = df.repartitionByRange(n_files, *sort_cols).sortWithinPartitions(
-            *sort_cols
-        )
-    else:
-        out = df.coalesce(n_files)
-    out.write.mode("overwrite").parquet(out_path)
-    return len(
-        glob.glob(os.path.join(out_path, "**", "*.parquet"), recursive=True)
-    )
-
-
 def overwrite_partitions_dynamic(
     df: DataFrame, path: str, partition_by: list[str]
 ) -> None:

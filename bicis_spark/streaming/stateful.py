@@ -113,129 +113,3 @@ def running_station_counts(
             else GroupStateTimeout.ProcessingTimeTimeout
         ),
     )
-
-
-# ---------------------------------------------------------------------------
-# transformWithState (Spark 4): the successor stateful API
-# ---------------------------------------------------------------------------
-
-try:  # pyspark >= 4.0 AND protobuf present: the transformWithState
-    # Python runner speaks a protobuf state-server protocol, so the API
-    # exists but crashes at query start without google.protobuf — probe
-    # both here and let callers/tests gate on one flag.
-    import google.protobuf  # noqa: F401
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-        TimerValues,
-    )
-
-    HAS_TRANSFORM_WITH_STATE = True
-except ImportError:  # pragma: no cover - pyspark 3.x or no protobuf
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-    HAS_TRANSFORM_WITH_STATE = False
-
-
-class _RunningCountsProcessor(StatefulProcessor):
-    """``running_station_counts`` on the transformWithState API: per-key
-    cumulative total and last event time held in two NAMED value states
-    (the new API's composable-state model — applyInPandasWithState packs
-    everything into one state tuple), with optional per-state TTL
-    replacing the manual ProcessingTimeTimeout timer dance.
-
-    Why this API is the scale path: state variables are individually
-    typed and evolvable, TTL eviction is declarative (no pending-timer
-    no-data batches — the exact hazard running_station_counts documents
-    for its opt-in timeout), and the backing store is RocksDB
-    (streaming/statestore.py), so per-key state lives off-heap with
-    changelog checkpoints.
-    """
-
-    def __init__(self, ttl_ms: int | None = None):
-        self._ttl = ttl_ms
-
-    def init(self, handle: "StatefulProcessorHandle") -> None:
-        self._total = handle.getValueState(
-            "total", "total BIGINT", ttlDurationMs=self._ttl
-        )
-        self._last = handle.getValueState(
-            "last_us", "last_us BIGINT", ttlDurationMs=self._ttl
-        )
-
-    def handleInputRows(
-        self, key: tuple, rows, timer_values: "TimerValues"
-    ):
-        got = self._total.get()
-        total = got[0] if got is not None else 0
-        prev = self._last.get()
-        # same NULL-sentinel discipline as the applyInPandasWithState
-        # twin: no non-null ts seen yet => last_ts must stay NULL
-        last_us = prev[0] if prev is not None else None
-        for pdf in rows:
-            total += len(pdf)
-            if len(pdf):
-                batch_max = pdf["ts"].max()
-                if not pd.isna(batch_max):
-                    batch_us = int(batch_max.value // 1000)
-                    last_us = (
-                        batch_us if last_us is None else max(last_us, batch_us)
-                    )
-        self._total.update((total,))
-        if last_us is not None:
-            self._last.update((last_us,))
-        yield pd.DataFrame(
-            {
-                "station": [key[0]],
-                "total_events": [total],
-                "last_ts": [
-                    pd.Timestamp(last_us * 1000)
-                    if last_us is not None
-                    else pd.NaT
-                ],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def running_station_counts_tws(
-    events: DataFrame,
-    station_col: str = "user_id",
-    ts_col: str = "ts",
-    ttl_ms: int | None = None,
-) -> DataFrame:
-    """``running_station_counts`` built on ``transformWithStateInPandas``.
-
-    Output-identical to the applyInPandasWithState version on a drained
-    finite source (tests assert parity); requires the RocksDB state store
-    (wrap the query start in ``statestore.rocksdb_state`` — the new API
-    does not support the heap provider). ``ttl_ms`` evicts quiet keys'
-    state declaratively; it requires ``timeMode='processingTime'``, which
-    unlike pending ProcessingTimeTimeout timers does NOT schedule no-data
-    batches after the source drains.
-
-    Where transformWithStateInPandas is unavailable (pyspark < 4.0, or
-    no ``google.protobuf`` — its Python runner speaks a protobuf
-    state-server protocol), this FALLS BACK to the output-identical
-    ``running_station_counts`` twin rather than raising: ``ttl_ms`` maps
-    onto the twin's ``idle_timeout_ms`` (both evict keys quiet for that
-    much processing time; the timer-based eviction schedules no-data
-    batches after a drain, which the TTL path does not — see the twin's
-    docstring before setting it on a drain-to-quiescence harness)."""
-    if not HAS_TRANSFORM_WITH_STATE:
-        return running_station_counts(
-            events,
-            station_col=station_col,
-            ts_col=ts_col,
-            idle_timeout_ms=ttl_ms,
-        )
-    keyed = events.select(
-        events[station_col].alias("station"), events[ts_col].alias("ts")
-    ).groupBy("station")
-    return keyed.transformWithStateInPandas(
-        _RunningCountsProcessor(ttl_ms),
-        outputStructType=RUNNING_SCHEMA,
-        outputMode="update",
-        timeMode="none" if ttl_ms is None else "processingTime",
-    )

@@ -14,15 +14,10 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb  # noqa: E402
-
 import __spark_entry__ as entrymod  # noqa: E402
 from bicis_spark.caching import release_tracked  # noqa: E402
 from bicis_spark.session import get_spark  # noqa: E402
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+from tests.oracle_utils import assert_oracle_match, duck_views  # noqa: E402
 
 
 def main() -> int:
@@ -50,12 +45,7 @@ def main() -> int:
     print(f"t1 entry: rows={n} schema={df.schema.simpleString()}")
     ok = n > 0
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from tests.oracle_utils import assert_oracle_match  # noqa: E402
+    con = duck_views(sf_dir)
 
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     if only is not None:

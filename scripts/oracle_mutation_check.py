@@ -35,16 +35,10 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb  # noqa: E402
-
 from bicis_spark.caching import release_tracked  # noqa: E402
 from bicis_spark.plans import queries as registry  # noqa: E402
 from bicis_spark.session import get_spark  # noqa: E402
-from tests.oracle_utils import assert_oracle_match  # noqa: E402
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+from tests.oracle_utils import assert_oracle_match, duck_views  # noqa: E402
 
 # One query per operator family (SURVEY §2 groupings). Chosen for having
 # boundary constants / offsets in their oracle SQL.
@@ -154,9 +148,7 @@ def main() -> int:
 
     spark = get_spark(app_name="oracle_mutation_check")
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = duck_views(sf_dir)
 
     qs, oracles = registry.queries(), registry.oracle_sql()
     names = [n for n in (only or REPRESENTATIVES) if n in oracles]

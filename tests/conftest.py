@@ -6,17 +6,14 @@ import os
 import sys
 from contextlib import contextmanager
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bicis_spark.session import get_spark  # noqa: E402
+from tests.oracle_utils import duck_views  # noqa: E402
 
 SF_DIR = os.environ.get("BICIS_TEST_SF_DIR", "/root/testdata/sf0.001")
-TABLE_NAMES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 
 @pytest.fixture(scope="session")
@@ -29,11 +26,7 @@ def spark():
 def duck():
     """DuckDB connection with the same parquet tables registered as views —
     mirrors the driver's oracle setup."""
-    con = duckdb.connect()
-    for name in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM '{SF_DIR}/{name}.parquet'"
-        )
+    con = duck_views(SF_DIR)
     yield con
     con.close()
 

@@ -11,7 +11,20 @@ from __future__ import annotations
 
 import math
 
+import duckdb
 import pandas as pd
+
+from bicis_spark.schemas import TABLES
+
+
+def duck_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """DuckDB connection with every declared table under ``sf_dir``
+    registered as a view of its parquet: the oracle side of every
+    Spark-vs-DuckDB comparison."""
+    con = duckdb.connect()
+    for name in TABLES:
+        con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{sf_dir}/{name}.parquet'")
+    return con
 
 
 def _normalize(df: pd.DataFrame) -> pd.DataFrame:

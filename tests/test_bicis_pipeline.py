@@ -5,12 +5,12 @@ from __future__ import annotations
 
 import math
 
-from bicis_spark.plans.bicis_pipeline import build_pipeline, run_full_pipeline
+from bicis_spark.plans.bicis_pipeline import build_pipeline
 from bicis_spark.plans.runner import load_experiment
 
 
 def test_full_pipeline(spark, sf_dir, tmp_path):
-    results = run_full_pipeline(spark, sf_dir, str(tmp_path / "pipe"))
+    results = build_pipeline(spark, sf_dir, str(tmp_path / "pipe")).run()
 
     ds = results["dataset"]
     assert len(ds.columns) == 3 + 48  # id, target, split, 24+24 lag features

@@ -191,7 +191,7 @@ def test_lsh_bucket_expr_path_equals_column_path(spark, sf_dir):
     from bicis_spark.sources.io import read_table
 
     emb = read_table(spark, sf_dir, "embeddings").limit(200)
-    q = emb.select(F.col("vec_id"), quantize(F.col("embedding")).alias("qv"))
+    q = emb.select(F.col("vec_id"), quantize("embedding").alias("qv"))
     both = q.select(
         "vec_id",
         lsh_bucket("qv", 8, 64).alias("fast"),

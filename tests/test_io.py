@@ -159,205 +159,6 @@ def test_sorted_parquet_layout_disjoint_file_ranges(spark, sf_dir, tmp_path):
     assert total == orders.count()
 
 
-def test_zorder_parquet_layout_prunes_both_dims(spark, sf_dir, tmp_path):
-    """Z-order layout: per-file bounding boxes must be tight on BOTH
-    clustering columns — each file covers a small fraction of each
-    column's domain, so footer stats prune on either predicate (the
-    property 1-D range clustering cannot give the second column)."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from bicis_spark.sources.io import read_table, write_zorder_parquet
-
-    path = str(tmp_path / "li_zorder")
-    li = read_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_quantity", "l_extendedprice"
-    )
-    write_zorder_parquet(
-        li, path, ["l_partkey", "l_extendedprice"], n_partitions=16, bits=8
-    )
-
-    files = sorted(glob.glob(path + "/*.parquet"))
-    assert len(files) > 4
-    n_rows = li.count()
-    lo_pk, hi_pk, lo_px, hi_px = li.select(
-        F.min("l_partkey"), F.max("l_partkey"),
-        F.min("l_extendedprice"), F.max("l_extendedprice"),
-    ).first()
-    span_pk = hi_pk - lo_pk
-    span_px = hi_px - lo_px
-    covered_pk = covered_px = 0.0
-    total = 0
-    for f in files:
-        t = pq.read_table(f, columns=["l_partkey", "l_extendedprice"])
-        pk = t.column("l_partkey").to_pylist()
-        px = t.column("l_extendedprice").to_pylist()
-        covered_pk += (max(pk) - min(pk)) / span_pk
-        covered_px += (max(px) - min(px)) / span_px
-        total += len(pk)
-    assert total == n_rows
-    n = len(files)
-    # random placement would make every file span ~the full domain on both
-    # columns (mean fraction ~= 1.0), and 1-D range clustering gives ~1.0 on
-    # its SECOND dim. The ideal Morton bound for 16 files is ~1/sqrt(16) =
-    # 0.25 per dim; files straddling curve cuts widen that, so gate at 0.6 —
-    # still >1.6x pruning on both dims simultaneously.
-    assert covered_pk / n < 0.6, f"partkey coverage {covered_pk / n:.2f}"
-    assert covered_px / n < 0.6, f"extendedprice coverage {covered_px / n:.2f}"
-
-
-def test_read_evolving_parquet_aligns_generations(spark, tmp_path):
-    """Schema evolution: generation 1 lacks a column added in generation 2;
-    the unified read aligns by name with typed nulls, preserving per-scan
-    pushdown (no mergeSchema footer sweep)."""
-    from pyspark.sql.types import (
-        DoubleType, LongType, StringType, StructField, StructType,
-    )
-
-    from bicis_spark.sources.io import read_evolving_parquet
-
-    g1_schema = StructType(
-        [StructField("id", LongType()), StructField("v", DoubleType())]
-    )
-    g2_schema = StructType(
-        [
-            StructField("id", LongType()),
-            StructField("v", DoubleType()),
-            StructField("tag", StringType()),
-        ]
-    )
-    p1, p2 = str(tmp_path / "g1"), str(tmp_path / "g2")
-    spark.createDataFrame([(1, 1.0), (2, 2.0)], g1_schema).write.parquet(p1)
-    spark.createDataFrame([(3, 3.0, "x")], g2_schema).write.parquet(p2)
-
-    out = read_evolving_parquet(spark, [p1, p2], [g1_schema, g2_schema], g2_schema)
-    rows = sorted(map(tuple, out.collect()))
-    assert rows == [(1, 1.0, None), (2, 2.0, None), (3, 3.0, "x")]
-    assert out.schema == g2_schema
-
-
-def test_orc_round_trip(spark, sf_dir, tmp_path):
-    """ORC sink -> schema-explicit ORC scan round-trips values including
-    timestamps (same S4 discipline as parquet)."""
-    from bicis_spark.sources.io import read_orc, read_table, write_orc
-
-    events = read_table(spark, sf_dir, "events").limit(200)
-    path = str(tmp_path / "events_orc")
-    write_orc(events, path)
-    back = read_orc(spark, path, events.schema)
-    assert back.schema == events.schema
-    a = sorted(map(tuple, events.collect()))
-    b = sorted(map(tuple, back.collect()))
-    assert a == b
-
-
-def test_compact_parquet_reduces_files_and_preserves_rows(spark, tmp_path):
-    from bicis_spark.sources.io import compact_parquet
-
-    src = str(tmp_path / "many")
-    out = str(tmp_path / "few")
-    df = spark.range(0, 20_000).select(
-        F.col("id"), (F.col("id") % 7).alias("k")
-    )
-    df.repartition(40).write.parquet(src)  # 40 tiny files
-    import glob
-
-    assert len(glob.glob(src + "/*.parquet")) == 40
-    n = compact_parquet(spark, src, out, target_file_bytes=1 << 30)
-    assert n == 1
-    back = spark.read.parquet(out)
-    assert back.count() == 20_000
-    assert back.agg(F.sum("id")).first()[0] == sum(range(20_000))
-
-    # re-clustered compaction restores the range-pruning layout
-    out2 = str(tmp_path / "few_sorted")
-    import pyarrow.parquet as pq
-
-    compact_parquet(
-        spark, src, out2, target_file_bytes=120_000, sort_cols=["id"]
-    )
-    files = sorted(glob.glob(out2 + "/*.parquet"))
-    assert len(files) > 1
-    ranges = sorted(
-        (
-            min(t := pq.read_table(f, columns=["id"]).column("id").to_pylist()),
-            max(t),
-        )
-        for f in files
-    )
-    for (_, hi), (lo, _) in zip(ranges, ranges[1:]):
-        assert hi <= lo
-
-
-def test_zorder_supports_date_and_decimal_columns(spark, tmp_path):
-    """Boundary literals must be engine-parsable for every supported
-    type: date/timestamp/decimal z-columns previously spliced Python
-    repr() (datetime.date(...), Decimal('...')) into SQL and crashed."""
-    import datetime as dt
-    import glob
-    from decimal import Decimal
-
-    from bicis_spark.sources.io import write_zorder_parquet
-
-    rows = [
-        (i, dt.date(2024, 1, 1) + dt.timedelta(days=i % 200),
-         Decimal(i % 97) + Decimal("0.25"))
-        for i in range(4000)
-    ]
-    df = spark.createDataFrame(rows, "id long, d date, amt decimal(10,2)")
-    path = str(tmp_path / "z_dates")
-    write_zorder_parquet(df, path, ["d", "amt"], n_partitions=4, bits=4)
-    assert len(glob.glob(path + "/*.parquet")) >= 2
-    back = spark.read.parquet(path)
-    assert back.count() == 4000
-    assert set(back.columns) == {"id", "d", "amt"}
-
-
-def test_evolving_read_widens_narrow_generations(spark, tmp_path):
-    """A generation that stored a NARROWER type than the target (int32 vs
-    int64) must come back widened — integer widths are load-bearing for
-    the deterministic oracle hashes."""
-    from pyspark.sql.types import (
-        IntegerType, LongType, StructField, StructType,
-    )
-
-    from bicis_spark.sources.io import read_evolving_parquet
-
-    g1 = StructType([StructField("id", IntegerType())])
-    target = StructType([StructField("id", LongType())])
-    p1 = str(tmp_path / "narrow")
-    spark.createDataFrame([(7,)], g1).write.parquet(p1)
-    out = read_evolving_parquet(spark, [p1], [g1], target)
-    assert out.schema == target
-    assert [r["id"] for r in out.collect()] == [7]
-
-
-def test_compact_parquet_sees_partitioned_layouts(spark, tmp_path):
-    """Hive-partitioned inputs keep files in subdirectories; the size
-    estimate and final count must walk recursively or the whole dataset
-    collapses through coalesce(1) on a zero-byte estimate."""
-    from bicis_spark.sources.io import compact_parquet
-
-    src = str(tmp_path / "parted")
-    out = str(tmp_path / "compacted")
-    df = spark.range(0, 10_000).select(
-        F.col("id"), (F.col("id") % 3).alias("day")
-    )
-    df.repartition(10).write.partitionBy("day").parquet(src)
-    import glob
-
-    assert not glob.glob(src + "/*.parquet")  # nothing at top level
-    files_in = glob.glob(src + "/**/*.parquet", recursive=True)
-    assert len(files_in) > 3
-    total_bytes = sum(__import__("os").path.getsize(f) for f in files_in)
-    # target slightly under the input size => n_files >= 2 proves the
-    # size estimate saw the partition subdirectories
-    n = compact_parquet(spark, src, out, target_file_bytes=total_bytes // 2)
-    assert n >= 2
-    assert spark.read.parquet(out).count() == 10_000
-
-
 def test_partitioned_sink_read_prunes_partitions(spark, tmp_path):
     """The day-partitioned sink layout must let a day filter resolve via
     PARTITION pruning (directory-level skip), not a per-row data filter:

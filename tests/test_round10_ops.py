@@ -82,14 +82,14 @@ def test_synth_clustered_embeddings_separation(spark):
     ids = spark.range(0, 128).select(F.col("id").alias("vec_id"))
     emb = synth_clustered_embeddings(ids, "vec_id", n_clusters=32, dims=64)
     q = emb.select(
-        "vec_id", quantize(F.col("embedding")).alias("qv")
+        "vec_id", quantize("embedding").alias("qv")
     )
     pairs = (
         q.alias("a")
         .join(q.alias("b"), F.col("a.vec_id") < F.col("b.vec_id"))
         .select(
             (F.col("a.vec_id") % 32 == F.col("b.vec_id") % 32).alias("same"),
-            cosine_sim(F.col("a.qv"), F.col("b.qv")).alias("cos"),
+            cosine_sim("a.qv", "b.qv").alias("cos"),
         )
         .groupBy("same")
         .agg(F.avg("cos").alias("c"))
@@ -300,12 +300,12 @@ def test_sq8_encode_bounds_and_scale(spark):
         (3, [2.0, 4.0, 0.0, 0.125]),
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    c = df.select("vec_id", quantize(F.col("embedding")).alias("qv"))
+    c = df.select("vec_id", quantize("embedding").alias("qv"))
     scales = sq8_scales(c, "qv", 4)
     c8 = {
         r["vec_id"]: r["c8"]
         for r in c.crossJoin(F.broadcast(scales))
-        .select("vec_id", sq8_encode(F.col("qv"), F.col("sl")).alias("c8"))
+        .select("vec_id", sq8_encode("qv", "sl").alias("c8"))
         .collect()
     }
     for codes in c8.values():

@@ -281,7 +281,7 @@ def test_sign_signature_words_match_python(spark, sf_dir):
 
     emb = read_table(spark, sf_dir, "embeddings").limit(20)
     got = (
-        emb.select("vec_id", quantize(F.col("embedding")).alias("qv"))
+        emb.select("vec_id", quantize("embedding").alias("qv"))
         .select(
             "vec_id",
             "qv",
