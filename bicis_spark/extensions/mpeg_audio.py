@@ -1,20 +1,14 @@
 """Pure-Python MPEG-1 Audio Layer I (ISO/IEC 11172-3) encode/decode for
-the multimodal decode surface — shrinking the "codec-bound audio" gap
-left after round 8's JPEG work. Reference analogue: none (the bicis
-reference has no multimodal surface; this is a BASELINE.json north-star
-extension).
+the multimodal decode surface, plus the single-channel MPEG-1 header
+writer and frame walk (``write_header`` / ``walk_frames``) that Layer III
+(``mpeg_layer3.py``) shares. Bit I/O is ``extensions/bitstream.py``.
+Reference analogue: none (the bicis reference has no multimodal surface).
 
-Why Layer I (and not Layer III/"MP3"): Layer I is the member of the
-MPEG-1 audio family whose ENTIRE bitstream layer is implementable from
-closed-form public-spec math — sync/header walk, 4-bit-per-subband bit
-allocation, 6-bit scalefactors, linear requantization — with exactly one
-spec table, the 63-entry scalefactor geometric series
-``sf(i) = 2^(1 - i/3)`` (ISO 11172-3 Table B.1), which is a FORMULA, not
-data. Layer III additionally needs 32 spec-data Huffman tables and the
-521-coefficient synthesis window, which cannot be reproduced from the
-spec text and have no oracle story; that residual (Layer III entropy
-coding) is the documented remaining stub in
-``multimodal.decode_codec_features``.
+Layer I's whole bitstream layer follows from closed-form public-spec
+math: sync/header walk, 4-bit-per-subband bit allocation, 6-bit
+scalefactors and linear requantization, with one spec table, the
+63-entry scalefactor geometric series ``sf(i) = 2^(1 - i/3)`` (ISO
+11172-3 Table B.1), which is a formula, not data.
 
 Determinism contract (what lets a DuckDB oracle replay the decode):
 every stage is integer-exact or a pinned fixed-point tree.
@@ -43,6 +37,8 @@ from __future__ import annotations
 
 import math
 
+from bicis_spark.extensions.bitstream import BitReader, BitWriter
+
 #: Layer I bitrate table (kbit/s), index 1..14; 0 = free format (not
 #: supported here), 15 = forbidden. ISO 11172-3 Table B.2 (Layer I row).
 BITRATE_KBPS: dict[int, int] = {
@@ -65,47 +61,66 @@ SF_Q: list[int] = [
 ]
 
 
-class _BitWriter:
-    def __init__(self) -> None:
-        self.buf = bytearray()
-        self._acc = 0
-        self._nbits = 0
-
-    def write(self, value: int, nbits: int) -> None:
-        if value < 0 or value >= (1 << nbits):
-            raise ValueError("value out of range for field width")
-        self._acc = (self._acc << nbits) | value
-        self._nbits += nbits
-        while self._nbits >= 8:
-            self._nbits -= 8
-            self.buf.append((self._acc >> self._nbits) & 0xFF)
-        self._acc &= (1 << self._nbits) - 1
-
-    def pad_to(self, n_bytes: int) -> None:
-        if self._nbits:
-            self.write(0, 8 - self._nbits)
-        if len(self.buf) > n_bytes:
-            raise ValueError("frame overflows its slot length")
-        self.buf.extend(b"\x00" * (n_bytes - len(self.buf)))
+#: Header ``layer`` field per layer name (ISO 11172-3 §2.4.2.3).
+_LAYER_CODE: dict[str, int] = {"I": 0b11, "III": 0b01}
 
 
-class _BitReader:
-    def __init__(self, data: bytes, pos_bytes: int = 0) -> None:
-        self.data = data
-        self.pos = pos_bytes * 8
+def write_header(w: BitWriter, layer: str, bitrate_index: int, samplerate_index: int) -> None:
+    """Append one single-channel MPEG-1 frame header: no CRC, no padding."""
+    w.write(0xFFF, 12)  # sync
+    w.write(1, 1)  # ID = MPEG-1
+    w.write(_LAYER_CODE[layer], 2)
+    w.write(1, 1)  # no CRC
+    w.write(bitrate_index, 4)
+    w.write(samplerate_index, 2)
+    w.write(0, 1)  # padding
+    w.write(0, 1)  # private
+    w.write(0b11, 2)  # mode = single channel
+    w.write(0, 2)  # mode extension
+    w.write(0, 1)  # copyright
+    w.write(1, 1)  # original
+    w.write(0, 2)  # emphasis
 
-    def read(self, nbits: int) -> int:
-        end = self.pos + nbits
-        if end > len(self.data) * 8:
-            raise ValueError("truncated bitstream")
-        # chunked big-endian extract (one int.from_bytes per field, not a
-        # per-bit loop — the bit walk dominated the sf0.1 decode at 4.5s)
-        first = self.pos >> 3
-        last = (end + 7) >> 3
-        chunk = int.from_bytes(self.data[first:last], "big")
-        v = (chunk >> ((last << 3) - end)) & ((1 << nbits) - 1)
-        self.pos = end
-        return v
+
+def walk_frames(payload: bytes, layer: str, bitrates: dict[int, int], frame_len):
+    """Walk a fixed-rate single-channel MPEG-1 stream of ``layer``: yield
+    (reader just past the header, bitrate kbit/s, sample rate Hz, frame
+    start, frame length) per frame, sized by ``frame_len(bitrate,
+    sample_rate, padding)``. Rejects a lost sync, another layer or mode,
+    an unlisted bitrate or sample rate, a mid-stream rate change and
+    bytes after the last frame."""
+    if len(payload) < 4 or payload[0] != 0xFF or (payload[1] & 0xF0) != 0xF0:
+        raise ValueError("not an MPEG audio stream")
+    pos = 0
+    rates = None
+    while pos + 4 <= len(payload):
+        r = BitReader(payload, pos)
+        if r.read(12) != 0xFFF:
+            raise ValueError("lost frame sync")
+        if r.read(1) != 1:
+            raise ValueError("not MPEG-1")
+        if r.read(2) != _LAYER_CODE[layer]:
+            raise ValueError(f"not Layer {layer}")
+        r.read(1)  # protection
+        bidx = r.read(4)
+        sidx = r.read(2)
+        padding = r.read(1)
+        r.read(1)  # private
+        mode = r.read(2)
+        r.read(6)  # mode_ext(2)/copyright(1)/original(1)/emphasis(2)
+        if bidx not in bitrates or sidx not in SAMPLE_RATE:
+            raise ValueError("forbidden bitrate/samplerate index")
+        if mode != 0b11:
+            raise ValueError("only single_channel supported")
+        if rates is None:
+            rates = (bitrates[bidx], SAMPLE_RATE[sidx])
+        elif rates != (bitrates[bidx], SAMPLE_RATE[sidx]):
+            raise ValueError("mid-stream rate change")
+        flen = frame_len(*rates, padding)
+        yield r, *rates, pos, flen
+        pos += flen
+    if pos != len(payload):
+        raise ValueError("trailing bytes after last frame")
 
 
 def frame_bytes(bitrate_kbps: int, sample_rate: int, padding: int = 0) -> int:
@@ -127,20 +142,8 @@ def encode_layer1_frame(
     allocated), ``samples[s][sb]`` the raw nb-bit codes for s in 0..11.
     Payload is zero-padded to the header-implied slot length, so the
     decoder's frame walk is exercised for real."""
-    w = _BitWriter()
-    w.write(0xFFF, 12)  # sync
-    w.write(1, 1)  # ID = MPEG-1
-    w.write(0b11, 2)  # layer I
-    w.write(1, 1)  # no CRC
-    w.write(bitrate_index, 4)
-    w.write(samplerate_index, 2)
-    w.write(0, 1)  # padding
-    w.write(0, 1)  # private
-    w.write(0b11, 2)  # mode = single channel
-    w.write(0, 2)  # mode extension
-    w.write(0, 1)  # copyright
-    w.write(1, 1)  # original
-    w.write(0, 2)  # emphasis
+    w = BitWriter()
+    write_header(w, "I", bitrate_index, samplerate_index)
     for sb in range(32):
         if not 0 <= alloc[sb] <= 14:
             raise ValueError("allocation code 15 is forbidden")
@@ -152,8 +155,11 @@ def encode_layer1_frame(
         for sb in range(32):
             if alloc[sb]:
                 w.write(samples[s][sb], alloc[sb] + 1)
-    w.pad_to(frame_bytes(BITRATE_KBPS[bitrate_index], SAMPLE_RATE[samplerate_index]))
-    return bytes(w.buf)
+    w.pad_to_byte(0)
+    n_bytes = frame_bytes(BITRATE_KBPS[bitrate_index], SAMPLE_RATE[samplerate_index])
+    if len(w.buf) > n_bytes:
+        raise ValueError("frame overflows its slot length")
+    return bytes(w.buf.ljust(n_bytes, b"\x00"))
 
 
 def decode_layer1(payload: bytes) -> dict:
@@ -171,36 +177,8 @@ def decode_layer1(payload: bytes) -> dict:
     * ``pcm_fix_sum`` — Σ floor(SF_Q[scf]·2c/(2^nb − 1)), the pinned
       fixed-point requantized value (see module docstring)
     """
-    if len(payload) < 4 or payload[0] != 0xFF or (payload[1] & 0xF0) != 0xF0:
-        raise ValueError("not an MPEG audio stream")
-    pos = 0
-    sample_rate = bitrate = None
     n_frames = n_alloc = scf_sum = requant_abs = pcm_fix = 0
-    while pos + 4 <= len(payload):
-        r = _BitReader(payload, pos)
-        if r.read(12) != 0xFFF:
-            raise ValueError("lost frame sync")
-        if r.read(1) != 1:
-            raise ValueError("not MPEG-1")
-        if r.read(2) != 0b11:
-            raise ValueError("not Layer I")
-        r.read(1)  # protection
-        bidx = r.read(4)
-        sidx = r.read(2)
-        padding = r.read(1)
-        r.read(1)  # private
-        mode = r.read(2)
-        r.read(6)  # mode_ext(2)/copyright(1)/original(1)/emphasis(2)
-        if bidx not in BITRATE_KBPS or sidx not in SAMPLE_RATE:
-            raise ValueError("forbidden bitrate/samplerate index")
-        if mode != 0b11:
-            raise ValueError("only single_channel supported")
-        fb = BITRATE_KBPS[bidx]
-        fs = SAMPLE_RATE[sidx]
-        if sample_rate is None:
-            sample_rate, bitrate = fs, fb
-        elif (fs, fb) != (sample_rate, bitrate):
-            raise ValueError("mid-stream rate change")
+    for r, bitrate, sample_rate, _, _ in walk_frames(payload, "I", BITRATE_KBPS, frame_bytes):
         alloc = []
         for _ in range(32):
             code = r.read(4)
@@ -221,9 +199,6 @@ def decode_layer1(payload: bytes) -> dict:
         n_alloc += sum(1 for a in alloc if a)
         scf_sum += sum(scf[sb] for sb in range(32) if alloc[sb])
         n_frames += 1
-        pos += frame_bytes(fb, fs, padding)
-    if pos != len(payload):
-        raise ValueError("trailing bytes after last frame")
     return {
         "sample_rate": sample_rate,
         "bitrate_kbps": bitrate,

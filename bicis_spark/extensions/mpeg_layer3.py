@@ -1,8 +1,8 @@
 """Pure-Python MPEG-1 Audio Layer III ("MP3", ISO/IEC 11172-3)
-encode/decode for the multimodal decode surface — closing the last codec
-stub left after round 8's JPEG and Layer I work. Reference analogue:
-none (the bicis reference has no multimodal surface; this is a
-BASELINE.json north-star extension).
+encode/decode for the multimodal decode surface. The frame header comes
+from ``mpeg_audio.py``, bit I/O and prefix-code tables from
+``extensions/bitstream.py``. Reference analogue: none (the bicis
+reference has no multimodal surface).
 
 What is spec-EXACT here (implementable from closed-form public-spec
 structure, same standard as Layer I in ``mpeg_audio.py``):
@@ -30,7 +30,7 @@ structure, same standard as Layer I in ``mpeg_audio.py``):
   length — quadruples are decoded until the granule's bit budget is
   exhausted, and a budget that doesn't land exactly on a quadruple
   boundary is a loud error;
-* the entropy-decode MACHINERY: prefix-code walk, linbits escape
+* the entropy-decode MACHINERY: prefix-code lookup, linbits escape
   extension for max-valued codes, per-nonzero sign bits, the three
   region partitions of the big_values area with per-region
   table_select, count1 (v,w,x,y) quadruples;
@@ -51,8 +51,8 @@ weights over the same symbol alphabets the spec tables cover
 (pair (x,y) with linbits escapes; count1 quadruples) — see
 ``build_pair_codebook`` / ``build_quad_codebook``. The decode algorithm
 is the real one; the code-to-symbol assignment is a drop-in seam: load
-the ISO B.7 (hlen, hcod) data into the same ``{code: symbol}`` shape
-and this decoder reads wire-format MP3 granule data unchanged. The
+the ISO B.7 (hlen, hcod) data into the same ``{symbol: (code, length)}``
+shape and this decoder reads wire-format MP3 granule data unchanged. The
 oracle never sees the entropy layer either way — it replays the synth
 VALUE formulas, so a hash MATCH proves decode∘encode is the identity
 through the reservoir walk, the side-info layout, the scalefactor/scfsi
@@ -78,7 +78,8 @@ from __future__ import annotations
 import heapq
 import math
 
-from bicis_spark.extensions.mpeg_audio import SAMPLE_RATE, _BitReader, _BitWriter
+from bicis_spark.extensions.bitstream import BitReader, BitWriter, PrefixCode, canonical_codes
+from bicis_spark.extensions.mpeg_audio import SAMPLE_RATE, walk_frames, write_header
 
 #: Layer III bitrate table (kbit/s), index 1..14. ISO 11172-3 Table B.2
 #: (Layer III column): 32..320 kbps.
@@ -124,8 +125,8 @@ def _pow43_q(v: int) -> int:
 
 # ---------------------------------------------------------------------------
 # Canonical codebooks (the documented stand-in for ISO Table B.7 data —
-# drop-in seam: same {symbol: (code, length)} / {(length, code): symbol}
-# shape the spec data loads into)
+# drop-in seam: the spec data loads into the same {symbol: (code, length)}
+# shape)
 # ---------------------------------------------------------------------------
 
 
@@ -133,8 +134,7 @@ def _canonical_from_weights(symbols: list[int], weights: list[int]) -> dict[int,
     """Deterministic Huffman lengths from integer weights (heap merge,
     ties broken by smallest symbol index), then CANONICAL code
     assignment (by (length, symbol)). Kraft-complete by construction, so
-    the prefix walk in ``_read_prefix`` always terminates on valid
-    input."""
+    every peek of a valid stream decodes."""
     if len(symbols) == 1:
         return {symbols[0]: (0, 1)}
     heap: list[tuple[int, int, list[int]]] = [
@@ -148,15 +148,10 @@ def _canonical_from_weights(symbols: list[int], weights: list[int]) -> dict[int,
         for s in m1 + m2:
             depth[s] += 1
         heapq.heappush(heap, (w1 + w2, min(t1, t2), m1 + m2))
-    code = 0
-    prev_len = 0
-    out: dict[int, tuple[int, int]] = {}
-    for length, sym in sorted((depth[s], s) for s in symbols):
-        code <<= length - prev_len
-        prev_len = length
-        out[sym] = (code, length)
-        code += 1
-    return out
+    counts = [0] * max(depth.values())
+    for s in symbols:
+        counts[depth[s] - 1] += 1
+    return canonical_codes(counts, sorted(symbols, key=lambda s: (depth[s], s)))
 
 
 #: Big-values codebook shapes actually used by the synthesizer:
@@ -189,32 +184,8 @@ def build_quad_codebook(table: int) -> dict[int, tuple[int, int]]:
 
 _PAIR_BOOKS = {t: build_pair_codebook(m) for t, (m, _) in PAIR_TABLES.items()}
 _QUAD_BOOKS = {t: build_quad_codebook(t) for t in (0, 1)}
-_PAIR_DECODE = {
-    t: {(ln, code): s for s, (code, ln) in book.items()}
-    for t, book in _PAIR_BOOKS.items()
-}
-_QUAD_DECODE = {
-    t: {(ln, code): s for s, (code, ln) in book.items()}
-    for t, book in _QUAD_BOOKS.items()
-}
-_MAX_CODE_LEN = max(
-    ln
-    for books in (_PAIR_BOOKS.values(), _QUAD_BOOKS.values())
-    for book in books
-    for _, ln in book.values()
-)
-
-
-def _read_prefix(r: _BitReader, table: dict[tuple[int, int], int]) -> int:
-    """Walk the bitstream one bit at a time until a codeword matches —
-    the canonical prefix-decode loop every Huffman decoder runs."""
-    code = 0
-    for length in range(1, _MAX_CODE_LEN + 1):
-        code = (code << 1) | r.read(1)
-        sym = table.get((length, code))
-        if sym is not None:
-            return sym
-    raise ValueError("invalid Huffman codeword")
+_PAIR_CODES = {t: PrefixCode(book) for t, book in _PAIR_BOOKS.items()}
+_QUAD_CODES = {t: PrefixCode(book) for t, book in _QUAD_BOOKS.items()}
 
 
 # ---------------------------------------------------------------------------
@@ -275,12 +246,12 @@ def _region_of_pair(p: int, region0_count: int, region1_count: int) -> int:
     return 0 if p < r0 else (1 if p < r1 else 2)
 
 
-def _write_granule(w: _BitWriter, g: GranuleSpec) -> int:
+def _write_granule(w: BitWriter, g: GranuleSpec) -> int:
     """Append one granule's main data (scalefactors + Huffman data) and
     return the bit count (= part2_3_length). ``scalefacs`` entries for
     scfsi-copied bands must already be EXCLUDED by the caller (pass
     None in their slots)."""
-    start = w._nbits + 8 * len(w.buf)
+    start = w.n_bits
     slen1, slen2 = SLEN[g.scalefac_compress]
     for b in range(21):
         sf = g.scalefacs[b]
@@ -318,11 +289,11 @@ def _write_granule(w: _BitWriter, g: GranuleSpec) -> int:
         for v in quad:
             if v:
                 w.write(1 if v < 0 else 0, 1)
-    return w._nbits + 8 * len(w.buf) - start
+    return w.n_bits - start
 
 
 def _write_side_info(
-    w: _BitWriter, main_data_begin: int, scfsi: list[int],
+    w: BitWriter, main_data_begin: int, scfsi: list[int],
     granules: list[tuple[GranuleSpec, int]],
 ) -> None:
     w.write(main_data_begin, 9)
@@ -359,7 +330,7 @@ def encode_layer3_stream(
         BITRATE_KBPS_L3[bitrate_index], SAMPLE_RATE[samplerate_index]
     )
     capacity = fb - 4 - _SIDE_INFO_BYTES
-    stream = _BitWriter()
+    stream = BitWriter()
     side_infos: list[bytes] = []
     consumed_capacity = 0
     for f, (begin, scfsi, granules) in enumerate(frames):
@@ -369,8 +340,7 @@ def encode_layer3_stream(
             raise ValueError("main_data_begin exceeds 9 bits")
         # stuff the logical stream so this frame's data begins at byte
         # offset (consumed_capacity - begin)
-        if stream._nbits:
-            stream.write(0, 8 - stream._nbits)
+        stream.pad_to_byte(0)
         target = consumed_capacity - begin
         if target < len(stream.buf):
             raise ValueError(
@@ -394,27 +364,14 @@ def encode_layer3_stream(
             )
             part23 = _write_granule(stream, g2)
             gspecs.append((g, part23))
-        w = _BitWriter()
-        w.write(0xFFF, 12)
-        w.write(1, 1)  # MPEG-1
-        w.write(0b01, 2)  # Layer III
-        w.write(1, 1)  # no CRC
-        w.write(bitrate_index, 4)
-        w.write(samplerate_index, 2)
-        w.write(0, 1)  # padding
-        w.write(0, 1)  # private
-        w.write(0b11, 2)  # single_channel
-        w.write(0, 2)
-        w.write(0, 1)
-        w.write(1, 1)  # original
-        w.write(0, 2)  # emphasis
+        w = BitWriter()
+        write_header(w, "III", bitrate_index, samplerate_index)
         _write_side_info(w, begin, scfsi, gspecs)
-        if len(w.buf) != 4 + _SIDE_INFO_BYTES or w._nbits:
+        if w.n_bits != 8 * (4 + _SIDE_INFO_BYTES):
             raise AssertionError("side info must be exactly 17 bytes")
         side_infos.append(bytes(w.buf))
         consumed_capacity += capacity
-    if stream._nbits:
-        stream.write(0, 8 - stream._nbits)
+    stream.pad_to_byte(0)
     if len(stream.buf) > consumed_capacity:
         raise ValueError("main data overflows total reservoir capacity")
     stream.buf.extend(b"\x00" * (consumed_capacity - len(stream.buf)))
@@ -445,38 +402,12 @@ def decode_layer3(payload: bytes) -> dict:
     * ``huff_abs_sum`` — Σ |X|+|Y| over pairs + Σ|v|+|w|+|x|+|y| quads
     * ``xr_fix_sum`` — Σ sign·((POW43_Q[|is|]·GAIN_Q[gg]) >> 20)
     """
-    if len(payload) < 4 or payload[0] != 0xFF or (payload[1] & 0xF0) != 0xF0:
-        raise ValueError("not an MPEG audio stream")
-    pos = 0
-    sample_rate = bitrate = None
     frames: list[tuple[int, list[int], list[dict]]] = []
     main_data = bytearray()
     area_starts: list[int] = []
-    while pos + 4 <= len(payload):
-        r = _BitReader(payload, pos)
-        if r.read(12) != 0xFFF:
-            raise ValueError("lost frame sync")
-        if r.read(1) != 1:
-            raise ValueError("not MPEG-1")
-        if r.read(2) != 0b01:
-            raise ValueError("not Layer III")
-        r.read(1)
-        bidx = r.read(4)
-        sidx = r.read(2)
-        padding = r.read(1)
-        r.read(1)
-        mode = r.read(2)
-        r.read(6)
-        if bidx not in BITRATE_KBPS_L3 or sidx not in SAMPLE_RATE:
-            raise ValueError("forbidden bitrate/samplerate index")
-        if mode != 0b11:
-            raise ValueError("only single_channel supported")
-        fb, fs = BITRATE_KBPS_L3[bidx], SAMPLE_RATE[sidx]
-        if sample_rate is None:
-            sample_rate, bitrate = fs, fb
-        elif (fs, fb) != (sample_rate, bitrate):
-            raise ValueError("mid-stream rate change")
-        flen = frame_bytes_l3(fb, fs, padding)
+    for r, bitrate, sample_rate, pos, flen in walk_frames(
+        payload, "III", BITRATE_KBPS_L3, frame_bytes_l3
+    ):
         if pos + flen > len(payload):
             raise ValueError("truncated frame")
         begin = r.read(9)
@@ -520,9 +451,6 @@ def decode_layer3(payload: bytes) -> dict:
         area_starts.append(len(main_data))
         main_data += payload[pos + 4 + _SIDE_INFO_BYTES : pos + flen]
         frames.append((begin, scfsi, gr))
-        pos += flen
-    if pos != len(payload):
-        raise ValueError("trailing bytes after last frame")
 
     feats = dict(
         sample_rate=sample_rate, bitrate_kbps=bitrate,
@@ -539,7 +467,7 @@ def decode_layer3(payload: bytes) -> dict:
             raise ValueError("main_data_begin reaches before the stream")
         feats["main_begin_sum"] += begin
         feats["scfsi_sum"] += sum(scfsi)
-        r = _BitReader(md, start)
+        r = BitReader(md, start)
         gr0_scalefacs: list[int] = []
         for g_idx, g in enumerate(gr):
             budget_start = r.pos
@@ -565,7 +493,7 @@ def decode_layer3(payload: bytes) -> dict:
                 if table not in PAIR_TABLES:
                     raise ValueError(f"unknown pair codebook {table}")
                 m, linbits = PAIR_TABLES[table]
-                sym = _read_prefix(r, _PAIR_DECODE[table])
+                sym = r.symbol(_PAIR_CODES[table])
                 vx, vy = divmod(sym, m + 1)
                 if linbits and vx == m:
                     vx += r.read(linbits)
@@ -579,7 +507,7 @@ def decode_layer3(payload: bytes) -> dict:
             n_samples = 2 * g["big_values"]
             nquads = 0
             while r.pos - budget_start < g["part23"]:
-                sym = _read_prefix(r, _QUAD_DECODE[g["count1table_select"]])
+                sym = r.symbol(_QUAD_CODES[g["count1table_select"]])
                 for k in range(4):
                     v = (sym >> (3 - k)) & 1
                     if v and r.read(1):

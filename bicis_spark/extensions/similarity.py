@@ -700,27 +700,25 @@ def ann_topk_lsh(
     dims: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    multi_probe: int = 2,
     n_tables: int = 1,
 ) -> DataFrame:
     """Approximate top-k: candidates share one of the query's probe buckets,
     exact cosine re-rank within. 2^n_planes buckets ⇒ ~N/2^p candidates per
     probe.
 
-    ``multi_probe`` (standard multi-probe LSH) is the recall/cost knob:
-    each query also probes every bucket within that Hamming radius of its
-    own (radius 1 adds p buckets, radius 2 adds p·(p−1)/2 more — at p=8
-    that is 37 of 256 buckets ≈ 14% of the corpus). A true neighbor is
-    most often lost to one or two wrong sign bits, so small radii recover
-    most of the recall (measured at sf0.1 on near-random synthetic
-    embeddings: radius 0 → 0.02, 1 → 0.28, 2 → 0.50 recall@5; clustered
-    real embedding corpora sit far higher at every radius). Only the
-    broadcast QUERY side fans out; the corpus is hashed and shuffled once
-    either way, and a (query, neighbor) pair can match at most one probe
-    (the corpus vector has exactly one bucket per table), so no dedup pass
-    is needed at ``n_tables=1``.
+    Multi-probe LSH at Hamming radius 2: each query also probes every
+    bucket one or two sign bits away from its own (p + p·(p−1)/2 more
+    buckets — at p=8 that is 37 of 256 buckets ≈ 14% of the corpus). A
+    true neighbor is most often lost to one or two wrong sign bits, so
+    the radius recovers most of the recall (measured at sf0.1 on
+    near-random synthetic embeddings: radius 0 → 0.02, 1 → 0.28,
+    2 → 0.50 recall@5; clustered real embedding corpora sit far higher
+    at every radius). Only the broadcast QUERY side fans out; the corpus
+    is hashed and shuffled once either way, and a (query, neighbor) pair
+    can match at most one probe (the corpus vector has exactly one bucket
+    per table), so no dedup pass is needed at ``n_tables=1``.
 
-    ``n_tables`` (standard multi-table LSH, the second recall knob): each
+    ``n_tables`` (standard multi-table LSH, the recall knob): each
     table hashes with its own disjoint hyperplane range (plane_offset =
     t·n_planes), candidates are OR-ed across tables, and a DISTINCT on
     (query, neighbor) dedups cross-table repeats before the exact re-rank.
@@ -728,8 +726,6 @@ def ann_topk_lsh(
     corpus-side bucket column per table (the corpus frame explodes
     n_tables×, but only (id, bucket, table) — vectors are not duplicated
     until the probe join)."""
-    if multi_probe > 2:
-        raise ValueError("multi_probe radius > 2 not supported")
     if n_tables < 1:
         raise ValueError("n_tables must be >= 1")
 
@@ -744,15 +740,10 @@ def ann_topk_lsh(
     c = _with_norm(_corpus(corpus, id_col, vec_col)).selectExpr(
         "*", tables("cv", "bucket")
     ).selectExpr("nid", "cv", "cn", "_tb.tbl AS tbl", "_tb.bucket AS bucket")
-    flips = [0]  # own bucket
-    if multi_probe >= 1:
-        flips += [1 << j for j in range(n_planes)]
-    if multi_probe >= 2:
-        flips += [
-            (1 << j) | (1 << l)
-            for j in range(n_planes)
-            for l in range(j + 1, n_planes)
-        ]
+    # own bucket, then radius 1, then radius 2
+    flips = [0] + [1 << j for j in range(n_planes)] + [
+        (1 << j) | (1 << l) for j in range(n_planes) for l in range(j + 1, n_planes)
+    ]
     # two-step explode: materialize each table's bucket ONCE, then fan out
     # the cheap XOR probe flips — inlining the 64-dim bucket aggregate into
     # every probe element would codegen n_tables·|flips| copies of it

@@ -7,10 +7,10 @@ wide row to one output row per column — no per-column scans, no joins.
 
 Scale note: exact ``countDistinct`` over k columns plans as an Expand
 (k× the scan's rows into the partial aggregate). That is the right
-trade at oracle scales and for narrow tables; for 100 TB profiling runs
-pass ``exact_distinct=False`` to use ``approx_count_distinct`` (HLL,
-no Expand, one pass, ±2.3% default error) — the standard engine split
-between ANALYZE (approx) and audit (exact).
+trade at oracle scales and for narrow tables. The approximate (HLL,
+``approx_count_distinct``) path is ``profile_table_hll_contract``, which
+reports the sketch beside the exact count and checks it lands within a
+band of it.
 """
 
 from __future__ import annotations
@@ -26,7 +26,6 @@ _INTEGRAL = {"bigint", "int", "smallint", "tinyint", "long", "integer"}
 def profile_table(
     df: DataFrame,
     columns: list[str] | None = None,
-    exact_distinct: bool = True,
 ) -> DataFrame:
     """[col_name, n_rows, n_nulls, n_distinct, min_num, max_num]: one row
     per profiled column. ``min_num``/``max_num`` are populated for
@@ -45,12 +44,7 @@ def profile_table(
             .cast("long")
             .alias(f"_nn_{i}")
         )
-        nd = (
-            F.countDistinct(F.col(c))
-            if exact_distinct
-            else F.approx_count_distinct(F.col(c))
-        )
-        aggs.append(nd.cast("long").alias(f"_nd_{i}"))
+        aggs.append(F.countDistinct(F.col(c)).cast("long").alias(f"_nd_{i}"))
         if dtypes.get(c) in _INTEGRAL:
             aggs.append(F.min(F.col(c)).cast("long").alias(f"_mn_{i}"))
             aggs.append(F.max(F.col(c)).cast("long").alias(f"_mx_{i}"))
@@ -81,8 +75,7 @@ def profile_table_hll_contract(
     so a ±10% band is ~10 standard errors — a genuine estimator-bug
     detector, not a coin flip. Same single-pass grand-aggregate plan as
     ``profile_table``; the exact countDistinct here is the CONTRACT's
-    reference (the production 100 TB path is ``exact_distinct=False``,
-    which never pays the Expand)."""
+    reference for the sketch beside it."""
     cols = columns or df.columns
     aggs = [F.count(F.lit(1)).cast("long").alias("_n")]
     for i, c in enumerate(cols):
@@ -627,7 +620,7 @@ def isotonic_fit_bins(
     # both sides are bounded by this function's contract (B bins); the
     # explicit broadcast keeps the non-equi join a bounded-build BNLJ —
     # without it, a stats-free input (e.g. a checkpointed histogram)
-    # falls to CartesianProduct (r7 explain-audit finding)
+    # falls to CartesianProduct (as scripts/explain_audit.py showed)
     intervals = j.join(F.broadcast(k), F.col("j") <= F.col("k")).select(
         "j",
         "k",

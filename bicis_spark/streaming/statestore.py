@@ -38,11 +38,9 @@ _CHANGELOG_CONF = (
 
 
 @contextmanager
-def rocksdb_state(
-    spark: SparkSession, changelog_checkpointing: bool = True
-) -> Iterator[None]:
+def rocksdb_state(spark: SparkSession) -> Iterator[None]:
     """Queries STARTED inside the block run their state stores on RocksDB
-    (with per-batch changelog checkpointing by default). Session confs are
+    with per-batch changelog checkpointing. Session confs are
     restored on exit — success or exception — and queries already running
     keep the provider they started with (Spark snapshots the conf at query
     start), so wrapping the ``start()``/drain is sufficient and safe in a
@@ -52,7 +50,7 @@ def rocksdb_state(
         _CHANGELOG_CONF: spark.conf.get(_CHANGELOG_CONF, None),
     }
     spark.conf.set(_PROVIDER_CONF, ROCKSDB_PROVIDER)
-    spark.conf.set(_CHANGELOG_CONF, str(changelog_checkpointing).lower())
+    spark.conf.set(_CHANGELOG_CONF, "true")
     try:
         yield
     finally:

@@ -418,8 +418,9 @@ def _malformed_headers():
     """(name, decoder, payload) triples: synthesized payloads with one
     header field patched so that, unchecked, it drives a decoder into a
     near-endless row loop (BMP height), a ZeroDivisionError (WAV channels
-    and rate, JPEG sampling factor), a KeyError (JPEG scan component) or
-    a 32 GiB plane allocation (JPEG frame size).
+    and rate, JPEG sampling factor), a KeyError (JPEG scan component), a
+    32 GiB plane allocation (JPEG frame size) or a Huffman table that
+    silently drops the codes its values list lacks (JPEG DHT counts).
     The BMP height is 10^6 rather than 2^31 so an unchecked decoder fails
     the test in about a second instead of stalling it."""
     import struct
@@ -437,6 +438,7 @@ def _malformed_headers():
 
     jpeg = synth_jpeg(3)
     sof, sos = jpeg.index(b"\xff\xc0"), jpeg.index(b"\xff\xda")
+    dht = jpeg.index(b"\xff\xc4")
     return [
         ("bmp_height_1e6", decode_bmp, patch(synth_bmp(2), 22, "<i", 10**6)),
         ("wav_zero_channels", decode_wav, patch(synth_wav(3), 22, "<H", 0)),
@@ -444,6 +446,8 @@ def _malformed_headers():
         ("jpeg_scan_component_not_in_frame", decode_jpeg, patch(jpeg, sos + 5, "B", 0xEE)),
         ("jpeg_zero_sampling_factor", decode_jpeg, patch(jpeg, sof + 11, "B", 0x01)),
         ("jpeg_frame_exceeds_data", decode_jpeg, patch(jpeg, sof + 5, ">HH", 65535, 65535)),
+        # the DC table's count of 16-bit codes: 5 more codes than values
+        ("jpeg_dht_counts_exceed_values", decode_jpeg, patch(jpeg, dht + 20, "B", 5)),
     ]
 
 
